@@ -104,6 +104,7 @@ site; everything not listed here is intended to be value-identical):
 from __future__ import annotations
 
 import re
+import string
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -1447,8 +1448,1065 @@ def _keyed_array_sort(name: str, lam: str, arr: str, desc: bool) -> str:
     )
 
 
+# Name-keyed rewrites, looked up before _translate_call's ordered chain.
+# _TEMPLATES fills `tpl.format(*args)` (args already translated). A name
+# belongs here only when its rewrite is a pure argument permutation and
+# no code branch of the chain also matches it: the tables are checked
+# first, so that branch would never run. Rewrites that need logic (arity
+# dispatch, literal parsing, recursion) stay as code branches.
+_TEMPLATES: dict[str, str] = {
+    # groupBitmap(expr) returns the bitmap's CARDINALITY (UInt64) —
+    # exactly count(DISTINCT); the state-algebra forms
+    # (groupBitmapAnd/Or/Xor over AggregateFunction(groupBitmap)
+    # columns) stay routed to agg_bitmap_ops below (r10 continuation
+    # probe: bare groupBitmap was a silent passthrough)
+    "groupbitmap": "count(DISTINCT {0})",
+    # splitByChar(sep, s) -> split(s, sep)
+    "splitbychar": "split({1}, {0})",
+    # splitByRegexp(re, s) -> split(s, re)
+    "splitbyregexp": "split({1}, {0})",
+    "avgweighted": "(sum(({0}) * ({1})) / sum({1}))",
+    # CH: one random value shared by every row of the result (block-
+    # constant; this engine's block is the whole result). A whole-
+    # result window aggregate over rand() yields one shared value —
+    # a scalar subquery does NOT (Spark re-evaluates nondeterministic
+    # subqueries per row, r11 probe: 3 rows → 3 distinct values).
+    # CH's UInt32 range is kept via the same floor(rand()*2^32).
+    "randconstant": "CAST(min(floor(rand() * 4294967296)) OVER () AS BIGINT)",
+    "toint32": "CAST({0} AS INT)",
+    "toint64": "CAST({0} AS BIGINT)",
+    "tofloat64": "CAST({0} AS DOUBLE)",
+    # CAST makes the rewrite type-safe: Spark's `div` is integral-only
+    # while CH coerces doubles. No-op (and 64-bit exact) for integer
+    # operands; for fractional operands the operands truncate first —
+    # divergent from CH only when the DIVISOR is non-integral.
+    # Rounding: CH truncates toward ZERO (C++ integer division),
+    # exactly Spark's `div` — provable from the division identity:
+    # CH's modulo is sign-of-dividend (modulo(-7, 3) = -1, pinned in
+    # the r9 battery), and a = b·intDiv(a,b) + modulo(a,b) only holds
+    # with the truncating quotient (-2), never the floored one (-3).
+    "intdiv": "(CAST({0} AS BIGINT) div CAST({1} AS BIGINT))",
+    # Operand sub-expressions are parenthesized individually: the argument
+    # may itself be an infix expression (`minus(a, b - c)`), and splicing it
+    # unwrapped next to the operator changes meaning via precedence.
+    "modulo": "(({0}) % ({1}))",
+    "plus": "(({0}) + ({1}))",
+    "minus": "(({0}) - ({1}))",
+    "multiply": "(({0}) * ({1}))",
+    # CH divide() is always FLOAT division with IEEE zero-divisor
+    # semantics: x/0 → ±Inf, 0/0 → NaN (r11 probe: Spark's Divide
+    # returns NULL on a zero divisor). x * Inf reproduces all three
+    # cases; the infix `/` spelling keeps Spark's NULL (documented
+    # divergence — rewriting every division would bloat plans).
+    "divide": (
+        "(CASE WHEN ({1}) = 0 THEN CAST({0} AS DOUBLE) * CAST('Infinity' AS"
+        " DOUBLE) ELSE CAST({0} AS DOUBLE) / ({1}) END)"
+    ),
+    "negate": "(- ({0}))",
+    "max2": "greatest({0}, {1})",
+    "min2": "least({0}, {1})",
+    "countmatches": "regexp_count({0}, {1})",
+    # CH escapes & < > " ' (ampersand FIRST so entities don't
+    # double-escape) — exact parity, five nested replaces.
+    "encodexmlcomponent": (
+        "replace(replace(replace(replace(replace({0}, '&', '&amp;'), '<',"
+        " '&lt;'), '>', '&gt;'), '\"', '&quot;'), '''', '&apos;')"
+    ),
+    "isvalidascii": "({0} RLIKE '^[\\\\x00-\\\\x7F]*$')",
+    # truncate at the first NUL byte (r9 probe: passthrough)
+    "tostringcuttozero": "split({0}, '\\u0000')[0]",
+    # CH escapes \0 \\ | ( ) ^ $ . [ ] ? * + { : - with a backslash
+    # (r9 probe: was the one silent passthrough in a 65-spelling
+    # sweep). One regexp_replace with the metacharacter class.
+    "regexpquotemeta": (
+        "regexp_replace({0}, '([\\\\\\\\|()^$.\\\\[\\\\]?*+{{:-])',"
+        " '\\\\\\\\$1')"
+    ),
+    "tobool": "CAST({0} AS BOOLEAN)",
+    # CH pins the time-of-day onto 1970-01-02 (toTimeWithFixedDate is
+    # the ≥24.9 rename of the same function)
+    **dict.fromkeys(
+        ("totime", "totimewithfixeddate"),
+        "to_timestamp(concat('1970-01-02 ', date_format({0}, 'HH:mm:ss')))",
+    ),
+    "tostartofsecond": "date_trunc('SECOND', {0})",
+    # arrayWithConstant(n, x) — args swap
+    "arraywithconstant": "array_repeat({1}, CAST({0} AS INT))",
+    # numeric, as CH (UInt32 → BIGINT per the §1.2 widening table);
+    # was a string through r5 — r6 fidelity fix, oracle updated
+    "toyyyymm": "CAST(date_format({0}, 'yyyyMM') AS BIGINT)",
+    "toyyyymmdd": "CAST(date_format({0}, 'yyyyMMdd') AS BIGINT)",
+    "toyyyymmddhhmmss": "CAST(date_format({0}, 'yyyyMMddHHmmss') AS BIGINT)",
+    # CH returns Date at day-or-coarser granularity (DuckDB's
+    # date_trunc agrees); Spark's date_trunc alone returns TIMESTAMP —
+    # cast so the result type matches both CH's contract and the
+    # oracle's arrow schema (r5 type-skew sweep).
+    "tostartofmonth": "CAST(date_trunc('month', {0}) AS DATE)",
+    "tostartofday": "date_trunc('day', {0})",
+    "tostartofhour": "date_trunc('hour', {0})",
+    "assumenotnull": "{0}",
+    # 1..size(arr), CH's positional index array
+    "arrayenumerate": "sequence(1, size({0}))",
+    "yesterday": "date_sub(current_date(), 1)",
+    # Spark has no unsigned; widen
+    "touint64": "CAST({0} AS BIGINT)",
+    # CH integer casts WRAP modulo 2^width (r11 probe:
+    # toUInt32(2^32) = 0 in CH). Inner exact-width cast wraps two's-
+    # complement (ANSI off), the mask recovers the unsigned value,
+    # and the outer type stays the engine's widened signed map.
+    "touint32": "(CAST(CAST({0} AS INT) AS BIGINT) & 4294967295)",
+    # SQL/JSON operators take a real JSONPath — pass it straight in
+    "json_value": "get_json_object({0}, {1})",
+    "json_query": "get_json_object({0}, {1})",
+    "json_exists": "(get_json_object({0}, {1}) IS NOT NULL)",
+    "isvalidjson": "(try_parse_json({0}) IS NOT NULL)",
+    "sha1": "unhex(sha1({0}))",
+    # binary digest like the SHA family — CH's hex(MD5(x)) idiom
+    # round-trips to the same uppercase hex (r11 probe: Spark's md5
+    # returns a lowercase hex STRING, so hex() re-hexed the text)
+    "md5": "unhex(md5({0}))",
+    # largest bound <= x, else the first (smallest) bound
+    "rounddown": "coalesce(array_max(filter({1}, _e -> _e <= {0})), {1}[0])",
+    "median": "percentile({0}, 0.5)",
+    # -Array combinator on groupUniqArray: the distinct elements
+    # across all input arrays (r9 probe: silent passthrough)
+    "groupuniqarrayarray": "array_distinct(flatten(collect_list({0})))",
+    # aggregate arrays by concatenation (arrayConcatAgg is the
+    # CH 23.10 alias — r12 probe: was a raw passthrough)
+    "grouparrayarray": "flatten(collect_list({0}))",
+    "arrayconcatagg": "flatten(collect_list({0}))",
+    # the RESPECT NULLS twins (CH 23.5 alias family + the postfix
+    # `RESPECT NULLS` modifier, rewritten to these names upstream)
+    "any_respect_nulls": "first_value({0})",
+    "anyrespectnulls": "first_value({0})",
+    "first_value_respect_nulls": "first_value({0})",
+    "firstvaluerespectnulls": "first_value({0})",
+    "anylast_respect_nulls": "last_value({0})",
+    "anylastrespectnulls": "last_value({0})",
+    "last_value_respect_nulls": "last_value({0})",
+    "lastvaluerespectnulls": "last_value({0})",
+    # week floor to DATE, Monday start (both engines)
+    "tomonday": "to_date(date_trunc('week', {0}))",
+    "bitnot": "(~CAST({0} AS BIGINT))",
+    "bitshiftleft": "shiftleft(CAST({0} AS BIGINT), {1})",
+    "bitshiftright": "shiftright(CAST({0} AS BIGINT), {1})",
+    # CH returns String; Spark unbase64 returns binary
+    "base64decode": "CAST(unbase64({0}) AS STRING)",
+    "frombase64": "CAST(unbase64({0}) AS STRING)",
+    # -- string search family
+    "positioncaseinsensitive": "locate(lower({1}), lower({0}))",
+    # multiSearchAny(haystack, [n1, n2, ...])
+    "multisearchany": "exists({1}, p -> locate(p, {0}) > 0)",
+    # hasAll(a, b): a ⊇ b
+    "hasall": "(size(array_except({1}, {0})) = 0)",
+    # splitByString(sep, s) — sep is literal text
+    "splitbystring": "split({1}, concat('\\\\Q', {0}, '\\\\E'))",
+    "splitbywhitespace": "split(trim({0}), '\\\\s+')",
+    "extracturlparameter": "parse_url({0}, 'QUERY', {1})",
+    "netloc": "parse_url({0}, 'AUTHORITY')",
+    "topleveldomain": "regexp_extract(parse_url({0}, 'HOST'), '([^.]+)$', 1)",
+    # removes '?query', keeps any fragment
+    "cutquerystring": "regexp_replace({0}, '\\\\?[^#]*', '')",
+    "cutfragment": "regexp_replace({0}, '#.*$', '')",
+    "cutquerystringandfragment": "regexp_replace({0}, '[?#].*$', '')",
+    # text after '?', without the '?'
+    "querystringandfragment": "regexp_extract({0}, '\\\\?(.*)', 1)",
+    # path + query + fragment (everything after host)
+    "pathfull": (
+        "concat(parse_url({0}, 'PATH'), coalesce(concat('?', parse_url({0},"
+        " 'QUERY')), ''), coalesce(concat('#', parse_url({0}, 'REF')), ''))"
+    ),
+    "cutwww": "regexp_replace({0}, '//www\\\\.', '//')",
+    "multisearchfirstindex": (
+        "coalesce(array_position(transform({1}, _p -> locate(_p, {0}) > 0),"
+        " true), 0)"
+    ),
+    # leftmost offset of ANY needle, 0 when none matches
+    "multisearchfirstposition": (
+        "coalesce(array_min(filter(transform({1}, _p -> locate(_p, {0})), _x"
+        " -> _x > 0)), 0)"
+    ),
+    "hastokencaseinsensitive": (
+        "array_contains(split(lower({0}), '[^a-z0-9]+'), lower({1}))"
+    ),
+    "decodeurlcomponent": "url_decode({0})",
+    # url_encode is form-encoding (space -> '+'); CH emits %20
+    "encodeurlcomponent": "replace(url_encode({0}), '+', '%20')",
+    # -OrDefault: CH substitutes the TYPE default when nothing aggregated.
+    # Mapped where the default is statically known (0 for the counting/
+    # summing family); guided where it depends on the argument type.
+    "sumordefault": "coalesce(sum({0}), 0)",
+    "avgordefault": "coalesce(avg({0}), 0D)",
+    "uniqordefault": "approx_count_distinct({0})",
+    "uniqexactordefault": "count(DISTINCT {0})",
+    "anyornull": "any_value({0}, true)",
+    "uniqornull": "nullif(approx_count_distinct({0}), 0)",
+    "uniqexactornull": "nullif(count(DISTINCT {0}), 0)",
+    # maximal alphanumeric runs, no empties
+    "tokens": "filter(split({0}, '[^A-Za-z0-9]+'), _t -> _t != '')",
+    # Spark strings are UTF-8 by construction — constant-true on
+    # non-NULL input (CH validates raw bytes; the engine's ingest
+    # already rejected invalid sequences)
+    "isvalidutf8": "IF({0} IS NULL, NULL, true)",
+    "toisoyear": "extract(YEAROFWEEK FROM {0})",
+    "torelativemonthnum": "(year({0}) * 12 + month({0}))",
+    "torelativehournum": "CAST(floor(unix_timestamp({0}) / 3600) AS BIGINT)",
+    # CH epoch anchor: 1970-01-01 = 719528
+    "todayssinceyearzero": "(datediff({0}, DATE'1970-01-01') + 719528)",
+    "fromdayssinceyearzero": (
+        "date_add(DATE'1970-01-01', CAST({0} AS INT) - 719528)"
+    ),
+    "yyyymmddtodate": "to_date(CAST({0} AS STRING), 'yyyyMMdd')",
+    "sigmoid": "(1.0 / (1.0 + exp(-({0}))))",
+    "logit": "ln(({0}) / (1.0 - ({0})))",
+    "nan": "CAST('NaN' AS DOUBLE)",
+    "ipv4stringtonum": (
+        "aggregate(transform(split({0}, '\\\\.'), _p -> CAST(_p AS BIGINT)),"
+        " CAST(0 AS BIGINT), (_acc, _x) -> _acc * 256 + _x)"
+    ),
+    "isipv4string": (
+        "({0} RLIKE '^((25[0-5]|2[0-4][0-9]|[01]?[0-9]?[0-9])\\\\.){{3}}"
+        "(25[0-5]|2[0-4][0-9]|[01]?[0-9]?[0-9])$')"
+    ),
+    "currentdatabase": "'default'",
+    # single-planner engine: the constant local identity (CH returns
+    # the serving replica's host / fully-qualified name)
+    "hostname": "'localhost'",
+    "fqdn": "'localhost'",
+    # r8 probe 3: distributed-table topology introspection — this
+    # engine is one logical shard (same constant-identity family as
+    # hostName/currentDatabase)
+    "shardnum": "1",
+    "shardcount": "1",
+    "toutctimestamp": "to_utc_timestamp({0}, {1})",
+    "fromutctimestamp": "from_utc_timestamp({0}, {1})",
+    # ---- r8 probe batch 4 ----
+    "positivemodulo": "pmod({0}, {1})",
+    "firstline": "element_at(split({0}, '\\n'), 1)",
+    "splitbynonalpha": "filter(split({0}, '[^A-Za-z0-9]+'), _t -> _t != '')",
+    # RFC 4648 URL-safe alphabet, padding stripped (CH strips '=')
+    "base64urlencode": (
+        "trim(TRAILING '=' FROM translate(base64({0}), '+/', '-_'))"
+    ),
+    "iszeroornull": "(({0}) = 0 OR ({0}) IS NULL)",
+    # CH's indexOf uses NULL-SAFE equality — indexOf([1, NULL], NULL)
+    # = 2, and 0 when absent (r8 doc-pin: the former plain
+    # array_position rename returned NULL for a NULL needle and
+    # could not find NULL elements). Null-safe compare first, then
+    # position of the first true.
+    "indexof": (
+        "COALESCE(array_position(transform({0}, _ix -> _ix <=> ({1})), true),"
+        " 0)"
+    ),
+    "indexofassumesorted": "COALESCE(array_position({0}, {1}), 0)",
+    "domainwithoutwww": (
+        "regexp_replace(parse_url({0}, 'HOST'), '^www\\\\.', '')"
+    ),
+    "randomstring": (
+        "array_join(transform(sequence(1, {0}), _i -> char(CAST(floor(rand() *"
+        " 256) AS INT))), '')"
+    ),
+    "randomprintableascii": (
+        "array_join(transform(sequence(1, {0}), _i -> char(32 +"
+        " CAST(floor(rand() * 95) AS INT))), '')"
+    ),
+    "nothing": "NULL",
+    "user": "'default'",
+    # FixedString is storage-only here (type map → STRING); clamp to
+    # the declared width (CH errors on overflow — documented
+    # divergence: we truncate) and NUL-pad short values so length()
+    # reports N like CH's FixedString (r12 probe: was unpadded;
+    # toStringCutToZero recovers the logical value, as in CH)
+    "tofixedstring": "rpad(substr({0}, 1, {1}), {1}, char(0))",
+    "isnotdistinctfrom": "({0} <=> {1})",
+    # UUIDs are strings here (§1.2 type table)
+    "touuid": "CAST({0} AS STRING)",
+    "notilike": "(NOT ({0} ILIKE {1}))",
+    # seconds from a to b
+    "timediff": "(unix_timestamp({1}) - unix_timestamp({0}))",
+    "torelativedaynum": "datediff({0}, DATE '1970-01-01')",
+    "todecimalstring": (
+        "CAST(CAST(round({0}, {1}) AS DECIMAL(38, {1})) AS STRING)"
+    ),
+    "multisearchanycaseinsensitive": (
+        "exists({1}, _n -> instr(lower({0}), lower(_n)) > 0)"
+    ),
+    # both 1-based, both negative-from-end; index 0 routes through
+    # nullif → NULL (r11 probe: Spark raises INVALID_INDEX_OF_ZERO
+    # even non-ANSI, where CH returns the type default — NULL is the
+    # engine's documented out-of-bounds posture)
+    "arrayelement": "element_at({0}, nullif({1}, 0))",
+    # arrayElement's explicit-NULL sibling; negative indexes count
+    # from the end, matching try_element_at exactly
+    "arrayelementornull": "try_element_at({0}, nullif({1}, 0))",
+    # integer form: popcount of the XOR (CH also accepts strings —
+    # byte-wise; the integer contract is the one the fixtures use)
+    "bithammingdistance": "bit_count(({0}) ^ ({1}))",
+    # same convention as the hash family: a stable bucket in [0, n)
+    # replaces CH's specific algorithm — co-bucketing is preserved
+    # within this engine, but values differ from CH AND the jump
+    # hash's minimal-movement-on-resize property is NOT reproduced
+    "jumpconsistenthash": "CAST(pmod(xxhash64({0}), {1}) AS INT)",
+    "kostikconsistenthash": "CAST(pmod(xxhash64({0}), {1}) AS INT)",
+    "yandexconsistenthash": "CAST(pmod(xxhash64({0}), {1}) AS INT)",
+    "mapextractkeylike": "map_filter({0}, (_k, _v) -> _k LIKE {1})",
+    "mapcontainskeylike": "exists(map_keys({0}), _k -> _k LIKE {1})",
+    "mapcontainsvalue": "array_contains(map_values({0}), {1})",
+    "identity": "{0}",
+    # decimal digits of the value's integer text (CH counts the
+    # underlying scaled integer for Decimals — digits-only filter
+    # covers both int and decimal renderings)
+    "countdigits": (
+        "CAST(length(regexp_replace(CAST(abs({0}) AS STRING), '[^0-9]', ''))"
+        " AS INT)"
+    ),
+    # writes its message to the SERVER log and returns 0; there is no
+    # server log here, so only the return value survives (r12 probe)
+    "logtrace": "0",
+    # Date-typed like toStartOfMonth (CH contract; r5 type sweep).
+    "tostartofquarter": "CAST(date_trunc('quarter', {0}) AS DATE)",
+    # Date-typed like toStartOfMonth (CH contract; r5 type sweep).
+    "tostartofyear": "CAST(date_trunc('year', {0}) AS DATE)",
+    "tostartofminute": "date_trunc('minute', {0})",
+    # CH: Mon=1..Sun=7; Spark dayofweek: Sun=1
+    "todayofweek": "(((dayofweek({0}) + 5) % 7) + 1)",
+    "monthname": "date_format({0}, 'MMMM')",
+    # floor to the half-hour
+    "timeslot": "timestamp_seconds(unix_timestamp({0}) div 1800 * 1800)",
+    "todate32": "to_date({0})",
+    # precision arg is display-only; Spark timestamps are fixed micros
+    "todatetime64": "to_timestamp({0})",
+    # -- null / finiteness predicates
+    "isnull": "(({0}) IS NULL)",
+    "isnotnull": "(({0}) IS NOT NULL)",
+    "isfinite": "(NOT isnan({0}) AND abs({0}) <> CAST('Infinity' AS DOUBLE))",
+    "isinfinite": "(abs({0}) = CAST('Infinity' AS DOUBLE))",
+    # NULL counts as non-finite here (r11 probe): Spark's division
+    # yields NULL where CH yields ±Inf/NaN, so the canonical CH
+    # safe-division idiom `ifNotFinite(x / y, alt)` must still take
+    # the alternative. Documented divergence: a genuinely-NULL x
+    # returns alt where CH propagates NULL.
+    "ifnotfinite": (
+        "IF(({0}) IS NULL OR isnan({0}) OR abs({0}) = CAST('Infinity' AS"
+        " DOUBLE), {1}, {0})"
+    ),
+    "intdivorzero": (
+        "IF(({1}) = 0, 0, CAST({0} AS BIGINT) div CAST({1} AS BIGINT))"
+    ),
+    "moduloorzero": "IF(({1}) = 0, 0, ({0}) % ({1}))",
+    # Spark's sign() returns DOUBLE; CH returns Int8 (r10 probe —
+    # type-only fix, values agree)
+    "sign": "CAST(signum({0}) AS TINYINT)",
+    # clamp(x, lo, hi) (CH 23.x; r10 probe: unrecognized passthrough)
+    "clamp": "least(greatest(({0}), ({1})), ({2}))",
+    # null-safe equality (<=>): CH counts NULL elements when x is NULL
+    "countequal": "size(filter({0}, _ceq -> _ceq <=> {1}))",
+    # -- r5 final batch: epoch converters, folds, misc
+    "tounixtimestamp64milli": "unix_millis({0})",
+    "tounixtimestamp64micro": "unix_micros({0})",
+    "fromunixtimestamp64milli": "timestamp_millis({0})",
+    "fromunixtimestamp64micro": "timestamp_micros({0})",
+    "timezone": "current_timezone()",
+    "servertimezone": "current_timezone()",
+    "generateuuidv4": "uuid()",
+    # CH rand() yields a uniform UInt32 (users write rand() % N);
+    # Spark's rand() is a double in [0,1) — scale to keep the integer
+    # modulo idiom working. Nondeterministic on both, as in CH.
+    "rand": "CAST(floor(rand() * 4294967296) AS BIGINT)",
+    "rand32": "CAST(floor(rand() * 4294967296) AS BIGINT)",
+    # CH's UInt64 range does not fit BIGINT: hi*2^32+lo with a 32-bit hi
+    # overflows past 2^63-1 (wraps negative / throws under ANSI — r5
+    # advice). Emit a 63-bit value instead (hi masked to 31 bits):
+    # uniform over [0, 2^63), keeping the rand64() % N idiom exact and
+    # the result always non-negative. Documented range divergence.
+    "rand64": (
+        "(CAST(floor(rand() * 2147483648) AS BIGINT) * 4294967296 +"
+        " CAST(floor(rand() * 4294967296) AS BIGINT))"
+    ),
+    # mergeable (sum, count) pair in one pass
+    "sumcount": "named_struct('sum', sum({0}), 'count', count({0}))",
+    # Kahan compensation has no Spark spelling; plain double sum is the
+    # honest mapping (same result class, not compensated — for exact
+    # order-free sums use toDecimal64 + sum, the engine-wide rule).
+    "sumkahan": "sum(CAST({0} AS DOUBLE))",
+    # -- r5 late batch: intervals, bit tests, wide ints, casts
+    # r9 probe: was a silent passthrough
+    "tointervalweek": "make_dt_interval(CAST(({0}) * 7 AS INT), 0, 0, 0)",
+    # bitTest(x, n): n-th bit, 0-based from LSB
+    "bittest": "(CAST(shiftright({0}, CAST({1} AS INT)) AS BIGINT) & 1)",
+    "exp2": "power(2.0D, {0})",
+    "exp10": "power(10.0D, {0})",
+    # integer 2^n, exact for n < 63
+    "intexp2": "shiftleft(CAST(1 AS BIGINT), CAST({0} AS INT))",
+    "intexp10": "CAST(power(10.0D, {0}) AS BIGINT)",
+    # no Spark integral this wide; DECIMAL(38,0) covers ±10^38, the
+    # practical range of CH 128/256-bit columns in CDC payloads
+    "toint128": "CAST({0} AS DECIMAL(38,0))",
+    "touint128": "CAST({0} AS DECIMAL(38,0))",
+    "toint256": "CAST({0} AS DECIMAL(38,0))",
+    "touint256": "CAST({0} AS DECIMAL(38,0))",
+    "notlike": "(NOT ({0} LIKE {1}))",
+    # partial counts merge by summing
+    "countmerge": "CAST(sum({0}) AS BIGINT)",
+    "avgstate": "named_struct('s', sum(CAST({0} AS DOUBLE)), 'c', count({0}))",
+    "avgmerge": "(sum(({0}).s) / sum(({0}).c))",
+    # exact state = the distinct set itself
+    "uniqexactstate": "collect_set({0})",
+    "uniqexactmerge": "size(array_distinct(flatten(collect_list({0}))))",
+    # Joda-style patterns are (for the yyyy/MM/dd/HH/mm/ss core) the
+    # same tokens Spark's own DateTimeFormatter uses — direct map
+    # (r9 probe: passthrough; r12 probe: the fromUnixTimestamp twin).
+    "formatdatetimeinjodasyntax": "date_format({0}, {1})",
+    "fromunixtimestampinjodasyntax": "from_unixtime({0}, {1})",
+    "arraypushback": "concat({0}, array({1}))",
+    "arraypushfront": "concat(array({1}), {0})",
+    "arraypopback": "slice({0}, 1, greatest(size({0}) - 1, 0))",
+    "arraypopfront": "slice({0}, 2, greatest(size({0}) - 1, 0))",
+    # -- `-Array` aggregate combinators: aggregate over ALL ELEMENTS of an
+    # array column across rows. Element folds run in DOUBLE (CH promotes
+    # Float32 sums to Float64 the same way); callers wanting exactness
+    # feed integer arrays, as `chsql_agg_array_combinators` does.
+    "sumarray": "sum(aggregate({0}, 0D, (s, x) -> s + x))",
+    "countarray": "sum(size({0}))",
+    "avgarray": "(sum(aggregate({0}, 0D, (s, x) -> s + x)) / sum(size({0})))",
+    # Exact distinct-element count. collect_list gathers the group's
+    # arrays into one state — fine for bounded groups; for unbounded
+    # cardinality explode + COUNT(DISTINCT) is the scale path (the
+    # rewriter cannot restructure the enclosing GROUP BY).
+    "uniqarray": "size(array_distinct(flatten(collect_list({0}))))",
+    "uniqexactarray": "size(array_distinct(flatten(collect_list({0}))))",
+    "maxarray": "max(array_max({0}))",
+    "minarray": "min(array_min({0}))",
+    "l1distance": (
+        "aggregate(zip_with({0}, {1}, (x, y) -> abs(CAST(x AS DOUBLE) - CAST(y"
+        " AS DOUBLE))), 0D, (s, v) -> s + v)"
+    ),
+    "linfdistance": (
+        "array_max(zip_with({0}, {1}, (x, y) -> abs(CAST(x AS DOUBLE) - CAST(y"
+        " AS DOUBLE))))"
+    ),
+    "l1norm": "aggregate({0}, 0D, (s, x) -> s + abs(CAST(x AS DOUBLE)))",
+    # -- r7 third probe batch: map functions (lambda-first CH arg order)
+    "mapfilter": "map_filter({1}, {0})",
+    "mapexists": "(size(map_filter({1}, {0})) > 0)",
+    "mapall": "(size(map_filter({1}, {0})) = size({1}))",
+    # -- r7 third probe batch: misc conversions and guided spellings
+    # Spark's max decimal precision is 38 (CH Decimal256 is 76) —
+    # documented clamp, same class as the FixedString divergence
+    "todecimal256": "CAST({0} AS DECIMAL(38, {1}))",
+    # CH returns '' (not NULL) on invalid input — r8 doc pin
+    "trybase64decode": (
+        "COALESCE(CAST(try_to_binary({0}, 'base64') AS STRING), '')"
+    ),
+    # runs of a-zA-Z letters (CH's pre-`tokens` splitter)
+    "alphatokens": "filter(split({0}, '[^A-Za-z]+'), _t -> _t != '')",
+    "tuplenames": "json_object_keys(to_json({0}))",
+    # -- r7 fourth probe batch: date/time precision + calendar converters
+    # CH changes DISPLAY timezone without moving the instant; Spark
+    # timestamps are tz-less instants, so the faithful rendering-use
+    # map is the tz-shifted wall clock (the session is pinned UTC).
+    "totimezone": "from_utc_timestamp({0}, {1})",
+    # engine pins one session tz
+    "timezoneof": "current_timezone()",
+    "tomillisecond": "CAST(date_format({0}, 'SSS') AS INT)",
+    # the OrNull twin rides try-cast semantics: to_date() yields NULL
+    # on an unparseable string (ANSI off), which datediff propagates
+    "tomodifiedjulianday": "datediff(to_date({0}), DATE'1858-11-17')",
+    "tomodifiedjuliandayornull": "datediff(to_date({0}), DATE'1858-11-17')",
+    "frommodifiedjulianday": "date_add(DATE'1858-11-17', CAST({0} AS INT))",
+    "frommodifiedjuliandayornull": (
+        "date_add(DATE'1858-11-17', CAST({0} AS INT))"
+    ),
+    # session tz is pinned UTC; nowInBlock's per-block re-evaluation
+    # maps to the per-query instant (documented divergence)
+    "utctimestamp": "current_timestamp()",
+    "nowinblock": "current_timestamp()",
+    "addinterval": "({0} + {1})",
+    "tostartofmillisecond": "date_trunc('MILLISECOND', {0})",
+    # Spark timestamps ARE microseconds — truncation is identity (the
+    # nanosecond form inherits the documented micro precision)
+    "tostartofmicrosecond": "{0}",
+    "tostartofnanosecond": "{0}",
+    # -- r7 fourth probe batch: string distance / UTF8 spellings
+    "editdistance": "levenshtein({0}, {1})",
+    "editdistanceutf8": "levenshtein({0}, {1})",
+    "levenshteindistance": "levenshtein({0}, {1})",
+    # Spark strings are valid UTF-8 by construction
+    "tovalidutf8": "{0}",
+    "leftutf8": "left({0}, {1})",
+    "rightutf8": "right({0}, {1})",
+    "translateutf8": "translate({0}, {1}, {2})",
+    # top-level paths
+    "jsonallpaths": "json_object_keys({0})",
+    "jsonarraylength": "json_array_length({0})",
+    # -- r7 fourth probe batch: aggregate additions
+    "uniqcombined64": "approx_count_distinct({0})",
+    "uniqtheta": "approx_count_distinct({0})",
+    "singlevalueornull": "IF(count(DISTINCT {0}) = 1, max({0}), NULL)",
+    # CH keeps the input type and wraps on overflow; Spark's sum
+    # widens instead — a divergence only ON overflow, where CH's
+    # wrapped value is garbage anyway
+    "sumwithoverflow": "sum({0})",
+    # single-user batch engine: the constant default principal, the
+    # array-valued sibling of currentUser() -> 'default'
+    "currentroles": "array('default')",
+    "currentprofiles": "array('default')",
+    "enabledroles": "array('default')",
+    "enabledprofiles": "array('default')",
+    "defaultroles": "array('default')",
+    # -- r7 fourth probe batch: identity/constants + server introspection
+    "materialize": "{0}",
+    "ignore": "0",
+    # CH: a constant-1 predicate that only steers index selection —
+    # Spark's planner has no analogue; the value-faithful form is TRUE
+    "indexhint": "true",
+    "currentuser": "'default'",
+    "initialuser": "'default'",
+    "macstringtonum": (
+        "aggregate(split({0}, ':'), CAST(0 AS BIGINT), (_a, _p) -> _a * 256 +"
+        " CAST(conv(_p, 16, 10) AS BIGINT))"
+    ),
+    # leading 3 octets (the OUI) as a number
+    "macstringtooui": (
+        "aggregate(slice(split({0}, ':'), 1, 3), CAST(0 AS BIGINT), (_a, _p)"
+        " -> _a * 256 + CAST(conv(_p, 16, 10) AS BIGINT))"
+    ),
+    "randcanonical": "rand()",
+    "randuniform": "({0} + rand() * (({1}) - ({0})))",
+    "randnormal": "(randn() * ({1}) + ({0}))",
+    "randbernoulli": "IF(rand() < ({0}), 1, 0)",
+    "randexponential": "(-ln(1.0 - rand()) / ({0}))",
+    "randlognormal": "exp(randn() * ({1}) + ({0}))",
+    # uuid() is v4 — unique but NOT time-ordered (documented
+    # divergence; order by an explicit timestamp column instead)
+    "generateuuidv7": "uuid()",
+    # RFC 9562 v7: the first 48 bits (12 hex digits) are unix
+    # milliseconds (r9 probe: was a silent passthrough). Bit-faithful
+    # on real v7 strings; on this engine's generateUUIDv7 (a v4 —
+    # documented divergence there) the value is arbitrary.
+    "uuidv7todatetime": (
+        "timestamp_millis(CAST(conv(substr(replace(CAST({0} AS STRING), '-',"
+        " ''), 1, 12), 16, 10) AS BIGINT))"
+    ),
+    "snowflaketodatetime": (
+        "timestamp_millis(shiftright(CAST({0} AS BIGINT), 22) + 1288834974657)"
+    ),
+    "datetimetosnowflake": "shiftleft(unix_millis({0}) - 1288834974657, 22)",
+    "yyyymmddhhmmsstodatetime": (
+        "to_timestamp(CAST({0} AS STRING), 'yyyyMMddHHmmss')"
+    ),
+    # Spark timestamps are micros — nanos truncate (documented)
+    "fromunixtimestamp64nano": (
+        "timestamp_micros(CAST({0} AS BIGINT) div 1000)"
+    ),
+    "tounixtimestamp64nano": "(unix_micros({0}) * 1000)",
+    "extracttextfromhtml": (
+        "trim(regexp_replace(regexp_replace(regexp_replace({0},"
+        " '(?is)<(script|style)[^>]*>.*?</(script|style)>', ' '), '<[^>]*>', '"
+        " '), '\\\\s+', ' '))"
+    ),
+    "initcaputf8": "initcap({0})",
+    "torelativeyearnum": "year({0})",
+    "torelativequarternum": "(year({0}) * 4 + quarter({0}))",
+    # Monday-boundary week count anchored so 1970-01-01 (Thursday) is
+    # week 0 and the first increment lands on 1970-01-05
+    "torelativeweeknum": (
+        "CAST(floor((datediff({0}, DATE '1970-01-01') + 3) / 7) AS BIGINT)"
+    ),
+    "torelativeminutenum": "CAST(floor(unix_timestamp({0}) / 60) AS BIGINT)",
+    "torelativesecondnum": "unix_timestamp({0})",
+    # storage-encoding hint, value-transparent
+    "tolowcardinality": "{0}",
+    "visiblewidth": "length(CAST({0} AS STRING))",
+    "linfnorm": "array_max(transform({0}, _x -> abs(CAST(_x AS DOUBLE))))",
+    "positioncaseinsensitiveutf8": "locate(lower({1}), lower({0}))",
+    "startswithutf8": "startswith({0}, {1})",
+    "endswithutf8": "endswith({0}, {1})",
+}
+
+
+# Guided refusals: spellings with no faithful Spark rewrite raise
+# ValueError(msg.format(name=name, low=low)) naming the nearest operator
+# or workaround, instead of passing through to a cryptic Spark error.
+_REFUSALS: dict[str, str] = {
+    **dict.fromkeys(
+        ("groupbitmapand", "groupbitmapor", "groupbitmapxor"),
+        "{name} aggregates over AggregateFunction(groupBitmap) STATE columns;"
+        " use the agg_bitmap_ops operator (canal_clickhouse_spark registry)"
+        " for the cardinality algebra, or count(DISTINCT x) for plain columns",
+    ),
+    "avgmap": (
+        "avgMap aggregates per-key values into parallel arrays — not"
+        " expressible as one scalar rewrite; explode the key/value arrays,"
+        " GROUP BY key with the base aggregate, then collect (see the fn_map /"
+        " agg_pivot operators)"
+    ),
+    **dict.fromkeys(
+        ("keccak256", "ripemd160", "blake3"),
+        "{name}: Spark ships md5/sha1/sha2/crc32 only; wrap"
+        " hashlib/pycryptodome {low} in a Pandas UDF (udf_pandas_scalar"
+        " pattern) if bit-exact digests matter",
+    ),
+    **dict.fromkeys(
+        ("base32encode", "base32decode", "sqidencode", "sqiddecode"),
+        "{name}: no Spark builtin for this codec; base64/hex are mapped —"
+        " re-encode upstream or wrap the codec in a Pandas UDF",
+    ),
+    **dict.fromkeys(
+        ("obfuscatequeries", "kql", "prql"),
+        "{name} is CH server-side query tooling with no batch-plan meaning"
+        " here",
+    ),
+    "tobfloat16": (
+        "toBFloat16 truncates the float32 mantissa — Spark has no float-bit"
+        " builtin; CAST(x AS FLOAT) keeps the value class, or wrap numpy"
+        " bfloat16 in a Pandas UDF for exact truncation"
+    ),
+    "icebergtruncate": (
+        "icebergTruncate: spell the transform directly — numbers: x - pmod(x,"
+        " w); strings: substr(s, 1, w)"
+    ),
+    "toweek": (
+        "toWeek's mode-dependent numbering (default: Sunday-start, week 0) has"
+        " no Spark builtin; use toISOWeek (ISO-8601 numbering) or"
+        " toStartOfWeek"
+    ),
+    **dict.fromkeys(
+        ("jsonextractarrayraw", "jsonextractkeysandvaluesraw"),
+        "{name} has no exact Spark spelling (raw per-element JSON text); use"
+        " from_json with an explicit element schema, or JSONExtractString /"
+        " json_object_keys with per-index paths",
+    ),
+    **dict.fromkeys(
+        ("addnanoseconds", "subtractnanoseconds"),
+        "{name}: Spark timestamps carry microsecond precision — DateTime64(9)"
+        " nanosecond arithmetic cannot round-trip; keep nanoseconds as a"
+        " separate BIGINT column or use addMicroseconds (mapped) at µs"
+        " granularity",
+    ),
+    # r10 probe: unrecognized passthrough. PR-AUC's running
+    # precision/recall fold over score-sorted labels has no clean
+    # inline spelling (ROC-AUC's pairwise form does — mapped).
+    "arrayaucpr": (
+        "arrayAUCPR (precision-recall AUC) has no inline Spark spelling;"
+        " arrayROCAUC/arrayAUC are mapped, and the agg_stats building blocks"
+        " cover threshold sweeps via win_running_sum over score-sorted rows"
+    ),
+    "flattentuple": (
+        "flattenTuple recursively flattens nested tuple STRUCTURE, which needs"
+        " the full static type of a struct column — re-select the leaf fields"
+        " explicitly (t.col1.col2 paths)"
+    ),
+    **dict.fromkeys(
+        ("mappartialsort", "mappartialreversesort"),
+        "{name}: partial (limit-bounded) sort of a map is a render concern —"
+        " Spark maps are unordered; use mapSort / mapReverseSort (mapped) and"
+        " slice client-side",
+    ),
+    **dict.fromkeys(
+        ("arrayenumerateuniqranked", "arrayenumeratedenseranked"),
+        "{name}: multi-depth ranked enumeration over nested arrays has no"
+        " inline Spark spelling; for flat arrays use arrayEnumerateUniq /"
+        " arrayEnumerateDense (mapped)",
+    ),
+    **dict.fromkeys(
+        ("mortonencode", "mortondecode", "hilbertencode", "hilbertdecode"),
+        "{name}: space-filling-curve codecs are a physical-layout concern (CH"
+        " uses them for key clustering); cluster Spark data with a sort/bucket"
+        " on the raw key columns instead, or bit-interleave in a Pandas UDF if"
+        " the code value itself is needed",
+    ),
+    "evalmlmethod": (
+        "evalMLMethod applies a CH-trained regression state; train and apply"
+        " models with Spark MLlib (or a Pandas UDF) instead — see"
+        " simpleLinearRegression (mapped) for the inline fit"
+    ),
+    **dict.fromkeys(
+        ("uptime", "sleep", "sleepeachrow"),
+        "{name}() is a server-runtime control with no meaning in a batch plan;"
+        " remove it (timings come from Spark's UI/metrics)",
+    ),
+    **dict.fromkeys(
+        ("formatrow", "formatrownonewline"),
+        "{name} serializes rows through CH's format registry; use"
+        " to_json/to_csv (fn_json operators) for the Spark-native equivalent",
+    ),
+    "generateulid": (
+        "generateULID: no Spark builtin; use generateUUIDv4 (maps to uuid())"
+        " or monotonically_increasing_id via the DataFrame API"
+    ),
+    **dict.fromkeys(
+        ("normalizequery", "normalizedqueryhash"),
+        "{name} applies CH's internal query-text normalizer; no Spark"
+        " equivalent — preprocess query logs with regexp_replace if"
+        " literal-masking is the goal",
+    ),
+    **dict.fromkeys(
+        ("stem", "lemmatize", "synonyms", "detectlanguage", "detectcharset",
+         "detectlanguagemixed", "detectlanguageunknown",
+         "detectprogramminglanguage", "detecttonality"),
+        "{name} needs CH's bundled NLP models; use the text_lang_id / text"
+        " quality operators (llm/text.py) or a Pandas UDF with your own model",
+    ),
+    **dict.fromkeys(
+        ("erf", "erfc", "lgamma", "tgamma"),
+        "{name}: no Spark SQL builtin; wrap scipy.special.{low} in a Pandas"
+        " UDF (udf_pandas_scalar pattern) if needed",
+    ),
+    "formatreadabletimedelta": (
+        "formatReadableTimeDelta's prose rendering ('1 hour, 1 minute and 40"
+        " seconds') has no Spark builtin; spell the buckets with div/% +"
+        " concat_ws, or keep raw seconds"
+    ),
+    **dict.fromkeys(
+        ("addtupleofintervals", "subtracttupleofintervals", "proportionsztest",
+         "wordshingleminhash", "wordshinglesimhash", "ngramminhash",
+         "ngramsimhash", "ngramminhashcaseinsensitive", "ngramsimhashutf8",
+         "wordshingleminhashutf8", "wordshinglesimhashutf8"),
+        "{name} has no faithful inline Spark spelling; see the nearest"
+        " operators: tuple-of-intervals → chained +INTERVAL terms,"
+        " proportionsZTest → agg_stats building blocks, wordShingle sketches →"
+        " dedup_minhash_lsh/dedup_simhash",
+    ),
+    # -- known-unmappable distributed/table-function spellings: loud named
+    # guidance instead of pass-through to a cryptic Spark parse/resolve
+    # error (r6 verdict missing #5 — same philosophy as sumMap/bitmapBuild)
+    **dict.fromkeys(
+        ("remote", "remotesecure", "cluster", "clusterallreplicas"),
+        "{name}() addresses other ClickHouse servers/shards — there is no"
+        " remote CH cluster behind this engine; read the table directly (FROM"
+        " <table>), or use the source_jdbc operator for an external database",
+    ),
+    "merge": (
+        "merge() unions same-schema tables matched by regex across a database;"
+        " spell the union explicitly — SELECT ... FROM t1 UNION ALL SELECT ..."
+        " FROM t2 (see union_all)"
+    ),
+    **dict.fromkeys(
+        ("file", "url", "s3", "s3cluster", "hdfs", "azureblobstorage"),
+        "{name}() reads external storage inline; use the engine's source"
+        " operators instead (scan_parquet / scan_csv / scan_jsonl /"
+        " source_jdbc in sources.py) — they map to spark.read with pushdown"
+        " and schema control",
+    ),
+    "dictgethierarchy": (
+        "dictGetHierarchy walks a parent-key chain of unbounded depth — not a"
+        " scalar rewrite; model the walk as a bounded self-join chain, or use"
+        " the dedup_cluster_cc operator's iterative pattern for full closures"
+    ),
+    **dict.fromkeys(
+        ("mysql", "postgresql", "mongodb", "redis", "sqlite", "odbc", "jdbc"),
+        "{name}() reads an external store inline; use the source_jdbc operator"
+        " (sources.py) — spark.read.jdbc with partitioned bounds — or a"
+        " dedicated Spark connector for the store",
+    ),
+    **dict.fromkeys(
+        ("iceberg", "deltalake", "deltalakelocal", "hudi"),
+        "{name}(): open-table formats read natively in Spark —"
+        " spark.read.format('iceberg'|'delta'|'hudi').load(path) (wire it"
+        " through the scan operators in sources.py)",
+    ),
+    **dict.fromkeys(
+        ("input", "executable", "executablepool", "loop", "fuzzquery",
+         "fuzzjson", "viewifpermitted", "viewexplain", "timeseriesdata",
+         "timeseriestags", "timeseriesmetrics"),
+        "{name}() is a server-side table-function runtime this engine does not"
+        " model; stage the data through a table or the source operators"
+        " (sources.py) instead",
+    ),
+    **dict.fromkeys(
+        ("currentschemas", "currentcatalogs"),
+        "{name}() is a PostgreSQL-compatibility stub; the engine's namespace"
+        " listing is SHOW DATABASES / system.tables",
+    ),
+    "replicate": (
+        "replicate() is CH's internal block-broadcast primitive; array_repeat"
+        " / explode compose the same shapes in Spark"
+    ),
+    "isdecimaloverflow": (
+        "isDecimalOverflow introspects CH's per-width decimal storage bounds;"
+        " Spark decimals carry one 38-digit representation — compare against"
+        " the target precision explicitly (abs(x) < 1e<digits>)"
+    ),
+    "sparsegrams": (
+        "sparseGrams picks substring boundaries off CH's internal rolling-hash"
+        " minima — implementation-defined output with no portable spelling;"
+        " use ngrams(s, n) (mapped) or the text_ngrams operator for"
+        " deterministic shingles"
+    ),
+    "aggthrow": (
+        "aggThrow is ClickHouse's fault-injection test aggregate — it exists"
+        " to throw; nothing to translate"
+    ),
+    **dict.fromkeys(
+        ("analysisofvariance", "anovatest"),
+        "analysisOfVariance (anovaTest) needs the F-distribution significance"
+        " machinery with no inline Spark spelling; build the per-group"
+        " means/variances from the agg_stats building blocks and finish the"
+        " F-test client-side or in a Pandas UDF (scipy.stats.f_oneway)",
+    ),
+    **dict.fromkeys(
+        ("uniqstate", "uniqmerge"),
+        "{name} is a sketch state; use the `agg_hll_merge` operator"
+        " (canal_clickhouse_spark registry), which implements mergeable HLL"
+        " partials with the documented union contract",
+    ),
+    **dict.fromkeys(
+        ("studentttest", "welchttest", "mannwhitneyutest",
+         "kolmogorovsmirnovtest", "meanztest", "studentttestonesample",
+         "categoricalinformationvalue", "anova"),
+        "{name} needs a significance-table lookup (p-values require"
+        " distribution CDFs with no Spark SQL builtin); the test STATISTIC is"
+        " buildable from the agg_stats building blocks (avg/stddev/corr +"
+        " win_rank for rank statistics)",
+    ),
+    # r10 probe: previously an unrecognized-name passthrough to
+    # Spark's UNRESOLVED_ROUTINE error. These train SGD models inside
+    # an aggregate — an iterative algorithm, not a fold; closed-form
+    # least squares IS expressible (simpleLinearRegression →
+    # regr_slope/regr_intercept), and full model training belongs in
+    # Spark ML, not a SQL aggregate.
+    **dict.fromkeys(
+        ("stochasticlinearregression", "stochasticlogisticregression"),
+        "{name} trains an SGD model inside an aggregate — no inline Spark"
+        " spelling; use simpleLinearRegression (closed-form least squares via"
+        " regr_slope/regr_intercept) or Spark ML for iterative training",
+    ),
+    # r8 verdict #3: these previously passed through to Spark's
+    # undefined-function error instead of this family's named guidance.
+    **dict.fromkeys(
+        ("corrmatrix", "covarmatrix", "covarsampmatrix", "covarpopmatrix"),
+        "{name} returns an N×N matrix aggregate with no Spark analog; compute"
+        " the pairwise entries with corr(x, y) / covar_samp(x, y) /"
+        " covar_pop(x, y) (see the agg_stats operator) and assemble the matrix"
+        " from those scalars",
+    ),
+    **dict.fromkeys(
+        ("deltasum", "deltasumtimestamp"),
+        "{name} is order-dependent (sums positive deltas in row order) —"
+        " aggregates see no row order on either engine at scale; use the"
+        " win_lag_lead / win_running_sum window operators with an explicit"
+        " ORDER BY",
+    ),
+    **dict.fromkeys(
+        ("minsamplesizeconversion", "minsamplesizecontinous",
+         "minsamplesizecontinuous"),
+        "{name} needs the normal-quantile function (no Spark builtin); compute"
+        " the power analysis client-side or in a Pandas UDF"
+        " (scipy.stats.norm.ppf)",
+    ),
+    "largesttrianglethreebuckets": (
+        "largestTriangleThreeBuckets is a downsampling render helper; see the"
+        " ts_downsample / stream window operators for the engine-side"
+        " equivalent"
+    ),
+    "bytesize": (
+        "byteSize reports CH's per-type storage width; for strings use"
+        " octet_length(x), fixed-width types are constants of the declared"
+        " type (see the CH type map in chsql_ddl)"
+    ),
+    "arraynormalizedgini": (
+        "arrayNormalizedGini's rank-weighted fold has no tractable inline"
+        " spelling; compute it from arrayAUC building blocks or a Pandas UDF"
+    ),
+    "tupletonamevaluepairs": (
+        "tupleToNameValuePairs: Spark structs lose CH's tuple-name"
+        " introspection at this level; use map_entries on a MAP column or"
+        " to_json + json_object_keys (tupleNames)"
+    ),
+    **dict.fromkeys(
+        ("base58encode", "base58decode"),
+        "{name} needs bignum base-58 arithmetic (no Spark builtin); use"
+        " base64Encode/base64Decode (mapped) or a Pandas UDF",
+    ),
+    "bitslice": (
+        "bitSlice extracts sub-BYTE bit ranges — no Spark builtin; for"
+        " byte-aligned slices use substr, for bit tests use"
+        " bitTest/bitTestAll/bitTestAny (mapped)"
+    ),
+    "byteswap": (
+        "byteSwap's result depends on the CH integer WIDTH (UInt8 vs UInt64"
+        " swap differently) which Spark types don't preserve; spell the swap"
+        " explicitly with shiftleft/shiftright masks for your width"
+    ),
+    "subbitmap": (
+        "subBitmap operates on roaring-bitmap states — not Spark-expressible"
+        " inline; the agg_bitmap_ops operator implements the bitmap family"
+        " over array states"
+    ),
+    **dict.fromkeys(
+        ("pointinpolygon", "geohashencode", "geohashdecode", "geohashesinbox",
+         "readwktpoint", "readwktpolygon", "readwktmultipolygon",
+         "readwktring", "wkt", "polygonareacartesian",
+         "polygonperimetercartesian", "polygonsunioncartesian",
+         "polygonsintersectioncartesian"),
+        "{name}: computational-geometry/geohash encodings have no Spark"
+        " builtin; use a Pandas UDF (shapely/geohash libs) — the"
+        " greatCircleDistance/geoDistance spellings are mapped",
+    ),
+    **dict.fromkeys(
+        ("dameraulevenshteindistance", "jarosimilarity",
+         "jarowinklersimilarity"),
+        "{name}: no Spark builtin for this string metric; levenshtein"
+        " (editDistance — mapped) is the supported distance, or wrap a library"
+        " in a Pandas UDF",
+    ),
+    **dict.fromkeys(
+        ("normalizeutf8nfc", "normalizeutf8nfd", "normalizeutf8nfkc",
+         "normalizeutf8nfkd"),
+        "{name}: Unicode normalization has no Spark SQL builtin; wrap python's"
+        " unicodedata.normalize in a Pandas UDF (udf_pandas_scalar pattern)",
+    ),
+    **dict.fromkeys(
+        ("idnaencode", "idnadecode", "punycodeencode", "punycodedecode",
+         "tryidnaencode", "trypunycodedecode"),
+        "{name}: IDNA/punycode needs the ICU machinery; wrap python's"
+        " str.encode('idna') in a Pandas UDF",
+    ),
+    "jsonmergepatch": (
+        "JSONMergePatch (RFC 7386) has no Spark builtin; merge via from_json →"
+        " map_concat → to_json for flat documents"
+    ),
+    **dict.fromkeys(
+        ("approx_top_k", "approx_top_count", "approx_top_sum"),
+        "{name} returns (value, count, error) tuples from a sketch; use"
+        " topK(k)(x) / topKWeighted(k)(x, w) for the values-only arrays, or"
+        " the agg_freq_items / topk_weighted operators for the counted"
+        " two-column plan",
+    ),
+    **dict.fromkeys(
+        ("queryid", "initialqueryid"),
+        "{name}: Spark exposes no per-query id inline; correlate via the Spark"
+        " UI / listener API outside the query",
+    ),
+    **dict.fromkeys(
+        ("isnullable", "isconstant"),
+        "{name} introspects the expression's compile-time type; read the"
+        " schema via DESCRIBE TABLE / system.columns instead",
+    ),
+    **dict.fromkeys(
+        ("version", "buildid", "revision", "displayname", "serveruuid",
+         "zookeepersessionuptime", "connectionid", "transactionid", "getmacro",
+         "getsetting", "getclientinfo", "getoskernelversion",
+         "estimatecompressionratio", "structuretoprotobufschema",
+         "structuretocapnprotoschema"),
+        "{name}() is server-runtime introspection with no meaning in a batch"
+        " plan (same family as uptime()); read engine metadata from the Spark"
+        " session/UI instead",
+    ),
+    "hascolumnintable": (
+        "hasColumnInTable: query the system.columns introspection table"
+        " (chsql_system_introspection) instead"
+    ),
+    **dict.fromkeys(
+        ("ipv6numtostring", "ipv6stringtonum", "ipv4toipv6", "cutipv6",
+         "ipv6cidrtorange", "toipv6", "toipv6ornull", "toipv6orzero"),
+        "{name}: IPv6 needs 128-bit binary arithmetic with no Spark inline"
+        " spelling; the IPv4 family (IPv4NumToString / IPv4StringToNum /"
+        " IPv4CIDRToRange / isIPAddressInRange) and isIPv6String (pure"
+        " validation) are mapped — wrap an ipaddress-module Pandas UDF for"
+        " IPv6 arithmetic",
+    ),
+    **dict.fromkeys(
+        ("randbinomial", "randnegativebinomial", "randpoisson", "randstudentt",
+         "randchisquared", "randfisherf"),
+        "{name}: multi-draw distributions need a sampling loop; use"
+        " randUniform/randNormal/randExponential (mapped) or a Pandas UDF with"
+        " numpy.random",
+    ),
+    # r12 probe: was Spark's raw unresolved-routine error
+    "fuzzbits": (
+        "fuzzBits flips random BITS inside a byte string (a test-data fuzzer"
+        " over CH's FixedString layout) — no Spark builtin mutates binary in"
+        " place; use randCanonical/randBernoulli (mapped) for randomized"
+        " columns or a Pandas UDF over binary"
+    ),
+    **dict.fromkeys(
+        ("generatesnowflakeid", "ulidstringtodatetime"),
+        "{name}: needs the machine-id/sequence state (or base32 bignum) of the"
+        " ID scheme; snowflakeIDToDateTime / dateTimeToSnowflakeID are mapped",
+    ),
+    "nonnegativederivative": (
+        "nonNegativeDerivative is a window function; spell it as greatest((x -"
+        " lag(x) OVER w) / (unix_timestamp(t) - lag(unix_timestamp(t)) OVER"
+        " w), 0) — see win_lag_lead"
+    ),
+    **dict.fromkeys(
+        ("blocknumber", "rownumberinblock", "blocksize"),
+        "{name} is ClickHouse's deprecated BLOCK-scoped form — its result"
+        " depends on physical block boundaries that don't exist on Spark; use"
+        " row_number() OVER an explicit ORDER BY",
+    ),
+    # -- r7 sixth probe batch: date makers, hash spellings, encryption,
+    # n-gram similarity, HTML strip
+    **dict.fromkeys(
+        ("joinget", "joingetornull"),
+        "{name} reads a Join-engine table's hash state; use dictGet against a"
+        " CREATE DICTIONARY binding (mapped) or a plain LEFT JOIN",
+    ),
+    **dict.fromkeys(
+        ("catboostevaluate", "modelevaluate"),
+        "{name} needs CH's bundled model runtime; score with a Pandas UDF over"
+        " mapInPandas (the multimodal/feature operators show the Arrow"
+        " plumbing)",
+    ),
+    **dict.fromkeys(
+        ("aes_encrypt_mysql", "aes_decrypt_mysql"),
+        "{name} applies MySQL's key-folding scheme; use encrypt/decrypt"
+        " (mapped to aes_encrypt/aes_decrypt) with a proper-length key",
+    ),
+    **dict.fromkeys(
+        ("multifuzzymatchany", "multifuzzymatchanyindex",
+         "multifuzzymatchallindices"),
+        "{name}: fuzzy (edit-distance) regex matching has no Spark builtin;"
+        " multiMatchAny (exact regex, mapped) or levenshtein post-filters are"
+        " the building blocks",
+    ),
+    "runningconcurrency": (
+        "runningConcurrency is block-scoped; use maxIntersections (mapped) for"
+        " the group-wide peak or a window running count"
+    ),
+    **dict.fromkeys(
+        ("getsizeofenumtype", "dumpcolumnstructure",
+         "defaultvalueofargumenttype", "lowcardinalitykeys",
+         "lowcardinalityindices"),
+        "{name} introspects CH's physical column representation, which Spark"
+        " columns don't carry; DESCRIBE/system.columns is the schema surface,"
+        " defaultValueOfTypeName the type-default one",
+    ),
+    **dict.fromkeys(
+        ("arraylevenshteindistance", "arraylevenshteindistanceweighted"),
+        "{name}: no inline Spark spelling over generic tuples/arrays;"
+        " editDistance (strings) and byteHammingDistance are mapped — explode"
+        " + compare for the array forms",
+    ),
+    **dict.fromkeys(
+        ("uuidnumtostring", "uuidstringtonum", "uuidv7tonum", "uuidtonum"),
+        "{name} converts to/from the 16-byte binary UUID representation; keep"
+        " UUIDs as strings here (uuid() / generateUUIDv4 are mapped)",
+    ),
+    "serverversion": (
+        "serverVersion() is server-runtime introspection with no meaning in a"
+        " batch plan (same family as uptime())"
+    ),
+}
+
+
 def _translate_call(name: str, args: list[str]) -> str:
     low = name.lower()
+    tpl = _TEMPLATES.get(low)
+    if tpl is not None:
+        try:
+            return tpl.format(*args)
+        except IndexError:
+            n = 1 + max(
+                int(f) for _, f, _, _ in string.Formatter().parse(tpl) if f
+            )
+            raise ValueError(
+                f"{name}: expects {n} arguments, got {len(args)}"
+            ) from None
+    if low in _REFUSALS:
+        raise ValueError(_REFUSALS[low].format(name=name, low=low))
     if low == "count" and not [a for a in args if a]:
         return "count(*)"  # CH's zero-arg count()
     # -- external dictionaries (registry + rationale at _CH_DICTS)
@@ -1477,20 +2535,6 @@ def _translate_call(name: str, args: list[str]) -> str:
         return f"approx_count_distinct({', '.join(args)})"
     if low == "uniqexact":
         return f"count(DISTINCT {', '.join(args)})"
-    if low == "groupbitmap":
-        # groupBitmap(expr) returns the bitmap's CARDINALITY (UInt64) —
-        # exactly count(DISTINCT); the state-algebra forms
-        # (groupBitmapAnd/Or/Xor over AggregateFunction(groupBitmap)
-        # columns) stay routed to agg_bitmap_ops below (r10 continuation
-        # probe: bare groupBitmap was a silent passthrough)
-        return f"count(DISTINCT {args[0]})"
-    if low in ("groupbitmapand", "groupbitmapor", "groupbitmapxor"):
-        raise ValueError(
-            f"{name} aggregates over AggregateFunction(groupBitmap)"
-            " STATE columns; use the agg_bitmap_ops operator"
-            " (canal_clickhouse_spark registry) for the cardinality"
-            " algebra, or count(DISTINCT x) for plain columns"
-        )
     if low in ("position", "positionutf8"):
         # position(haystack, needle[, start]) -> locate. Spark strings are
         # UTF-8 native and locate counts characters, which is CH's *UTF8
@@ -1513,10 +2557,6 @@ def _translate_call(name: str, args: list[str]) -> str:
         if len(args) == 3:
             return f"locate({args[1]}, {args[0]}, {args[2]})"
         return f"locate({args[1]}, {args[0]})"
-    if low == "splitbychar":  # splitByChar(sep, s) -> split(s, sep)
-        return f"split({args[1]}, {args[0]})"
-    if low == "splitbyregexp":  # splitByRegexp(re, s) -> split(s, re)
-        return f"split({args[1]}, {args[0]})"
     if low == "length":
         # CH length() covers strings AND arrays; Spark needs size() for the
         # latter. Same textual heuristic (and limitation) as empty().
@@ -1655,13 +2695,6 @@ def _translate_call(name: str, args: list[str]) -> str:
                 f" transform({sorted_entries}, _e -> _e.value) AS values)"
             )
         return f"map_from_entries({sorted_entries})"
-    if low == "avgmap":
-        raise ValueError(
-            "avgMap aggregates per-key values into parallel arrays —"
-            " not expressible as one scalar rewrite; explode the"
-            " key/value arrays, GROUP BY key with the base aggregate,"
-            " then collect (see the fn_map / agg_pivot operators)"
-        )
     if low == "medianif":
         return f"percentile(IF({_cond(args[-1])}, {args[0]}, NULL), 0.5)"
     if low in ("argmaxif", "argminif"):
@@ -1673,8 +2706,6 @@ def _translate_call(name: str, args: list[str]) -> str:
         )
     if low == "anylastif":
         return f"last(IF({_cond(args[1])}, {args[0]}, NULL), true)"
-    if low == "avgweighted":
-        return f"(sum(({args[0]}) * ({args[1]})) / sum({args[1]}))"
     if low == "multiif":  # multiIf(c1, v1, c2, v2, ..., else)
         parts = ["CASE"]
         for i in range(0, len(args) - 1, 2):
@@ -1695,14 +2726,6 @@ def _translate_call(name: str, args: list[str]) -> str:
             return f"btrim({args[0]}, {args[1]})"
         fn = "ltrim" if low == "trimleft" else "rtrim"
         return f"{fn}({args[1]}, {args[0]})"
-    if low == "randconstant":
-        # CH: one random value shared by every row of the result (block-
-        # constant; this engine's block is the whole result). A whole-
-        # result window aggregate over rand() yields one shared value —
-        # a scalar subquery does NOT (Spark re-evaluates nondeterministic
-        # subqueries per row, r11 probe: 3 rows → 3 distinct values).
-        # CH's UInt32 range is kept via the same floor(rand()*2^32).
-        return "CAST(min(floor(rand() * 4294967296)) OVER () AS BIGINT)"
     if low == "countif":
         # countIf(cond) / countIf(x, cond) — both with CH truthiness;
         # the old straight count_if rename broke the INT-cond and the
@@ -1722,10 +2745,6 @@ def _translate_call(name: str, args: list[str]) -> str:
         return "(" + op.join(f"({_cond(a)})" for a in args) + ")"
     if low == "chnot":
         return f"(NOT ({_cond(args[0])}))"
-    if low == "toint32":
-        return f"CAST({args[0]} AS INT)"
-    if low == "toint64":
-        return f"CAST({args[0]} AS BIGINT)"
     # Scaled fallible decimal casts (r8 verdict missing #2: these
     # previously passed through silently — or, for toDecimal64OrNull, hit
     # the generic map below and LOST the scale argument). Same
@@ -1776,8 +2795,6 @@ def _translate_call(name: str, args: list[str]) -> str:
                 "TIMESTAMP '1970-01-01 00:00:00'" if target == "TIMESTAMP"
                 else "0")
             return f"coalesce({tc}, {zero})"
-    if low == "tofloat64":
-        return f"CAST({args[0]} AS DOUBLE)"
     if low in ("todecimal32", "todecimal64", "todecimal128"):
         # CH toDecimalN(x, scale): N fixes the storage width (9/18/38
         # digits), the argument fixes the scale. Literal-scale only — the
@@ -1795,61 +2812,10 @@ def _translate_call(name: str, args: list[str]) -> str:
                 f" 'yyyy-MM-dd HH:mm:ss')"
             )
         return f"CAST({args[0]} AS STRING)"
-    if low == "intdiv":
-        # CAST makes the rewrite type-safe: Spark's `div` is integral-only
-        # while CH coerces doubles. No-op (and 64-bit exact) for integer
-        # operands; for fractional operands the operands truncate first —
-        # divergent from CH only when the DIVISOR is non-integral.
-        # Rounding: CH truncates toward ZERO (C++ integer division),
-        # exactly Spark's `div` — provable from the division identity:
-        # CH's modulo is sign-of-dividend (modulo(-7, 3) = -1, pinned in
-        # the r9 battery), and a = b·intDiv(a,b) + modulo(a,b) only holds
-        # with the truncating quotient (-2), never the floored one (-3).
-        return f"(CAST({args[0]} AS BIGINT) div CAST({args[1]} AS BIGINT))"
-    # Operand sub-expressions are parenthesized individually: the argument
-    # may itself be an infix expression (`minus(a, b - c)`), and splicing it
-    # unwrapped next to the operator changes meaning via precedence.
-    if low == "modulo":
-        return f"(({args[0]}) % ({args[1]}))"
-    if low == "plus":
-        return f"(({args[0]}) + ({args[1]}))"
-    if low == "minus":
-        return f"(({args[0]}) - ({args[1]}))"
-    if low == "multiply":
-        return f"(({args[0]}) * ({args[1]}))"
-    if low == "divide":
-        # CH divide() is always FLOAT division with IEEE zero-divisor
-        # semantics: x/0 → ±Inf, 0/0 → NaN (r11 probe: Spark's Divide
-        # returns NULL on a zero divisor). x * Inf reproduces all three
-        # cases; the infix `/` spelling keeps Spark's NULL (documented
-        # divergence — rewriting every division would bloat plans).
-        return (
-            f"(CASE WHEN ({args[1]}) = 0 THEN CAST({args[0]} AS DOUBLE)"
-            f" * CAST('Infinity' AS DOUBLE)"
-            f" ELSE CAST({args[0]} AS DOUBLE) / ({args[1]}) END)"
-        )
-    if low == "negate":
-        return f"(- ({args[0]}))"
     if low == "xxhash32":
         # engine-private hash values (same non-portability contract as
         # fn_hash_fast): a stable 32-bit lane carved from xxhash64
         return f"(xxhash64({', '.join(args)}) & 4294967295)"
-    if low == "max2":
-        return f"greatest({args[0]}, {args[1]})"
-    if low == "min2":
-        return f"least({args[0]}, {args[1]})"
-    if low == "countmatches":
-        return f"regexp_count({args[0]}, {args[1]})"
-    if low == "encodexmlcomponent":
-        # CH escapes & < > " ' (ampersand FIRST so entities don't
-        # double-escape) — exact parity, five nested replaces.
-        return (
-            "replace(replace(replace(replace(replace("
-            f"{args[0]}, '&', '&amp;'), '<', '&lt;'), '>', '&gt;'),"
-            " '\"', '&quot;'), '''', '&apos;')"
-        )
-    if low == "isvalidascii":
-        return f"({args[0]} RLIKE '^[\\\\x00-\\\\x7F]*$')"
     if low == "decodexmlcomponent":
         # XML's five entities + numeric references — routed through the
         # HTML decoder (a superset: named entities beyond the XML five
@@ -1905,62 +2871,6 @@ def _translate_call(name: str, args: list[str]) -> str:
             f" IF(_a < length({nd}) AND _c = substr({nd}, _a + 1, 1),"
             f" _a + 1, _a)) = length({nd}))"
         )
-    if low == "tostringcuttozero":
-        # truncate at the first NUL byte (r9 probe: passthrough)
-        return f"split({args[0]}, '\\u0000')[0]"
-    if low in ("keccak256", "ripemd160", "blake3"):
-        raise ValueError(
-            f"{name}: Spark ships md5/sha1/sha2/crc32 only; wrap"
-            f" hashlib/pycryptodome {low} in a Pandas UDF"
-            " (udf_pandas_scalar pattern) if bit-exact digests matter"
-        )
-    if low in ("base32encode", "base32decode", "sqidencode", "sqiddecode"):
-        raise ValueError(
-            f"{name}: no Spark builtin for this codec; base64/hex are"
-            " mapped — re-encode upstream or wrap the codec in a"
-            " Pandas UDF"
-        )
-    if low in ("obfuscatequeries", "kql", "prql"):
-        raise ValueError(
-            f"{name} is CH server-side query tooling with no batch-plan"
-            " meaning here"
-        )
-    if low == "tobfloat16":
-        raise ValueError(
-            "toBFloat16 truncates the float32 mantissa — Spark has no"
-            " float-bit builtin; CAST(x AS FLOAT) keeps the value class,"
-            " or wrap numpy bfloat16 in a Pandas UDF for exact truncation"
-        )
-    if low == "icebergtruncate":
-        raise ValueError(
-            "icebergTruncate: spell the transform directly — numbers:"
-            " x - pmod(x, w); strings: substr(s, 1, w)"
-        )
-    if low == "regexpquotemeta":
-        # CH escapes \0 \\ | ( ) ^ $ . [ ] ? * + { : - with a backslash
-        # (r9 probe: was the one silent passthrough in a 65-spelling
-        # sweep). One regexp_replace with the metacharacter class.
-        return (
-            f"regexp_replace({args[0]},"
-            " '([\\\\\\\\|()^$.\\\\[\\\\]?*+{:-])', '\\\\\\\\$1')"
-        )
-    if low == "tobool":
-        return f"CAST({args[0]} AS BOOLEAN)"
-    if low in ("totime", "totimewithfixeddate"):
-        # CH pins the time-of-day onto 1970-01-02 (toTimeWithFixedDate is
-        # the ≥24.9 rename of the same function)
-        return (
-            f"to_timestamp(concat('1970-01-02 ',"
-            f" date_format({args[0]}, 'HH:mm:ss')))"
-        )
-    if low == "tostartofsecond":
-        return f"date_trunc('SECOND', {args[0]})"
-    if low == "toweek":
-        raise ValueError(
-            "toWeek's mode-dependent numbering (default: Sunday-start,"
-            " week 0) has no Spark builtin; use toISOWeek (ISO-8601"
-            " numbering) or toStartOfWeek"
-        )
     if low in ("trunc", "truncate"):
         # numeric truncation toward zero, optional decimal places; Spark's
         # trunc() is date-only so spell it with floor/ceil on the sign
@@ -1980,8 +2890,6 @@ def _translate_call(name: str, args: list[str]) -> str:
         ):
             grp = 1
         return f"regexp_extract({args[0]}, {pat}, {grp})"
-    if low == "arraywithconstant":  # arrayWithConstant(n, x) — args swap
-        return f"array_repeat({args[1]}, CAST({args[0]} AS INT))"
     if low == "emptyarraytosingle":
         # emptyArrayToSingle(a): [] → one-element array. CH fills the
         # element TYPE's default (0/''); NULL is the honest static
@@ -2001,24 +2909,6 @@ def _translate_call(name: str, args: list[str]) -> str:
         if spark_t is None:
             raise ValueError(f"unsupported empty-array constructor {name}")
         return f"CAST(array() AS ARRAY<{spark_t}>)"
-    if low == "toyyyymm":
-        # numeric, as CH (UInt32 → BIGINT per the §1.2 widening table);
-        # was a string through r5 — r6 fidelity fix, oracle updated
-        return f"CAST(date_format({args[0]}, 'yyyyMM') AS BIGINT)"
-    if low == "toyyyymmdd":
-        return f"CAST(date_format({args[0]}, 'yyyyMMdd') AS BIGINT)"
-    if low == "toyyyymmddhhmmss":
-        return f"CAST(date_format({args[0]}, 'yyyyMMddHHmmss') AS BIGINT)"
-    if low == "tostartofmonth":
-        # CH returns Date at day-or-coarser granularity (DuckDB's
-        # date_trunc agrees); Spark's date_trunc alone returns TIMESTAMP —
-        # cast so the result type matches both CH's contract and the
-        # oracle's arrow schema (r5 type-skew sweep).
-        return f"CAST(date_trunc('month', {args[0]}) AS DATE)"
-    if low == "tostartofday":
-        return f"date_trunc('day', {args[0]})"
-    if low == "tostartofhour":
-        return f"date_trunc('hour', {args[0]})"
     if low == "tostartofweek":
         # CH default mode 0 starts weeks on SUNDAY; Spark's
         # date_trunc('week') starts on Monday. Floor to the on-or-before
@@ -2125,8 +3015,6 @@ def _translate_call(name: str, args: list[str]) -> str:
         return _translate_call(name, [f"transform({args[1]}, {args[0]})"])
     if low == "arraysum":
         return f"aggregate({args[0]}, 0D, (acc, x) -> acc + x)"
-    if low == "assumenotnull":
-        return args[0]
     if low == "arraycount":  # arrayCount(lambda, arr) / arrayCount(arr)
         if len(args) == 2:
             return f"size(filter({args[1]}, {_pred_lambda(args[0])}))"
@@ -2174,18 +3062,6 @@ def _translate_call(name: str, args: list[str]) -> str:
             f"transform({a}, _x -> CAST(array_position("
             f"array_distinct({a}), _x) AS INT))"
         )
-    if low == "arrayenumerate":  # 1..size(arr), CH's positional index array
-        return f"sequence(1, size({args[0]}))"
-    if low == "yesterday":
-        return "date_sub(current_date(), 1)"
-    if low == "touint64":
-        return f"CAST({args[0]} AS BIGINT)"  # Spark has no unsigned; widen
-    if low == "touint32":
-        # CH integer casts WRAP modulo 2^width (r11 probe:
-        # toUInt32(2^32) = 0 in CH). Inner exact-width cast wraps two's-
-        # complement (ANSI off), the mask recovers the unsigned value,
-        # and the outer type stays the engine's widened signed map.
-        return f"(CAST(CAST({args[0]} AS INT) AS BIGINT) & 4294967295)"
     if low in ("toint8", "toint16"):
         inner = "TINYINT" if low == "toint8" else "SMALLINT"
         return f"CAST(CAST({args[0]} AS {inner}) AS INT)"
@@ -2284,13 +3160,6 @@ def _translate_call(name: str, args: list[str]) -> str:
             f" THEN 'Float64'"
             f" ELSE 'String' END)"
         )
-    if low in ("json_value", "json_query"):
-        # SQL/JSON operators take a real JSONPath — pass it straight in
-        return f"get_json_object({args[0]}, {args[1]})"
-    if low == "json_exists":
-        return f"(get_json_object({args[0]}, {args[1]}) IS NOT NULL)"
-    if low == "isvalidjson":
-        return f"(try_parse_json({args[0]}) IS NOT NULL)"
     if low == "jsonlength":
         # CH counts array elements OR object keys; json_array_length is
         # NULL on objects, so fall through to the key count.
@@ -2303,12 +3172,6 @@ def _translate_call(name: str, args: list[str]) -> str:
             f"coalesce(json_array_length({target}),"
             f" size(json_object_keys({target})))"
         )
-    if low in ("jsonextractarrayraw", "jsonextractkeysandvaluesraw"):
-        raise ValueError(
-            f"{name} has no exact Spark spelling (raw per-element JSON"
-            " text); use from_json with an explicit element schema, or"
-            " JSONExtractString / json_object_keys with per-index paths"
-        )
     if low == "arrayfirstindex":  # 1-based index of first lambda match; 0
         # when none (array_position's own not-found contract); NULL array
         # propagates NULL, as CH.
@@ -2320,13 +3183,6 @@ def _translate_call(name: str, args: list[str]) -> str:
         # binary digest, like CH's FixedString result — hex(SHA256(x))
         # round-trips to the same uppercase hex CH prints.
         return f"unhex(sha2({args[0]}, {low[3:]}))"
-    if low == "sha1":
-        return f"unhex(sha1({args[0]}))"
-    if low == "md5":
-        # binary digest like the SHA family — CH's hex(MD5(x)) idiom
-        # round-trips to the same uppercase hex (r11 probe: Spark's md5
-        # returns a lowercase hex STRING, so hex() re-hexed the text)
-        return f"unhex(md5({args[0]}))"
     if low == "transform":
         if len(args) == 2:  # Spark's own HOF spelling — pass through
             return f"transform({args[0]}, {args[1]})"
@@ -2335,12 +3191,6 @@ def _translate_call(name: str, args: list[str]) -> str:
         m = f"try_element_at(map_from_arrays({args[1]}, {args[2]}), {args[0]})"
         dflt = args[3] if len(args) > 3 else args[0]
         return f"coalesce({m}, {dflt})"
-    if low == "rounddown":
-        # largest bound <= x, else the first (smallest) bound
-        return (
-            f"coalesce(array_max(filter({args[1]}, _e -> _e <= {args[0]})),"
-            f" {args[1]}[0])"
-        )
     if low == "extract":
         if len(args) != 2:  # ANSI extract(FIELD FROM expr) — pass through
             return f"extract({', '.join(args)})"
@@ -2351,16 +3201,6 @@ def _translate_call(name: str, args: list[str]) -> str:
         ):
             grp = 1  # CH: with subpatterns, the first capture group wins
         return f"regexp_extract({args[0]}, {pat}, {grp})"
-    if low == "median":
-        return f"percentile({args[0]}, 0.5)"
-    if low == "groupuniqarrayarray":
-        # -Array combinator on groupUniqArray: the distinct elements
-        # across all input arrays (r9 probe: silent passthrough)
-        return f"array_distinct(flatten(collect_list({args[0]})))"
-    if low in ("grouparrayarray", "arrayconcatagg"):
-        # aggregate arrays by concatenation (arrayConcatAgg is the
-        # CH 23.10 alias — r12 probe: was a raw passthrough)
-        return f"flatten(collect_list({args[0]}))"
     if low == "anyif":
         return f"any_value(IF({_cond(args[1])}, {args[0]}, NULL), true)"
     if low in ("any", "anylast", "firstvalue", "lastvalue",
@@ -2374,14 +3214,6 @@ def _translate_call(name: str, args: list[str]) -> str:
               "firstvalue": "first_value", "first_value": "first_value",
               "lastvalue": "last_value", "last_value": "last_value"}[low]
         return f"{fn}({args[0]}, true)"
-    if low in ("any_respect_nulls", "anyrespectnulls",
-               "first_value_respect_nulls", "firstvaluerespectnulls"):
-        # the RESPECT NULLS twins (CH 23.5 alias family + the postfix
-        # `RESPECT NULLS` modifier, rewritten to these names upstream)
-        return f"first_value({args[0]})"
-    if low in ("anylast_respect_nulls", "anylastrespectnulls",
-               "last_value_respect_nulls", "lastvaluerespectnulls"):
-        return f"last_value({args[0]})"
     if low in ("datediff", "date_diff"):
         # dateDiff('unit', start, end): CH counts CROSSED unit boundaries
         # (dateDiff('day', 23:00 d1, 01:00 d2) = 1), while Spark's
@@ -2404,8 +3236,6 @@ def _translate_call(name: str, args: list[str]) -> str:
         unit = args[0].strip().strip("'\"").upper()
         n = args[1] if low == "dateadd" else f"-({args[1]})"
         return f"timestampadd({unit}, {n}, {args[2]})"
-    if low == "tomonday":  # week floor to DATE, Monday start (both engines)
-        return f"to_date(date_trunc('week', {args[0]}))"
     if low == "now64":  # precision arg is display-only here
         if len(args) > 1 and args[1].strip():
             # now64(p, tz): rendering-use map, same as toTimeZone
@@ -2440,13 +3270,6 @@ def _translate_call(name: str, args: list[str]) -> str:
         unit = _ADD_UNITS[low.removeprefix("subtract").removeprefix("add")]
         n = args[1] if low.startswith("add") else f"-({args[1]})"
         return f"timestampadd({unit}, {n}, {args[0]})"
-    if low in ("addnanoseconds", "subtractnanoseconds"):
-        raise ValueError(
-            f"{name}: Spark timestamps carry microsecond precision —"
-            " DateTime64(9) nanosecond arithmetic cannot round-trip; keep"
-            " nanoseconds as a separate BIGINT column or use"
-            " addMicroseconds (mapped) at µs granularity"
-        )
     if low == "timezoneoffset":
         # offset of the session zone from UTC at the given instant, in
         # seconds: to_utc_timestamp shifts the instant by exactly that
@@ -2472,26 +3295,13 @@ def _translate_call(name: str, args: list[str]) -> str:
         return (
             f"(CAST({args[0]} AS BIGINT) {op} CAST({args[1]} AS BIGINT))"
         )
-    if low == "bitnot":
-        return f"(~CAST({args[0]} AS BIGINT))"
-    if low == "bitshiftleft":
-        return f"shiftleft(CAST({args[0]} AS BIGINT), {args[1]})"
-    if low == "bitshiftright":
-        return f"shiftright(CAST({args[0]} AS BIGINT), {args[1]})"
-    if low in ("base64decode", "frombase64"):  # CH returns String; Spark
-        # unbase64 returns binary
-        return f"CAST(unbase64({args[0]}) AS STRING)"
     # -- string search family
-    if low == "positioncaseinsensitive":
-        return f"locate(lower({args[1]}), lower({args[0]}))"
     if low == "countsubstrings":
         h, n = args[0], args[1]
         return (
             f"CAST((length({h}) - length(replace({h}, {n}, '')))"
             f" / length({n}) AS INT)"
         )
-    if low == "multisearchany":  # multiSearchAny(haystack, [n1, n2, ...])
-        return f"exists({args[1]}, p -> locate(p, {args[0]}) > 0)"
     if low in ("hastoken", "hastokenornull"):
         # token = maximal [A-Za-z0-9] run; the OrNull form yields NULL
         # when the needle is not itself one token (CH's contract for a
@@ -2502,8 +3312,6 @@ def _translate_call(name: str, args: list[str]) -> str:
                 f"IF({args[1]} RLIKE '^[A-Za-z0-9]+$', {hit}, NULL)"
             )
         return hit
-    if low == "hasall":  # hasAll(a, b): a ⊇ b
-        return f"(size(array_except({args[1]}, {args[0]})) = 0)"
     if low == "extractall":
         # CH returns the capture group when the pattern has one, else the
         # whole match; mirror via the group index. The paren test must count
@@ -2512,10 +3320,6 @@ def _translate_call(name: str, args: list[str]) -> str:
         # group 1 for '(?:ab)+' and failed at runtime on a valid CH query).
         idx = 1 if re.search(r"(?<!\\)\((?!\?)", args[1]) else 0
         return f"regexp_extract_all({args[0]}, {args[1]}, {idx})"
-    if low == "splitbystring":  # splitByString(sep, s) — sep is literal text
-        return f"split({args[1]}, concat('\\\\Q', {args[0]}, '\\\\E'))"
-    if low == "splitbywhitespace":
-        return f"split(trim({args[0]}), '\\\\s+')"
     # -- URL family → parse_url parts
     if low in ("domain", "protocol", "path", "querystring", "fragment"):
         part = {
@@ -2523,14 +3327,6 @@ def _translate_call(name: str, args: list[str]) -> str:
             "querystring": "QUERY", "fragment": "REF",
         }[low]
         return f"parse_url({args[0]}, '{part}')"
-    if low == "extracturlparameter":
-        return f"parse_url({args[0]}, 'QUERY', {args[1]})"
-    if low == "netloc":
-        return f"parse_url({args[0]}, 'AUTHORITY')"
-    if low == "topleveldomain":
-        return (
-            f"regexp_extract(parse_url({args[0]}, 'HOST'), '([^.]+)$', 1)"
-        )
     if low in ("firstsignificantsubdomain", "cuttofirstsignificantsubdomain"):
         # CH resolves these against its embedded public-suffix list; this
         # models the two dominant shapes of that list — single-label TLDs
@@ -2562,20 +3358,6 @@ def _translate_call(name: str, args: list[str]) -> str:
             f" element_at({labels},"
             f" size({labels}) - IF({two_level}, 2, 1)))"
         )
-    if low == "cutquerystring":  # removes '?query', keeps any fragment
-        return f"regexp_replace({args[0]}, '\\\\?[^#]*', '')"
-    if low == "cutfragment":
-        return f"regexp_replace({args[0]}, '#.*$', '')"
-    if low == "cutquerystringandfragment":
-        return f"regexp_replace({args[0]}, '[?#].*$', '')"
-    if low == "querystringandfragment":  # text after '?', without the '?'
-        return f"regexp_extract({args[0]}, '\\\\?(.*)', 1)"
-    if low == "pathfull":  # path + query + fragment (everything after host)
-        return (
-            f"concat(parse_url({args[0]}, 'PATH'),"
-            f" coalesce(concat('?', parse_url({args[0]}, 'QUERY')), ''),"
-            f" coalesce(concat('#', parse_url({args[0]}, 'REF')), ''))"
-        )
     if low in ("extracturlparameters", "extracturlparameternames"):
         q_ = f"parse_url({args[0]}, 'QUERY')"
         pairs = (
@@ -2584,8 +3366,6 @@ def _translate_call(name: str, args: list[str]) -> str:
         if low == "extracturlparameters":
             return pairs
         return f"transform({pairs}, _p -> split(_p, '=')[0])"
-    if low == "cutwww":
-        return f"regexp_replace({args[0]}, '//www\\\\.', '//')"
     if low == "urlhierarchy":
         # Progressive path prefixes under protocol://host (query/fragment
         # cut) — the common form; CH additionally emits a final query-level
@@ -2608,27 +3388,6 @@ def _translate_call(name: str, args: list[str]) -> str:
         if low.endswith("caseinsensitive"):
             h, n = f"lower({h})", f"transform({n}, _n -> lower(_n))"
         return f"transform({n}, _p -> locate(_p, {h}))"
-    if low == "multisearchfirstindex":
-        return (
-            f"coalesce(array_position(transform({args[1]},"
-            f" _p -> locate(_p, {args[0]}) > 0), true), 0)"
-        )
-    if low == "multisearchfirstposition":
-        # leftmost offset of ANY needle, 0 when none matches
-        return (
-            f"coalesce(array_min(filter(transform({args[1]},"
-            f" _p -> locate(_p, {args[0]})), _x -> _x > 0)), 0)"
-        )
-    if low == "hastokencaseinsensitive":
-        return (
-            f"array_contains(split(lower({args[0]}), '[^a-z0-9]+'),"
-            f" lower({args[1]}))"
-        )
-    if low == "decodeurlcomponent":
-        return f"url_decode({args[0]})"
-    if low == "encodeurlcomponent":
-        # url_encode is form-encoding (space -> '+'); CH emits %20
-        return f"replace(url_encode({args[0]}), '+', '%20')"
     # -- more date/time spellings
     if low == "datename":
         unit = args[0].strip().strip("'\"").lower()
@@ -2728,19 +3487,8 @@ def _translate_call(name: str, args: list[str]) -> str:
             " BY position with the base aggregate, and collect"
             " (fn_explode + agg_groupby operators)"
         )
-    # -OrDefault: CH substitutes the TYPE default when nothing aggregated.
-    # Mapped where the default is statically known (0 for the counting/
-    # summing family); guided where it depends on the argument type.
-    if low == "sumordefault":
-        return f"coalesce(sum({args[0]}), 0)"
-    if low == "avgordefault":
-        return f"coalesce(avg({args[0]}), 0D)"
     if low == "countordefault":
         return f"count({args[0]})" if args and args[0] else "count(*)"
-    if low == "uniqordefault":
-        return f"approx_count_distinct({args[0]})"
-    if low == "uniqexactordefault":
-        return f"count(DISTINCT {args[0]})"
     if low.endswith("ordefault") and low not in (
             "accuratecastordefault",
             # IPv4's type default IS statically 0 (0.0.0.0) — handled in
@@ -2761,15 +3509,9 @@ def _translate_call(name: str, args: list[str]) -> str:
     # nullif wrap.
     if low in ("sumornull", "minornull", "maxornull", "avgornull"):
         return f"{low[: -len('ornull')]}({args[0]})"
-    if low == "anyornull":
-        return f"any_value({args[0]}, true)"
     if low == "countornull":
         inner = f"count({args[0]})" if args and args[0] else "count(*)"
         return f"nullif({inner}, 0)"
-    if low == "uniqornull":
-        return f"nullif(approx_count_distinct({args[0]}), 0)"
-    if low == "uniqexactornull":
-        return f"nullif(count(DISTINCT {args[0]}), 0)"
     # -- r7 probe batch (gaps found by EXECUTING ~110 common-CH spellings;
     # each rewrite below failed as a pass-through and has an exact or
     # documented-divergence Spark form)
@@ -2818,10 +3560,6 @@ def _translate_call(name: str, args: list[str]) -> str:
             f"coalesce(array_position(transform({pats},"
             f" _p -> {s_} RLIKE _p), true), 0)"
         )
-    if low == "tokens":  # maximal alphanumeric runs, no empties
-        return (
-            f"filter(split({args[0]}, '[^A-Za-z0-9]+'), _t -> _t != '')"
-        )
     if low == "ngrams":  # character n-grams
         s_, n = args[0], args[1]
         return (
@@ -2829,11 +3567,6 @@ def _translate_call(name: str, args: list[str]) -> str:
             f" (_c, _i) -> substr({s_}, _i + 1, {n})),"
             f" 1, greatest(length({s_}) - ({n}) + 1, 0))"
         )
-    if low == "isvalidutf8":
-        # Spark strings are UTF-8 by construction — constant-true on
-        # non-NULL input (CH validates raw bytes; the engine's ingest
-        # already rejected invalid sequences)
-        return f"IF({args[0]} IS NULL, NULL, true)"
     if low == "format":  # CH '{}'/'{0}' placeholders → format_string
         pat = args[0].strip()
         if not (pat.startswith("'") and pat.endswith("'")):
@@ -2846,22 +3579,10 @@ def _translate_call(name: str, args: list[str]) -> str:
                       pat[1:-1])
         body = body.replace("{}", "%s")
         return f"format_string('{body}', {', '.join(args[1:])})"
-    if low == "toisoyear":
-        return f"extract(YEAROFWEEK FROM {args[0]})"
     if low == "tostartofisoyear":
         # Monday of the ISO week containing Jan 4 of the ISO year
         j4 = f"make_date(extract(YEAROFWEEK FROM {args[0]}), 1, 4)"
         return f"date_add({j4}, 1 - extract(DAYOFWEEK_ISO FROM {j4}))"
-    if low == "torelativemonthnum":
-        return f"(year({args[0]}) * 12 + month({args[0]}))"
-    if low == "torelativehournum":
-        return f"CAST(floor(unix_timestamp({args[0]}) / 3600) AS BIGINT)"
-    if low == "todayssinceyearzero":  # CH epoch anchor: 1970-01-01 = 719528
-        return f"(datediff({args[0]}, DATE'1970-01-01') + 719528)"
-    if low == "fromdayssinceyearzero":
-        return f"date_add(DATE'1970-01-01', CAST({args[0]} AS INT) - 719528)"
-    if low == "yyyymmddtodate":
-        return f"to_date(CAST({args[0]} AS STRING), 'yyyyMMdd')"
     if low == "toyearweek":
         mode = args[1].strip() if len(args) > 1 else "0"
         if mode != "3":
@@ -2906,12 +3627,6 @@ def _translate_call(name: str, args: list[str]) -> str:
             f" abs(CAST({a} AS BIGINT)) div ({g})"
             f" * abs(CAST({b} AS BIGINT)))"
         )
-    if low == "sigmoid":
-        return f"(1.0 / (1.0 + exp(-({args[0]}))))"
-    if low == "logit":
-        return f"ln(({args[0]}) / (1.0 - ({args[0]})))"
-    if low == "nan":
-        return "CAST('NaN' AS DOUBLE)"
     if low == "totypename":  # runtime Spark type → CH spelling
         # token-level rename + structural rewrite so PARAMETRIC types
         # render in CH spelling too: decimal(10,2) → Decimal(10, 2),
@@ -2947,29 +3662,6 @@ def _translate_call(name: str, args: list[str]) -> str:
             f" CAST(({n} div 256) % 256 AS STRING), '.',"
             f" CAST({n} % 256 AS STRING))"
         )
-    if low == "ipv4stringtonum":
-        return (
-            f"aggregate(transform(split({args[0]}, '\\\\.'),"
-            " _p -> CAST(_p AS BIGINT)), CAST(0 AS BIGINT),"
-            " (_acc, _x) -> _acc * 256 + _x)"
-        )
-    if low == "isipv4string":
-        return (
-            f"({args[0]} RLIKE"
-            " '^((25[0-5]|2[0-4][0-9]|[01]?[0-9]?[0-9])\\\\.){3}"
-            "(25[0-5]|2[0-4][0-9]|[01]?[0-9]?[0-9])$')"
-        )
-    if low == "currentdatabase":
-        return "'default'"
-    if low in ("hostname", "fqdn"):
-        # single-planner engine: the constant local identity (CH returns
-        # the serving replica's host / fully-qualified name)
-        return "'localhost'"
-    if low in ("shardnum", "shardcount"):
-        # r8 probe 3: distributed-table topology introspection — this
-        # engine is one logical shard (same constant-identity family as
-        # hostName/currentDatabase)
-        return "1"
     if low == "casewithexpression":
         # caseWithExpression(x, k1, v1[, k2, v2, …][, default]) — the
         # functional spelling of CASE x WHEN … (CH requires the default;
@@ -2984,10 +3676,6 @@ def _translate_call(name: str, args: list[str]) -> str:
             pairs.append(f"WHEN {k_} THEN {v_}")
         els = f" ELSE {default}" if default is not None else ""
         return f"(CASE {args[0]} {' '.join(pairs)}{els} END)"
-    if low == "toutctimestamp":
-        return f"to_utc_timestamp({args[0]}, {args[1]})"
-    if low == "fromutctimestamp":
-        return f"from_utc_timestamp({args[0]}, {args[1]})"
     if low == "bin" and len(args) == 1:
         # CH bin() zero-pads to the value's byte width (bin(42) →
         # '00101010'); Spark's bin() emits minimal digits. Pad to the next
@@ -3011,16 +3699,6 @@ def _translate_call(name: str, args: list[str]) -> str:
             f" CAST(ceil(length({s}) / 8.0) AS INT)),"
             f" _i -> char(conv(substr({pad}, (_i - 1) * 8 + 1, 8), 2, 10))),"
             " ''))"
-        )
-    if low == "arrayaucpr":
-        # r10 probe: unrecognized passthrough. PR-AUC's running
-        # precision/recall fold over score-sorted labels has no clean
-        # inline spelling (ROC-AUC's pairwise form does — mapped).
-        raise ValueError(
-            "arrayAUCPR (precision-recall AUC) has no inline Spark"
-            " spelling; arrayROCAUC/arrayAUC are mapped, and the"
-            " agg_stats building blocks cover threshold sweeps via"
-            " win_running_sum over score-sorted rows"
         )
     if low in ("tupleplus", "tupleminus", "tuplemultiply", "tupledivide",
                "tuplenegate", "tuplemultiplybynumber",
@@ -3097,35 +3775,9 @@ def _translate_call(name: str, args: list[str]) -> str:
             "arrayMap (mapped) for +/-/*, arrayDotProduct / L2Distance /"
             " cosineDistance (mapped) for the reductions"
         )
-    if low == "flattentuple":
-        raise ValueError(
-            "flattenTuple recursively flattens nested tuple STRUCTURE,"
-            " which needs the full static type of a struct column —"
-            " re-select the leaf fields explicitly (t.col1.col2 paths)"
-        )
-    if low in ("mappartialsort", "mappartialreversesort"):
-        raise ValueError(
-            f"{name}: partial (limit-bounded) sort of a map is a render"
-            " concern — Spark maps are unordered; use mapSort /"
-            " mapReverseSort (mapped) and slice client-side"
-        )
-    if low in ("arrayenumerateuniqranked", "arrayenumeratedenseranked"):
-        raise ValueError(
-            f"{name}: multi-depth ranked enumeration over nested arrays"
-            " has no inline Spark spelling; for flat arrays use"
-            " arrayEnumerateUniq / arrayEnumerateDense (mapped)"
-        )
     # ---- r8 probe batch 4 ----
-    if low == "positivemodulo":
-        return f"pmod({args[0]}, {args[1]})"
     if low == "overlayutf8":
         return f"overlay({', '.join(args)})"
-    if low == "firstline":
-        return f"element_at(split({args[0]}, '\\n'), 1)"
-    if low == "splitbynonalpha":
-        return (
-            f"filter(split({args[0]}, '[^A-Za-z0-9]+'), _t -> _t != '')"
-        )
     if low in ("changeyear", "changemonth", "changeday"):
         # Date-flavored recomposition (the common use); a DateTime input
         # loses its time-of-day, and an invalid composition (June 31)
@@ -3169,12 +3821,6 @@ def _translate_call(name: str, args: list[str]) -> str:
                 " TIMESTAMP'1970-01-01 00:00:00')"
             )
         return f"to_timestamp({args[0]}, {fmt})"
-    if low == "base64urlencode":
-        # RFC 4648 URL-safe alphabet, padding stripped (CH strips '=')
-        return (
-            f"trim(TRAILING '=' FROM"
-            f" translate(base64({args[0]}), '+/', '-_'))"
-        )
     if low in ("base64urldecode", "trybase64urldecode"):
         s = args[0]
         rp = (
@@ -3200,8 +3846,6 @@ def _translate_call(name: str, args: list[str]) -> str:
             "varpopstable": "var_pop", "varsampstable": "var_samp",
         }[low]
         return f"{base}({', '.join(args)})"
-    if low == "iszeroornull":
-        return f"(({args[0]}) = 0 OR ({args[0]}) IS NULL)"
     if low == "arrayunion":
         # variadic distinct union — fold Spark's 2-arg array_union
         e = args[0]
@@ -3216,18 +3860,6 @@ def _translate_call(name: str, args: list[str]) -> str:
             u = f"array_union({u}, {a})"
             it = f"array_intersect({it}, {a})"
         return f"array_except({u}, {it})"
-    if low == "indexof":
-        # CH's indexOf uses NULL-SAFE equality — indexOf([1, NULL], NULL)
-        # = 2, and 0 when absent (r8 doc-pin: the former plain
-        # array_position rename returned NULL for a NULL needle and
-        # could not find NULL elements). Null-safe compare first, then
-        # position of the first true.
-        return (
-            f"COALESCE(array_position(transform({args[0]},"
-            f" _ix -> _ix <=> ({args[1]})), true), 0)"
-        )
-    if low == "indexofassumesorted":
-        return f"COALESCE(array_position({args[0]}, {args[1]}), 0)"
     if low == "port":
         u = args[0]
         d = args[1] if len(args) > 1 else "0"
@@ -3256,45 +3888,12 @@ def _translate_call(name: str, args: list[str]) -> str:
             f" _i -> concat('/', array_join(slice({parts}, 2, _i), '/'),"
             f" IF(_i < size({parts}) - 1, '/', ''))), _h -> _h != '/')"
         )
-    if low == "domainwithoutwww":
-        return (
-            f"regexp_replace(parse_url({args[0]}, 'HOST'), '^www\\\\.', '')"
-        )
-    if low == "randomstring":
-        return (
-            f"array_join(transform(sequence(1, {args[0]}),"
-            " _i -> char(CAST(floor(rand() * 256) AS INT))), '')"
-        )
-    if low == "randomprintableascii":
-        return (
-            f"array_join(transform(sequence(1, {args[0]}),"
-            " _i -> char(32 + CAST(floor(rand() * 95) AS INT))), '')"
-        )
-    if low == "nothing":
-        return "NULL"
-    if low == "user":
-        return "'default'"
     if low in ("dividedecimal", "multiplydecimal"):
         op = "/" if low == "dividedecimal" else "*"
         e = f"(({args[0]}) {op} ({args[1]}))"
         if len(args) > 2:
             return f"CAST({e} AS DECIMAL(38, {args[2]}))"
         return e
-    if low in ("mortonencode", "mortondecode", "hilbertencode",
-               "hilbertdecode"):
-        raise ValueError(
-            f"{name}: space-filling-curve codecs are a physical-layout"
-            " concern (CH uses them for key clustering); cluster Spark"
-            " data with a sort/bucket on the raw key columns instead, or"
-            " bit-interleave in a Pandas UDF if the code value itself is"
-            " needed"
-        )
-    if low == "evalmlmethod":
-        raise ValueError(
-            "evalMLMethod applies a CH-trained regression state; train and"
-            " apply models with Spark MLlib (or a Pandas UDF) instead —"
-            " see simpleLinearRegression (mapped) for the inline fit"
-        )
     if low.endswith(("argmin", "argmax")) and len(low) > 6 and low not in (
         "argmin", "argmax"
     ):
@@ -3305,15 +3904,6 @@ def _translate_call(name: str, args: list[str]) -> str:
             " min(key) OVER (), x, NULL), or min_by/max_by for the"
             " single-row form"
         )
-    if low == "tofixedstring":
-        # FixedString is storage-only here (type map → STRING); clamp to
-        # the declared width (CH errors on overflow — documented
-        # divergence: we truncate) and NUL-pad short values so length()
-        # reports N like CH's FixedString (r12 probe: was unpadded;
-        # toStringCutToZero recovers the logical value, as in CH)
-        return (
-            f"rpad(substr({args[0]}, 1, {args[1]}), {args[1]}, char(0))"
-        )
     if low == "defaultvalueoftypename":
         m_ = re.fullmatch(r"\s*'([^']+)'\s*", args[0])
         if not m_:
@@ -3323,30 +3913,6 @@ def _translate_call(name: str, args: list[str]) -> str:
         from .chsql_ddl import _ch_attr_type_default, ch_type_to_spark
         d = _ch_attr_type_default(ch_type_to_spark(m_.group(1)))
         return d if d is not None else "NULL"
-    if low in ("uptime", "sleep", "sleepeachrow"):
-        raise ValueError(
-            f"{name}() is a server-runtime control with no meaning in a"
-            " batch plan; remove it (timings come from Spark's UI/metrics)"
-        )
-    if low in ("formatrow", "formatrownonewline"):
-        raise ValueError(
-            f"{name} serializes rows through CH's format registry; use"
-            " to_json/to_csv (fn_json operators) for the Spark-native"
-            " equivalent"
-        )
-    if low == "generateulid":
-        raise ValueError(
-            "generateULID: no Spark builtin; use generateUUIDv4 (maps to"
-            " uuid()) or monotonically_increasing_id via the DataFrame API"
-        )
-    if low in ("normalizequery", "normalizedqueryhash"):
-        raise ValueError(
-            f"{name} applies CH's internal query-text normalizer; no"
-            " Spark equivalent — preprocess query logs with"
-            " regexp_replace if literal-masking is the goal"
-        )
-    if low == "isnotdistinctfrom":
-        return f"({args[0]} <=> {args[1]})"
     if low == "byteslice":
         # byte-exact via the BINARY overload of substr (Spark substring
         # over BINARY slices BYTES; the bare string form would slice
@@ -3354,69 +3920,9 @@ def _translate_call(name: str, args: list[str]) -> str:
         off = args[1] if len(args) > 1 else "1"
         ln = f", {args[2]}" if len(args) > 2 else ""
         return f"CAST(substr(CAST({args[0]} AS BINARY), {off}{ln}) AS STRING)"
-    if low in ("stem", "lemmatize", "synonyms", "detectlanguage",
-               "detectcharset", "detectlanguagemixed",
-               "detectlanguageunknown", "detectprogramminglanguage",
-               "detecttonality"):
-        raise ValueError(
-            f"{name} needs CH's bundled NLP models; use the text_lang_id /"
-            " text quality operators (llm/text.py) or a Pandas UDF with"
-            " your own model"
-        )
-    if low in ("erf", "erfc", "lgamma", "tgamma"):
-        raise ValueError(
-            f"{name}: no Spark SQL builtin; wrap scipy.special.{low} in a"
-            " Pandas UDF (udf_pandas_scalar pattern) if needed"
-        )
-    if low == "formatreadabletimedelta":
-        raise ValueError(
-            "formatReadableTimeDelta's prose rendering ('1 hour, 1 minute"
-            " and 40 seconds') has no Spark builtin; spell the buckets"
-            " with div/% + concat_ws, or keep raw seconds"
-        )
-    if low in ("addtupleofintervals",
-               "subtracttupleofintervals", "proportionsztest",
-               "wordshingleminhash", "wordshinglesimhash",
-               "ngramminhash", "ngramsimhash",
-               "ngramminhashcaseinsensitive", "ngramsimhashutf8",
-               "wordshingleminhashutf8", "wordshinglesimhashutf8"):
-        raise ValueError(
-            f"{name} has no faithful inline Spark spelling; see the"
-            " nearest operators:"
-            " tuple-of-intervals → chained +INTERVAL terms,"
-            " proportionsZTest → agg_stats building blocks,"
-            " wordShingle sketches → dedup_minhash_lsh/dedup_simhash"
-        )
     # -- known-unmappable distributed/table-function spellings: loud named
     # guidance instead of pass-through to a cryptic Spark parse/resolve
     # error (r6 verdict missing #5 — same philosophy as sumMap/bitmapBuild)
-    if low in ("remote", "remotesecure", "cluster", "clusterallreplicas"):
-        raise ValueError(
-            f"{name}() addresses other ClickHouse servers/shards — there"
-            " is no remote CH cluster behind this engine; read the table"
-            " directly (FROM <table>), or use the source_jdbc operator"
-            " for an external database"
-        )
-    if low == "merge":
-        raise ValueError(
-            "merge() unions same-schema tables matched by regex across a"
-            " database; spell the union explicitly — SELECT ... FROM t1"
-            " UNION ALL SELECT ... FROM t2 (see union_all)"
-        )
-    if low in ("file", "url", "s3", "s3cluster", "hdfs", "azureblobstorage"):
-        raise ValueError(
-            f"{name}() reads external storage inline; use the engine's"
-            " source operators instead (scan_parquet / scan_csv /"
-            " scan_jsonl / source_jdbc in sources.py) — they map to"
-            " spark.read with pushdown and schema control"
-        )
-    if low == "dictgethierarchy":
-        raise ValueError(
-            "dictGetHierarchy walks a parent-key chain of unbounded depth"
-            " — not a scalar rewrite; model the walk as a bounded"
-            " self-join chain, or use the dedup_cluster_cc operator's"
-            " iterative pattern for full closures"
-        )
     if low in ("extractgroups", "extractallgroups",
                "extractallgroupshorizontal", "extractallgroupsvertical"):
         # Implementable for LITERAL patterns (r8 verdict missing #3): the
@@ -3484,20 +3990,12 @@ def _translate_call(name: str, args: list[str]) -> str:
             " groupBitmap/bitmapAnd/Or/Andnot cardinality algebra as"
             " deterministic sorted-set plans"
         )
-    if low == "touuid":  # UUIDs are strings here (§1.2 type table)
-        return f"CAST({args[0]} AS STRING)"
-    if low == "notilike":
-        return f"(NOT ({args[0]} ILIKE {args[1]}))"
-    if low == "timediff":  # seconds from a to b
-        return f"(unix_timestamp({args[1]}) - unix_timestamp({args[0]}))"
     if low in ("adddate", "subdate"):
         op = "+" if low == "adddate" else "-"
         if re.match(r"(?is)^\s*INTERVAL\b", args[1]):
             return f"({args[0]} {op} {args[1]})"
         n = args[1] if op == "+" else f"-({args[1]})"
         return f"date_add({args[0]}, CAST({n} AS INT))"
-    if low == "torelativedaynum":
-        return f"datediff({args[0]}, DATE '1970-01-01')"
     if low in ("formatreadablesize", "formatreadablequantity"):
         x = f"CAST({args[0]} AS DOUBLE)"
         if low == "formatreadablesize":
@@ -3521,16 +4019,6 @@ def _translate_call(name: str, args: list[str]) -> str:
                 f" ' {unit}'), {expr})"
             )
         return f"({expr})"
-    if low == "todecimalstring":
-        return (
-            f"CAST(CAST(round({args[0]}, {args[1]})"
-            f" AS DECIMAL(38, {args[1]})) AS STRING)"
-        )
-    if low == "multisearchanycaseinsensitive":
-        return (
-            f"exists({args[1]}, _n -> instr(lower({args[0]}),"
-            f" lower(_n)) > 0)"
-        )
     if low == "hassubstr":  # contiguous subsequence of an array
         a, b = args[0], args[1]
         return (
@@ -3631,29 +4119,6 @@ def _translate_call(name: str, args: list[str]) -> str:
         if low == "arraysplit":
             return groups
         return f"reverse(transform({groups}, _g -> reverse(_g)))"
-    if low == "arrayelement":
-        # both 1-based, both negative-from-end; index 0 routes through
-        # nullif → NULL (r11 probe: Spark raises INVALID_INDEX_OF_ZERO
-        # even non-ANSI, where CH returns the type default — NULL is the
-        # engine's documented out-of-bounds posture)
-        return f"element_at({args[0]}, nullif({args[1]}, 0))"
-    if low == "arrayelementornull":
-        # arrayElement's explicit-NULL sibling; negative indexes count
-        # from the end, matching try_element_at exactly
-        return f"try_element_at({args[0]}, nullif({args[1]}, 0))"
-    if low == "bithammingdistance":
-        # integer form: popcount of the XOR (CH also accepts strings —
-        # byte-wise; the integer contract is the one the fixtures use)
-        return f"bit_count(({args[0]}) ^ ({args[1]}))"
-    if low in ("jumpconsistenthash", "kostikconsistenthash",
-               "yandexconsistenthash"):
-        # same convention as the hash family: a stable bucket in [0, n)
-        # replaces CH's specific algorithm — co-bucketing is preserved
-        # within this engine, but values differ from CH AND the jump
-        # hash's minimal-movement-on-resize property is NOT reproduced
-        return (
-            f"CAST(pmod(xxhash64({args[0]}), {args[1]}) AS INT)"
-        )
     if low == "simplelinearregression":
         # (x, y) → least-squares (slope k, intercept b); Spark's builtin
         # regr_* aggregates take (y, x) order
@@ -3662,18 +4127,6 @@ def _translate_call(name: str, args: list[str]) -> str:
             f"named_struct('k', regr_slope({y}, {x}),"
             f" 'b', regr_intercept({y}, {x}))"
         )
-    if low == "mapextractkeylike":
-        return f"map_filter({args[0]}, (_k, _v) -> _k LIKE {args[1]})"
-    if low == "mapcontainskeylike":
-        return f"exists(map_keys({args[0]}), _k -> _k LIKE {args[1]})"
-    if low == "mapcontainsvalue":
-        return f"array_contains(map_values({args[0]}), {args[1]})"
-    if low == "identity":
-        return args[0]
-    if low in ("shardnum", "shardcount"):
-        # the engine IS the whole "cluster" (same model as the ON
-        # CLUSTER strip): one logical shard
-        return "CAST(1 AS INT)"
     if low == "throwif":
         # throwIf(cond[, msg]): 0 when the condition is false, an error
         # otherwise — Spark's raise_error under the truthiness rule
@@ -3682,69 +4135,6 @@ def _translate_call(name: str, args: list[str]) -> str:
             f"IF({_cond(args[0])},"
             f" CAST(raise_error({msg}) AS INT), 0)"
         )
-    if low in ("mysql", "postgresql", "mongodb", "redis", "sqlite",
-               "odbc", "jdbc"):
-        raise ValueError(
-            f"{name}() reads an external store inline; use the"
-            " source_jdbc operator (sources.py) — spark.read.jdbc with"
-            " partitioned bounds — or a dedicated Spark connector for"
-            " the store"
-        )
-    if low in ("iceberg", "deltalake", "deltalakelocal", "hudi"):
-        raise ValueError(
-            f"{name}(): open-table formats read natively in Spark —"
-            " spark.read.format('iceberg'|'delta'|'hudi').load(path)"
-            " (wire it through the scan operators in sources.py)"
-        )
-    if low in ("input", "executable", "executablepool", "loop",
-               "fuzzquery", "fuzzjson", "viewifpermitted", "viewexplain",
-               "timeseriesdata", "timeseriestags", "timeseriesmetrics"):
-        raise ValueError(
-            f"{name}() is a server-side table-function runtime this"
-            " engine does not model; stage the data through a table or"
-            " the source operators (sources.py) instead"
-        )
-    if low in ("currentschemas", "currentcatalogs"):
-        raise ValueError(
-            f"{name}() is a PostgreSQL-compatibility stub; the engine's"
-            " namespace listing is SHOW DATABASES / system.tables"
-        )
-    if low == "replicate":
-        raise ValueError(
-            "replicate() is CH's internal block-broadcast primitive;"
-            " array_repeat / explode compose the same shapes in Spark"
-        )
-    if low == "countdigits":
-        # decimal digits of the value's integer text (CH counts the
-        # underlying scaled integer for Decimals — digits-only filter
-        # covers both int and decimal renderings)
-        return (
-            f"CAST(length(regexp_replace(CAST(abs({args[0]}) AS STRING),"
-            " '[^0-9]', '')) AS INT)"
-        )
-    if low == "isdecimaloverflow":
-        raise ValueError(
-            "isDecimalOverflow introspects CH's per-width decimal storage"
-            " bounds; Spark decimals carry one 38-digit representation —"
-            " compare against the target precision explicitly"
-            " (abs(x) < 1e<digits>)"
-        )
-    if low == "sparsegrams":
-        raise ValueError(
-            "sparseGrams picks substring boundaries off CH's internal"
-            " rolling-hash minima — implementation-defined output with no"
-            " portable spelling; use ngrams(s, n) (mapped) or the"
-            " text_ngrams operator for deterministic shingles"
-        )
-    if low == "aggthrow":
-        raise ValueError(
-            "aggThrow is ClickHouse's fault-injection test aggregate — it"
-            " exists to throw; nothing to translate"
-        )
-    if low == "logtrace":
-        # writes its message to the SERVER log and returns 0; there is no
-        # server log here, so only the return value survives (r12 probe)
-        return "0"
     if low == "timestamp" and len(args) == 2:
         # CH's 2-arg timestamp(date_expr, time_expr): add the
         # time-of-day to the date (r12 probe; the 1-arg form is Spark's
@@ -3752,30 +4142,6 @@ def _translate_call(name: str, args: list[str]) -> str:
         return (
             f"(CAST({args[0]} AS TIMESTAMP)"
             f" + CAST({args[1]} AS INTERVAL HOUR TO SECOND))"
-        )
-    if low in ("analysisofvariance", "anovatest"):
-        raise ValueError(
-            "analysisOfVariance (anovaTest) needs the F-distribution"
-            " significance machinery with no inline Spark spelling; build"
-            " the per-group means/variances from the agg_stats building"
-            " blocks and finish the F-test client-side or in a Pandas UDF"
-            " (scipy.stats.f_oneway)"
-        )
-    if low == "tostartofquarter":
-        # Date-typed like toStartOfMonth (CH contract; r5 type sweep).
-        return f"CAST(date_trunc('quarter', {args[0]}) AS DATE)"
-    if low == "tostartofyear":
-        # Date-typed like toStartOfMonth (CH contract; r5 type sweep).
-        return f"CAST(date_trunc('year', {args[0]}) AS DATE)"
-    if low == "tostartofminute":
-        return f"date_trunc('minute', {args[0]})"
-    if low == "todayofweek":  # CH: Mon=1..Sun=7; Spark dayofweek: Sun=1
-        return f"(((dayofweek({args[0]}) + 5) % 7) + 1)"
-    if low == "monthname":
-        return f"date_format({args[0]}, 'MMMM')"
-    if low == "timeslot":  # floor to the half-hour
-        return (
-            f"timestamp_seconds(unix_timestamp({args[0]}) div 1800 * 1800)"
         )
     if low == "tostartofinterval":
         return _to_start_of_interval(args)
@@ -3794,47 +4160,6 @@ def _translate_call(name: str, args: list[str]) -> str:
             ("TINYINT", 255) if low == "touint8" else ("SMALLINT", 65535)
         )
         return f"(CAST(CAST({args[0]} AS {inner}) AS INT) & {mask})"
-    if low == "todate32":
-        return f"to_date({args[0]})"
-    if low == "todatetime64":  # precision arg is display-only; Spark
-        return f"to_timestamp({args[0]})"  # timestamps are fixed micros
-    # -- null / finiteness predicates
-    if low == "isnull":
-        return f"(({args[0]}) IS NULL)"
-    if low == "isnotnull":
-        return f"(({args[0]}) IS NOT NULL)"
-    if low == "isfinite":
-        return (
-            f"(NOT isnan({args[0]})"
-            f" AND abs({args[0]}) <> CAST('Infinity' AS DOUBLE))"
-        )
-    if low == "isinfinite":
-        return f"(abs({args[0]}) = CAST('Infinity' AS DOUBLE))"
-    if low == "ifnotfinite":
-        # NULL counts as non-finite here (r11 probe): Spark's division
-        # yields NULL where CH yields ±Inf/NaN, so the canonical CH
-        # safe-division idiom `ifNotFinite(x / y, alt)` must still take
-        # the alternative. Documented divergence: a genuinely-NULL x
-        # returns alt where CH propagates NULL.
-        return (
-            f"IF(({args[0]}) IS NULL OR isnan({args[0]})"
-            f" OR abs({args[0]}) = CAST('Infinity' AS DOUBLE),"
-            f" {args[1]}, {args[0]})"
-        )
-    if low == "intdivorzero":
-        return (
-            f"IF(({args[1]}) = 0, 0,"
-            f" CAST({args[0]} AS BIGINT) div CAST({args[1]} AS BIGINT))"
-        )
-    if low == "moduloorzero":
-        return f"IF(({args[1]}) = 0, 0, ({args[0]}) % ({args[1]}))"
-    if low == "sign":
-        # Spark's sign() returns DOUBLE; CH returns Int8 (r10 probe —
-        # type-only fix, values agree)
-        return f"CAST(signum({args[0]}) AS TINYINT)"
-    if low == "clamp":
-        # clamp(x, lo, hi) (CH 23.x; r10 probe: unrecognized passthrough)
-        return f"least(greatest(({args[0]}), ({args[1]})), ({args[2]}))"
     # -- array construction/mutation
     if low == "range":  # range(n) = [0..n-1]; range(a, b[, s]) half-open
         # Empty-range guard (r4 advice): CH's range(0) is [] but a bare
@@ -3864,9 +4189,6 @@ def _translate_call(name: str, args: list[str]) -> str:
         return (
             f"aggregate({args[0]}, 1D, (acc, x) -> acc * CAST(x AS DOUBLE))"
         )
-    if low == "countequal":
-        # null-safe equality (<=>): CH counts NULL elements when x is NULL
-        return f"size(filter({args[0]}, _ceq -> _ceq <=> {args[1]}))"
     if low == "arrayresize":
         # arrayResize(arr, n[, fill]): truncate or right-pad to length n
         a, n = args[0], args[1]
@@ -3876,40 +4198,6 @@ def _translate_call(name: str, args: list[str]) -> str:
             f"ELSE concat({a}, array_repeat({fill}, ({n}) - size({a}))) END"
         )
     # -- r5 final batch: epoch converters, folds, misc
-    if low == "tounixtimestamp64milli":
-        return f"unix_millis({args[0]})"
-    if low == "tounixtimestamp64micro":
-        return f"unix_micros({args[0]})"
-    if low == "fromunixtimestamp64milli":
-        return f"timestamp_millis({args[0]})"
-    if low == "fromunixtimestamp64micro":
-        return f"timestamp_micros({args[0]})"
-    if low in ("timezone", "servertimezone"):
-        return "current_timezone()"
-    if low == "generateuuidv4":
-        return "uuid()"
-    if low in ("rand", "rand32"):
-        # CH rand() yields a uniform UInt32 (users write rand() % N);
-        # Spark's rand() is a double in [0,1) — scale to keep the integer
-        # modulo idiom working. Nondeterministic on both, as in CH.
-        return "CAST(floor(rand() * 4294967296) AS BIGINT)"
-    if low == "rand64":
-        # CH's UInt64 range does not fit BIGINT: hi*2^32+lo with a 32-bit hi
-        # overflows past 2^63-1 (wraps negative / throws under ANSI — r5
-        # advice). Emit a 63-bit value instead (hi masked to 31 bits):
-        # uniform over [0, 2^63), keeping the rand64() % N idiom exact and
-        # the result always non-negative. Documented range divergence.
-        return ("(CAST(floor(rand() * 2147483648) AS BIGINT) * 4294967296 + "
-                "CAST(floor(rand() * 4294967296) AS BIGINT))")
-    if low == "sumcount":  # mergeable (sum, count) pair in one pass
-        return (
-            f"named_struct('sum', sum({args[0]}), 'count', count({args[0]}))"
-        )
-    if low == "sumkahan":
-        # Kahan compensation has no Spark spelling; plain double sum is the
-        # honest mapping (same result class, not compensated — for exact
-        # order-free sums use toDecimal64 + sum, the engine-wide rule).
-        return f"sum(CAST({args[0]} AS DOUBLE))"
     if low == "arrayfold":
         # CH arrayFold(lambda, arr, init) → aggregate(arr, init, lambda)
         if len(args) != 3:
@@ -3957,8 +4245,6 @@ def _translate_call(name: str, args: list[str]) -> str:
             "window spelling CH itself now recommends"
         )
     # -- r5 late batch: intervals, bit tests, wide ints, casts
-    if low == "tointervalweek":  # r9 probe: was a silent passthrough
-        return f"make_dt_interval(CAST(({args[0]}) * 7 AS INT), 0, 0, 0)"
     if low in ("tointervalday", "tointervalhour", "tointervalminute",
                "tointervalsecond"):
         # day-time interval constructors; CH composes these additively with
@@ -3981,20 +4267,6 @@ def _translate_call(name: str, args: list[str]) -> str:
     if low in ("tointervalmonth", "tointervalyear"):
         y, mth = ("0", args[0]) if low.endswith("month") else (args[0], "0")
         return f"make_ym_interval(CAST({y} AS INT), CAST({mth} AS INT))"
-    if low == "bittest":  # bitTest(x, n): n-th bit, 0-based from LSB
-        return f"(CAST(shiftright({args[0]}, CAST({args[1]} AS INT)) AS BIGINT) & 1)"
-    if low == "exp2":
-        return f"power(2.0D, {args[0]})"
-    if low == "exp10":
-        return f"power(10.0D, {args[0]})"
-    if low == "intexp2":  # integer 2^n, exact for n < 63
-        return f"shiftleft(CAST(1 AS BIGINT), CAST({args[0]} AS INT))"
-    if low == "intexp10":
-        return f"CAST(power(10.0D, {args[0]}) AS BIGINT)"
-    if low in ("toint128", "touint128", "toint256", "touint256"):
-        # no Spark integral this wide; DECIMAL(38,0) covers ±10^38, the
-        # practical range of CH 128/256-bit columns in CDC payloads
-        return f"CAST({args[0]} AS DECIMAL(38,0))"
     if low in ("accuratecast", "accuratecastornull",
                "accuratecastordefault"):
         m = re.fullmatch(r"\s*'([^']+)'\s*", args[1])
@@ -4118,8 +4390,6 @@ def _translate_call(name: str, args: list[str]) -> str:
                 e = s[: pos.start()].rstrip()
                 return _emit(e, s[pos.end():].strip())
         return f"CAST({', '.join(args)})"
-    if low == "notlike":
-        return f"(NOT ({args[0]} LIKE {args[1]}))"
     # -- -State / -Merge aggregate combinators (AggregatingMergeTree's MV
     # pattern: store partial states per part, merge at read). Spark's own
     # partial+final HashAggregate is the same algebra, so each CH state maps
@@ -4148,25 +4418,6 @@ def _translate_call(name: str, args: list[str]) -> str:
         return f"{fn}({args[0]})"
     if low == "countstate":
         return "count(*)" if not [a for a in args if a] else f"count({args[0]})"
-    if low == "countmerge":  # partial counts merge by summing
-        return f"CAST(sum({args[0]}) AS BIGINT)"
-    if low == "avgstate":
-        return (
-            f"named_struct('s', sum(CAST({args[0]} AS DOUBLE)), "
-            f"'c', count({args[0]}))"
-        )
-    if low == "avgmerge":
-        return f"(sum(({args[0]}).s) / sum(({args[0]}).c))"
-    if low == "uniqexactstate":  # exact state = the distinct set itself
-        return f"collect_set({args[0]})"
-    if low == "uniqexactmerge":
-        return f"size(array_distinct(flatten(collect_list({args[0]}))))"
-    if low in ("uniqstate", "uniqmerge"):
-        raise ValueError(
-            f"{name} is a sketch state; use the `agg_hll_merge` operator "
-            "(canal_clickhouse_spark registry), which implements mergeable "
-            "HLL partials with the documented union contract"
-        )
     if low == "tuple":
         # The TYPE spelling first: CH is case-sensitive — `Tuple(…)` (capital
         # T) is the type constructor used inside CAST, `tuple(…)` the value
@@ -4239,18 +4490,6 @@ def _translate_call(name: str, args: list[str]) -> str:
             ]
         )
         return f"coalesce({chain})"
-    if low in ("formatdatetimeinjodasyntax", "parsedatetimeinjodasyntax",
-               "parsedatetimeinjodasyntaxornull",
-               "fromunixtimestampinjodasyntax"):
-        # Joda-style patterns are (for the yyyy/MM/dd/HH/mm/ss core) the
-        # same tokens Spark's own DateTimeFormatter uses — direct map
-        # (r9 probe: passthrough; r12 probe: the fromUnixTimestamp twin).
-        if low.startswith("format"):
-            return f"date_format({args[0]}, {args[1]})"
-        if low.startswith("fromunix"):
-            return f"from_unixtime({args[0]}, {args[1]})"
-        op = "try_to_timestamp" if low.endswith("ornull") else "to_timestamp"
-        return f"{op}({args[0]}, {args[1]})"
     if low == "parsetimedelta":
         # parseTimeDelta('1h30m') → seconds (r9 probe: passthrough).
         # Fold over (number, unit) pairs; units per CH docs (weeks..ms).
@@ -4316,14 +4555,6 @@ def _translate_call(name: str, args: list[str]) -> str:
             for c in args[1:]
         ]
         return f"array({', '.join(elems)})"
-    if low == "arraypushback":
-        return f"concat({args[0]}, array({args[1]}))"
-    if low == "arraypushfront":
-        return f"concat(array({args[1]}), {args[0]})"
-    if low == "arraypopback":
-        return f"slice({args[0]}, 1, greatest(size({args[0]}) - 1, 0))"
-    if low == "arraypopfront":
-        return f"slice({args[0]}, 2, greatest(size({args[0]}) - 1, 0))"
     # -- array transforms with positional lambdas (Spark HOF index = 0-based
     # second lambda arg; element_at is 1-based, so element_at(a, i) IS the
     # previous element). Numeric folds promote to DOUBLE like CH's widening.
@@ -4348,29 +4579,6 @@ def _translate_call(name: str, args: list[str]) -> str:
             f"filter({a}, (x, i) -> i = 0"
             f" OR NOT (x <=> element_at({a}, i)))"
         )
-    # -- `-Array` aggregate combinators: aggregate over ALL ELEMENTS of an
-    # array column across rows. Element folds run in DOUBLE (CH promotes
-    # Float32 sums to Float64 the same way); callers wanting exactness
-    # feed integer arrays, as `chsql_agg_array_combinators` does.
-    if low == "sumarray":
-        return f"sum(aggregate({args[0]}, 0D, (s, x) -> s + x))"
-    if low == "countarray":
-        return f"sum(size({args[0]}))"
-    if low == "avgarray":
-        return (
-            f"(sum(aggregate({args[0]}, 0D, (s, x) -> s + x))"
-            f" / sum(size({args[0]})))"
-        )
-    if low in ("uniqarray", "uniqexactarray"):
-        # Exact distinct-element count. collect_list gathers the group's
-        # arrays into one state — fine for bounded groups; for unbounded
-        # cardinality explode + COUNT(DISTINCT) is the scale path (the
-        # rewriter cannot restructure the enclosing GROUP BY).
-        return f"size(array_distinct(flatten(collect_list({args[0]}))))"
-    if low == "maxarray":
-        return f"max(array_max({args[0]}))"
-    if low == "minarray":
-        return f"min(array_min({args[0]}))"
     # -- vector distance family (CH L2Distance/cosineDistance/... over
     # float arrays). All arithmetic promotes to DOUBLE before folding so
     # float32 inputs accumulate in f64 on both engines; fold order is the
@@ -4399,17 +4607,6 @@ def _translate_call(name: str, args: list[str]) -> str:
         return _vec_l2sq(args[0], args[1])
     if low == "l2distance":
         return f"sqrt({_vec_l2sq(args[0], args[1])})"
-    if low == "l1distance":
-        return (
-            f"aggregate(zip_with({args[0]}, {args[1]}, (x, y) ->"
-            f" abs(CAST(x AS DOUBLE) - CAST(y AS DOUBLE))),"
-            f" 0D, (s, v) -> s + v)"
-        )
-    if low == "linfdistance":
-        return (
-            f"array_max(zip_with({args[0]}, {args[1]}, (x, y) ->"
-            f" abs(CAST(x AS DOUBLE) - CAST(y AS DOUBLE))))"
-        )
     if low == "cosinedistance":
         return (
             f"(1.0D - {_vec_dot(args[0], args[1])}"
@@ -4418,10 +4615,6 @@ def _translate_call(name: str, args: list[str]) -> str:
         )
     if low == "l2norm":
         return f"sqrt({_vec_dot(args[0], args[0])})"
-    if low == "l1norm":
-        return (
-            f"aggregate({args[0]}, 0D, (s, x) -> s + abs(CAST(x AS DOUBLE)))"
-        )
     if low in ("l2normalize", "normalizel2"):
         # normalizeL2 is CH's documented alias of L2Normalize (r11 probe:
         # the alias spelling was an unrecognized-name passthrough).
@@ -4604,61 +4797,6 @@ def _translate_call(name: str, args: list[str]) -> str:
             f" nullif(sqrt(({n} * {sxx} - {sx} * {sx})"
             f" * ({n} * {syy} - {sy} * {sy})), 0))"
         )
-    if low in ("studentttest", "welchttest", "mannwhitneyutest",
-               "kolmogorovsmirnovtest",
-               "meanztest", "studentttestonesample",
-               "categoricalinformationvalue",
-               "analysisofvariance", "anova"):
-        raise ValueError(
-            f"{name} needs a significance-table lookup (p-values require"
-            " distribution CDFs with no Spark SQL builtin); the test"
-            " STATISTIC is buildable from the agg_stats building blocks"
-            " (avg/stddev/corr + win_rank for rank statistics)"
-        )
-    if low in ("stochasticlinearregression",
-               "stochasticlogisticregression"):
-        # r10 probe: previously an unrecognized-name passthrough to
-        # Spark's UNRESOLVED_ROUTINE error. These train SGD models inside
-        # an aggregate — an iterative algorithm, not a fold; closed-form
-        # least squares IS expressible (simpleLinearRegression →
-        # regr_slope/regr_intercept), and full model training belongs in
-        # Spark ML, not a SQL aggregate.
-        raise ValueError(
-            f"{name} trains an SGD model inside an aggregate — no inline"
-            " Spark spelling; use simpleLinearRegression (closed-form"
-            " least squares via regr_slope/regr_intercept) or Spark ML"
-            " for iterative training"
-        )
-    if low in ("corrmatrix", "covarmatrix", "covarsampmatrix",
-               "covarpopmatrix"):
-        # r8 verdict #3: these previously passed through to Spark's
-        # undefined-function error instead of this family's named guidance.
-        raise ValueError(
-            f"{name} returns an N×N matrix aggregate with no Spark analog;"
-            " compute the pairwise entries with corr(x, y) /"
-            " covar_samp(x, y) / covar_pop(x, y) (see the agg_stats"
-            " operator) and assemble the matrix from those scalars"
-        )
-    if low in ("deltasum", "deltasumtimestamp"):
-        raise ValueError(
-            f"{name} is order-dependent (sums positive deltas in row"
-            " order) — aggregates see no row order on either engine at"
-            " scale; use the win_lag_lead / win_running_sum window"
-            " operators with an explicit ORDER BY"
-        )
-    if low in ("minsamplesizeconversion", "minsamplesizecontinous",
-               "minsamplesizecontinuous"):
-        raise ValueError(
-            f"{name} needs the normal-quantile function (no Spark"
-            " builtin); compute the power analysis client-side or in a"
-            " Pandas UDF (scipy.stats.norm.ppf)"
-        )
-    if low == "largesttrianglethreebuckets":
-        raise ValueError(
-            "largestTriangleThreeBuckets is a downsampling render helper;"
-            " see the ts_downsample / stream window operators for the"
-            " engine-side equivalent"
-        )
     # -- r7 third probe batch: rounding and bit tests
     if low == "roundtoexp2":
         x = args[0]
@@ -4696,19 +4834,7 @@ def _translate_call(name: str, args: list[str]) -> str:
             f"(shiftrightunsigned(CAST({x} AS BIGINT), {n})"
             f" | shiftleft(CAST({x} AS BIGINT), 64 - ({n})))"
         )
-    if low == "bytesize":
-        raise ValueError(
-            "byteSize reports CH's per-type storage width; for strings use"
-            " octet_length(x), fixed-width types are constants of the"
-            " declared type (see the CH type map in chsql_ddl)"
-        )
     # -- r7 third probe batch: map functions (lambda-first CH arg order)
-    if low == "mapfilter":
-        return f"map_filter({args[1]}, {args[0]})"
-    if low == "mapexists":
-        return f"(size(map_filter({args[1]}, {args[0]})) > 0)"
-    if low == "mapall":
-        return f"(size(map_filter({args[1]}, {args[0]})) = size({args[1]}))"
     if low == "mapapply":
         # mapApply((k, v) -> (ke, ve), m): rebuild via entries
         lam = re.match(
@@ -4853,60 +4979,7 @@ def _translate_call(name: str, args: list[str]) -> str:
         )
     if low == "arraydotproduct":
         return _vec_dot(args[0], args[1])
-    if low == "arraynormalizedgini":
-        raise ValueError(
-            "arrayNormalizedGini's rank-weighted fold has no tractable"
-            " inline spelling; compute it from arrayAUC building blocks"
-            " or a Pandas UDF"
-        )
     # -- r7 third probe batch: misc conversions and guided spellings
-    if low == "todecimal256":
-        # Spark's max decimal precision is 38 (CH Decimal256 is 76) —
-        # documented clamp, same class as the FixedString divergence
-        return f"CAST({args[0]} AS DECIMAL(38, {args[1]}))"
-    if low == "trybase64decode":
-        # CH returns '' (not NULL) on invalid input — r8 doc pin
-        return (
-            f"COALESCE(CAST(try_to_binary({args[0]}, 'base64')"
-            " AS STRING), '')"
-        )
-    if low == "alphatokens":
-        # runs of a-zA-Z letters (CH's pre-`tokens` splitter)
-        return (
-            f"filter(split({args[0]}, '[^A-Za-z]+'), _t -> _t != '')"
-        )
-    if low == "tuplenames":
-        return f"json_object_keys(to_json({args[0]}))"
-    if low == "tupletonamevaluepairs":
-        raise ValueError(
-            "tupleToNameValuePairs: Spark structs lose CH's tuple-name"
-            " introspection at this level; use map_entries on a MAP column"
-            " or to_json + json_object_keys (tupleNames)"
-        )
-    if low in ("base58encode", "base58decode"):
-        raise ValueError(
-            f"{name} needs bignum base-58 arithmetic (no Spark builtin);"
-            " use base64Encode/base64Decode (mapped) or a Pandas UDF"
-        )
-    if low == "bitslice":
-        raise ValueError(
-            "bitSlice extracts sub-BYTE bit ranges — no Spark builtin;"
-            " for byte-aligned slices use substr, for bit tests use"
-            " bitTest/bitTestAll/bitTestAny (mapped)"
-        )
-    if low == "byteswap":
-        raise ValueError(
-            "byteSwap's result depends on the CH integer WIDTH (UInt8 vs"
-            " UInt64 swap differently) which Spark types don't preserve;"
-            " spell the swap explicitly with shiftleft/shiftright masks"
-            " for your width"
-        )
-    if low == "subbitmap":
-        raise ValueError(
-            "subBitmap operates on roaring-bitmap states — not"
-            " Spark-expressible inline; the agg_bitmap_ops operator"
-            " implements the bitmap family over array states"
-        )
     if low == "pointinellipses":
         # pointInEllipses(x, y, x₀, y₀, a₀, b₀, …): true if (x, y) lies
         # inside ANY ellipse — pure arithmetic, no geometry lib needed
@@ -4925,16 +4998,6 @@ def _translate_call(name: str, args: list[str]) -> str:
                 f" + POW(({y} - ({cy})) / ({b_}), 2) <= 1.0D)"
             )
         return "(" + " OR ".join(terms) + ")"
-    if low in ("pointinpolygon", "geohashencode", "geohashdecode",
-               "geohashesinbox", "readwktpoint", "readwktpolygon",
-               "readwktmultipolygon", "readwktring", "wkt",
-               "polygonareacartesian", "polygonperimetercartesian",
-               "polygonsunioncartesian", "polygonsintersectioncartesian"):
-        raise ValueError(
-            f"{name}: computational-geometry/geohash encodings have no"
-            " Spark builtin; use a Pandas UDF (shapely/geohash libs) —"
-            " the greatCircleDistance/geoDistance spellings are mapped"
-        )
     if low.startswith("h3") or low in ("geotoh3", "s2togeo", "geotos2",
                                        "stringtoh3", "h3tostring"):
         raise ValueError(
@@ -4942,27 +5005,6 @@ def _translate_call(name: str, args: list[str]) -> str:
             " libraries; wrap them in a Pandas UDF — Spark has no builtin"
         )
     # -- r7 fourth probe batch: date/time precision + calendar converters
-    if low == "totimezone":
-        # CH changes DISPLAY timezone without moving the instant; Spark
-        # timestamps are tz-less instants, so the faithful rendering-use
-        # map is the tz-shifted wall clock (the session is pinned UTC).
-        return f"from_utc_timestamp({args[0]}, {args[1]})"
-    if low == "timezoneof":
-        return "current_timezone()"  # engine pins one session tz
-    if low == "tomillisecond":
-        return f"CAST(date_format({args[0]}, 'SSS') AS INT)"
-    if low in ("tomodifiedjulianday", "tomodifiedjuliandayornull"):
-        # the OrNull twin rides try-cast semantics: to_date() yields NULL
-        # on an unparseable string (ANSI off), which datediff propagates
-        return f"datediff(to_date({args[0]}), DATE'1858-11-17')"
-    if low in ("frommodifiedjulianday", "frommodifiedjuliandayornull"):
-        return f"date_add(DATE'1858-11-17', CAST({args[0]} AS INT))"
-    if low in ("utctimestamp", "nowinblock"):
-        # session tz is pinned UTC; nowInBlock's per-block re-evaluation
-        # maps to the per-query instant (documented divergence)
-        return "current_timestamp()"
-    if low == "addinterval":
-        return f"({args[0]} + {args[1]})"
     if low == "tolastdayofweek":
         # same mode parity as toStartOfWeek: odd = Monday-start week, so
         # its last day is the following Sunday
@@ -4978,15 +5020,7 @@ def _translate_call(name: str, args: list[str]) -> str:
         if mode % 2:
             return f"date_add(CAST(date_trunc('week', {d}) AS DATE), 6)"
         return f"date_add(date_sub(to_date({d}), dayofweek({d}) - 1), 6)"
-    if low == "tostartofmillisecond":
-        return f"date_trunc('MILLISECOND', {args[0]})"
-    if low in ("tostartofmicrosecond", "tostartofnanosecond"):
-        # Spark timestamps ARE microseconds — truncation is identity (the
-        # nanosecond form inherits the documented micro precision)
-        return args[0]
     # -- r7 fourth probe batch: string distance / UTF8 spellings
-    if low in ("editdistance", "editdistanceutf8", "levenshteindistance"):
-        return f"levenshtein({args[0]}, {args[1]})"
     if low == "stringjaccardindex":
         # Jaccard over the SETS of characters (CH: byte sets)
         a, b = args[0], args[1]
@@ -5000,34 +5034,6 @@ def _translate_call(name: str, args: list[str]) -> str:
         return (
             f"aggregate(zip_with(split({a}, ''), split({b}, ''),"
             f" (_x, _y) -> IF(_x <=> _y, 0, 1)), 0, (_s, _v) -> _s + _v)"
-        )
-    if low in ("dameraulevenshteindistance", "jarosimilarity",
-               "jarowinklersimilarity"):
-        raise ValueError(
-            f"{name}: no Spark builtin for this string metric; levenshtein"
-            " (editDistance — mapped) is the supported distance, or wrap"
-            " a library in a Pandas UDF"
-        )
-    if low in ("normalizeutf8nfc", "normalizeutf8nfd", "normalizeutf8nfkc",
-               "normalizeutf8nfkd"):
-        raise ValueError(
-            f"{name}: Unicode normalization has no Spark SQL builtin; wrap"
-            " python's unicodedata.normalize in a Pandas UDF"
-            " (udf_pandas_scalar pattern)"
-        )
-    if low == "tovalidutf8":
-        return args[0]  # Spark strings are valid UTF-8 by construction
-    if low == "leftutf8":
-        return f"left({args[0]}, {args[1]})"
-    if low == "rightutf8":
-        return f"right({args[0]}, {args[1]})"
-    if low == "translateutf8":
-        return f"translate({args[0]}, {args[1]}, {args[2]})"
-    if low in ("idnaencode", "idnadecode", "punycodeencode",
-               "punycodedecode", "tryidnaencode", "trypunycodedecode"):
-        raise ValueError(
-            f"{name}: IDNA/punycode needs the ICU machinery; wrap"
-            " python's str.encode('idna') in a Pandas UDF"
         )
     # -- r7 fourth probe batch: simpleJSON / JSON additions
     # visitParam* are CH's legacy aliases of the simpleJSON family (r8)
@@ -5053,20 +5059,7 @@ def _translate_call(name: str, args: list[str]) -> str:
     if low == "simplejsonhas":
         path = _json_path(args[1])
         return f"(get_json_object({args[0]}, {path}) IS NOT NULL)"
-    if low == "jsonallpaths":
-        return f"json_object_keys({args[0]})"  # top-level paths
-    if low == "jsonarraylength":
-        return f"json_array_length({args[0]})"
-    if low == "jsonmergepatch":
-        raise ValueError(
-            "JSONMergePatch (RFC 7386) has no Spark builtin; merge via"
-            " from_json → map_concat → to_json for flat documents"
-        )
     # -- r7 fourth probe batch: aggregate additions
-    if low in ("uniqcombined64", "uniqtheta"):
-        return f"approx_count_distinct({args[0]})"
-    if low == "singlevalueornull":
-        return f"IF(count(DISTINCT {args[0]}) = 1, max({args[0]}), NULL)"
     if low == "maxintersections":
         # sweep-line over the group's interval endpoints: one sorted fold,
         # ends tie-break before starts (half-open intervals)
@@ -5140,83 +5133,18 @@ def _translate_call(name: str, args: list[str]) -> str:
             f" element_at({cl}, 1), (_acc, _x) -> array_intersect(_acc,"
             f" _x)))"
         )
-    if low == "sumwithoverflow":
-        # CH keeps the input type and wraps on overflow; Spark's sum
-        # widens instead — a divergence only ON overflow, where CH's
-        # wrapped value is garbage anyway
-        return f"sum({args[0]})"
-    if low in ("currentroles", "currentprofiles", "enabledroles",
-               "enabledprofiles", "defaultroles"):
-        # single-user batch engine: the constant default principal, the
-        # array-valued sibling of currentUser() -> 'default'
-        return "array('default')"
-    if low in ("approx_top_k", "approx_top_count", "approx_top_sum"):
-        raise ValueError(
-            f"{name} returns (value, count, error) tuples from a sketch;"
-            " use topK(k)(x) / topKWeighted(k)(x, w) for the values-only"
-            " arrays, or the agg_freq_items / topk_weighted operators for"
-            " the counted two-column plan"
-        )
     if low in ("grouparraymovingsum", "grouparraymovingavg"):
         # r9: now implemented as trailing-window folds over the collected
         # list (see _translate_parametric) — the arrival-order contract is
         # exactly groupArray's own, so the old refusal was inconsistent
         # with accepting groupArray. Route the bare call there.
         return _translate_parametric(name, [], args)
-    # -- r7 fourth probe batch: identity/constants + server introspection
-    if low in ("materialize", "identity"):
-        return args[0]
-    if low == "ignore":
-        return "0"
-    if low == "indexhint":
-        # CH: a constant-1 predicate that only steers index selection —
-        # Spark's planner has no analogue; the value-faithful form is TRUE
-        return "true"
-    if low in ("currentuser", "initialuser"):
-        return "'default'"
-    if low in ("queryid", "initialqueryid"):
-        raise ValueError(
-            f"{name}: Spark exposes no per-query id inline; correlate via"
-            " the Spark UI / listener API outside the query"
-        )
-    if low in ("isnullable", "isconstant"):
-        raise ValueError(
-            f"{name} introspects the expression's compile-time type; read"
-            " the schema via DESCRIBE TABLE / system.columns instead"
-        )
-    if low in ("version", "buildid", "revision", "displayname",
-               "serveruuid", "zookeepersessionuptime", "connectionid",
-               "transactionid", "getmacro", "getsetting",
-               "getclientinfo", "getoskernelversion",
-               "estimatecompressionratio", "structuretoprotobufschema",
-               "structuretocapnprotoschema"):
-        raise ValueError(
-            f"{name}() is server-runtime introspection with no meaning in"
-            " a batch plan (same family as uptime()); read engine"
-            " metadata from the Spark session/UI instead"
-        )
-    if low == "hascolumnintable":
-        raise ValueError(
-            "hasColumnInTable: query the system.columns introspection"
-            " table (chsql_system_introspection) instead"
-        )
     # -- r7 fourth probe batch: MAC / IPv4 extensions
     if low == "macnumtostring":
         n = f"CAST({args[0]} AS BIGINT)"
         return (
             f"concat_ws(':', transform(sequence(5, 0, -1),"
             f" _i -> lpad(hex(shiftright({n}, _i * 8) & 255), 2, '0')))"
-        )
-    if low == "macstringtonum":
-        return (
-            f"aggregate(split({args[0]}, ':'), CAST(0 AS BIGINT),"
-            f" (_a, _p) -> _a * 256 + CAST(conv(_p, 16, 10) AS BIGINT))"
-        )
-    if low == "macstringtooui":  # leading 3 octets (the OUI) as a number
-        return (
-            f"aggregate(slice(split({args[0]}, ':'), 1, 3),"
-            f" CAST(0 AS BIGINT),"
-            f" (_a, _p) -> _a * 256 + CAST(conv(_p, 16, 10) AS BIGINT))"
         )
     if low in ("toipv4", "toipv4ornull", "toipv4orzero",
                "toipv4ordefault",
@@ -5306,16 +5234,6 @@ def _translate_call(name: str, args: list[str]) -> str:
             f")$"
         )
         return f"(CAST({args[0]} AS STRING) RLIKE '{pat}')"
-    if low in ("ipv6numtostring", "ipv6stringtonum", "ipv4toipv6",
-               "cutipv6", "ipv6cidrtorange", "toipv6",
-               "toipv6ornull", "toipv6orzero"):
-        raise ValueError(
-            f"{name}: IPv6 needs 128-bit binary arithmetic with no Spark"
-            " inline spelling; the IPv4 family (IPv4NumToString /"
-            " IPv4StringToNum / IPv4CIDRToRange / isIPAddressInRange) and"
-            " isIPv6String (pure validation) are mapped — wrap an"
-            " ipaddress-module Pandas UDF for IPv6 arithmetic"
-        )
     # -- r7 fourth probe batch: rendering / parsing / random
     if low == "bar":
         x, lo_, hi, w = args[0], args[1], args[2], args[3]
@@ -5349,56 +5267,6 @@ def _translate_call(name: str, args: list[str]) -> str:
             f" WHEN 'gb' THEN 1000000000 WHEN 'tb' THEN 1000000000000"
             f" ELSE 1 END)) AS BIGINT)"
         )
-    if low == "randcanonical":
-        return "rand()"
-    if low == "randuniform":
-        return f"({args[0]} + rand() * (({args[1]}) - ({args[0]})))"
-    if low == "randnormal":
-        return f"(randn() * ({args[1]}) + ({args[0]}))"
-    if low == "randbernoulli":
-        return f"IF(rand() < ({args[0]}), 1, 0)"
-    if low == "randexponential":
-        return f"(-ln(1.0 - rand()) / ({args[0]}))"
-    if low == "randlognormal":
-        return f"exp(randn() * ({args[1]}) + ({args[0]}))"
-    if low in ("randbinomial", "randnegativebinomial", "randpoisson",
-               "randstudentt", "randchisquared", "randfisherf"):
-        raise ValueError(
-            f"{name}: multi-draw distributions need a sampling loop; use"
-            " randUniform/randNormal/randExponential (mapped) or a Pandas"
-            " UDF with numpy.random"
-        )
-    if low == "fuzzbits":
-        # r12 probe: was Spark's raw unresolved-routine error
-        raise ValueError(
-            "fuzzBits flips random BITS inside a byte string (a test-data"
-            " fuzzer over CH's FixedString layout) — no Spark builtin"
-            " mutates binary in place; use randCanonical/randBernoulli"
-            " (mapped) for randomized columns or a Pandas UDF over binary"
-        )
-    if low == "generateuuidv7":
-        # uuid() is v4 — unique but NOT time-ordered (documented
-        # divergence; order by an explicit timestamp column instead)
-        return "uuid()"
-    if low == "uuidv7todatetime":
-        # RFC 9562 v7: the first 48 bits (12 hex digits) are unix
-        # milliseconds (r9 probe: was a silent passthrough). Bit-faithful
-        # on real v7 strings; on this engine's generateUUIDv7 (a v4 —
-        # documented divergence there) the value is arbitrary.
-        return (
-            "timestamp_millis(CAST(conv(substr(replace("
-            f"CAST({args[0]} AS STRING), '-', ''), 1, 12), 16, 10)"
-            " AS BIGINT))"
-        )
-    if low == "snowflaketodatetime":
-        return (
-            f"timestamp_millis(shiftright(CAST({args[0]} AS BIGINT), 22)"
-            f" + 1288834974657)"
-        )
-    if low == "datetimetosnowflake":
-        return (
-            f"shiftleft(unix_millis({args[0]}) - 1288834974657, 22)"
-        )
     if low in ("snowflakeidtodatetime", "snowflakeidtodatetime64"):
         # current CH names (the snowflakeToDateTime spellings above were
         # deprecated in 24.6): timestamp = top 41 bits (id >> 22) in ms
@@ -5418,38 +5286,8 @@ def _translate_call(name: str, args: list[str]) -> str:
             f"shiftleft(unix_millis({args[0]})"
             f" - CAST({epoch} AS BIGINT), 22)"
         )
-    if low in ("generatesnowflakeid", "ulidstringtodatetime"):
-        raise ValueError(
-            f"{name}: needs the machine-id/sequence state (or base32"
-            " bignum) of the ID scheme; snowflakeIDToDateTime /"
-            " dateTimeToSnowflakeID are mapped"
-        )
-    if low == "nonnegativederivative":
-        raise ValueError(
-            "nonNegativeDerivative is a window function; spell it as"
-            " greatest((x - lag(x) OVER w) / (unix_timestamp(t) -"
-            " lag(unix_timestamp(t)) OVER w), 0) — see win_lag_lead"
-        )
-    if low in ("blocknumber", "rownumberinblock", "blocksize"):
-        raise ValueError(
-            f"{name} is ClickHouse's deprecated BLOCK-scoped form — its"
-            " result depends on physical block boundaries that don't"
-            " exist on Spark; use row_number() OVER an explicit ORDER BY"
-        )
     # -- r7 sixth probe batch: date makers, hash spellings, encryption,
     # n-gram similarity, HTML strip
-    if low in ("joinget", "joingetornull"):
-        raise ValueError(
-            f"{name} reads a Join-engine table's hash state; use"
-            " dictGet against a CREATE DICTIONARY binding (mapped) or a"
-            " plain LEFT JOIN"
-        )
-    if low in ("catboostevaluate", "modelevaluate"):
-        raise ValueError(
-            f"{name} needs CH's bundled model runtime; score with a"
-            " Pandas UDF over mapInPandas (the multimodal/feature"
-            " operators show the Arrow plumbing)"
-        )
     if low in ("makedate", "makedate32") and len(args) == 2:
         # 2-argument (year, day_of_year) form (r10 probe: previously an
         # IndexError crash on makeDate32)
@@ -5467,15 +5305,6 @@ def _translate_call(name: str, args: list[str]) -> str:
                 " use the 6-argument form + an INTERVAL for sub-seconds"
             )
         return f"make_timestamp({', '.join(args[:6])})"
-    if low == "yyyymmddhhmmsstodatetime":
-        return (
-            f"to_timestamp(CAST({args[0]} AS STRING), 'yyyyMMddHHmmss')"
-        )
-    if low == "fromunixtimestamp64nano":
-        # Spark timestamps are micros — nanos truncate (documented)
-        return f"timestamp_micros(CAST({args[0]} AS BIGINT) div 1000)"
-    if low == "tounixtimestamp64nano":
-        return f"(unix_micros({args[0]}) * 1000)"
     if low in ("siphash128", "murmurhash3_128", "metrohash64", "wyhash64",
                "xxh3", "xxhash64", "farmfingerprint64", "urlhash",
                "siphash128keyed", "siphash128reference",
@@ -5523,12 +5352,6 @@ def _translate_call(name: str, args: list[str]) -> str:
             return f"aes_encrypt({args[1]}, {args[2]}, '{mode}'{iv})"
         fn = "try_aes_decrypt" if low == "trydecrypt" else "aes_decrypt"
         return f"CAST({fn}({args[1]}, {args[2]}, '{mode}'{iv}) AS STRING)"
-    if low in ("aes_encrypt_mysql", "aes_decrypt_mysql"):
-        raise ValueError(
-            f"{name} applies MySQL's key-folding scheme; use"
-            " encrypt/decrypt (mapped to aes_encrypt/aes_decrypt) with a"
-            " proper-length key"
-        )
     if low in ("ngramdistance", "ngramsearch", "ngramdistancecaseinsensitive",
                "ngramsearchcaseinsensitive"):
         a, b = args[0], args[1]
@@ -5548,26 +5371,11 @@ def _translate_call(name: str, args: list[str]) -> str:
             f"(1.0D - CAST({inter} AS DOUBLE)"
             f" / greatest(size(array_union({ga}, {gb})), 1))"
         )
-    if low == "extracttextfromhtml":
-        return (
-            f"trim(regexp_replace(regexp_replace(regexp_replace({args[0]},"
-            f" '(?is)<(script|style)[^>]*>.*?</(script|style)>', ' '),"
-            f" '<[^>]*>', ' '), '\\\\s+', ' '))"
-        )
-    if low == "initcaputf8":
-        return f"initcap({args[0]})"
     if low.startswith("reinterpretas") or low == "reinterpret":
         raise ValueError(
             f"{name}: raw byte reinterpretation depends on CH's physical"
             " column layout; use explicit CAST / unhex / encode-decode"
             " spellings instead"
-        )
-    if low in ("multifuzzymatchany", "multifuzzymatchanyindex",
-               "multifuzzymatchallindices"):
-        raise ValueError(
-            f"{name}: fuzzy (edit-distance) regex matching has no Spark"
-            " builtin; multiMatchAny (exact regex, mapped) or levenshtein"
-            " post-filters are the building blocks"
         )
     # -- r7 fifth probe batch
     if low in ("sumdistinct", "avgdistinct", "mindistinct", "maxdistinct"):
@@ -5609,11 +5417,6 @@ def _translate_call(name: str, args: list[str]) -> str:
             " the plain aggregates — finalizeAggregation over an INLINE"
             " xState(...) call is mapped; sketch states → agg_hll_merge)"
         )
-    if low == "runningconcurrency":
-        raise ValueError(
-            "runningConcurrency is block-scoped; use maxIntersections"
-            " (mapped) for the group-wide peak or a window running count"
-        )
     if low == "tointerval":
         um = re.fullmatch(r"\s*'(\w+)'\s*", args[1] or "")
         if not um:
@@ -5637,21 +5440,6 @@ def _translate_call(name: str, args: list[str]) -> str:
         raise ValueError(
             "timestampSub expects (unit, n, ts) or (ts, INTERVAL n unit)"
         )
-    if low == "torelativeyearnum":
-        return f"year({args[0]})"
-    if low == "torelativequarternum":
-        return f"(year({args[0]}) * 4 + quarter({args[0]}))"
-    if low == "torelativeweeknum":
-        # Monday-boundary week count anchored so 1970-01-01 (Thursday) is
-        # week 0 and the first increment lands on 1970-01-05
-        return (
-            f"CAST(floor((datediff({args[0]}, DATE '1970-01-01') + 3) / 7)"
-            f" AS BIGINT)"
-        )
-    if low == "torelativeminutenum":
-        return f"CAST(floor(unix_timestamp({args[0]}) / 60) AS BIGINT)"
-    if low == "torelativesecondnum":
-        return f"unix_timestamp({args[0]})"
     if low in ("bitmasktolist", "bitmasktoarray", "bitpositionstoarray"):
         x = f"CAST({args[0]} AS BIGINT)"
         if low == "bitpositionstoarray":
@@ -5667,31 +5455,13 @@ def _translate_call(name: str, args: list[str]) -> str:
         if low == "bitmasktoarray":
             return arr
         return f"array_join(transform({arr}, _v -> CAST(_v AS STRING)), ',')"
-    if low == "tolowcardinality":
-        return args[0]  # storage-encoding hint, value-transparent
-    if low == "visiblewidth":
-        return f"length(CAST({args[0]} AS STRING))"
     if low == "tocolumntypename":
         return _translate_call("toTypeName", args)
-    if low in ("getsizeofenumtype", "dumpcolumnstructure",
-               "defaultvalueofargumenttype", "lowcardinalitykeys",
-               "lowcardinalityindices"):
-        raise ValueError(
-            f"{name} introspects CH's physical column representation,"
-            " which Spark columns don't carry; DESCRIBE/system.columns is"
-            " the schema surface, defaultValueOfTypeName the type-default"
-            " one"
-        )
     if low == "lpnorm":
         a, p = args[0], args[1] if len(args) > 1 else "2"
         return (
             f"pow(aggregate({a}, 0D, (_s, _x) ->"
             f" _s + pow(abs(CAST(_x AS DOUBLE)), {p})), 1.0 / ({p}))"
-        )
-    if low == "linfnorm":
-        return (
-            f"array_max(transform({args[0]},"
-            f" _x -> abs(CAST(_x AS DOUBLE))))"
         )
     if low == "l2squarednorm":
         return _vec_dot(args[0], args[0])
@@ -5717,26 +5487,12 @@ def _translate_call(name: str, args: list[str]) -> str:
             f" pow(abs(CAST(_x AS DOUBLE) - CAST(_y AS DOUBLE)), {p})),"
             f" 0D, (_s, _v) -> _s + _v), 1.0 / ({p}))"
         )
-    if low in ("arraylevenshteindistance",
-               "arraylevenshteindistanceweighted"):
-        raise ValueError(
-            f"{name}: no inline Spark spelling over generic"
-            " tuples/arrays; editDistance (strings) and"
-            " byteHammingDistance are mapped — explode + compare for the"
-            " array forms"
-        )
-    if low == "positioncaseinsensitiveutf8":
-        return f"locate(lower({args[1]}), lower({args[0]}))"
     if low == "countsubstringscaseinsensitive":
         h, n_ = f"lower({args[0]})", f"lower({args[1]})"
         return (
             f"CAST((length({h}) - length(replace({h}, {n_}, '')))"
             f" / length({n_}) AS INT)"
         )
-    if low == "startswithutf8":
-        return f"startswith({args[0]}, {args[1]})"
-    if low == "endswithutf8":
-        return f"endswith({args[0]}, {args[1]})"
     if low in ("touuidornull", "touuidorzero"):
         pat = (
             "'^[0-9a-fA-F]{8}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-"
@@ -5753,18 +5509,6 @@ def _translate_call(name: str, args: list[str]) -> str:
             "[0-9a-fA-F]{4}-[0-9a-fA-F]{12}$'"
         )
         return f"IF({args[0]} RLIKE {pat}, {args[0]}, {args[1]})"
-    if low in ("uuidnumtostring", "uuidstringtonum", "uuidv7tonum",
-               "uuidtonum"):
-        raise ValueError(
-            f"{name} converts to/from the 16-byte binary UUID"
-            " representation; keep UUIDs as strings here (uuid() /"
-            " generateUUIDv4 are mapped)"
-        )
-    if low == "serverversion":
-        raise ValueError(
-            "serverVersion() is server-runtime introspection with no"
-            " meaning in a batch plan (same family as uptime())"
-        )
     if low == "totime64":
         return _translate_call("toTime", [args[0]])
     stack_m = re.fullmatch(
@@ -5832,391 +5576,202 @@ _OR_CAST_NAMES = {
     for suffix in ("ornull", "orzero", "ordefault")
 }
 
-_CH_NAMES = set(_RENAME) | _PARAMETRIC | _OR_CAST_NAMES | {
-    "randconstant", "arrayelement", "logtrace", "timestamp",
-    "uniq", "uniqcombined", "uniqexact", "position", "positionutf8",
-    "splitbychar", "splitbyregexp", "frombase64", "empty",
-    "notempty", "sumif", "avgif", "minif", "maxif", "multiif", "toint32",
-    "toint64", "tofloat64", "tostring", "intdiv", "modulo", "toyyyymm",
-    "tostartofmonth", "tostartofday", "tostartofhour", "tostartofweek",
-    "arraymap", "arrayfilter", "arrayexists", "arrayall", "arraysum",
-    "count", "arraycount", "arrayfirst", "arrayavg", "arrayuniq",
-    "arrayenumerate", "yesterday", "touint32", "touint64", "toint8",
-    "toint16", "jsonextractstring", "jsonextractraw",
-    "visitparamextractstring", "jsonextractint", "jsonextractfloat",
-    "median", "grouparrayarray", "anyif", "datediff", "date_diff",
+# The function-name gate: _translate_fns routes `ident(` to
+# _translate_call only for these names. Table keys are gated by
+# construction; the literal lists the names the code branches handle.
+_CH_NAMES = set(_RENAME) | _PARAMETRIC | _OR_CAST_NAMES | set(_TEMPLATES) | {
+    "timestamp", "uniq", "uniqcombined", "uniqexact", "position",
+    "positionutf8", "empty", "notempty", "sumif", "avgif", "minif", "maxif",
+    "multiif", "tostring", "tostartofweek", "arraymap", "arrayfilter",
+    "arrayexists", "arrayall", "count", "arraycount", "arrayfirst", "arrayavg",
+    "arrayuniq", "toint8", "toint16", "jsonextractstring", "jsonextractraw",
+    "visitparamextractstring", "jsonextractint", "jsonextractfloat", "anyif",
+    "datediff", "date_diff",
     # r6 gap batch (found by executing 75 common-CH-name probes on Spark)
-    "jsonextractbool", "jsonhas", "jsonlength", "jsonextractarrayraw",
-    "arrayfirstindex", "sha224", "sha256", "sha512", "sha1", "md5",
-    "transform",
-    "rounddown", "extract", "length",
+    "jsonextractbool", "jsonhas", "jsonlength", "arrayfirstindex", "sha224",
+    "sha256", "sha512", "transform", "extract", "length",
     # r6 gap batch 2
-    "plus", "minus", "multiply", "divide", "negate", "xxhash32", "max2",
-    "min2", "countmatches", "regexpquotemeta", "tobool", "totime",
-    "tostartofsecond", "hassubsequence", "hassubsequenceutf8",
+    "xxhash32", "hassubsequence", "hassubsequenceutf8",
     "hassubsequencecaseinsensitive", "hassubsequencecaseinsensitiveutf8",
-    "encodexmlcomponent", "decodehtmlcomponent",
-    "toweek", "trunc", "truncate", "regexpextract", "arraywithconstant",
-    "toyyyymmdd", "toyyyymmddhhmmss",
-    "emptyarraystring", "emptyarrayint8", "emptyarrayint16",
-    "emptyarrayint32", "emptyarrayint64", "emptyarrayuint8",
-    "emptyarrayuint16", "emptyarrayuint32", "emptyarrayuint64",
-    "emptyarrayfloat32", "emptyarrayfloat64", "emptyarraydate",
-    "emptyarraydatetime",
+    "decodehtmlcomponent", "trunc", "truncate", "regexpextract",
+    "emptyarraystring", "emptyarrayint8", "emptyarrayint16", "emptyarrayint32",
+    "emptyarrayint64", "emptyarrayuint8", "emptyarrayuint16",
+    "emptyarrayuint32", "emptyarrayuint64", "emptyarrayfloat32",
+    "emptyarrayfloat64", "emptyarraydate", "emptyarraydatetime",
     # r6 gap batch 3: URL surgery, readable formatting, date names,
     # array scan/search forms
-    "netloc", "topleveldomain", "firstsignificantsubdomain",
-    "cuttofirstsignificantsubdomain", "cutquerystring", "cutfragment",
-    "cutquerystringandfragment", "querystringandfragment",
-    "decodeurlcomponent", "encodeurlcomponent", "datename", "timediff",
-    "adddate", "subdate", "torelativedaynum", "formatreadablesize",
-    "formatreadablequantity", "todecimalstring",
-    "multisearchanycaseinsensitive", "hassubstr", "arraylast",
-    "arraylastindex", "arraypartialsort", "arrayenumerateuniq",
-    "arrayfill", "arrayreversefill", "countdistinct", "touuid", "notilike",
-    "uniqif", "summap", "minmap", "maxmap", "avgmap",
-    "summapif", "minmapif", "maxmapif",
-    "firstvalue", "lastvalue", "first_value", "last_value", "any",
-    "anylast", "any_respect_nulls", "anyrespectnulls",
-    "anylast_respect_nulls", "anylastrespectnulls",
-    "first_value_respect_nulls", "firstvaluerespectnulls",
-    "last_value_respect_nulls", "lastvaluerespectnulls",
-    "arrayconcatagg", "xor",
-    "bitmapbuild", "bitmaptoarray", "bitmapcontains", "bitmapcardinality",
-    "bitmapand", "bitmapor", "bitmapandnot", "bitmapxor",
+    "firstsignificantsubdomain", "cuttofirstsignificantsubdomain", "datename",
+    "adddate", "subdate", "formatreadablesize", "formatreadablequantity",
+    "hassubstr", "arraylast", "arraylastindex", "arraypartialsort",
+    "arrayenumerateuniq", "arrayfill", "arrayreversefill", "countdistinct",
+    "uniqif", "summap", "minmap", "maxmap", "summapif", "minmapif", "maxmapif",
+    "firstvalue", "lastvalue", "first_value", "last_value", "any", "anylast",
+    "xor", "bitmapbuild", "bitmaptoarray", "bitmapcontains",
+    "bitmapcardinality", "bitmapand", "bitmapor", "bitmapandnot", "bitmapxor",
     "groupbitmapstate",
     # known-unmappable spellings routed to loud guided errors (r6 #5)
-    "remote", "remotesecure", "cluster", "clusterallreplicas", "merge",
-    "file", "url", "s3", "s3cluster", "hdfs", "azureblobstorage",
-    "dictgethierarchy", "extractgroups", "extractallgroups",
-    "extractallgroupshorizontal", "extractallgroupsvertical",
+    "extractgroups", "extractallgroups", "extractallgroupshorizontal",
+    "extractallgroupsvertical",
     # r7 probe batch: mapped spellings
-    "datetrunc", "lastdayofmonth", "widthbucket", "leftpadutf8",
-    "rightpadutf8", "substringindexutf8", "arrayshingles", "mapadd",
-    "replaceone", "multimatchany", "multimatchanyindex", "tokens",
-    "ngrams", "isvalidutf8", "format", "toisoyear", "tostartofisoyear",
-    "torelativemonthnum", "torelativehournum", "todayssinceyearzero",
-    "fromdayssinceyearzero", "yyyymmddtodate", "toyearweek", "timeslots",
-    "bitrotateleft", "gcd", "lcm", "sigmoid", "logit", "nan",
-    "totypename", "char", "ipv4numtostring", "ipv4stringtonum",
-    "isipv4string", "currentdatabase", "hostname", "tofixedstring",
-    "defaultvalueoftypename",
+    "arrayshingles", "mapadd", "replaceone", "multimatchany",
+    "multimatchanyindex", "ngrams", "format", "tostartofisoyear", "toyearweek",
+    "timeslots", "bitrotateleft", "gcd", "lcm", "totypename", "char",
+    "ipv4numtostring", "defaultvalueoftypename",
     # r7 third probe batch: URL / search / stats / rounding / bits / maps /
     # arrays / geo / misc (mapped)
-    "pathfull", "extracturlparameters", "extracturlparameternames",
-    "cutwww", "urlhierarchy", "multisearchallpositions",
-    "multisearchfirstindex", "multisearchfirstposition",
-    "hastokencaseinsensitive",
-    "skewpop", "skewsamp", "kurtpop", "kurtsamp", "boundingratio",
-    "entropy", "roundtoexp2", "roundage", "roundduration",
-    "bittestall", "bittestany", "bitrotateright",
-    "mapfilter", "mapexists", "mapall", "mapapply", "mapupdate",
+    "extracturlparameters", "extracturlparameternames", "urlhierarchy",
+    "multisearchallpositions", "skewpop", "skewsamp", "kurtpop", "kurtsamp",
+    "boundingratio", "entropy", "roundtoexp2", "roundage", "roundduration",
+    "bittestall", "bittestany", "bitrotateright", "mapapply", "mapupdate",
     "mapconcat", "mapsubtract", "mappopulateseries", "mapsort",
-    "mapreversesort",
-    "arrayauc", "arrayrocauc", "arrayzip", "arrayintersect",
+    "mapreversesort", "arrayauc", "arrayrocauc", "arrayzip", "arrayintersect",
     "arrayenumeratedense", "arrayfirstornull", "arraylastornull",
-    "arraycumsumnonnegative", "arrayrotateleft",
-    "arrayrotateright", "arrayshiftleft", "arrayshiftright",
-    "arrayrandomsample", "arraypartialshuffle", "arrayjaccardindex",
-    "arraydotproduct", "geodistance", "greatcircleangle",
-    "todecimal256", "trybase64decode", "tuplenames",
+    "arraycumsumnonnegative", "arrayrotateleft", "arrayrotateright",
+    "arrayshiftleft", "arrayshiftright", "arrayrandomsample",
+    "arraypartialshuffle", "arrayjaccardindex", "arraydotproduct",
+    "geodistance", "greatcircleangle",
     # r7 third probe batch: guided-error spellings
-    "studentttest", "welchttest", "mannwhitneyutest",
-    "kolmogorovsmirnovtest", "rankcorr", "cramersv",
-    "cramersvbiascorrected", "theilsu", "contingency",
-    # r8: matrix aggregates routed to the same guided-error policy
-    "corrmatrix", "covarmatrix", "covarsampmatrix", "covarpopmatrix",
-    # r10: SGD-training aggregates routed to named guidance
-    "stochasticlinearregression", "stochasticlogisticregression",
+    "rankcorr", "cramersv", "cramersvbiascorrected", "theilsu", "contingency",
     # r8 probe batch: mapped spellings
-    "cast",
-    "arraysplit", "arrayreversesplit", "arrayelementornull",
-    "bithammingdistance", "jumpconsistenthash", "kostikconsistenthash",
-    "yandexconsistenthash", "simplelinearregression", "mapextractkeylike",
-    "mapcontainskeylike", "murmurhash2_64", "murmurhash3_64",
-    "murmurhash2_32", "murmurhash3_32", "murmurhash3_128",
-    "encodeurlformcomponent", "decodeurlformcomponent",
-    "arrayzipunaligned",
-    # r8 probe batch: guided-error spellings
-    "aggthrow", "analysisofvariance", "anovatest",
+    "cast", "arraysplit", "arrayreversesplit", "simplelinearregression",
+    "murmurhash3_128",
     # r8 probe batch 2: mapped
-    "maxintersectionsposition", "grouparrayintersect", "sumwithoverflow",
-    "currentroles", "currentprofiles", "enabledroles", "enabledprofiles",
-    "defaultroles",
+    "maxintersectionsposition", "grouparrayintersect",
     # r8 probe batch 3: mapped
-    "casewithexpression", "toutctimestamp", "fromutctimestamp", "bin",
-    "unbin", "fqdn", "shardnum", "shardcount",
+    "casewithexpression", "bin", "unbin",
     # r8 probe batch 4: mapped
-    "positivemodulo", "overlayutf8", "firstline", "splitbynonalpha",
-    "changeyear", "changemonth", "changeday", "changehour", "changeminute",
-    "changesecond", "parsedatetime", "parsedatetimeornull",
+    "overlayutf8", "changeyear", "changemonth", "changeday", "changehour",
+    "changeminute", "changesecond", "parsedatetime", "parsedatetimeornull",
     "parsedatetimeorzero", "parsedatetimeinjodasyntax",
-    "fromunixtimestampinjodasyntax",
-    "parsedatetimeinjodasyntaxornull", "base64urlencode", "base64urldecode",
-    "corrstable", "covarpopstable", "covarsampstable", "stddevpopstable",
-    "stddevsampstable", "varpopstable", "varsampstable", "iszeroornull",
-    "arrayunion", "arraysymmetricdifference", "indexofassumesorted",
-    "indexof", "alphatokens",
-    "port", "cuturlparameter", "urlpathhierarchy", "domainwithoutwww",
-    "randomstring", "randomprintableascii", "nothing", "user",
-    "dividedecimal", "multiplydecimal",
+    "parsedatetimeinjodasyntaxornull", "base64urldecode", "corrstable",
+    "covarpopstable", "covarsampstable", "stddevpopstable", "stddevsampstable",
+    "varpopstable", "varsampstable", "arrayunion", "arraysymmetricdifference",
+    "port", "cuturlparameter", "urlpathhierarchy", "dividedecimal",
+    "multiplydecimal",
     # r8 probe batch 5: combinator stacks (peeled recursively)
     "sumarrayif", "countarrayif", "avgarrayif", "uniqarrayif",
-    "uniqexactarrayif", "maxarrayif", "minarrayif",
-    "sumdistinctif", "avgdistinctif", "mindistinctif", "maxdistinctif",
-    "sumifornull", "avgifornull", "minifornull", "maxifornull",
-    "countifornull", "uniqifornull", "uniqexactifornull", "anyifornull",
-    "sumifordefault", "avgifordefault", "minifordefault",
-    "maxifordefault", "countifordefault", "uniqifordefault",
-    "uniqexactifordefault",
+    "uniqexactarrayif", "maxarrayif", "minarrayif", "sumifornull",
+    "avgifornull", "minifornull", "maxifornull", "countifornull",
+    "uniqifornull", "uniqexactifornull", "anyifornull", "sumifordefault",
+    "avgifordefault", "minifordefault", "maxifordefault", "countifordefault",
+    "uniqifordefault", "uniqexactifordefault",
     # r8 probe batch 4: guided
-    "mortonencode", "mortondecode", "hilbertencode", "hilbertdecode",
-    "evalmlmethod",
     "sumargmin", "sumargmax", "avgargmin", "avgargmax", "minargmin",
     "minargmax", "maxargmin", "maxargmax", "countargmin", "countargmax",
     "anyargmin", "anyargmax", "uniqargmin", "uniqargmax",
     # r8 probe batch 3: guided
-    "tupleplus", "tupleminus", "tuplemultiply", "tupledivide",
-    "tuplenegate", "tuplemultiplybynumber", "tupledividebynumber",
-    "tupleintdiv", "tuplemodulo", "vectorsum", "vectordifference",
-    "tupleconcat", "flattentuple", "arrayaucpr",
-    "mappartialsort", "mappartialreversesort",
-    "arrayenumerateuniqranked", "arrayenumeratedenseranked",
+    "tupleplus", "tupleminus", "tuplemultiply", "tupledivide", "tuplenegate",
+    "tuplemultiplybynumber", "tupledividebynumber", "tupleintdiv",
+    "tuplemodulo", "vectorsum", "vectordifference", "tupleconcat",
     # r8 probe batch 2: guided
-    "approx_top_k", "approx_top_count", "approx_top_sum",
-    "meanztest", "studentttestonesample", "categoricalinformationvalue",
-    "analysisofvariance", "anova", "fuzzbits",
     "bitmapmin", "bitmapmax", "bitmapandcardinality", "bitmaporcardinality",
     "bitmapandnotcardinality", "bitmapxorcardinality", "bitmaphasall",
-    "bitmaphasany", "bitmapsubsetinrange", "bitmapsubsetlimit",
-    "readwktpoint", "readwktpolygon", "readwktmultipolygon", "readwktring",
-    "wkt", "polygonareacartesian", "polygonperimetercartesian",
-    "polygonsunioncartesian", "polygonsintersectioncartesian",
-    "estimatecompressionratio", "structuretoprotobufschema",
-    "structuretocapnprotoschema",
-    "deltasum", "deltasumtimestamp", "minsamplesizeconversion",
-    "minsamplesizecontinous", "minsamplesizecontinuous",
-    "largesttrianglethreebuckets", "bytesize", "arraynormalizedgini",
-    "tupletonamevaluepairs", "base58encode", "base58decode", "bitslice",
-    "byteswap", "subbitmap", "pointinpolygon", "geohashencode",
-    "geohashdecode", "geohashesinbox", "geotoh3", "h3togeo",
-    "h3togeoboundary", "h3getresolution",
+    "bitmaphasany", "bitmapsubsetinrange", "bitmapsubsetlimit", "geotoh3",
+    "h3togeo", "h3tostring", "geotos2", "s2togeo", "h3togeoboundary",
+    "h3getresolution",
     # r7 fourth probe batch (mapped)
-    "totimezone", "timezoneof", "tomillisecond", "tomodifiedjulianday",
-    "frommodifiedjulianday", "tomodifiedjuliandayornull",
-    "frommodifiedjuliandayornull", "utctimestamp", "nowinblock",
-    "addinterval",
-    "tolastdayofweek", "tostartofmillisecond", "tostartofmicrosecond",
-    "tostartofnanosecond", "editdistance", "editdistanceutf8",
-    "levenshteindistance", "stringjaccardindex", "bytehammingdistance",
-    "tovalidutf8", "leftutf8", "rightutf8", "translateutf8",
-    "simplejsonextractstring", "simplejsonextractraw",
-    "simplejsonextractint", "simplejsonextractuint",
-    "simplejsonextractfloat", "simplejsonextractbool", "simplejsonhas",
-    "visitparamhas", "visitparamextractint", "visitparamextractuint",
-    "visitparamextractfloat", "visitparamextractbool",
-    "visitparamextractraw",
-    "jsonallpaths", "jsonarraylength", "uniqcombined64", "uniqtheta",
-    "singlevalueornull", "maxintersections", "intervallengthsum",
-    "materialize", "identity", "ignore", "indexhint", "currentuser",
-    "initialuser", "macnumtostring", "macstringtonum", "toipv4",
-    "toipv4ornull", "toipv4orzero", "toipv4ordefault",
-    "isipaddressinrange", "bar",
-    "formatreadabledecimalsize", "parsereadablesize", "randcanonical",
-    "randuniform", "randnormal", "randbernoulli", "randexponential",
-    "randlognormal", "generateuuidv7", "snowflaketodatetime",
-    "uuidv7todatetime", "tointervalweek", "tointervalmillisecond",
-    "tointervalmicrosecond", "tointervalnanosecond",
-    "accuratecastordefault",
-    "datetimetosnowflake",
+    "tolastdayofweek", "stringjaccardindex", "bytehammingdistance",
+    "simplejsonextractstring", "simplejsonextractraw", "simplejsonextractint",
+    "simplejsonextractuint", "simplejsonextractfloat", "simplejsonextractbool",
+    "simplejsonhas", "visitparamhas", "visitparamextractint",
+    "visitparamextractuint", "visitparamextractfloat", "visitparamextractbool",
+    "visitparamextractraw", "maxintersections", "intervallengthsum",
+    "macnumtostring", "toipv4", "toipv4ornull", "toipv4orzero",
+    "toipv4ordefault", "isipaddressinrange", "bar",
+    "formatreadabledecimalsize", "parsereadablesize", "tointervalmillisecond",
+    "tointervalmicrosecond", "tointervalnanosecond", "accuratecastordefault",
     # r7 fourth probe batch (guided errors)
-    "nonnegativederivative", "dameraulevenshteindistance",
-    "jarosimilarity", "jarowinklersimilarity", "normalizeutf8nfc",
-    "normalizeutf8nfd", "normalizeutf8nfkc", "normalizeutf8nfkd",
-    "idnaencode", "idnadecode", "punycodeencode", "punycodedecode",
-    "tryidnaencode", "trypunycodedecode", "jsonmergepatch",
-    "grouparraymovingsum", "grouparraymovingavg", "queryid",
-    "initialqueryid", "isnullable", "isconstant", "version", "buildid",
-    "revision", "displayname", "serveruuid", "zookeepersessionuptime",
-    "connectionid", "transactionid", "getmacro", "getsetting",
-    "getclientinfo", "getoskernelversion", "hascolumnintable",
-    "ipv6numtostring", "ipv6stringtonum", "ipv4toipv6", "cutipv6",
-    "ipv4cidrtorange", "ipv6cidrtorange", "toipv6", "toipv6ornull",
-    "toipv6orzero", "isipv6string", "randbinomial",
-    "randnegativebinomial", "randpoisson", "randstudentt",
-    "randchisquared", "randfisherf", "snowflakeidtodatetime",
-    "datetimetosnowflakeid", "generatesnowflakeid", "ulidstringtodatetime",
+    "ipv4cidrtorange", "isipv6string", "snowflakeidtodatetime",
+    "datetimetosnowflakeid",
     # r10 continuation: current snowflake 64-bit forms + tuple intdiv
-    "snowflakeidtodatetime64", "datetime64tosnowflakeid",
-    "tupleintdivorzero", "tupleintdivbynumber", "tuplemodulobynumber",
+    "snowflakeidtodatetime64", "datetime64tosnowflakeid", "tupleintdivorzero",
+    "tupleintdivbynumber", "tuplemodulobynumber",
     # r10 continuation probe batch 2: runtime-failure fixes
     "pointinellipses", "ipv4stringtonumornull", "ipv4stringtonumordefault",
-    "ipv4numtostringclassc", "groupbitmap", "groupbitmapand",
-    "groupbitmapor", "groupbitmapxor",
-    "blocknumber", "rownumberinblock", "blocksize",
+    "ipv4numtostringclassc",
     # r7 sixth probe batch (mapped)
-    "jsonextract", "jsonextractkeysandvalues", "jsonextractkeys",
-    "jsonkey",
-    "jsonextractuint", "jsontype", "json_value", "json_query",
-    "json_exists", "isvalidjson", "makedate32", "makedatetime64",
-    "yyyymmddhhmmsstodatetime", "fromunixtimestamp64nano",
-    "tounixtimestamp64nano", "siphash128", "metrohash64", "wyhash64",
-    "xxh3", "xxhash64", "farmfingerprint64", "urlhash", "javahash",
-    "hivehash", "gccmurmurhash", "kafkamurmurhash", "encrypt", "decrypt",
-    "trydecrypt", "ngramdistance", "ngramsearch",
-    "ngramdistancecaseinsensitive", "ngramsearchcaseinsensitive",
-    "extracttextfromhtml", "initcaputf8",
-    "todateordefault", "todatetimeordefault", "toint8ordefault",
-    "toint16ordefault", "toint32ordefault", "toint64ordefault",
-    "touint32ordefault", "touint64ordefault", "tofloat32ordefault",
-    "tofloat64ordefault", "todecimal64ordefault",
+    "jsonextract", "jsonextractkeysandvalues", "jsonextractkeys", "jsonkey",
+    "jsonextractuint", "jsontype", "makedate32", "makedatetime64",
+    "siphash128", "metrohash64", "wyhash64", "xxh3", "xxhash64",
+    "farmfingerprint64", "urlhash", "javahash", "hivehash", "gccmurmurhash",
+    "kafkamurmurhash", "encrypt", "decrypt", "trydecrypt", "ngramdistance",
+    "ngramsearch", "ngramdistancecaseinsensitive",
+    "ngramsearchcaseinsensitive",
     # r7 sixth probe batch (guided errors)
-    "arrayreduceinranges", "joinget", "joingetornull",
-    "catboostevaluate", "modelevaluate",
-    "aes_encrypt_mysql", "aes_decrypt_mysql", "reinterpret",
-    "reinterpretasuint8", "reinterpretasuint16", "reinterpretasuint32",
-    "reinterpretasuint64", "reinterpretasint8", "reinterpretasint16",
-    "reinterpretasint32", "reinterpretasint64", "reinterpretasfloat32",
-    "reinterpretasfloat64", "reinterpretasstring", "reinterpretasdate",
-    "reinterpretasdatetime", "reinterpretasuuid",
-    "multifuzzymatchany", "multifuzzymatchanyindex",
-    "multifuzzymatchallindices",
+    "arrayreduceinranges", "reinterpret", "reinterpretasuint8",
+    "reinterpretasuint16", "reinterpretasuint32", "reinterpretasuint64",
+    "reinterpretasint8", "reinterpretasint16", "reinterpretasint32",
+    "reinterpretasint64", "reinterpretasfloat32", "reinterpretasfloat64",
+    "reinterpretasstring", "reinterpretasdate", "reinterpretasdatetime",
+    "reinterpretasuuid",
     # r7 fifth probe batch (mapped)
     "sumdistinct", "avgdistinct", "mindistinct", "maxdistinct",
-    "anylastsimplestate", "groupbitorsimplestate",
-    "groupbitandsimplestate", "groupbitxorsimplestate",
+    "anylastsimplestate", "groupbitorsimplestate", "groupbitandsimplestate",
+    "groupbitxorsimplestate",
     # r10: truthiness-aware conditional routing (if/countif are safe to
     # function-scan; chAnd/chOr/chNot are the _rewrite_bool_fn_calls
     # internal names for the and()/or()/not() function spellings)
-    "if", "countif", "chand", "chor", "chnot",
-    "countdigits", "isdecimaloverflow",
-    "hastokenornull", "multisearchallpositionscaseinsensitive",
-    "trybase64urldecode", "isvalidascii", "decodexmlcomponent",
-    "identity", "shardnum", "shardcount", "throwif",
-    "mysql", "postgresql", "mongodb", "redis", "sqlite", "odbc", "jdbc",
-    "iceberg", "deltalake", "deltalakelocal", "hudi",
-    "input", "executable", "executablepool", "loop", "fuzzquery",
-    "viewexplain",
-    "fuzzjson", "viewifpermitted", "timeseriesdata", "timeseriestags",
-    "timeseriesmetrics", "currentschemas", "currentcatalogs",
-    "replicate",
-    "summappedarrays", "minmappedarrays", "maxmappedarrays",
-    "uniqexactif",
-    "sumsimplestate", "minsimplestate", "maxsimplestate",
-    "avgsimplestate", "anysimplestate", "countsimplestate",
-    "tointerval", "timestampadd", "timestampsub", "torelativeyearnum",
-    "torelativequarternum", "torelativeweeknum", "torelativeminutenum",
-    "torelativesecondnum", "bitmasktolist", "bitmasktoarray",
-    "bitpositionstoarray", "tolowcardinality", "visiblewidth",
-    "tocolumntypename", "lpnorm", "linfnorm", "l2squarednorm",
-    "l1normalize", "linfnormalize", "lpdistance",
+    "if", "countif", "chand", "chor", "chnot", "hastokenornull",
+    "multisearchallpositionscaseinsensitive", "trybase64urldecode",
+    "decodexmlcomponent", "throwif", "summappedarrays", "minmappedarrays",
+    "maxmappedarrays", "uniqexactif", "sumsimplestate", "minsimplestate",
+    "maxsimplestate", "avgsimplestate", "anysimplestate", "countsimplestate",
+    "tointerval", "timestampadd", "timestampsub", "bitmasktolist",
+    "bitmasktoarray", "bitpositionstoarray", "tocolumntypename", "lpnorm",
+    "l2squarednorm", "l1normalize", "linfnormalize", "lpdistance",
     "normalizel1", "normalizel2", "normalizelinf",
-    "positioncaseinsensitiveutf8",
-    "countsubstringscaseinsensitive", "startswithutf8", "endswithutf8",
-    "touuidornull", "touuidorzero", "totime64",
+    "countsubstringscaseinsensitive", "touuidornull", "touuidorzero",
+    "totime64",
     # r7 fifth probe batch (guided errors)
-    "initializeaggregation", "finalizeaggregation", "runningconcurrency",
-    "getsizeofenumtype", "dumpcolumnstructure",
-    "defaultvalueofargumenttype", "lowcardinalitykeys",
-    "lowcardinalityindices", "tuplehammingdistance",
-    "arraylevenshteindistance", "arraylevenshteindistanceweighted",
-    "uuidnumtostring", "uuidstringtonum", "uuidv7tonum", "uuidtonum",
-    "serverversion",
+    "initializeaggregation", "finalizeaggregation", "tuplehammingdistance",
     # r7 second probe batch: tuples + aggregate combinators
-    "untuple", "arraypartialreversesort",
-    "sumforeach", "minforeach", "maxforeach", "countforeach", "avgforeach",
-    "grouparrayforeach", "uniqforeach", "anyforeach", "argmaxforeach",
-    "sumordefault", "avgordefault", "countordefault", "uniqordefault",
-    "uniqexactordefault", "maxordefault", "minordefault", "anyordefault",
-    "anylastordefault", "argmaxordefault",
-    "sumornull", "minornull", "maxornull", "avgornull", "anyornull",
-    "countornull", "uniqornull", "uniqexactornull",
+    "untuple", "arraypartialreversesort", "sumforeach", "minforeach",
+    "maxforeach", "countforeach", "avgforeach", "grouparrayforeach",
+    "uniqforeach", "anyforeach", "argmaxforeach", "countordefault",
+    "maxordefault", "minordefault", "anyordefault", "anylastordefault",
+    "argmaxordefault", "sumornull", "minornull", "maxornull", "avgornull",
+    "countornull",
     # r7 probe batch: guided-error spellings
-    "uptime", "sleep", "sleepeachrow", "formatrow", "formatrownonewline",
-    "generateulid", "normalizequery", "normalizedqueryhash", "stem",
-    "lemmatize", "synonyms", "detectlanguage", "detectlanguagemixed",
-    "detectlanguageunknown", "detecttonality", "detectprogramminglanguage",
-    "erf", "erfc", "lgamma",
-    "tgamma", "emptyarraytosingle", "addtupleofintervals",
-    "subtracttupleofintervals", "proportionsztest", "wordshingleminhash",
-    "wordshinglesimhash", "formatreadabletimedelta",
-    "isnotdistinctfrom", "byteslice", "detectcharset",
-    "tostringcuttozero", "keccak256", "ripemd160", "blake3",
-    "base32encode", "base32decode", "sqidencode", "sqiddecode",
-    "obfuscatequeries", "kql", "prql", "tobfloat16",
-    "icebergtruncate", "crc32ieee", "crc64", "siphash64keyed",
-    "siphash128keyed", "siphash128reference", "siphash128referencekeyed",
-    "stringtoh3",
-    "ngramminhash", "ngramsimhash", "jsonextractkeysandvaluesraw",
-} | set(_CMP_FN_OPS) | {f"{b}if" for b in _IF_AGG_BASES} | {
-    "uniqexactif", "medianif", "argmaxif", "argminif", "anylastif",
-    "avgweighted",
-    "tostartoffiveminute", "tostartoffiveminutes", "tostartoftenminutes",
-    "tostartoffifteenminutes",
+    "emptyarraytosingle", "byteslice", "siphash128keyed",
+    "siphash128reference", "siphash128referencekeyed", "stringtoh3",
+    "medianif", "argmaxif", "argminif", "anylastif", "tostartoffiveminute",
+    "tostartoffiveminutes", "tostartoftenminutes", "tostartoffifteenminutes",
     # r4 spelling pack
-    "bitand", "bitor", "bitxor", "bitnot", "bitshiftleft", "bitshiftright",
-    "positioncaseinsensitive", "countsubstrings", "multisearchany",
-    "hastoken", "hasall", "extractall", "splitbystring",
-    "splitbywhitespace", "domain", "protocol", "path", "querystring",
-    "fragment", "extracturlparameter", "tostartofquarter", "tostartofyear",
-    "tostartofminute", "todayofweek", "monthname", "timeslot",
+    "bitand", "bitor", "bitxor", "countsubstrings", "hastoken", "extractall",
+    "domain", "protocol", "path", "querystring", "fragment",
     "tostartofinterval", "formatdatetime", "touint8", "touint16",
-    "base64decode",
-    "todecimal32", "todecimal64", "todecimal128",
-    "todate32", "todatetime64", "isnull", "isnotnull", "isfinite",
-    "isinfinite", "ifnotfinite", "intdivorzero", "moduloorzero", "range",
-    "sign", "clamp",
-    "arraypushback", "arraypushfront", "arraypopback", "arraypopfront",
-    # vector distance family
+    "todecimal32", "todecimal64", "todecimal128", "range",
     # r5 spelling batch
-    "arrayreversesort", "arrayproduct", "countequal", "arrayresize",
-    "tuple", "tupleelement", "parsedatetimebesteffort",
-    "parsedatetimebesteffortornull", "retention",
+    "arrayreversesort", "arrayproduct", "arrayresize", "tuple", "tupleelement",
+    "parsedatetimebesteffort", "parsedatetimebesteffortornull", "retention",
     "parsedatetime32besteffort", "parsedatetime64besteffort",
-    "parsedatetime32besteffortornull",
-    "parsedatetime64besteffortornull", "parsedatetimebesteffortus",
-    "parsedatetimebesteffortusornull", "formatdatetimeinjodasyntax",
-    "parsedatetimeinjodasyntax", "parsedatetimeinjodasyntaxornull",
-    "parsetimedelta", "extractkeyvaluepairs",
-    "sumstate", "minstate", "maxstate", "anylaststate", "anystate",
-    "anymerge", "anylastmerge",
-    "argmaxstate", "argminstate", "argmaxmerge", "argminmerge",
-    "groupuniqarrayarray", "summerge",
-    "minmerge", "maxmerge", "countstate", "countmerge", "avgstate",
-    "avgmerge", "uniqexactstate", "uniqexactmerge", "uniqstate",
-    "uniqmerge",
-    "tounixtimestamp64milli", "tounixtimestamp64micro",
-    "fromunixtimestamp64milli", "fromunixtimestamp64micro", "timezone",
-    "servertimezone", "generateuuidv4", "rand", "rand32", "rand64",
-    "sumcount", "sumkahan", "arrayfold", "arrayreduce", "neighbor",
-    "runningdifference", "runningaccumulate", "rownumberinallblocks",
-    "arrayshuffle",
-    "tointervalday", "tointervalhour", "tointervalminute",
-    "tointervalsecond", "tointervalmonth", "tointervalyear", "bittest",
-    "exp2", "exp10", "intexp2", "intexp10", "toint128", "touint128",
-    "toint256", "touint256", "accuratecast", "accuratecastornull",
-    "notlike",
+    "parsedatetime32besteffortornull", "parsedatetime64besteffortornull",
+    "parsedatetimebesteffortus", "parsedatetimebesteffortusornull",
+    "parsetimedelta", "extractkeyvaluepairs", "sumstate", "minstate",
+    "maxstate", "anylaststate", "anystate", "anymerge", "anylastmerge",
+    "argmaxstate", "argminstate", "argmaxmerge", "argminmerge", "summerge",
+    "minmerge", "maxmerge", "countstate", "arrayfold", "arrayreduce",
+    "neighbor", "runningdifference", "runningaccumulate",
+    "rownumberinallblocks", "tointervalday", "tointervalhour",
+    "tointervalminute", "tointervalsecond", "tointervalmonth",
+    "tointervalyear", "accuratecast", "accuratecastornull",
     # external dictionary lookups
-    "dictget", "dictgetordefault", "dicthas", "dictgetstring",
-    "dictgetint8", "dictgetint16", "dictgetint32", "dictgetint64",
-    "dictgetuint8", "dictgetuint16", "dictgetuint32", "dictgetuint64",
-    "dictgetfloat32", "dictgetfloat64", "dictgetdate", "dictgetdatetime",
+    "dictget", "dictgetordefault", "dicthas", "dictgetstring", "dictgetint8",
+    "dictgetint16", "dictgetint32", "dictgetint64", "dictgetuint8",
+    "dictgetuint16", "dictgetuint32", "dictgetuint64", "dictgetfloat32",
+    "dictgetfloat64", "dictgetdate", "dictgetdatetime",
     # vector distance family
     "dotproduct", "scalarproduct", "l2squareddistance", "l2distance",
-    "l1distance", "linfdistance", "cosinedistance", "l2norm", "l1norm",
-    "l2normalize", "greatcircledistance",
-    # -Array aggregate combinators
-    "sumarray", "countarray", "avgarray", "uniqarray", "uniqexactarray",
-    "maxarray", "minarray",
+    "cosinedistance", "l2norm", "l2normalize", "greatcircledistance",
     # array transforms
     "arraydifference", "arraycumsum", "arraycompact",
     # date arithmetic spellings
-    "age", "dateadd", "datesub", "tomonday", "now64",
+    "age", "dateadd", "datesub", "now64",
     # r10 runtime battery: names that previously passed through to
     # UNRESOLVED_ROUTINE
-    "totimewithfixeddate", "timezoneoffset", "macstringtooui",
-    "touuidordefault", "mapcontainsvalue", "sparsegrams",
-    "addnanoseconds", "subtractnanoseconds",
+    "timezoneoffset", "touuidordefault",
+} | set(_REFUSALS) | set(_CMP_FN_OPS) | {
+    f"{b}if" for b in _IF_AGG_BASES
 } | {
     f"{p}{u}" for p in ("add", "subtract")
     for u in ("seconds", "minutes", "hours", "days", "weeks", "months",

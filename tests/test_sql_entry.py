@@ -1714,6 +1714,7 @@ def test_chsql_r7_third_probe_batch(spark):
         ("arrayNormalizedGini([1],[1])", "arrayAUC"),
         ("mapSort((k,v) -> v, m)", "map_entries"),
         ("bitSlice('a', 1, 4)", "bitTest"),
+        ("splitByChar(',')", "splitByChar"),
     ]:
         with _pytest.raises(ValueError, match=hint.replace("(", "\\(")):
             translate(f"SELECT {bad} FROM t")
@@ -3100,7 +3101,10 @@ def test_chsql_r9_probe_batch4_misc(spark):
     assert one("byteSlice('hello', 2)") == "ello"
     for bad in ("detectCharset('abc')", "ngramMinHash('abc')",
                 "ngramSimHash('abc')",
-                "JSONExtractKeysAndValuesRaw('{}')"):
+                "JSONExtractKeysAndValuesRaw('{}')",
+                "ngramMinHashCaseInsensitive('abc')",
+                "ngramSimHashUTF8('abc')", "wordShingleMinHashUTF8('abc')",
+                "wordShingleSimHashUTF8('abc')"):
         with _pytest.raises(ValueError):
             translate(f"SELECT {bad}")
 
@@ -3160,7 +3164,8 @@ def test_chsql_r9_probe_batch5(spark):
                 "base32Encode('a')", "base32Decode('a')",
                 "obfuscateQueries('q')", "kql('x')", "toBFloat16(1.0)",
                 "icebergTruncate(3, 'ab')", "stringToH3('x')",
-                "sqidEncode(1)"):
+                "sqidEncode(1)", "h3ToString(1)", "geoToS2(0.0, 0.0)",
+                "s2ToGeo(1)"):
         with _pytest.raises(ValueError):
             translate(f"SELECT {bad}")
 
