@@ -98,10 +98,6 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: table(spark, sf_dir, name) for name in TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register all fixture tables as temp views for the spark.sql entry path.
 

@@ -50,6 +50,11 @@ def latest_per_key(
     )
 
 
+def merge_base(state: DataFrame | None, batch: DataFrame) -> DataFrame:
+    """The rows a merge folds: the batch alone before any state exists."""
+    return batch if state is None else state.unionByName(batch)
+
+
 def collapse_signs(
     signs: DataFrame,
     pk: str = PK,
@@ -260,6 +265,7 @@ def cdc_route(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 __all__ = [
     "latest_per_key",
+    "merge_base",
     "collapse_signs",
     "apply_replacing",
     "cdc_apply_replacing",

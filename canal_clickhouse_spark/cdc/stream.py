@@ -16,15 +16,14 @@ what makes the at-least-once transport safe.
 from __future__ import annotations
 
 import os
-import re
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import parts
 from ..catalog import table
 from ..registry import query
-from .apply import latest_per_key
+from .apply import latest_per_key, merge_base
 from .changes import FINAL_STATE_SQL, ORDER_COLS, PK, change_log
 
 
@@ -36,8 +35,7 @@ def merge_versioned(state: DataFrame | None, batch: DataFrame, pk: str = PK) -> 
     shuffled on the PK — at 100 TB both sides would be bucketed on the PK so
     the merge is shuffle-free.
     """
-    both = batch if state is None else state.unionByName(batch)
-    return latest_per_key(both, pk)
+    return latest_per_key(merge_base(state, batch), pk)
 
 
 def read_final_state(state: DataFrame) -> DataFrame:
@@ -81,23 +79,11 @@ def cdc_schema_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     evolution: the merged schema carries the new column, pre-DDL rows read
     NULL — exactly ClickHouse's ALTER ... ADD COLUMN default-fill behavior.
     """
-    base = f"/tmp/ccs_evolve_{os.path.basename(os.path.normpath(sf_dir))}"
-    shutil.rmtree(base, ignore_errors=True)
+    base = parts.scratch_dir(sf_dir, "evolve")
     o = table(spark, sf_dir, "orders").select(*ORDER_COLS)
     o.write.mode("overwrite").parquet(base)
     o.withColumn("o_channel", F.lit("web")).write.mode("append").parquet(base)
     return spark.read.option("mergeSchema", "true").parquet(base)
-
-
-def _latest_state_dir(state_root: str, before_batch: int) -> str | None:
-    if not os.path.isdir(state_root):
-        return None
-    best = -1
-    for name in os.listdir(state_root):
-        m = re.fullmatch(r"b(\d+)", name)
-        if m and int(m.group(1)) < before_batch:
-            best = max(best, int(m.group(1)))
-    return os.path.join(state_root, f"b{best}") if best >= 0 else None
 
 
 @query("cdc_checkpoint_resume", oracle=FINAL_STATE_SQL)
@@ -114,8 +100,7 @@ def cdc_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     unchanged. The returned final state hash-matches the batch oracle —
     stream/batch equivalence end-to-end.
     """
-    base = f"/tmp/ccs_ckpt_{os.path.basename(os.path.normpath(sf_dir))}"
-    shutil.rmtree(base, ignore_errors=True)
+    base = parts.scratch_dir(sf_dir, "ckpt")
     src, ckpt, state_root = f"{base}/src", f"{base}/ckpt", f"{base}/state"
     changes = change_log(spark, sf_dir)
     for v in (0, 1, 2):
@@ -124,9 +109,7 @@ def cdc_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).parquet(src)
 
     def apply_batch(bdf: DataFrame, batch_id: int) -> None:
-        sess = bdf.sparkSession
-        prev_dir = _latest_state_dir(state_root, batch_id)
-        prev = sess.read.parquet(prev_dir) if prev_dir else None
+        prev = parts.read_latest(bdf.sparkSession, state_root, "b", below=batch_id)
         merged = merge_versioned(prev, bdf)
         merged.write.mode("overwrite").parquet(os.path.join(state_root, f"b{batch_id}"))
 
@@ -145,10 +128,10 @@ def cdc_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.awaitTermination()
 
     run_once()
-    n_after_first = len(os.listdir(state_root))
+    first_run = parts.latest(spark, state_root, "b")
     run_once()  # resume from checkpoint: no new files -> no new batches
-    assert len(os.listdir(state_root)) == n_after_first, "resume replayed batches"
+    assert parts.latest(spark, state_root, "b") == first_run, "resume replayed batches"
 
-    final_dir = _latest_state_dir(state_root, before_batch=1 << 30)
-    assert final_dir is not None
-    return read_final_state(spark.read.parquet(final_dir)).select(*ORDER_COLS)
+    final = parts.read_latest(spark, state_root, "b")
+    assert final is not None
+    return read_final_state(final).select(*ORDER_COLS)

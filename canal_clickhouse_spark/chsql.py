@@ -334,13 +334,6 @@ def _lit_match(regex: re.Pattern, q: str, pos: int = 0) -> _OrigMatch | None:
     return _OrigMatch(m, q) if m else None
 
 
-def _lit_finditer(regex: re.Pattern, q: str):
-    """`regex.finditer` on the literal-masked text (one mask pass)."""
-    orig = q
-    for m in regex.finditer(_mask_literals(q)):
-        yield _OrigMatch(m, orig)
-
-
 def _clip_unbalanced(masked: str, start: int, end: int) -> int:
     """First position in [start, end) where a ``)`` closes a paren opened
     BEFORE start — i.e. where a lazy clause capture ran out of its enclosing
@@ -1299,10 +1292,6 @@ def _vec_l2sq(a: str, b: str) -> str:
     )
 
 
-_BOOLISH_RE = re.compile(
-    r"(?i)(?:[<>=!]|\bLIKE\b|\bILIKE\b|\bIN\b|\bIS\b|\bAND\b|\bOR\b"
-    r"|\bNOT\b|\bBETWEEN\b|\bRLIKE\b|\bEXISTS\b)"
-)
 _LEAF_BOOLISH_RE = re.compile(
     r"(?i)(?:[<>=!]|\bLIKE\b|\bILIKE\b|\bRLIKE\b|\bIN\b|\bIS\b"
     r"|\bBETWEEN\b|\bEXISTS\b|\bTRUE\b|\bFALSE\b)"

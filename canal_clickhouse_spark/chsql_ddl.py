@@ -47,6 +47,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F  # noqa: F401  (re-exported for users)
 
+from . import parts
 from .catalog import forget_view, register_views
 from .chsql import translate
 from .registry import query
@@ -293,12 +294,6 @@ def spark_type_to_ch(spark_type: str) -> str:
 # from `SHOW CREATE TABLE` dumps carry CODEC/column-TTL/COMMENT after the
 # type). Keywords recognized at paren/quote depth 0 only, so a DEFAULT
 # expression like `concat('TTL ', x)` can never be split on its literal.
-_COL_DECO_KEYWORDS = (
-    "default", "materialized", "alias", "codec", "ttl", "comment",
-    "ephemeral",
-)
-
-
 def parse_col_def(item: str) -> tuple[str, str, str | None, str, bool]:
     """One CREATE TABLE column item →
     ``(name, spark_type, default_expr, ch_type, is_ephemeral)``.
@@ -1540,7 +1535,6 @@ class ChSession:
         parts). Generation dirs are named by a session-global sequence so
         RENAME/EXCHANGE never collide with a prior tenant of the name."""
         import os
-        import shutil
 
         self._gseq += 1
         path = os.path.join(self.parts_dir, f"{name}_g{self._gseq:06d}")
@@ -1549,7 +1543,7 @@ class ChSession:
         self._store[name] = path
         self._point_at(name, self.spark.read.parquet(path))
         if old:
-            shutil.rmtree(old, ignore_errors=True)
+            parts.delete(self.spark, old)
 
     def _append_part(self, name: str, block: DataFrame) -> None:
         """Parts mode: one INSERT block = new parquet part files appended
@@ -1562,28 +1556,16 @@ class ChSession:
         untouched while the write job's scan of it runs — which is the
         same guarantee the previous eager ``localCheckpoint`` bought, minus
         one full materialization job per INSERT and minus holding the
-        block in executor storage. Part-file names carry a per-job UUID,
-        so moves can't collide with existing parts."""
-        import os
-        import shutil
-
+        block in executor storage."""
         path = self._store[name]
         self._gseq += 1
-        staging = f"{path}_stage{self._gseq:06d}"
-        block.write.mode("overwrite").parquet(staging)
-        for f in os.listdir(staging):
-            # move data files only; _SUCCESS & friends stay behind
-            if not f.startswith(("_", ".")):
-                os.rename(os.path.join(staging, f), os.path.join(path, f))
-        shutil.rmtree(staging, ignore_errors=True)
+        parts.append(self.spark, block, path, f"{path}_stage{self._gseq:06d}")
         self._point_at(name, self.spark.read.parquet(path))
 
     def _drop_storage(self, name: str) -> None:
-        import shutil
-
         old = self._store.pop(name, None)
         if old:
-            shutil.rmtree(old, ignore_errors=True)
+            parts.delete(self.spark, old)
 
     def _retarget_dicts(self, renames: dict[str, str | None]) -> None:
         """Keep session-created dictionary bindings coherent with catalog
@@ -2425,7 +2407,7 @@ class ChSession:
                 gen = self._store.get(n)
                 if gen:
                     files = sorted(
-                        f for f in os.listdir(gen) if f.endswith(".parquet")
+                        f.rsplit("/", 1)[-1] for f in self.tables[n].inputFiles()
                     )
                     for f in files:
                         rows.append((

@@ -35,8 +35,6 @@ from pyspark.sql import functions as F
 from ..catalog import table
 from ..registry import query
 
-_BY_USER = "PARTITION BY user_id"
-
 
 @query(
     "funnel_window",

@@ -13,12 +13,13 @@ contract on Spark:
     q = pipe.stream(kafka_source(...))         # continuous tail, checkpointed
     pipe.read_table("shop", "orders")          # FINAL-semantics current state
 
-State layout (MergeTree-part analog): each apply writes a new immutable
-versioned snapshot directory ``state_root/db.table/v{n}`` and readers always
-see the latest complete one — no in-place overwrite, so a crashed write never
-corrupts the readable state, and a replayed micro-batch (at-least-once
-transport) just rewrites the same content (version-resolved merge is
-idempotent — property-tested in tests/test_cdc.py).
+State layout (MergeTree-part analog, kept by ``parts.py``): each apply
+writes a new immutable versioned snapshot directory
+``state_root/db.table/v{n}`` and readers always see the latest committed one
+— no in-place overwrite, so a crashed write never corrupts the readable
+state, and a replayed micro-batch (at-least-once transport) just rewrites the
+same content (version-resolved merge is idempotent — property-tested in
+tests/test_cdc.py).
 
 Scale: the merge is one hash aggregation shuffled on the PK per batch; at
 100 TB the state table and the incoming batch would both be bucketed by PK
@@ -29,15 +30,15 @@ partitioned by PK range.
 from __future__ import annotations
 
 import os
-import re
-import shutil
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .cdc.apply import collapse_signs, latest_per_key
+from . import parts
+from .cdc.apply import collapse_signs, merge_base
 from .cdc.envelope import parse_envelope
+from .cdc.stream import merge_versioned
 
 
 @dataclass(frozen=True)
@@ -86,32 +87,17 @@ class CdcPipeline:
         return os.path.join(self.state_root, rule.qualified)
 
     def _latest_version(self, rule: TableSync) -> int:
-        d = self._table_dir(rule)
-        if not os.path.isdir(d):
-            return -1
-        versions = [
-            int(m.group(1))
-            for name in os.listdir(d)
-            if (m := re.fullmatch(r"v(\d+)", name))
-            and os.path.exists(os.path.join(d, name, "_SUCCESS"))
-        ]
-        return max(versions, default=-1)
+        return parts.latest(self.spark, self._table_dir(rule), "v")
 
     def _state(self, rule: TableSync) -> DataFrame | None:
-        v = self._latest_version(rule)
-        if v < 0:
-            return None
-        return self.spark.read.parquet(os.path.join(self._table_dir(rule), f"v{v}"))
+        return parts.read_latest(self.spark, self._table_dir(rule), "v")
 
     def _write_snapshot(self, rule: TableSync, df: DataFrame) -> None:
         v = self._latest_version(rule) + 1
-        out = os.path.join(self._table_dir(rule), f"v{v}")
-        df.write.mode("overwrite").parquet(out)
+        df.write.mode("overwrite").parquet(os.path.join(self._table_dir(rule), f"v{v}"))
         # Retire superseded snapshots (keep one predecessor for readers
         # mid-scan — the MergeTree inactive-part grace analog).
-        for name in os.listdir(self._table_dir(rule)):
-            if (m := re.fullmatch(r"v(\d+)", name)) and int(m.group(1)) < v - 1:
-                shutil.rmtree(os.path.join(self._table_dir(rule), name), ignore_errors=True)
+        parts.retire(self.spark, self._table_dir(rule), "v", below=v - 1)
 
     # -- apply paths ----------------------------------------------------------
 
@@ -141,7 +127,7 @@ class CdcPipeline:
                 F.unix_millis("event_time").alias("version"),
             )
             if rule.mode == "replacing":
-                merged = latest_per_key(merge_base(self._state(rule), batch), rule.pk)
+                merged = merge_versioned(self._state(rule), batch, rule.pk)
             else:
                 merged = self._merge_collapsing(rule, batch)
             self._write_snapshot(rule, merged)
@@ -213,7 +199,3 @@ class CdcPipeline:
         if rule.mode == "replacing":
             return state.filter(F.col("op") != "DELETE").drop("op", "version")
         return state.filter(F.col("sign") == 1).drop("sign", "version")
-
-
-def merge_base(state: DataFrame | None, batch: DataFrame) -> DataFrame:
-    return batch if state is None else state.unionByName(batch)

@@ -7,21 +7,13 @@ returning.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import parts
 from ..catalog import table
 from ..registry import query
 from .clickhouse import ClickHouseSink
-
-
-def _stage_dir(sf_dir: str, tag: str) -> str:
-    base = f"/tmp/ccs_sink_{tag}_{os.path.basename(os.path.normpath(sf_dir))}"
-    shutil.rmtree(base, ignore_errors=True)
-    return base
 
 
 @query(
@@ -39,7 +31,7 @@ def sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     time-range scans (the §4 min/max-skipping convention). Reading back a
     single partition directory proves partition pruning works on layout.
     """
-    path = _stage_dir(sf_dir, "parquet")
+    path = parts.scratch_dir(sf_dir, "sink_parquet")
     ev = table(spark, sf_dir, "events")
     (
         ev.repartition("event_type")
@@ -70,7 +62,7 @@ def sink_clickhouse(spark: SparkSession, sf_dir: str) -> DataFrame:
     source proves the idempotency contract — the exact property a Canal→CH
     consumer relies on [P-canal].
     """
-    root = _stage_dir(sf_dir, "ch")
+    root = parts.scratch_dir(sf_dir, "sink_ch")
     sink = ClickHouseSink(root, "orders")
     orders = table(spark, sf_dir, "orders")
     for b in range(3):
@@ -127,7 +119,7 @@ def scan_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries the event_type predicate and the non-partition filters stay
     pushed), not just timed.
     """
-    path = _stage_dir(sf_dir, "prune")
+    path = parts.scratch_dir(sf_dir, "sink_prune")
     ev = table(spark, sf_dir, "events")
     (
         ev.repartition("event_type")

@@ -19,12 +19,12 @@ That split keeps every line of orchestration code tested and leaves only
 from __future__ import annotations
 
 import os
-import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import parts
 from .catalog import table
 from .cdc.envelope import ORDERS_MAPPING, build_envelope, parse_envelope
 from .registry import query
@@ -59,12 +59,6 @@ def scan_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _stage_dir(sf_dir: str, tag: str) -> str:
-    base = f"/tmp/ccs_src_{tag}_{os.path.basename(os.path.normpath(sf_dir))}"
-    shutil.rmtree(base, ignore_errors=True)
-    return base
-
-
 @query(
     "scan_csv",
     oracle="SELECT n_nationkey, n_name, n_regionkey FROM nation",
@@ -76,7 +70,7 @@ def scan_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     inference), hash-check against the parquet original — proving the
     text-format codec preserves types exactly.
     """
-    path = _stage_dir(sf_dir, "csv")
+    path = parts.scratch_dir(sf_dir, "src_csv")
     nation = table(spark, sf_dir, "nation")
     nation.write.mode("overwrite").option("header", "true").csv(path)
     return spark.read.schema(
@@ -93,7 +87,7 @@ def scan_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def scan_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON-lines round-trip with explicit schema (FlatMessage-dump analog)."""
-    path = _stage_dir(sf_dir, "jsonl")
+    path = parts.scratch_dir(sf_dir, "src_jsonl")
     orders = table(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 7 == 0)
     orders.select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice").write.mode(
         "overwrite"
@@ -201,7 +195,7 @@ def source_kafka(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode, cast via mapping — is byte-for-byte what the live
     `kafka_source` plan runs after `.load()`.
     """
-    path = _stage_dir(sf_dir, "kafka")
+    path = parts.scratch_dir(sf_dir, "src_kafka")
     orders = table(spark, sf_dir, "orders")
     msgs = build_envelope(
         orders,
@@ -293,7 +287,7 @@ def scan_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     format layer; Spark's reader is vectorized the same way). Hash-checked
     against the parquet original to prove codec/type fidelity.
     """
-    path = _stage_dir(sf_dir, "orc")
+    path = parts.scratch_dir(sf_dir, "src_orc")
     sup = table(spark, sf_dir, "supplier")
     sup.write.mode("overwrite").orc(path)
     return spark.read.schema(
@@ -321,7 +315,7 @@ def scan_binaryfile(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallelizes across executors, `pathGlobFilter`/partitioned directories
     prune, and content stays opaque binary end-to-end.
     """
-    staged = _stage_dir(sf_dir, "binfile")
+    staged = parts.scratch_dir(sf_dir, "src_binfile")
     docs = table(spark, sf_dir, "documents").filter(F.col("doc_id") < 40)
     os.makedirs(staged, exist_ok=True)
 

@@ -17,11 +17,11 @@ from __future__ import annotations
 
 import itertools
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import parts
 from ..catalog import fix_events_ts, table
 from ..registry import query
 
@@ -52,12 +52,6 @@ def run_to_memory(sdf: DataFrame, output_mode: str = "append") -> DataFrame:
     )
     q.awaitTermination()
     return sdf.sparkSession.table(name)
-
-
-def _staged_dir(sf_dir: str, tag: str) -> str:
-    base = f"/tmp/ccs_{tag}_{os.path.basename(os.path.normpath(sf_dir))}"
-    shutil.rmtree(base, ignore_errors=True)
-    return base
 
 
 def _all_files(root: str) -> set[str]:
@@ -136,9 +130,9 @@ def stream_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     separate ``availableNow`` runs (not maxFilesPerTrigger) guarantee a real
     watermark barrier between the arrivals.
     """
-    src = _staged_dir(sf_dir, "late")
-    out = _staged_dir(sf_dir, "late_out")
-    chk = _staged_dir(sf_dir, "late_chk")
+    src = parts.scratch_dir(sf_dir, "late")
+    out = parts.scratch_dir(sf_dir, "late_out")
+    chk = parts.scratch_dir(sf_dir, "late_chk")
     ev = table(spark, sf_dir, "events")
     split = F.lit("2024-01-21 00:00:00").cast("timestamp")
     late = ev.filter(F.col("ts") >= split).withColumn(
@@ -187,7 +181,7 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output is exactly one row per event — engine-order-independent, so it
     oracle-checks.
     """
-    src = _staged_dir(sf_dir, "dedup")
+    src = parts.scratch_dir(sf_dir, "dedup")
     ev = table(spark, sf_dir, "events")
     ev.coalesce(1).write.mode("append").parquet(src)
     ev.coalesce(1).write.mode("append").parquet(src)
@@ -374,7 +368,7 @@ def stream_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract as the CDC state sink, cdc/stream.py). The driver reads back the
     last committed snapshot.
     """
-    out_root = _staged_dir(sf_dir, "febsink")
+    out_root = parts.scratch_dir(sf_dir, "febsink")
 
     def write_batch(bdf: DataFrame, batch_id: int) -> None:
         bdf.write.mode("overwrite").parquet(os.path.join(out_root, f"b{batch_id}"))
@@ -389,8 +383,9 @@ def stream_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     q.awaitTermination()
-    last = max(int(d[1:]) for d in os.listdir(out_root))
-    return spark.read.parquet(os.path.join(out_root, f"b{last}"))
+    last = parts.read_latest(spark, out_root, "b")
+    assert last is not None
+    return last
 
 
 @query(

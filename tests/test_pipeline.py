@@ -4,6 +4,7 @@ typed, version-merged state → FINAL read equals the directly-computed truth.
 
 from __future__ import annotations
 
+import os
 import shutil
 
 import pytest
@@ -57,7 +58,7 @@ def rows_set(df):
     return {tuple(r) for r in df.collect()}
 
 
-def test_batch_pipeline_end_to_end(spark, sf_dir, pipe):
+def apply_three_rounds(spark, sf_dir, pipe):
     """INSERT all → UPDATE %10 → DELETE %100, applied batch-wise."""
     pipe.apply_messages(envelopes(spark, sf_dir, "INSERT", "true"))
     pipe.apply_messages(
@@ -66,8 +67,24 @@ def test_batch_pipeline_end_to_end(spark, sf_dir, pipe):
     pipe.apply_messages(
         envelopes(spark, sf_dir, "DELETE", "o_orderkey % 100 = 0", day_offset=2)
     )
+
+
+def test_batch_pipeline_end_to_end(spark, sf_dir, pipe):
+    apply_three_rounds(spark, sf_dir, pipe)
     got = pipe.read_table("shop", "orders").select(*COLS)
     assert rows_set(got) == rows_set(expected_final(spark, sf_dir))
+
+
+def test_batch_pipeline_under_uri_state_root(spark, sf_dir, tmp_path):
+    """A ``file://`` state root: snapshots are listed, committed-checked and
+    retired through Hadoop FileSystem, so a URI root works like a path."""
+    rule = TableSync("shop", "orders", pk="o_orderkey", mapping=dict(ORDERS_MAPPING))
+    pipe = CdcPipeline(spark, [rule], (tmp_path / "state").as_uri())
+    apply_three_rounds(spark, sf_dir, pipe)
+    got = pipe.read_table("shop", "orders").select(*COLS)
+    assert rows_set(got) == rows_set(expected_final(spark, sf_dir))
+    # one retained predecessor: v1 and v2 are left, v0 is retired
+    assert sorted(os.listdir(tmp_path / "state" / "shop.orders")) == ["v1", "v2"]
 
 
 def test_batch_replay_is_idempotent(spark, sf_dir, pipe):

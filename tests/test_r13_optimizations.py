@@ -146,3 +146,32 @@ def test_parts_append_self_insert_and_no_staging_leak(spark, sf_dir, tmp_path):
     # appended parts landed as extra files in the same generation dir
     gen_dirs = [d for d in os.listdir(root) if d.startswith("t_self_g")]
     assert len(gen_dirs) == 1
+
+
+def test_parts_append_under_uri_root_and_system_parts(spark, sf_dir, tmp_path):
+    """The self-insert case with a ``file://`` parts_dir: the staged
+    append lists, moves and deletes through Hadoop FileSystem, so a URI
+    root works like a path, and system.parts names exactly the part files
+    of the current generation."""
+    from canal_clickhouse_spark.chsql_ddl import ChSession
+
+    root = tmp_path / "parts"
+    sess = ChSession(spark, sf_dir, parts_dir=root.as_uri())
+    sess.run_script(
+        """
+        CREATE TABLE t_self (k Int64) ENGINE = MergeTree ORDER BY k;
+        INSERT INTO t_self SELECT o_orderkey FROM orders LIMIT 100;
+        INSERT INTO t_self SELECT k FROM t_self;
+        """
+    )
+    out = sess.run_script("SELECT toInt64(count()) AS n FROM t_self;")
+    assert out.collect()[0].n == 200
+    assert not glob.glob(f"{root}/*_stage*"), "staging dir leaked"
+    gen_dirs = [d for d in os.listdir(root) if d.startswith("t_self_g")]
+    assert len(gen_dirs) == 1
+    files = sorted(f for f in os.listdir(root / gen_dirs[0]) if f.endswith(".parquet"))
+    assert len(files) >= 2, "the self-insert should have added a part"
+    rows = sess.execute(
+        "SELECT partition, name FROM system.parts WHERE table = 't_self'"
+    ).collect()
+    assert sorted((r.partition, r.name) for r in rows) == [(gen_dirs[0], f) for f in files]
