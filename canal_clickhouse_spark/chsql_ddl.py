@@ -847,21 +847,63 @@ def _parse_create_table_stmt(s: str):
     return d
 
 
-def _collapsing_merge_sql(sign: str, keys: str, src: str) -> str:
-    """CollapsingMergeTree's documented merge rule as one filtered
-    subquery over the insert-order shadow (shared by FINAL reads and
-    OPTIMIZE FINAL). Per sorting-key group:
+def _merge_sql(name: str, meta: dict, src: str, what: str) -> str:
+    """A MergeTree engine's merge rule as one filtered subquery
+    ``(SELECT *, … FROM src) WHERE …`` over the relation NAMED ``src`` —
+    the single definition behind read-time ``FROM t FINAL`` and
+    ``OPTIMIZE FINAL``. It stays SQL text over a relation name because MV
+    bodies store the translated text and re-run it against the re-pointed
+    source view (`ChSession._fire_mvs`). Per ORDER BY key group:
 
-    - more state than cancel rows  → keep the LAST state row;
-    - more cancel than state rows  → keep the FIRST cancel row;
-    - equal counts, last row STATE → keep the first cancel row AND the
-      last state row (r11 advice: this in-flight case was silently
-      dropped before);
-    - equal counts, last row cancel → the key collapses away.
+    - ReplacingMergeTree(v): keep the max-``v`` row. Version-less
+      Replacing keeps the last INSERTED row — ``src`` is then the
+      insert-order shadow and its generation tags are the version.
+    - VersionedCollapsingMergeTree(sign, v): per (key, v) keep one row
+      carrying the majority sign when the signs don't cancel, drop the
+      group when they do. Order-free.
+    - CollapsingMergeTree(sign), over the insert-order shadow:
+      more state than cancel rows → keep the LAST state row; more cancel
+      than state rows → keep the FIRST cancel row; equal counts whose last
+      row is a STATE → keep the first cancel AND the last state row (r11
+      advice: this in-flight case was silently dropped before); equal
+      counts whose last row is a cancel → the key collapses away.
 
-    ``_ch_d`` is the sign sum; ``_rn`` ranks the best single row for the
-    unbalanced cases; ``_ls``/``_fc`` locate the last-state/first-cancel
-    rows; ``_ch_lsgn`` is the chronologically last row's sign."""
+    ``_ch_d`` is the sign sum; ``_rn`` ranks the best single row;
+    ``_ls``/``_fc`` locate the last-state/first-cancel rows; ``_ch_lsgn``
+    is the chronologically last row's sign."""
+    engine = (meta.get("engine") or "").lower()
+    args = meta.get("engine_args") or []
+    keys = ", ".join(meta.get("order_by") or [])
+    if engine not in ("replacingmergetree", "collapsingmergetree",
+                      "versionedcollapsingmergetree"):
+        raise ValueError(
+            f"{what} on {name!r}: only Replacing/Collapsing/"
+            "VersionedCollapsing session tables support read-time"
+            f" collapse (engine {meta.get('engine')!r})"
+        )
+    if not keys:
+        raise ValueError(f"{what} on {name!r} needs an ORDER BY key")
+    if engine == "replacingmergetree":
+        ver = args[0] if args else "_ch_ins_seq DESC, _ch_ins_row"
+        return (
+            f" (SELECT *, ROW_NUMBER() OVER (PARTITION BY {keys} ORDER BY"
+            f" {ver} DESC) AS _rn FROM {src}) WHERE _rn = 1"
+        )
+    if engine == "versionedcollapsingmergetree":
+        if len(args) < 2:
+            raise ValueError(
+                f"{what} on {name!r}: VersionedCollapsingMergeTree(sign,"
+                " version) needs both engine arguments"
+            )
+        sign, ver = args[0], args[1]
+        return (
+            f" (SELECT *, ROW_NUMBER() OVER (PARTITION BY {keys}, {ver}"
+            f" ORDER BY (CASE WHEN _ch_d > 0 THEN {sign} ELSE -({sign})"
+            f" END) DESC) AS _rn FROM (SELECT *, sum({sign}) OVER"
+            f" (PARTITION BY {keys}, {ver}) AS _ch_d FROM {src}))"
+            f" WHERE _ch_d != 0 AND _rn = 1"
+        )
+    sign = (args or ["sign"])[0]
     return (
         f" (SELECT *, ROW_NUMBER() OVER (PARTITION BY {keys} ORDER BY"
         f" (CASE WHEN _ch_d > 0 THEN {sign} ELSE -({sign}) END) DESC,"
@@ -1478,26 +1520,26 @@ class ChSession:
         self.current_db: str = "default"
         self.table_db: dict[str, str] = {}
         self._pending_db: tuple[str, str] | None = None
-        # r11: version-less ReplacingMergeTree keeps CH's last-INSERTED-
-        # row-wins semantics via an implicit monotonic insert-generation
-        # counter — the insert-order shadow carries the table's rows plus
-        # a _ch_ins_seq column. Any non-INSERT rewrite of the table
-        # (mutations, TRUNCATE, re-CREATE) invalidates the shadow; FINAL
-        # then keeps the guided error, because insertion order is
-        # genuinely unrecoverable there.
-        self._iseq: dict[str, int] = {}
+        # Insert-ordered engines (version-less Replacing: last-inserted row
+        # wins; Collapsing: last state / first cancel row) keep an insert-
+        # order shadow: the table's rows tagged by `_generation`. Any
+        # non-INSERT rewrite voids it, and FINAL then raises the guided
+        # error (`_insert_shadow`) because the order is unrecoverable.
+        # `_iseq` is ONE session-wide generation counter: order is only
+        # ever compared within a table, and a global monotonic counter is
+        # monotonic per table, so it never moves with a table's name.
+        self._iseq = 0
         self._ins_shadow: dict[str, DataFrame] = {}
 
     # -- helpers ----------------------------------------------------------
 
     def _register(self, name: str, df: DataFrame) -> None:
-        self._ins_shadow.pop(name, None)  # any rewrite voids insert order
-        forget_view(self.spark, name)  # a session table now owns the name
+        """Rewrite ``name`` to ``df``; like any rewrite it voids the
+        insert order (`_point_at`)."""
         if self.parts_dir is not None:
             self._rewrite_generation(name, df)
-            return
-        self.tables[name] = df
-        df.createOrReplaceTempView(name)
+        else:
+            self._point_at(name, df)
 
     def _point_at(self, name: str, df: DataFrame) -> None:
         """Catalog-pointer update without persistence (parts mode reads)."""
@@ -1506,26 +1548,61 @@ class ChSession:
         self.tables[name] = df
         df.createOrReplaceTempView(name)
 
-    def _implicit_replacing(self, name: str) -> bool:
-        """True for session tables declared ``ENGINE = ReplacingMergeTree``
-        with NO version argument — the most common spelling in the wild
-        (r10 verdict #3): CH keeps the last-inserted row per key, so the
-        insert path maintains a monotonic generation shadow to make FINAL
-        and OPTIMIZE FINAL run where CH would."""
-        meta = self.meta.get(name) or {}
-        return (
-            (meta.get("engine") or "").lower() == "replacingmergetree"
-            and not meta.get("engine_args")
-        )
-
     def _tracks_insert_order(self, name: str) -> bool:
         """True for engines whose FINAL semantics need the insert-order
-        shadow: version-less Replacing (last-inserted row wins) and
+        shadow: version-less Replacing (``ENGINE = ReplacingMergeTree``,
+        the most common spelling in the wild — last-inserted row wins) and
         Collapsing (last state / first cancel row within a key)."""
         meta = self.meta.get(name) or {}
-        return (
-            self._implicit_replacing(name)
-            or (meta.get("engine") or "").lower() == "collapsingmergetree"
+        engine = (meta.get("engine") or "").lower()
+        return engine == "collapsingmergetree" or (
+            engine == "replacingmergetree" and not meta.get("engine_args")
+        )
+
+    def _generation(self, df: DataFrame) -> DataFrame:
+        """Tag ``df`` as the next insert generation: ``_ch_ins_seq`` from
+        the session-wide counter, ``_ch_ins_row`` the order within it."""
+        self._iseq += 1
+        return df.withColumn(
+            "_ch_ins_seq", F.lit(self._iseq).cast("long")
+        ).withColumn("_ch_ins_row", F.monotonically_increasing_id())
+
+    def _seed_insert_order(
+        self, name: str, rows: DataFrame | None = None
+    ) -> None:
+        """(Re)start an insert-ordered table's shadow as one generation of
+        ``rows`` (CREATE … AS SELECT) or empty (CREATE, clone, TRUNCATE:
+        nothing whose insert order could be lost). The empty seed is a
+        local relation, never the table's own scan: a parts-mode scan
+        would pin a generation directory that a later rewrite retires."""
+        if self._tracks_insert_order(name):
+            if rows is None:
+                rows = self.spark.createDataFrame(
+                    [], self.tables[name].schema
+                )
+            self._ins_shadow[name] = self._generation(rows)
+
+    def _insert_shadow(self, name: str, what: str) -> DataFrame:
+        """The insert-order shadow of ``name``, or the guided error once a
+        mutation rewrote the table and insertion order is lost."""
+        shadow = self._ins_shadow.get(name)
+        if shadow is not None:
+            return shadow
+        meta = self.meta[name]
+        if meta["engine"].lower() == "collapsingmergetree":
+            sign = (meta.get("engine_args") or ["sign"])[0]
+            engine = "CollapsingMergeTree"
+            hint = f"read with GROUP BY … HAVING sum({sign}) > 0 instead"
+        else:
+            engine = "ReplacingMergeTree without a version column"
+            hint = (
+                "declare ENGINE = ReplacingMergeTree(<version_col>) for an"
+                " explicit, mutation-stable version"
+            )
+        raise ValueError(
+            f"{what} on {name!r}: {engine} collapses by INSERT order, which"
+            " is unrecoverable after a mutation rewrote the table in this"
+            f" session; {hint}"
         )
 
     def _rewrite_generation(self, name: str, df: DataFrame) -> None:
@@ -2432,102 +2509,26 @@ class ChSession:
         )
 
     def _rewrite_session_final(self, s: str) -> str:
-        """``FROM <session_table> FINAL`` → read-time Replacing collapse
-        (one row per ORDER BY key, max version) as a named derived table —
-        the query-side twin of OPTIMIZE FINAL, and how CH users actually
-        read Replacing tables. Fixture tables' FINAL stays with the main
-        translator's rewrite."""
+        """``FROM <session_table> FINAL`` → the engine's merge rule
+        (`_merge_sql`) as a named derived table — the read-time twin of
+        OPTIMIZE FINAL, and how CH users actually read Replacing and
+        Collapsing tables. Insert-ordered engines collapse their shadow,
+        bound as the view ``__ch_ins_shadow_<t>``. Fixture tables' FINAL
+        stays with the main translator's rewrite."""
 
         def sub(m: re.Match) -> str:
             name = m.group(1)
             if name not in self.tables:
                 return m.group(0)  # not ours; translate() handles fixtures
-            meta = self.meta.get(name, {})
-            engine = (meta.get("engine") or "").lower()
-            if engine not in ("replacingmergetree", "collapsingmergetree",
-                              "versionedcollapsingmergetree"):
-                raise ValueError(
-                    f"FINAL on {name!r}: only Replacing/Collapsing/"
-                    "VersionedCollapsing session tables support read-time"
-                    " collapse"
-                )
-            args_ = meta.get("engine_args") or []
-            if not meta.get("order_by"):
-                raise ValueError(
-                    f"FINAL on {name!r} needs an ORDER BY key"
-                )
-            keys = ", ".join(meta["order_by"])
+            src = name
+            if self._tracks_insert_order(name):
+                src = f"__ch_ins_shadow_{name}"
+                self._insert_shadow(name, "FINAL").createOrReplaceTempView(src)
             cols = ", ".join(self.tables[name].columns)
-            if engine == "versionedcollapsingmergetree":
-                # collapse pairs with the SAME version: per (key, ver)
-                # group keep one row carrying the majority sign when the
-                # signs don't cancel (the canonical one-state-one-cancel
-                # usage), drop the group when they do. Order-free — no
-                # insert shadow needed (r11 probe: was a refusal).
-                if len(args_) < 2:
-                    raise ValueError(
-                        f"FINAL on {name!r}:"
-                        " VersionedCollapsingMergeTree(sign, version)"
-                        " needs both engine arguments"
-                    )
-                sign, ver = args_[0], args_[1]
-                return (
-                    f"FROM (SELECT {cols} FROM (SELECT *, ROW_NUMBER()"
-                    f" OVER (PARTITION BY {keys}, {ver} ORDER BY"
-                    f" (CASE WHEN _ch_d > 0 THEN {sign} ELSE -({sign}) END)"
-                    f" DESC) AS _rn FROM (SELECT *, sum({sign}) OVER"
-                    f" (PARTITION BY {keys}, {ver}) AS _ch_d FROM {name}))"
-                    f" WHERE _ch_d != 0 AND _rn = 1) {name}"
-                )
-            if engine == "collapsingmergetree":
-                # CH's merge rule needs ROW ORDER (one extra state row →
-                # keep the LAST state row; one extra cancel → the FIRST
-                # cancel row; EQUAL counts whose last row is a state row
-                # → keep the first cancel AND the last state, r11 advice
-                # — only the balanced-last-is-cancel case removes the
-                # whole key) — carried by the same insert-generation
-                # shadow the version-less Replacing path maintains
-                # (r11 probe: was a refusal).
-                sign = (args_ or ["sign"])[0]
-                shadow = self._ins_shadow.get(name)
-                if shadow is None:
-                    raise ValueError(
-                        f"FINAL on {name!r}: CollapsingMergeTree collapses"
-                        " by INSERT order, which is unrecoverable after a"
-                        " mutation/TRUNCATE rewrote the table in this"
-                        " session; read with GROUP BY"
-                        f" … HAVING sum({sign}) > 0 instead"
-                    )
-                src = f"__ch_ins_shadow_{name}"
-                shadow.createOrReplaceTempView(src)
-                return (
-                    f"FROM (SELECT {cols} FROM"
-                    + _collapsing_merge_sql(sign, keys, src)
-                    + f") {name}"
-                )
-            if args_:
-                ver, src = args_[0], name
-            else:
-                # version-less Replacing (r10 verdict #3): the implicit
-                # version is the insert-generation counter the insert
-                # path maintains — CH's own last-inserted-row-wins rule.
-                shadow = self._ins_shadow.get(name)
-                if shadow is None:
-                    raise ValueError(
-                        f"FINAL on {name!r}: ReplacingMergeTree without a"
-                        " version column collapses by INSERT order, which"
-                        " is unrecoverable after a mutation/TRUNCATE"
-                        " rewrote the table in this session; declare"
-                        " ENGINE = ReplacingMergeTree(<version_col>) for"
-                        " an explicit, mutation-stable version"
-                    )
-                ver = "_ch_ins_seq DESC, _ch_ins_row"
-                src = f"__ch_ins_shadow_{name}"
-                shadow.createOrReplaceTempView(src)
             return (
-                f"FROM (SELECT {cols} FROM (SELECT *, ROW_NUMBER() OVER ("
-                f"PARTITION BY {keys} ORDER BY {ver} DESC) AS _rn "
-                f"FROM {src}) WHERE _rn = 1) {name}"
+                f"FROM (SELECT {cols} FROM"
+                + _merge_sql(name, self.meta.get(name, {}), src, "FINAL")
+                + f") {name}"
             )
 
         return re.sub(r"(?is)\bFROM\s+(\w+)\s+FINAL\b", sub, s)
@@ -2549,6 +2550,13 @@ class ChSession:
             if mv["source"] != source:
                 continue
             block.createOrReplaceTempView(source)  # re-point at the delta
+            if self._tracks_insert_order(source):
+                # a stored `FROM source FINAL` body reads the shadow view,
+                # which must hold the delta too (every FINAL read re-binds
+                # it, so it needs no restore)
+                self._generation(block).createOrReplaceTempView(
+                    f"__ch_ins_shadow_{source}"
+                )
             try:
                 part = self.spark.sql(mv["select"])
                 tgt = mv["target"]
@@ -2935,13 +2943,7 @@ class ChSession:
                 df = self._run_select(ct["select"])
                 self._register(name, df)
                 self.meta[name] = self._table_meta(ml)
-                if self._tracks_insert_order(name):
-                    self._ins_shadow[name] = df.withColumn(
-                        "_ch_ins_seq", F.lit(1).cast("long")
-                    ).withColumn(
-                        "_ch_ins_row", F.monotonically_increasing_id()
-                    )
-                    self._iseq[name] = 1
+                self._seed_insert_order(name, df)
                 return None
             cols, defaults, nullable, extras = parse_create_body(
                 ct["cols"])
@@ -2950,14 +2952,8 @@ class ChSession:
             )
             self._register(name, empty)
             self.meta[name] = self._table_meta(ml)
-            if self._tracks_insert_order(name):
-                # seed an EMPTY generation shadow so FINAL on a fresh
-                # version-less Replacing table reads empty, not guided
-                self._ins_shadow[name] = empty.withColumn(
-                    "_ch_ins_seq", F.lit(0).cast("long")
-                ).withColumn(
-                    "_ch_ins_row", F.monotonically_increasing_id()
-                )
+            # an EMPTY shadow: FINAL on a fresh table reads empty, not guided
+            self._seed_insert_order(name)
             if defaults:
                 self.meta[name]["column_defaults"] = defaults
             if nullable:
@@ -3359,11 +3355,6 @@ class ChSession:
                 self._ins_shadow[a] = sb
             if sa is not None:
                 self._ins_shadow[b] = sa
-            qa, qb = self._iseq.pop(a, None), self._iseq.pop(b, None)
-            if qb is not None:
-                self._iseq[a] = qb
-            if qa is not None:
-                self._iseq[b] = qa
             self.tables[a].createOrReplaceTempView(a)
             self.tables[b].createOrReplaceTempView(b)
             self._retarget_dicts({a: b, b: a})
@@ -3401,8 +3392,6 @@ class ChSession:
                 if old in self._store:  # parts mode: pointer move, no I/O
                     self._store[new] = self._store.pop(old)
                 moved_shadow = self._ins_shadow.pop(old, None)
-                if old in self._iseq:
-                    self._iseq[new] = self._iseq.pop(old)
                 self._point_at(new, df)
                 if moved_shadow is not None:
                     # AFTER _point_at: the pointer update clears the
@@ -3440,16 +3429,9 @@ class ChSession:
                     return None  # TRUNCATE TABLE IF EXISTS: silent no-op
                 raise ValueError(f"TRUNCATE unknown table {name!r}")
             self._register(name, self.tables[name].limit(0))
-            if self._tracks_insert_order(name):
-                # unlike a mutation, a truncate leaves NOTHING whose
-                # insert order could be lost — reseed the generation
-                # shadow so version-less FINAL works again (r11 batch 28)
-                self._iseq.pop(name, None)
-                self._ins_shadow[name] = self.tables[name].withColumn(
-                    "_ch_ins_seq", F.lit(0).cast("long")
-                ).withColumn(
-                    "_ch_ins_row", F.monotonically_increasing_id()
-                )
+            # unlike a mutation, a truncate leaves NOTHING whose insert
+            # order could be lost — FINAL works again (r11 batch 28)
+            self._seed_insert_order(name)
             return None
 
         m = _CREATE_VIEW_RE.match(s)
@@ -4050,13 +4032,7 @@ class ChSession:
             if tr["ttl"]:
                 meta["ttl"] = _parse_ttl_clause(tr["ttl"])
             self.meta[name] = meta
-            if self._tracks_insert_order(name):
-                # clones start EMPTY — seed the insert-order shadow
-                self._ins_shadow[name] = self.tables[name].withColumn(
-                    "_ch_ins_seq", F.lit(0).cast("long")
-                ).withColumn(
-                    "_ch_ins_row", F.monotonically_increasing_id()
-                )
+            self._seed_insert_order(name)  # clones start EMPTY
             return None
 
         m = _ALTER_MISC_RE.match(s)
@@ -4959,27 +4935,34 @@ class ChSession:
         merge the rest of the engine models (cdc/apply.py's replacing /
         summing reads are the query-time views of the same contract).
 
-        - ReplacingMergeTree(v): one row per ORDER BY key, max version —
-          the version argument is REQUIRED here because without it CH keeps
-          the physically-last-merged row, which has no deterministic
-          Spark equivalent worth pretending to.
-        - SummingMergeTree: one row per ORDER BY key; numeric non-key
-          columns sum. CH keeps an arbitrary value for non-numeric non-key
-          columns; we take min() — deterministic, documented divergence.
+        - ReplacingMergeTree, with or without a version argument,
+          CollapsingMergeTree and VersionedCollapsingMergeTree: the same
+          rule ``FROM t FINAL`` reads with, `_merge_sql`. The insert-
+          ordered ones (version-less Replacing, Collapsing) merge their
+          insert-order shadow, and the merged rows become one fresh
+          generation so later FINAL reads keep working.
+        - Summing/AggregatingMergeTree: one row per ORDER BY key; numeric
+          non-key columns sum. CH keeps an arbitrary value for non-numeric
+          non-key columns; we take min() — deterministic, documented
+          divergence.
         - MergeTree: merge changes physical layout only; logical no-op.
+        - TTL: CH enforces TTL on merges; OPTIMIZE FINAL forces one, so
+          expired rows drop (max-anchored "now", the ttl_expire contract
+          — deterministic, wall-clock-free).
         - PARTITION p (r10): the merge (and any TTL expiry it forces) is
           scoped to rows whose PARTITION BY expression equals p — rows in
           every other partition pass through untouched, exactly CH's
           per-partition merge. Partition boundaries never split an ORDER
           BY group in CH (parts are per-partition), so merging the subset
-          alone is semantics-preserving.
+          alone is semantics-preserving; the TTL anchor is the subset's
+          max.
         """
         tbl = self._require_table(name, "OPTIMIZE TABLE")
         meta = self.meta.get(name, {})
         engine = (meta.get("engine") or "MergeTree").lower()
-        keys = meta.get("order_by") or []
-        keep = None
-        work = tbl
+        ordered = self._tracks_insert_order(name)
+        work = self._insert_shadow(name, "OPTIMIZE FINAL") if ordered else tbl
+        keep = shadow_keep = None
         if part is not None:
             pexpr = meta.get("partition_by")
             if not pexpr:
@@ -4991,133 +4974,22 @@ class ChSession:
                    else f"({pexpr})")
             cond = f"coalesce({lhs} = {part}, false)"
             keep = tbl.filter(F.expr(f"NOT {cond}"))
-            work = tbl.filter(F.expr(cond))
+            shadow_keep = work.filter(F.expr(f"NOT {cond}"))
+            work = work.filter(F.expr(cond))
         if meta.get("ttl"):
-            # CH enforces TTL on merges; OPTIMIZE FINAL forces one, so
-            # expired rows drop here (max-anchored "now", the ttl_expire
-            # contract — deterministic, wall-clock-free). Scoped to the
-            # named partition: the expiry anchor is the subset's max.
             work = self._apply_ttl(name, work, meta["ttl"]["expr"])
         elif engine == "mergetree":
             return  # no TTL, layout-only merge: logical no-op
+        work.createOrReplaceTempView("_optimize_work")
+        keys = meta.get("order_by") or []
         key_list = ", ".join(keys)
         if engine == "mergetree":
             merged = work
-        elif not keys:
-            raise ValueError(f"OPTIMIZE FINAL on {name!r}: no ORDER BY key")
-        elif engine == "replacingmergetree":
-            args = meta.get("engine_args") or []
-            shadow_keep = None
-            if args:
-                ver, src = args[0], work
-            else:
-                # implicit insert-generation version (r10 verdict #3) —
-                # same contract as the FINAL read path
-                shadow = self._ins_shadow.get(name)
-                if shadow is None:
-                    raise ValueError(
-                        f"OPTIMIZE FINAL on {name!r}: ReplacingMergeTree"
-                        " without a version column collapses by INSERT"
-                        " order, which is unrecoverable after a mutation/"
-                        "TRUNCATE rewrote the table in this session;"
-                        " declare ENGINE ="
-                        " ReplacingMergeTree(<version_col>)"
-                    )
-                ver = "_ch_ins_seq DESC, _ch_ins_row"
-                src = shadow
-                if part is not None:
-                    shadow_keep = shadow.filter(F.expr(f"NOT {cond}"))
-                    src = shadow.filter(F.expr(cond))
-                if meta.get("ttl"):
-                    src = self._apply_ttl(name, src, meta["ttl"]["expr"])
-            cols = ", ".join(work.columns)
-            src.createOrReplaceTempView("_optimize_work")
-            merged = self.spark.sql(
-                f"SELECT {cols} FROM (SELECT *, ROW_NUMBER() OVER ("
-                f"PARTITION BY {key_list} ORDER BY {ver} DESC) AS _rn "
-                f"FROM _optimize_work) WHERE _rn = 1"
-            )
-            if not args:
-                # rebuild the shadow: untouched partitions keep their
-                # generation history; the merged subset becomes one fresh
-                # generation, so later FINAL reads keep working
-                seq = self._iseq.get(name, 0) + 1
-                self._iseq[name] = seq
-                tagged = merged.withColumn(
-                    "_ch_ins_seq", F.lit(seq).cast("long")
-                ).withColumn(
-                    "_ch_ins_row", F.monotonically_increasing_id()
-                )
-                new_shadow = (
-                    shadow_keep.unionByName(tagged)
-                    if shadow_keep is not None else tagged
-                )
-                if keep is not None:
-                    self._register(name, keep.unionByName(merged))
-                else:
-                    self._register(name, merged)
-                self._ins_shadow[name] = new_shadow
-                return
-        elif engine == "versionedcollapsingmergetree":
-            args = meta.get("engine_args") or []
-            if len(args) < 2:
-                raise ValueError(
-                    f"OPTIMIZE FINAL on {name!r}:"
-                    " VersionedCollapsingMergeTree(sign, version) needs"
-                    " both engine arguments"
-                )
-            sign, ver = args[0], args[1]
-            cols = ", ".join(work.columns)
-            work.createOrReplaceTempView("_optimize_work")
-            merged = self.spark.sql(
-                f"SELECT {cols} FROM (SELECT *, ROW_NUMBER() OVER ("
-                f"PARTITION BY {key_list}, {ver} ORDER BY (CASE WHEN"
-                f" _ch_d > 0 THEN {sign} ELSE -({sign}) END) DESC) AS _rn"
-                f" FROM (SELECT *, sum({sign}) OVER (PARTITION BY"
-                f" {key_list}, {ver}) AS _ch_d FROM _optimize_work))"
-                f" WHERE _ch_d != 0 AND _rn = 1"
-            )
-        elif engine == "collapsingmergetree":
-            # same insert-order contract as the FINAL read path (r11)
-            sign = (meta.get("engine_args") or ["sign"])[0]
-            shadow = self._ins_shadow.get(name)
-            if shadow is None:
-                raise ValueError(
-                    f"OPTIMIZE FINAL on {name!r}: CollapsingMergeTree"
-                    " collapses by INSERT order, which is unrecoverable"
-                    " after a mutation/TRUNCATE rewrote the table in this"
-                    " session"
-                )
-            src = shadow
-            shadow_keep = None
-            if part is not None:
-                shadow_keep = shadow.filter(F.expr(f"NOT {cond}"))
-                src = shadow.filter(F.expr(cond))
-            if meta.get("ttl"):
-                src = self._apply_ttl(name, src, meta["ttl"]["expr"])
-            cols = ", ".join(work.columns)
-            src.createOrReplaceTempView("_optimize_work")
-            merged = self.spark.sql(
-                f"SELECT {cols} FROM"
-                + _collapsing_merge_sql(sign, key_list, "_optimize_work")
-            )
-            seq = self._iseq.get(name, 0) + 1
-            self._iseq[name] = seq
-            tagged = merged.withColumn(
-                "_ch_ins_seq", F.lit(seq).cast("long")
-            ).withColumn("_ch_ins_row", F.monotonically_increasing_id())
-            new_shadow = (
-                shadow_keep.unionByName(tagged)
-                if shadow_keep is not None else tagged
-            )
-            # register FIRST (it voids the shadow), then re-seed it
-            self._register(
-                name,
-                keep.unionByName(merged) if keep is not None else merged,
-            )
-            self._ins_shadow[name] = new_shadow
-            return
         elif engine in ("summingmergetree", "aggregatingmergetree"):
+            if not keys:
+                raise ValueError(
+                    f"OPTIMIZE FINAL on {name!r} needs an ORDER BY key"
+                )
             numeric = {
                 "tinyint", "smallint", "int", "bigint", "float", "double",
             }
@@ -5129,18 +5001,26 @@ class ChSession:
                     aggs.append(f"CAST(sum({c}) AS {t}) AS {c}")
                 else:
                     aggs.append(f"min({c}) AS {c}")
-            work.createOrReplaceTempView("_optimize_work")
             merged = self.spark.sql(
                 f"SELECT {key_list}, {', '.join(aggs)} FROM _optimize_work "
                 f"GROUP BY {key_list}"
             ).select(*work.columns)
         else:
-            raise ValueError(
-                f"OPTIMIZE FINAL: unsupported engine {meta.get('engine')!r}"
+            merged = self.spark.sql(
+                f"SELECT {', '.join(tbl.columns)} FROM"
+                + _merge_sql(name, meta, "_optimize_work", "OPTIMIZE FINAL")
             )
-        if keep is not None:
-            merged = keep.unionByName(merged)
-        self._register(name, merged)
+        # register FIRST (it voids the shadow), then re-seed it: untouched
+        # partitions keep their generation history
+        self._register(
+            name, keep.unionByName(merged) if keep is not None else merged
+        )
+        if ordered:
+            tagged = self._generation(merged)
+            self._ins_shadow[name] = (
+                shadow_keep.unionByName(tagged)
+                if shadow_keep is not None else tagged
+            )
 
     def _apply_ttl(self, name: str, tbl: DataFrame, ttl_expr: str):
         """Row expiry for ``TTL <expr>``: keep rows whose expiry instant is
@@ -5445,18 +5325,14 @@ class ChSession:
         else:
             self._register(name, target.unionByName(block))
         if self._tracks_insert_order(name) and prev_shadow is not None:
-            # version-less Replacing: tag the block with its insert
-            # generation so FINAL can collapse to the last-inserted row
-            # (the parts model's generation sequence, carried explicitly).
-            # A None shadow means a mutation invalidated it — it must
-            # STAY invalid: re-seeding from this block alone would make
-            # FINAL silently drop every pre-mutation row.
-            seq = self._iseq.get(name, 0) + 1
-            self._iseq[name] = seq
-            tagged = block.withColumn(
-                "_ch_ins_seq", F.lit(seq).cast("long")
-            ).withColumn("_ch_ins_row", F.monotonically_increasing_id())
-            self._ins_shadow[name] = prev_shadow.unionByName(tagged)
+            # tag the block with its insert generation so FINAL can
+            # collapse by insert order. A None shadow means a mutation
+            # invalidated it — it must STAY invalid: re-seeding from this
+            # block alone would make FINAL silently drop every
+            # pre-mutation row.
+            self._ins_shadow[name] = prev_shadow.unionByName(
+                self._generation(block)
+            )
         self._fire_mvs(name, block)
         return None
 

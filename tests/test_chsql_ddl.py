@@ -203,21 +203,29 @@ def test_optimize_replacing_requires_version(spark, sf_dir):
     """r11: version-less ReplacingMergeTree OPTIMIZE FINAL now runs by
     INSERT order (implicit generation counter); the guided error moved to
     where order is genuinely unrecoverable — after a mutation rewrote the
-    table (see test_r11_versionless_replacing_final)."""
+    table (see test_r11_versionless_replacing_final). CollapsingMergeTree
+    tracks insert order the same way and takes the same guided error on
+    both the FINAL read and OPTIMIZE FINAL."""
     ch = ChSession(spark, sf_dir)
-    ch.execute(
-        "CREATE TABLE nv (k Int64, v Int64) "
-        "ENGINE = ReplacingMergeTree() ORDER BY k"
-    )
-    ch.execute("INSERT INTO nv VALUES (1, 1)")
-    ch.execute("INSERT INTO nv VALUES (1, 7)")
-    ch.execute("OPTIMIZE TABLE nv FINAL")
-    assert [(r.k, r.v) for r in ch.execute(
-        "SELECT k, v FROM nv").collect()] == [(1, 7)]
-    ch.execute("ALTER TABLE nv UPDATE v = 8 WHERE k = 1")
-    ch.execute("INSERT INTO nv VALUES (1, 9)")
-    with pytest.raises(ValueError, match="INSERT order"):
+    for engine, cols, rows, last in (
+        ("ReplacingMergeTree()", "k Int64, v Int64", ("(1, 1)", "(1, 7)"),
+         [(1, 7)]),
+        ("CollapsingMergeTree(sign)", "k Int64, v Int64, sign Int8",
+         ("(1, 1, 1)", "(1, 7, 1)"), [(1, 7)]),
+    ):
+        ch.execute("DROP TABLE IF EXISTS nv")
+        ch.execute(f"CREATE TABLE nv ({cols}) ENGINE = {engine} ORDER BY k")
+        for r in rows:
+            ch.execute(f"INSERT INTO nv VALUES {r}")
         ch.execute("OPTIMIZE TABLE nv FINAL")
+        assert [(r.k, r.v) for r in ch.execute(
+            "SELECT k, v FROM nv").collect()] == last
+        ch.execute("ALTER TABLE nv UPDATE v = 8 WHERE k = 1")
+        ch.execute(f"INSERT INTO nv VALUES {rows[1]}")
+        with pytest.raises(ValueError, match="INSERT order"):
+            ch.execute("SELECT k, v FROM nv FINAL")
+        with pytest.raises(ValueError, match="INSERT order"):
+            ch.execute("OPTIMIZE TABLE nv FINAL")
 
 
 def test_create_view_is_live(spark, sf_dir):
@@ -3978,3 +3986,98 @@ def test_r12_probe_batch14_lightweight_update_and_tails(spark, sf_dir):
     assert rows("SELECT count() AS c FROM catf14") == [(5,)]
     s.execute("CREATE TABLE cc14_clone AS cc14")  # clone path unchanged
     assert rows("SELECT count() AS c FROM cc14_clone") == [(0,)]
+
+
+@pytest.mark.parametrize("engine, cols, vals", [
+    ("ReplacingMergeTree", "k Int64, v Int64", "(1, 10), (2, 20)"),
+    ("CollapsingMergeTree(sign)", "k Int64, v Int64, sign Int8",
+     "(1, 10, 1), (2, 20, 1)"),
+])
+def test_mv_over_insert_ordered_final(spark, sf_dir, engine, cols, vals):
+    """An MV body reading ``FROM src FINAL`` on an insert-ordered source
+    collapses the fired block, like the same MV over
+    ``ReplacingMergeTree(ver)`` — it used to read the insert-order shadow
+    frozen at CREATE MATERIALIZED VIEW time and write nothing."""
+    ch = ChSession(spark, sf_dir)
+    ch.execute(f"CREATE TABLE src ({cols}) ENGINE = {engine} ORDER BY k")
+    ch.execute("CREATE TABLE dst (k Int64, v Int64) ENGINE = MergeTree"
+               " ORDER BY k")
+    ch.execute("CREATE MATERIALIZED VIEW mv TO dst AS"
+               " SELECT k, v FROM src FINAL")
+    ch.execute(f"INSERT INTO src VALUES {vals}")
+    assert sorted(tuple(r) for r in ch.execute(
+        "SELECT k, v FROM dst").collect()) == [(1, 10), (2, 20)]
+
+
+_MERGE_ENGINES = [
+    "ReplacingMergeTree(ver)",
+    "ReplacingMergeTree()",
+    "CollapsingMergeTree(sign)",
+    "VersionedCollapsingMergeTree(sign, ver)",
+]
+_MERGE_BLOCKS = st.lists(
+    st.lists(
+        st.tuples(
+            st.integers(0, 3),          # k (partition k % 2)
+            st.integers(1, 3),          # ver
+            st.sampled_from([1, -1]),   # sign
+        ),
+        min_size=1, max_size=5,
+    ),
+    min_size=1, max_size=4,
+)
+
+
+@pytest.mark.parametrize("mode", ["memory", "parts"])
+@settings(
+    max_examples=16, deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    engine=st.sampled_from(_MERGE_ENGINES),
+    blocks=_MERGE_BLOCKS,
+    part=st.sampled_from([None, 0, 1]),
+)
+def test_final_read_equals_optimize_final(
+    spark, sf_dir, mode, engine, blocks, part
+):
+    """``FROM t FINAL`` and ``OPTIMIZE TABLE t [PARTITION p] FINAL`` run
+    one merge rule: the optimized partition holds exactly the FINAL rows,
+    and a FINAL read after the merge is unchanged. ``v`` is a function of
+    (k, ver), and Replacing(ver) rows all carry sign 1, so rows that tie
+    on the engine's ordering are identical and the collapse is
+    deterministic."""
+    import shutil
+    import tempfile
+
+    parts = (
+        tempfile.mkdtemp(prefix="ccs_merge_parts_")
+        if mode == "parts" else None
+    )
+    try:
+        ch = ChSession(spark, sf_dir, parts_dir=parts)
+        ch.execute(
+            "CREATE TABLE mf (k Int64, ver Int64, sign Int8, v Int64)"
+            f" ENGINE = {engine} PARTITION BY modulo(k, 2) ORDER BY k"
+        )
+        signed = engine != "ReplacingMergeTree(ver)"
+        for block in blocks:
+            ch.execute("INSERT INTO mf VALUES " + ", ".join(
+                f"({k}, {ver}, {sign if signed else 1}, {k * 10 + ver})"
+                for k, ver, sign in block
+            ))
+
+        def rows(q):
+            return sorted(tuple(r) for r in ch.execute(q).collect())
+
+        final = rows("SELECT k, ver, sign, v FROM mf FINAL")
+        scope = "" if part is None else f" PARTITION {part}"
+        ch.execute(f"OPTIMIZE TABLE mf{scope} FINAL")
+        where = "" if part is None else f" WHERE k % 2 = {part}"
+        assert rows(f"SELECT k, ver, sign, v FROM mf{where}") == [
+            r for r in final if part is None or r[0] % 2 == part
+        ]
+        assert rows("SELECT k, ver, sign, v FROM mf FINAL") == final
+    finally:
+        if parts:
+            shutil.rmtree(parts, ignore_errors=True)
