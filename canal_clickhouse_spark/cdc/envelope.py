@@ -186,6 +186,16 @@ def build_envelope(
     return df.select(F.to_json(F.struct(*fields)).alias("msg"))
 
 
+def explode_envelope(msgs: DataFrame, msg_col: str = "msg") -> DataFrame:
+    """FlatMessage JSON → one row per ``data`` entry: the envelope fields
+    plus ``row``, that entry's stringly-typed column map.
+
+    Malformed JSON and ``"data": null`` messages yield no rows.
+    """
+    parsed = msgs.select(F.from_json(msg_col, FLAT_MESSAGE_SCHEMA).alias("m"))
+    return parsed.select("m.*", F.explode("m.data").alias("row"))
+
+
 def parse_envelope(
     msgs: DataFrame, mapping: dict[str, str], msg_col: str = "msg"
 ) -> DataFrame:
@@ -194,10 +204,8 @@ def parse_envelope(
     ``explode(data)`` fans multi-row messages out; the mapping casts each
     stringly-typed column. Emits the envelope's op and event time alongside.
     """
-    parsed = msgs.select(F.from_json(msg_col, FLAT_MESSAGE_SCHEMA).alias("m"))
-    rows = parsed.select("m.*", F.explode("m.data").alias("row"))
     typed = [F.col("row").getItem(c).cast(t).alias(c) for c, t in mapping.items()]
-    return rows.select(
+    return explode_envelope(msgs, msg_col).select(
         *typed,
         F.timestamp_millis(F.col("es")).alias("event_time"),
         F.col("type").alias("op"),
@@ -227,15 +235,13 @@ def parse_envelope_typed(
             raise ValueError("no mysqlType map found in any envelope message")
         mysql_types = dict(peek[0])
     casts, enums = mapping_from_mysql_types(mysql_types)
-    parsed = msgs.select(F.from_json(msg_col, FLAT_MESSAGE_SCHEMA).alias("m"))
-    rows = parsed.select("m.*", F.explode("m.data").alias("row"))
     typed: list[Column] = []
     for c, t in casts.items():
         col = F.col("row").getItem(c)
         if c in enums:
             col = F.when(col.isin(enums[c]), col)
         typed.append(col.cast(t).alias(c))
-    return rows.select(
+    return explode_envelope(msgs, msg_col).select(
         *typed,
         F.timestamp_millis(F.col("es")).alias("event_time"),
         F.col("type").alias("op"),

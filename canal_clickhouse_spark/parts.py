@@ -43,10 +43,16 @@ def latest(spark: SparkSession, root: str, prefix: str,
 
 
 def read_latest(spark: SparkSession, root: str, prefix: str,
-                below: float = float("inf")) -> DataFrame | None:
-    """The generation ``latest`` names as a DataFrame, or None."""
+                below: float = float("inf"),
+                schema: str | None = None) -> DataFrame | None:
+    """The generation ``latest`` names as a DataFrame, or None. A caller
+    that knows the generation's ``schema`` (DDL) passes it, which skips
+    Spark's parquet schema-inference job."""
     n = latest(spark, root, prefix, below)
-    return spark.read.parquet(os.path.join(root, f"{prefix}{n}")) if n >= 0 else None
+    if n < 0:
+        return None
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(os.path.join(root, f"{prefix}{n}"))
 
 
 def retire(spark: SparkSession, root: str, prefix: str, below: int) -> None:

@@ -6,8 +6,10 @@ from __future__ import annotations
 
 import os
 import shutil
+from functools import reduce
 
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from canal_clickhouse_spark.cdc.envelope import ORDERS_MAPPING, build_envelope
@@ -253,3 +255,147 @@ def test_pipeline_state_equals_chsession_final(spark, sf_dir, pipe):
     )
     assert via_chsession == via_pipeline
     assert len(via_chsession) > 0
+
+
+# -- multi-rule batches: parse once, skip idle rules, concurrent writes -------
+
+RULES = {
+    "orders": ("o_orderkey", dict(ORDERS_MAPPING)),
+    "customer": ("c_custkey", {"c_custkey": "bigint", "c_name": "string",
+                               "c_nationkey": "int", "c_mktsegment": "string"}),
+    "part": ("p_partkey", {"p_partkey": "bigint", "p_name": "string", "p_size": "int"}),
+    "supplier": ("s_suppkey", {"s_suppkey": "bigint", "s_name": "string",
+                               "s_acctbal": "double"}),
+}
+
+
+def rule_for(name, mode="replacing"):
+    pk, mapping = RULES[name]
+    return TableSync("shop", name, pk=pk, mapping=dict(mapping), mode=mode)
+
+
+def table_rows(spark, sf_dir, name, flt="true", **overrides):
+    """The fixture table's mapped columns, filtered, with column overrides."""
+    df = spark.read.parquet(f"{sf_dir}/{name}.parquet").filter(flt)
+    for col, value in overrides.items():
+        df = df.withColumn(col, F.lit(value))
+    return df.select(*RULES[name][1])
+
+
+def union(frames):
+    return reduce(DataFrame.unionByName, frames)
+
+
+def table_envelopes(spark, sf_dir, name, op, es, flt="true", **overrides):
+    """FlatMessage batch for ``name``'s rows matching ``flt``, all at ``es``."""
+    pk, mapping = RULES[name]
+    return build_envelope(
+        table_rows(spark, sf_dir, name, flt, **overrides), "shop", name, [pk],
+        {c: F.col(c).cast("string") for c in mapping}, es=F.lit(es).cast("long"),
+        op=F.lit(op),
+    )
+
+
+def test_read_table_on_rule_with_no_state(spark, sf_dir, tmp_path):
+    """A configured rule no message was routed to reads as an empty table
+    with the rule's columns, before and after another rule's batch."""
+    pipe = CdcPipeline(spark, [rule_for("orders"), rule_for("customer")],
+                       str(tmp_path / "state"))
+    cols = list(RULES["customer"][1])
+    empty = pipe.read_table("shop", "customer")
+    assert empty.columns == cols and empty.count() == 0
+    pipe.apply_messages(table_envelopes(spark, sf_dir, "orders", "INSERT", 1))
+    after = pipe.read_table("shop", "customer")
+    assert after.columns == cols and after.count() == 0
+    assert rows_set(pipe.read_table("shop", "orders")) == rows_set(
+        table_rows(spark, sf_dir, "orders"))
+
+
+def test_idle_rules_write_no_snapshot(spark, sf_dir, tmp_path):
+    """A batch routed to 2 of 4 rules writes 2 snapshots; the idle rules'
+    latest snapshot does not move."""
+    pipe = CdcPipeline(spark, [rule_for(n) for n in RULES], str(tmp_path / "state"))
+
+    def versions():
+        return {r.table: pipe._latest_version(r) for r in pipe.tables.values()}
+
+    pipe.apply_messages(union(table_envelopes(spark, sf_dir, n, "INSERT", 1) for n in RULES))
+    before = versions()
+    pipe.apply_messages(
+        table_envelopes(spark, sf_dir, "orders", "UPDATE", 2, "o_orderkey % 10 = 0",
+                        o_orderstatus="F")
+        .unionByName(table_envelopes(spark, sf_dir, "customer", "UPDATE", 2,
+                                     "c_custkey % 7 = 0", c_mktsegment="X"))
+    )
+    assert versions() == {**before, "orders": before["orders"] + 1,
+                     "customer": before["customer"] + 1}
+    model = {
+        "orders": table_rows(spark, sf_dir, "orders").withColumn(
+            "o_orderstatus", F.when(F.col("o_orderkey") % 10 == 0, "F")
+            .otherwise(F.col("o_orderstatus"))),
+        "customer": table_rows(spark, sf_dir, "customer").withColumn(
+            "c_mktsegment", F.when(F.col("c_custkey") % 7 == 0, "X")
+            .otherwise(F.col("c_mktsegment"))),
+    }
+    for name, want in model.items():
+        assert rows_set(pipe.read_table("shop", name)) == rows_set(want), name
+
+
+def mixed_batch(spark, sf_dir):
+    """Per-table change logs for a replacing and a collapsing rule, plus the
+    lines a router must drop: an unrouted table, ``"data": null`` and
+    malformed JSON."""
+    logs = {
+        "orders": [
+            table_envelopes(spark, sf_dir, "orders", "INSERT", 1),
+            table_envelopes(spark, sf_dir, "orders", "UPDATE", 2, "o_orderkey % 10 = 0",
+                            o_orderstatus="F"),
+            table_envelopes(spark, sf_dir, "orders", "DELETE", 3, "o_orderkey % 100 = 0"),
+        ],
+        "customer": [
+            table_envelopes(spark, sf_dir, "customer", "INSERT", 1),
+            table_envelopes(spark, sf_dir, "customer", "DELETE", 2, "c_custkey % 10 = 0"),
+            table_envelopes(spark, sf_dir, "customer", "UPDATE", 3, "c_custkey % 7 = 0",
+                            c_mktsegment="X"),
+        ],
+    }
+    logs = {n: union(envs) for n, envs in logs.items()}
+    noise = [
+        table_envelopes(spark, sf_dir, "part", "INSERT", 1),
+        spark.createDataFrame(
+            [('{"database":"shop","table":"orders","type":"INSERT","es":9,"data":null}',),
+             ('{"database":"shop","table":"customer","type":"INSERT","es":9,"data":[{',)],
+            "msg string",
+        ),
+    ]
+    everything = union([*logs.values(), *noise])
+    return logs, everything.orderBy(F.xxhash64("msg")).repartition(3)
+
+
+def test_concurrent_mixed_mode_apply(spark, sf_dir, tmp_path):
+    """One interleaved batch for a replacing and a collapsing rule equals
+    applying each table's messages alone; unrouted, null-data and malformed
+    lines are dropped; every job the apply launches, on any worker thread,
+    carries the caller's job group."""
+    rules = {"orders": rule_for("orders"), "customer": rule_for("customer", "collapsing")}
+    logs, batch = mixed_batch(spark, sf_dir)
+    pipe = CdcPipeline(spark, list(rules.values()), str(tmp_path / "mixed"))
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    group = "cdc-apply-under-test"
+    sc.setJobGroup(group, "apply one mixed batch")
+    try:
+        pipe.apply_messages(batch)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
+    assert len(tracker.getJobIdsForGroup(group)) > len(rules)
+    for name, rule in rules.items():
+        alone = CdcPipeline(spark, [rule], str(tmp_path / f"alone_{name}"))
+        alone.apply_messages(logs[name])
+        assert rows_set(pipe.read_table("shop", name)) == rows_set(
+            alone.read_table("shop", name)), name
+    assert rows_set(pipe.read_table("shop", "customer").filter("c_custkey % 70 = 0")) == (
+        rows_set(table_rows(spark, sf_dir, "customer", "c_custkey % 70 = 0",
+                            c_mktsegment="X")))
