@@ -847,6 +847,12 @@ def _parse_create_table_stmt(s: str):
     return d
 
 
+# The insert-order tags an insert-ordered engine (version-less Replacing,
+# Collapsing) stores with every row: the insert generation and the row's
+# order within it (`ChSession._generation`). They are never visible columns.
+_ORDER = ("_ch_ins_seq", "_ch_ins_row")
+
+
 def _merge_sql(name: str, meta: dict, src: str, what: str) -> str:
     """A MergeTree engine's merge rule as one filtered subquery
     ``(SELECT *, … FROM src) WHERE …`` over the relation NAMED ``src`` —
@@ -856,12 +862,12 @@ def _merge_sql(name: str, meta: dict, src: str, what: str) -> str:
     source view (`ChSession._fire_mvs`). Per ORDER BY key group:
 
     - ReplacingMergeTree(v): keep the max-``v`` row. Version-less
-      Replacing keeps the last INSERTED row — ``src`` is then the
-      insert-order shadow and its generation tags are the version.
+      Replacing keeps the last INSERTED row — ``src`` then carries the
+      stored `_ORDER` tags, and they are the version.
     - VersionedCollapsingMergeTree(sign, v): per (key, v) keep one row
       carrying the majority sign when the signs don't cancel, drop the
       group when they do. Order-free.
-    - CollapsingMergeTree(sign), over the insert-order shadow:
+    - CollapsingMergeTree(sign), by the stored `_ORDER` tags:
       more state than cancel rows → keep the LAST state row; more cancel
       than state rows → keep the FIRST cancel row; equal counts whose last
       row is a STATE → keep the first cancel AND the last state row (r11
@@ -1520,38 +1526,50 @@ class ChSession:
         self.current_db: str = "default"
         self.table_db: dict[str, str] = {}
         self._pending_db: tuple[str, str] | None = None
-        # Insert-ordered engines (version-less Replacing: last-inserted row
-        # wins; Collapsing: last state / first cancel row) keep an insert-
-        # order shadow: the table's rows tagged by `_generation`. Any
-        # non-INSERT rewrite voids it, and FINAL then raises the guided
-        # error (`_insert_shadow`) because the order is unrecoverable.
+        # Every table's stored rows; `tables` holds them without the
+        # `_ORDER` tags. Insert-ordered engines (version-less Replacing:
+        # last-inserted row wins; Collapsing: last state / first cancel
+        # row) store each row tagged by `_generation`, so the order moves
+        # with the rows. A mutation rewrites from the visible rows, which
+        # drops the tags, and FINAL then raises the guided error
+        # (`_require_order`) because the order is unrecoverable.
         # `_iseq` is ONE session-wide generation counter: order is only
         # ever compared within a table, and a global monotonic counter is
         # monotonic per table, so it never moves with a table's name.
         self._iseq = 0
-        self._ins_shadow: dict[str, DataFrame] = {}
+        self._rows: dict[str, DataFrame] = {}
 
     # -- helpers ----------------------------------------------------------
 
-    def _register(self, name: str, df: DataFrame) -> None:
-        """Rewrite ``name`` to ``df``; like any rewrite it voids the
-        insert order (`_point_at`)."""
+    def _register(self, name: str, rows: DataFrame) -> None:
+        """Rewrite ``name``'s stored rows to ``rows``. Rows without the
+        `_ORDER` tags void the insert order, as every mutation does."""
         if self.parts_dir is not None:
-            self._rewrite_generation(name, df)
+            self._rewrite_generation(name, rows)
         else:
-            self._point_at(name, df)
+            self._point_at(name, rows)
 
-    def _point_at(self, name: str, df: DataFrame) -> None:
+    def _point_at(self, name: str, rows: DataFrame) -> None:
         """Catalog-pointer update without persistence (parts mode reads)."""
-        self._ins_shadow.pop(name, None)
         forget_view(self.spark, name)
-        self.tables[name] = df
-        df.createOrReplaceTempView(name)
+        self._rows[name] = rows
+        self.tables[name] = self._bind(name, rows)
+
+    def _bind(self, name: str, rows: DataFrame) -> DataFrame:
+        """Bind the view ``name`` to ``rows`` without the `_ORDER` tags
+        and, when ``rows`` carries them, the view ``__ch_ins_shadow_<name>``
+        (what ``FROM name FINAL`` collapses) to ``rows``. Returns the
+        visible rows."""
+        visible = rows.drop(*_ORDER)
+        visible.createOrReplaceTempView(name)
+        if _ORDER[0] in rows.columns:
+            rows.createOrReplaceTempView(f"__ch_ins_shadow_{name}")
+        return visible
 
     def _tracks_insert_order(self, name: str) -> bool:
-        """True for engines whose FINAL semantics need the insert-order
-        shadow: version-less Replacing (``ENGINE = ReplacingMergeTree``,
-        the most common spelling in the wild — last-inserted row wins) and
+        """True for engines that store the `_ORDER` tags with their rows:
+        version-less Replacing (``ENGINE = ReplacingMergeTree``, the most
+        common spelling in the wild — last-inserted row wins) and
         Collapsing (last state / first cancel row within a key)."""
         meta = self.meta.get(name) or {}
         engine = (meta.get("engine") or "").lower()
@@ -1567,27 +1585,19 @@ class ChSession:
             "_ch_ins_seq", F.lit(self._iseq).cast("long")
         ).withColumn("_ch_ins_row", F.monotonically_increasing_id())
 
-    def _seed_insert_order(
-        self, name: str, rows: DataFrame | None = None
-    ) -> None:
-        """(Re)start an insert-ordered table's shadow as one generation of
-        ``rows`` (CREATE … AS SELECT) or empty (CREATE, clone, TRUNCATE:
-        nothing whose insert order could be lost). The empty seed is a
-        local relation, never the table's own scan: a parts-mode scan
-        would pin a generation directory that a later rewrite retires."""
+    def _with_order(self, name: str, rows: DataFrame) -> DataFrame:
+        """``rows`` as ``name`` stores them: one insert generation when the
+        engine tracks insert order, else unchanged."""
         if self._tracks_insert_order(name):
-            if rows is None:
-                rows = self.spark.createDataFrame(
-                    [], self.tables[name].schema
-                )
-            self._ins_shadow[name] = self._generation(rows)
+            return self._generation(rows)
+        return rows
 
-    def _insert_shadow(self, name: str, what: str) -> DataFrame:
-        """The insert-order shadow of ``name``, or the guided error once a
-        mutation rewrote the table and insertion order is lost."""
-        shadow = self._ins_shadow.get(name)
-        if shadow is not None:
-            return shadow
+    def _require_order(self, name: str, what: str) -> None:
+        """The guided error when ``name``'s engine collapses by insert
+        order but a mutation rewrote it and dropped its `_ORDER` tags."""
+        if (not self._tracks_insert_order(name)
+                or _ORDER[0] in self._rows[name].columns):
+            return
         meta = self.meta[name]
         if meta["engine"].lower() == "collapsingmergetree":
             sign = (meta.get("engine_args") or ["sign"])[0]
@@ -1621,6 +1631,26 @@ class ChSession:
         self._point_at(name, self.spark.read.parquet(path))
         if old:
             parts.delete(self.spark, old)
+
+    def _append(self, name: str, block: DataFrame) -> DataFrame:
+        """The one append path — INSERT, MV delivery and POPULATE — which
+        creates ``name`` from the block when it does not exist yet. An
+        insert-ordered engine tags the block as the next generation; the
+        tags are stored only while the stored rows carry them, so a voided
+        order stays voided (FINAL must not silently drop the pre-mutation
+        rows). Returns the block the table's MVs read: tagged by engine,
+        whether or not the tags were stored."""
+        block = self._with_order(name, block)
+        rows = self._rows.get(name)
+        if rows is None:
+            self._register(name, block)
+            return block
+        stored = block if _ORDER[0] in rows.columns else block.drop(*_ORDER)
+        if self.parts_dir is not None:
+            self._append_part(name, stored)
+        else:
+            self._point_at(name, rows.unionByName(stored))
+        return block
 
     def _append_part(self, name: str, block: DataFrame) -> None:
         """Parts mode: one INSERT block = new parquet part files appended
@@ -2512,9 +2542,9 @@ class ChSession:
         """``FROM <session_table> FINAL`` → the engine's merge rule
         (`_merge_sql`) as a named derived table — the read-time twin of
         OPTIMIZE FINAL, and how CH users actually read Replacing and
-        Collapsing tables. Insert-ordered engines collapse their shadow,
-        bound as the view ``__ch_ins_shadow_<t>``. Fixture tables' FINAL
-        stays with the main translator's rewrite."""
+        Collapsing tables. Insert-ordered engines collapse their tagged
+        rows, the view ``__ch_ins_shadow_<t>`` (`_bind`). Fixture tables'
+        FINAL stays with the main translator's rewrite."""
 
         def sub(m: re.Match) -> str:
             name = m.group(1)
@@ -2522,8 +2552,8 @@ class ChSession:
                 return m.group(0)  # not ours; translate() handles fixtures
             src = name
             if self._tracks_insert_order(name):
+                self._require_order(name, "FINAL")
                 src = f"__ch_ins_shadow_{name}"
-                self._insert_shadow(name, "FINAL").createOrReplaceTempView(src)
             cols = ", ".join(self.tables[name].columns)
             return (
                 f"FROM (SELECT {cols} FROM"
@@ -2549,27 +2579,12 @@ class ChSession:
         for mv in self.mvs.values():
             if mv["source"] != source:
                 continue
-            block.createOrReplaceTempView(source)  # re-point at the delta
-            if self._tracks_insert_order(source):
-                # a stored `FROM source FINAL` body reads the shadow view,
-                # which must hold the delta too (every FINAL read re-binds
-                # it, so it needs no restore)
-                self._generation(block).createOrReplaceTempView(
-                    f"__ch_ins_shadow_{source}"
-                )
+            self._bind(source, block)  # re-point at the delta
             try:
-                part = self.spark.sql(mv["select"])
                 tgt = mv["target"]
-                if self.parts_dir is not None and tgt in self.tables:
-                    self._append_part(tgt, part)  # one part per fired block
-                else:
-                    self._register(
-                        tgt,
-                        self.tables[tgt].unionByName(part)
-                        if tgt in self.tables else part,
-                    )
-            finally:  # restore the full table view
-                self.tables[source].createOrReplaceTempView(source)
+                part = self._append(tgt, self.spark.sql(mv["select"]))
+            finally:  # restore the full table's views
+                self._bind(source, self._rows[source])
             self._fire_mvs(tgt, part, _depth + 1)
 
     # -- statements -------------------------------------------------------
@@ -2880,12 +2895,7 @@ class ChSession:
                         "POPULATE with TO is invalid in ClickHouse too"
                     )
                 if source in self.tables or self._is_fixture(source):
-                    part = self._run_select(select)
-                    self._register(
-                        target,
-                        self.tables[target].unionByName(part)
-                        if target in self.tables else part,
-                    )
+                    self._append(target, self._run_select(select))
             return None
 
         ct = _parse_create_table_stmt(s)
@@ -2941,19 +2951,16 @@ class ChSession:
                 # CREATE TABLE t [ENGINE = …] AS SELECT … — schema and
                 # rows both come from the query
                 df = self._run_select(ct["select"])
-                self._register(name, df)
                 self.meta[name] = self._table_meta(ml)
-                self._seed_insert_order(name, df)
+                self._register(name, self._with_order(name, df))
                 return None
             cols, defaults, nullable, extras = parse_create_body(
                 ct["cols"])
             empty = self.spark.sql(
                 f"SELECT {', '.join(cols)} WHERE 1 = 0"
             )
-            self._register(name, empty)
             self.meta[name] = self._table_meta(ml)
-            # an EMPTY shadow: FINAL on a fresh table reads empty, not guided
-            self._seed_insert_order(name)
+            self._register(name, self._with_order(name, empty))
             if defaults:
                 self.meta[name]["column_defaults"] = defaults
             if nullable:
@@ -3335,8 +3342,7 @@ class ChSession:
             self._require_table(a, "EXCHANGE TABLES")
             self._require_table(b, "EXCHANGE TABLES")
             # atomic in the model: one compound catalog mutation — both
-            # entries (content + engine meta) swap before any view refresh.
-            self.tables[a], self.tables[b] = self.tables[b], self.tables[a]
+            # entries (stored rows + engine meta) swap before any read.
             self.meta[a], self.meta[b] = (
                 self.meta.get(b, {}), self.meta.get(a, {}),
             )
@@ -3346,17 +3352,9 @@ class ChSession:
                 self._store[a], self._store[b] = (
                     self._store[b], self._store[a],
                 )
-            # the version-less Replacing insert-order shadow travels WITH
-            # the content it orders (r11 probe batch 27: FINAL after an
-            # EXCHANGE read the stale empty shadow and returned nothing)
-            sa, sb = self._ins_shadow.pop(a, None), self._ins_shadow.pop(
-                b, None)
-            if sb is not None:
-                self._ins_shadow[a] = sb
-            if sa is not None:
-                self._ins_shadow[b] = sa
-            self.tables[a].createOrReplaceTempView(a)
-            self.tables[b].createOrReplaceTempView(b)
+            rows_a, rows_b = self._rows[a], self._rows[b]
+            self._point_at(a, rows_b)
+            self._point_at(b, rows_a)
             self._retarget_dicts({a: b, b: a})
             return None
 
@@ -3384,20 +3382,14 @@ class ChSession:
                     )
                 names[new] = names.pop(old)  # chains resolve left-to-right
             for old, new in pairs:
-                df = self.tables.pop(old)
+                self.tables.pop(old)
                 if old in self.meta:
                     self.meta[new] = self.meta.pop(old)
                 self.spark.catalog.dropTempView(old)
                 forget_view(self.spark, old)
                 if old in self._store:  # parts mode: pointer move, no I/O
                     self._store[new] = self._store.pop(old)
-                moved_shadow = self._ins_shadow.pop(old, None)
-                self._point_at(new, df)
-                if moved_shadow is not None:
-                    # AFTER _point_at: the pointer update clears the
-                    # target's shadow slot, and the insert-order shadow
-                    # must FOLLOW the content it orders (r11 batch 27)
-                    self._ins_shadow[new] = moved_shadow
+                self._point_at(new, self._rows.pop(old))
             # MVs bind by NAME (as in CH): an MV whose source/target was
             # renamed keeps pointing at the old name — the blue-green idiom
             # uses EXCHANGE precisely so names stay stable. Dictionaries DO
@@ -3412,6 +3404,7 @@ class ChSession:
         if m:
             name = m.group("name")
             self.tables.pop(name, None)
+            self._rows.pop(name, None)
             self.meta.pop(name, None)
             self.mvs.pop(name, None)
             self.views.pop(name, None)
@@ -3428,10 +3421,11 @@ class ChSession:
                 if m.group("ife"):
                     return None  # TRUNCATE TABLE IF EXISTS: silent no-op
                 raise ValueError(f"TRUNCATE unknown table {name!r}")
-            self._register(name, self.tables[name].limit(0))
             # unlike a mutation, a truncate leaves NOTHING whose insert
             # order could be lost — FINAL works again (r11 batch 28)
-            self._seed_insert_order(name)
+            self._register(
+                name, self._with_order(name, self.tables[name].limit(0))
+            )
             return None
 
         m = _CREATE_VIEW_RE.match(s)
@@ -4003,7 +3997,6 @@ class ChSession:
             tr = _parse_storage_trailer(
                 m.group("trailer"), "CREATE TABLE AS <table>"
             )
-            self._register(name, tbl.limit(0))
             meta = dict(self.meta.get(src) or {})
             if tr["engine"]:
                 # clone-with-engine goes through the same whitelist (and
@@ -4032,7 +4025,7 @@ class ChSession:
             if tr["ttl"]:
                 meta["ttl"] = _parse_ttl_clause(tr["ttl"])
             self.meta[name] = meta
-            self._seed_insert_order(name)  # clones start EMPTY
+            self._register(name, self._with_order(name, tbl.limit(0)))
             return None
 
         m = _ALTER_MISC_RE.match(s)
@@ -4069,10 +4062,14 @@ class ChSession:
         if m:
             name = m.group("name")
             if m.group("op").upper() == "DETACH":
-                tbl = self._require_table(name, "DETACH TABLE")
-                # checkpoint: a later DROP/rewrite of this name must not
-                # retire parquet generations the detached plan still reads
-                self.detached[name] = tbl.localCheckpoint(eager=True)
+                self._require_table(name, "DETACH TABLE")
+                # checkpoint the stored rows, `_ORDER` tags included, so
+                # ATTACH keeps the insert order; a later DROP/rewrite of
+                # this name must not retire parquet generations the
+                # detached plan still reads
+                self.detached[name] = self._rows.pop(name).localCheckpoint(
+                    eager=True
+                )
                 self.tables.pop(name, None)
                 self.spark.catalog.dropTempView(name)
                 forget_view(self.spark, name)
@@ -4937,10 +4934,10 @@ class ChSession:
 
         - ReplacingMergeTree, with or without a version argument,
           CollapsingMergeTree and VersionedCollapsingMergeTree: the same
-          rule ``FROM t FINAL`` reads with, `_merge_sql`. The insert-
-          ordered ones (version-less Replacing, Collapsing) merge their
-          insert-order shadow, and the merged rows become one fresh
-          generation so later FINAL reads keep working.
+          rule ``FROM t FINAL`` reads with, `_merge_sql`, over the stored
+          rows. The insert-ordered ones (version-less Replacing,
+          Collapsing) merge by their `_ORDER` tags, and the surviving rows
+          keep their tags, so later FINAL reads keep working.
         - Summing/AggregatingMergeTree: one row per ORDER BY key; numeric
           non-key columns sum. CH keeps an arbitrary value for non-numeric
           non-key columns; we take min() — deterministic, documented
@@ -4957,12 +4954,12 @@ class ChSession:
           alone is semantics-preserving; the TTL anchor is the subset's
           max.
         """
-        tbl = self._require_table(name, "OPTIMIZE TABLE")
+        self._require_table(name, "OPTIMIZE TABLE")
         meta = self.meta.get(name, {})
         engine = (meta.get("engine") or "MergeTree").lower()
-        ordered = self._tracks_insert_order(name)
-        work = self._insert_shadow(name, "OPTIMIZE FINAL") if ordered else tbl
-        keep = shadow_keep = None
+        self._require_order(name, "OPTIMIZE FINAL")
+        work = self._rows[name]
+        keep = None
         if part is not None:
             pexpr = meta.get("partition_by")
             if not pexpr:
@@ -4973,8 +4970,7 @@ class ChSession:
             lhs = (f"CAST(({pexpr}) AS STRING)" if by_id
                    else f"({pexpr})")
             cond = f"coalesce({lhs} = {part}, false)"
-            keep = tbl.filter(F.expr(f"NOT {cond}"))
-            shadow_keep = work.filter(F.expr(f"NOT {cond}"))
+            keep = work.filter(F.expr(f"NOT {cond}"))
             work = work.filter(F.expr(cond))
         if meta.get("ttl"):
             work = self._apply_ttl(name, work, meta["ttl"]["expr"])
@@ -5007,20 +5003,12 @@ class ChSession:
             ).select(*work.columns)
         else:
             merged = self.spark.sql(
-                f"SELECT {', '.join(tbl.columns)} FROM"
+                f"SELECT {', '.join(work.columns)} FROM"
                 + _merge_sql(name, meta, "_optimize_work", "OPTIMIZE FINAL")
             )
-        # register FIRST (it voids the shadow), then re-seed it: untouched
-        # partitions keep their generation history
         self._register(
             name, keep.unionByName(merged) if keep is not None else merged
         )
-        if ordered:
-            tagged = self._generation(merged)
-            self._ins_shadow[name] = (
-                shadow_keep.unionByName(tagged)
-                if shadow_keep is not None else tagged
-            )
 
     def _apply_ttl(self, name: str, tbl: DataFrame, ttl_expr: str):
         """Row expiry for ``TTL <expr>``: keep rows whose expiry instant is
@@ -5319,21 +5307,7 @@ class ChSession:
             eargs = self.meta.get(name, {}).get("engine_args") or []
             if len(eargs) >= 2 and eargs[1] in self.tables:
                 return self._insert(eargs[1], block, ", ".join(block.columns))
-        prev_shadow = self._ins_shadow.get(name)
-        if self.parts_dir is not None:
-            self._append_part(name, block)  # the MergeTree parts model
-        else:
-            self._register(name, target.unionByName(block))
-        if self._tracks_insert_order(name) and prev_shadow is not None:
-            # tag the block with its insert generation so FINAL can
-            # collapse by insert order. A None shadow means a mutation
-            # invalidated it — it must STAY invalid: re-seeding from this
-            # block alone would make FINAL silently drop every
-            # pre-mutation row.
-            self._ins_shadow[name] = prev_shadow.unionByName(
-                self._generation(block)
-            )
-        self._fire_mvs(name, block)
+        self._fire_mvs(name, self._append(name, block))
         return None
 
 

@@ -3993,20 +3993,33 @@ def test_r12_probe_batch14_lightweight_update_and_tails(spark, sf_dir):
     ("CollapsingMergeTree(sign)", "k Int64, v Int64, sign Int8",
      "(1, 10, 1), (2, 20, 1)"),
 ])
-def test_mv_over_insert_ordered_final(spark, sf_dir, engine, cols, vals):
+def test_mv_over_insert_ordered_final(
+    spark, sf_dir, tmp_path, engine, cols, vals
+):
     """An MV body reading ``FROM src FINAL`` on an insert-ordered source
     collapses the fired block, like the same MV over
     ``ReplacingMergeTree(ver)`` — it used to read the insert-order shadow
-    frozen at CREATE MATERIALIZED VIEW time and write nothing."""
-    ch = ChSession(spark, sf_dir)
-    ch.execute(f"CREATE TABLE src ({cols}) ENGINE = {engine} ORDER BY k")
-    ch.execute("CREATE TABLE dst (k Int64, v Int64) ENGINE = MergeTree"
-               " ORDER BY k")
-    ch.execute("CREATE MATERIALIZED VIEW mv TO dst AS"
-               " SELECT k, v FROM src FINAL")
-    ch.execute(f"INSERT INTO src VALUES {vals}")
-    assert sorted(tuple(r) for r in ch.execute(
-        "SELECT k, v FROM dst").collect()) == [(1, 10), (2, 20)]
+    frozen at CREATE MATERIALIZED VIEW time and write nothing. It still
+    does after a mutation voided the source's stored order: the block
+    carries its own tags, so the MV never reads the source's stale rows.
+    Both storage modes."""
+    for mode, voided in (
+        ("memory", False), ("memory", True), ("parts", False),
+        ("parts", True),
+    ):
+        parts = str(tmp_path / f"g{voided:d}") if mode == "parts" else None
+        ch = ChSession(spark, sf_dir, parts_dir=parts)
+        ch.execute(f"CREATE TABLE src ({cols}) ENGINE = {engine} ORDER BY k")
+        ch.execute("CREATE TABLE dst (k Int64, v Int64) ENGINE = MergeTree"
+                   " ORDER BY k")
+        ch.execute("CREATE MATERIALIZED VIEW mv TO dst AS"
+                   " SELECT k, v FROM src FINAL")
+        if voided:
+            ch.execute("ALTER TABLE src DELETE WHERE 0")
+        ch.execute(f"INSERT INTO src VALUES {vals}")
+        assert sorted(tuple(r) for r in ch.execute(
+            "SELECT k, v FROM dst").collect()) == [(1, 10), (2, 20)], (
+            mode, voided)
 
 
 _MERGE_ENGINES = [
@@ -4037,16 +4050,19 @@ _MERGE_BLOCKS = st.lists(
     engine=st.sampled_from(_MERGE_ENGINES),
     blocks=_MERGE_BLOCKS,
     part=st.sampled_from([None, 0, 1]),
+    self_insert=st.sampled_from(["1 = 1", "k % 2 = 0", "ver >= 2",
+                                 "sign < 0"]),
 )
 def test_final_read_equals_optimize_final(
-    spark, sf_dir, mode, engine, blocks, part
+    spark, sf_dir, mode, engine, blocks, part, self_insert
 ):
     """``FROM t FINAL`` and ``OPTIMIZE TABLE t [PARTITION p] FINAL`` run
     one merge rule: the optimized partition holds exactly the FINAL rows,
-    and a FINAL read after the merge is unchanged. ``v`` is a function of
-    (k, ver), and Replacing(ver) rows all carry sign 1, so rows that tie
-    on the engine's ordering are identical and the collapse is
-    deterministic."""
+    and a FINAL read after the merge is unchanged — also when the last
+    block was read from the table itself, whose generation the merge
+    retires in parts mode. ``v`` is a function of (k, ver), and
+    Replacing(ver) rows all carry sign 1, so rows that tie on the
+    engine's ordering are identical and the collapse is deterministic."""
     import shutil
     import tempfile
 
@@ -4066,6 +4082,8 @@ def test_final_read_equals_optimize_final(
                 f"({k}, {ver}, {sign if signed else 1}, {k * 10 + ver})"
                 for k, ver, sign in block
             ))
+        ch.execute(f"INSERT INTO mf SELECT k, ver, sign, v FROM mf"
+                   f" WHERE {self_insert}")
 
         def rows(q):
             return sorted(tuple(r) for r in ch.execute(q).collect())
@@ -4081,3 +4099,56 @@ def test_final_read_equals_optimize_final(
     finally:
         if parts:
             shutil.rmtree(parts, ignore_errors=True)
+
+
+@pytest.mark.parametrize("mode", ["memory", "parts"])
+def test_insert_order_is_stored_with_the_rows(spark, sf_dir, mode, tmp_path):
+    """Insert order is stored with the rows, so version-less Replacing and
+    Collapsing FINAL read the same after a self-insert plus OPTIMIZE,
+    after a mutation of the table a block was read from, after MV
+    delivery and after DETACH/ATTACH — in both storage modes."""
+    ch = ChSession(
+        spark, sf_dir, parts_dir=str(tmp_path) if mode == "parts" else None
+    )
+
+    def rows(q):
+        return sorted(tuple(r) for r in ch.execute(q).collect())
+
+    replacing = "(k Int64, v Int64) ENGINE = ReplacingMergeTree ORDER BY k"
+    # (a) OPTIMIZE retires the generation a self-insert block read
+    ch.execute(f"CREATE TABLE a {replacing}")
+    ch.execute("INSERT INTO a VALUES (1, 1), (2, 2)")
+    ch.execute("INSERT INTO a SELECT k, v + 10 FROM a WHERE k = 1")
+    ch.execute("OPTIMIZE TABLE a FINAL")
+    assert rows("SELECT k, v FROM a FINAL") == [(1, 11), (2, 2)]
+    # (b) a mutation rewrites the table an inserted block was read from
+    ch.execute(f"CREATE TABLE b {replacing}")
+    ch.execute("CREATE TABLE s (k Int64, v Int64) ENGINE = MergeTree"
+               " ORDER BY k")
+    ch.execute("INSERT INTO s VALUES (1, 5), (2, 6)")
+    ch.execute("INSERT INTO b SELECT * FROM s")
+    ch.execute("ALTER TABLE s DELETE WHERE k = 2")
+    assert rows("SELECT * FROM b FINAL") == [(1, 5), (2, 6)]
+    # (c) an MV delivers into an insert-ordered target
+    ch.execute("CREATE TABLE c_src (k Int64, v Int64) ENGINE = MergeTree"
+               " ORDER BY k")
+    for i, (engine, cols, sign) in enumerate((
+        ("ReplacingMergeTree", "k Int64, v Int64", ""),
+        ("CollapsingMergeTree(sign)", "k Int64, v Int64, sign Int8",
+         ", toInt8(1) AS sign"),
+    )):
+        ch.execute(f"CREATE TABLE c{i} ({cols}) ENGINE = {engine}"
+                   " ORDER BY k")
+        ch.execute(f"CREATE MATERIALIZED VIEW mv{i} TO c{i} AS"
+                   f" SELECT k, v{sign} FROM c_src")
+    ch.execute("INSERT INTO c_src VALUES (1, 1), (2, 2)")
+    ch.execute("INSERT INTO c_src VALUES (1, 9)")
+    for i in range(2):
+        assert rows(f"SELECT k, v FROM c{i} FINAL") == [(1, 9), (2, 2)]
+    # (d) DETACH/ATTACH keeps the order
+    ch.execute(f"CREATE TABLE d {replacing}")
+    ch.execute("INSERT INTO d VALUES (1, 1)")
+    ch.execute("INSERT INTO d VALUES (1, 2)")
+    ch.execute("DETACH TABLE d")
+    ch.execute("ATTACH TABLE d")
+    assert rows("SELECT k, v FROM d FINAL") == [(1, 2)]

@@ -2,14 +2,18 @@
 
 `ChSession._rewrite_session_final` (``FROM t FINAL``) and
 `ChSession._optimize_final` (``OPTIMIZE FINAL``) both call it, and one
-insert generation is tagged only by `ChSession._generation`. These checks
+insert generation is tagged only by `ChSession._generation`. Insert order
+is stored with the rows and every append goes through `ChSession._append`,
+so no statement keeps a second copy of the order in sync. These checks
 read the module source; they need no Spark session.
 """
 
 from __future__ import annotations
 
+import ast
 import inspect
 import re
+import textwrap
 
 from canal_clickhouse_spark import chsql_ddl
 
@@ -27,3 +31,34 @@ def test_final_and_optimize_hold_no_merge_rule():
         src = inspect.getsource(fn)
         assert "ROW_NUMBER" not in src, fn.__name__
         assert "sum({sign})" not in src, fn.__name__
+
+
+def _calls(fn) -> set[str]:
+    """Names of the methods and functions ``fn`` calls."""
+    tree = ast.parse(textwrap.dedent(inspect.getsource(fn)))
+    return {
+        n.func.attr if isinstance(n.func, ast.Attribute) else n.func.id
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Call)
+        and isinstance(n.func, (ast.Attribute, ast.Name))
+    }
+
+
+def test_insert_order_has_no_second_copy():
+    src = inspect.getsource(chsql_ddl.ChSession)
+    assert not re.search(r"\b_ins_shadow\b", src)
+    assert "createOrReplaceTempView" not in _calls(
+        chsql_ddl.ChSession._rewrite_session_final
+    )
+    assert not {"_generation", "unionByName"} & _calls(
+        chsql_ddl.ChSession._fire_mvs
+    )
+
+
+def test_one_append_path():
+    callers = [
+        name
+        for name, fn in vars(chsql_ddl.ChSession).items()
+        if inspect.isfunction(fn) and "_append_part" in _calls(fn)
+    ]
+    assert callers == ["_append"]
