@@ -1633,6 +1633,19 @@ def test_system_tables(spark, sf_dir):
         # unknown system table refuses loudly
         with pytest.raises(ValueError, match="unsupported system table"):
             ch.execute("SELECT * FROM system.merges")
+        # SHOW lists what the system tables list, database labels included
+        ch.execute("CREATE DATABASE sys_db")
+        ch.execute(
+            "CREATE TABLE sys_db.sys_t (k UInt32) ENGINE = MergeTree"
+            " ORDER BY k"
+        )
+        rows = lambda q: [tuple(r) for r in ch.execute(q).collect()]
+        assert rows("SHOW DATABASES") == rows(
+            "SELECT name FROM system.databases ORDER BY name"
+        )
+        assert rows("SHOW TABLES FROM sys_db") == rows(
+            "SELECT name FROM system.tables WHERE database = 'sys_db'"
+        ) == [("sys_t",)]
 
 
 def test_ddl_r7_statement_surface(spark, sf_dir):
@@ -1761,7 +1774,7 @@ def test_ddl_insert_format_variants(spark, sf_dir):
 def test_exists_statement(spark, sf_dir):
     """``EXISTS [TABLE|VIEW|DICTIONARY|DATABASE] name`` (r8 probe 3) →
     one row, column ``result`` 0/1 — session tables, fixture tables,
-    dictionaries, and the two virtual databases all count."""
+    dictionaries, and the databases SHOW DATABASES lists all count."""
     from canal_clickhouse_spark.chsql_ddl import ChSession
 
     ch = ChSession(spark, sf_dir)
@@ -1776,6 +1789,10 @@ def test_exists_statement(spark, sf_dir):
     assert got("EXISTS DICTIONARY nodict") == 0
     ch.execute("DROP TABLE ex_t")
     assert got("EXISTS TABLE ex_t") == 0
+    # the same catalog SHOW DICTIONARIES / SHOW DATABASES list
+    assert got("EXISTS DICTIONARY nations") == 1
+    ch.execute("CREATE DATABASE exdb")
+    assert got("EXISTS DATABASE exdb") == 1
 
 
 def test_show_filters_and_modify_order_by(spark, sf_dir):
@@ -3428,6 +3445,16 @@ def test_r11_file_tf_and_materialize_ttl(spark, sf_dir, tmp_path):
     assert sess.execute(
         f"SELECT a FROM file('{j}', 'JSONEachRow', 'a UInt32')"
     ).collect()[0].a == 7
+    # CH's CSV doubles a quote inside a quoted field: file() reads it as
+    # INSERT … FROM INFILE does
+    q = tmp_path / "ftf_q.csv"
+    q.write_text('1,"with ""quotes"""\n')
+    via_file = [tuple(r) for r in sess.execute(
+        f"SELECT * FROM file('{q}', 'CSV', 'a UInt32, b String')").collect()]
+    sess.execute("CREATE TABLE ftfq (a UInt32, b String) ENGINE = Memory")
+    sess.execute(f"INSERT INTO ftfq FROM INFILE '{q}' FORMAT CSV")
+    assert via_file == [tuple(r) for r in sess.execute(
+        "SELECT * FROM ftfq").collect()] == [(1, 'with "quotes"')]
     sess.execute("CREATE TABLE mtt (k UInt32, d Date)"
                  " ENGINE = MergeTree ORDER BY k TTL d + INTERVAL 30 DAY")
     sess.execute("INSERT INTO mtt VALUES (1, '2020-01-01'),"
@@ -3835,6 +3862,8 @@ def test_r12_alter_tail_and_show_engines(spark, sf_dir):
     engines = [r.name for r in sess.execute("SHOW ENGINES").collect()]
     assert "Merge" in engines and "MergeTree" in engines
     assert "Kafka" not in engines
+    assert engines == [r.name for r in sess.execute(
+        "SELECT name FROM system.table_engines ORDER BY name").collect()]
     sess.execute("CREATE TABLE dsrc (k Int64, nm String) ENGINE = Memory")
     sess.execute("INSERT INTO dsrc VALUES (1, 'one')")
     sess.execute("CREATE DICTIONARY rdict (k Int64, nm String DEFAULT '?')"
