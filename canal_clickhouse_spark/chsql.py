@@ -111,63 +111,100 @@ from pyspark.sql import DataFrame, SparkSession
 from .catalog import sql as run_sql
 
 
-def _split_args(s: str) -> list[str]:
-    """Split a call's argument string at top-level commas (quote-, escape-
-    and paren-aware)."""
-    args, depth, buf, i, q = [], 0, [], 0, None
-    while i < len(s):
-        c = s[i]
-        if q:
-            buf.append(c)
-            if c == "\\" and i + 1 < len(s):  # backslash-escaped char
-                buf.append(s[i + 1])
-                i += 1
-            elif c == q and (i + 1 >= len(s) or s[i + 1] != q):
-                q = None
-            elif c == q:  # doubled quote inside literal
-                buf.append(s[i + 1])
-                i += 1
-        elif c in "'\"":
-            q = c
-            buf.append(c)
-        elif c in "([":
+# body of a quoted literal: runs of ordinary characters, backslash escapes
+# and doubled quotes (see `_literal_end`)
+_LITERAL_BODY_RE = {
+    q: re.compile(rf"(?:[^{q}\\]+|\\.|{q}{q})*", re.S) for q in "'\""
+}
+_STRUCTURE_RE = re.compile(r"[()\[\],'\"]")
+_QUOTE_RE = re.compile(r"['\"]")
+
+
+def _literal_end(s: str, i: int) -> int:
+    """Index of the quote that closes the literal opened by the quote at
+    ``s[i]``, or ``len(s)`` if it never closes.
+
+    The one statement of ClickHouse's literal rule: a ``'…'`` string (and
+    a ``"…"`` quoted identifier) ends at the first quote of its kind that
+    is neither backslash-escaped (``\\'``) nor doubled (``''``). Every
+    scanner of CH text in this module and in chsql_ddl reads literals
+    through this function; only the raw data block of an ``INSERT …
+    FORMAT`` statement, which is not CH text, is read otherwise
+    (`chsql_ddl.split_statements`)."""
+    j = _LITERAL_BODY_RE[s[i]].match(s, i + 1).end()
+    return j if j < len(s) and s[j] == s[i] else len(s)
+
+
+def _structure(s: str, i: int = 0):
+    """``(index, char)`` of every bracket and comma of ``s`` from ``i`` on
+    that lies outside a literal (`_literal_end`)."""
+    while (m := _STRUCTURE_RE.search(s, i)) is not None:
+        i = m.start()
+        if s[i] in "'\"":
+            i = _literal_end(s, i)
+        else:
+            yield i, s[i]
+        i += 1
+
+
+def _scan_group(s: str, start: int) -> int:
+    """Index of the ``)``/``]`` closing the ``(``/``[`` at ``s[start]``
+    (``()`` and ``[]`` nest together, literals skipped); ``len(s)`` if the
+    group never closes."""
+    depth = 0
+    for i, c in _structure(s, start):
+        if c in "([":
             depth += 1
-            buf.append(c)
         elif c in ")]":
             depth -= 1
-            buf.append(c)
-        elif c == "," and depth == 0:
-            args.append("".join(buf).strip())
-            buf = []
-        else:
-            buf.append(c)
-        i += 1
-    if buf:
-        args.append("".join(buf).strip())
+            if depth == 0:
+                return i
+    return len(s)
+
+
+def _open_of(masked: str, j: int) -> int:
+    """Index of the ``(``/``[`` opening the group that ``masked[j]``
+    closes, scanning a literal-masked string leftwards; -1 if none."""
+    depth = 0
+    for i in range(j, -1, -1):
+        if masked[i] in ")]":
+            depth += 1
+        elif masked[i] in "([":
+            depth -= 1
+            if depth == 0:
+                return i
+    return -1
+
+
+def _split_args(s: str) -> list[str]:
+    """Split a call's argument string at top-level commas (bracket-aware,
+    literals per `_literal_end`); each piece comes back stripped."""
+    args, depth, start = [], 0, 0
+    for i, c in _structure(s):
+        if c in "([":
+            depth += 1
+        elif c in ")]":
+            depth -= 1
+        elif depth == 0:
+            args.append(s[start:i].strip())
+            start = i + 1
+    if s[start:]:
+        args.append(s[start:].strip())
     return args
 
 
 def _paren_balanced(s: str) -> bool:
     """True if every paren/bracket in ``s`` closes one opened WITHIN ``s``
-    (quote-aware): the test that an outer ``( … )`` pair actually encloses
-    the whole expression — `(a, b)` yes, `(a) IN (b)` no."""
-    depth, i, q = 0, 0, None
-    while i < len(s):
-        c = s[i]
-        if q:
-            if c == "\\":
-                i += 1
-            elif c == q:
-                q = None
-        elif c in "'\"":
-            q = c
-        elif c in "([":
+    (literal-aware): the test that an outer ``( … )`` pair actually
+    encloses the whole expression — `(a, b)` yes, `(a) IN (b)` no."""
+    depth = 0
+    for _, c in _structure(s):
+        if c in "([":
             depth += 1
         elif c in ")]":
             depth -= 1
             if depth < 0:
                 return False
-        i += 1
     return depth == 0
 
 
@@ -252,38 +289,21 @@ def _tuple_literal_elems(s: str) -> list[str] | None:
 
 def _mask_literals(q: str) -> str:
     """Length-preserving mask of string literals: every character BETWEEN
-    the quotes of a single- or double-quoted literal becomes ``\\x01``
-    (quote chars stay), so clause/keyword regexes can never match inside a
-    literal while every span found on the masked text maps 1:1 onto the
-    original. Handles both the doubled-quote (``''``) and backslash escape
-    conventions, same as `_split_args`. This is the structural fix for the
-    r5-verdict bug class: PREWHERE/WITH TOTALS/ARRAY JOIN/... rewrites were
-    applied to the raw text and silently corrupted literals containing
-    clause keywords.
+    the quotes of a single- or double-quoted literal (`_literal_end`)
+    becomes ``\\x01`` (quote chars stay), so clause/keyword regexes can
+    never match inside a literal while every span found on the masked
+    text maps 1:1 onto the original. This is the structural fix for the
+    r5-verdict bug class: PREWHERE/WITH TOTALS/ARRAY JOIN/... rewrites
+    were applied to the raw text and silently corrupted literals
+    containing clause keywords.
     """
-    out = list(q)
-    i, n = 0, len(q)
-    while i < n:
-        c = q[i]
-        if c in "'\"":
-            quote = c
-            i += 1
-            while i < n:
-                if q[i] == "\\" and i + 1 < n:
-                    out[i] = "\x01"
-                    out[i + 1] = "\x01"
-                    i += 2
-                    continue
-                if q[i] == quote:
-                    if i + 1 < n and q[i + 1] == quote:  # doubled quote
-                        out[i] = "\x01"
-                        out[i + 1] = "\x01"
-                        i += 2
-                        continue
-                    break  # closing quote — leave it unmasked
-                out[i] = "\x01"
-                i += 1
-        i += 1
+    out, i = [], 0
+    while (m := _QUOTE_RE.search(q, i)) is not None:
+        start = m.start()
+        end = _literal_end(q, start)
+        out += (q[i : start + 1], "\x01" * (end - start - 1), q[end : end + 1])
+        i = end + 1
+    out.append(q[i:])
     return "".join(out)
 
 
@@ -1358,17 +1378,8 @@ def _cond(c: str) -> str:
         return c
     masked = _mask_literals(c)
     # strip a redundant FULL outer paren pair (recurse inside, keep parens)
-    if c.startswith("("):
-        depth = 0
-        for i, ch in enumerate(masked):
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0:
-                    if i == len(masked) - 1:
-                        return f"({_cond(c[1:i])})"
-                    break
+    if c.startswith("(") and _scan_group(masked, 0) == len(c) - 1:
+        return f"({_cond(c[1:-1])})"
     for op in ("OR", "AND"):
         parts = _split_bool_parts(c, masked, op)
         if len(parts) > 1:
@@ -1388,17 +1399,7 @@ def _cond(c: str) -> str:
         # wrap included — is already boolean. Required by the re-scanning
         # truthy-predicate loop (r10 ADVICE nested-span fix), which
         # re-feeds previously wrapped clauses through _cond.
-        masked = _mask_literals(c)
-        i0, depth, close = masked.index("("), 0, -1
-        for i in range(i0, len(masked)):
-            if masked[i] == "(":
-                depth += 1
-            elif masked[i] == ")":
-                depth -= 1
-                if depth == 0:
-                    close = i
-                    break
-        if close == len(masked) - 1 and re.search(
+        if _scan_group(masked, masked.index("(")) == len(c) - 1 and re.search(
             r"(?is)\bAS\s+BOOLEAN\s*\)\s*$", masked
         ):
             return c
@@ -5856,21 +5857,10 @@ _TABLE_COLS: dict[str, tuple[str, ...]] = {
 
 
 def _close_paren(s: str, i: int) -> int:
-    """Index of the ')' matching the '(' at ``s[i]`` (quote-aware)."""
-    depth, q = 0, None
-    for j in range(i, len(s)):
-        c = s[j]
-        if q:
-            if c == q:
-                q = None
-        elif c in "'\"":
-            q = c
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-            if depth == 0:
-                return j
+    """`_scan_group` that raises when the group never closes."""
+    j = _scan_group(s, i)
+    if j < len(s):
+        return j
     raise ValueError(f"unbalanced parens from offset {i} in: {s!r}")
 
 
@@ -5986,6 +5976,9 @@ def _subst_ident(text: str, ident: str, repl: str) -> str:
     return "".join(parts)
 
 
+_WITH_LIST_TOKEN_RE = re.compile(r"(?i)[()]|\bSELECT\b")
+
+
 def _rewrite_scalar_with(q: str) -> str:
     """CH scalar WITH: ``WITH <expr> AS <ident>, ...`` binds names to
     expressions (constants, or ``(SELECT ...)`` scalar subqueries) usable
@@ -6004,23 +5997,15 @@ def _rewrite_scalar_with(q: str) -> str:
         return q
     # End of the WITH list = first top-level SELECT (CTE bodies are inside
     # parens, so depth guards them).
-    depth, lit, end = 0, None, None
-    i = m.end()
-    while i < len(q):
-        c = q[i]
-        if lit:
-            if c == lit:
-                lit = None
-        elif c in "'\"":
-            lit = c
-        elif c == "(":
+    masked, depth, end = _mask_literals(q), 0, None
+    for t in _WITH_LIST_TOKEN_RE.finditer(masked, m.end()):
+        if t[0] == "(":
             depth += 1
-        elif c == ")":
+        elif t[0] == ")":
             depth -= 1
-        elif depth == 0 and q[i : i + 6].upper() == "SELECT":
-            end = i
+        elif depth == 0:
+            end = t.start()
             break
-        i += 1
     if end is None:
         return q
     items = _split_args(q[m.end() : end])
@@ -6622,10 +6607,10 @@ def _parse_tf_schema(arg: str, fn: str) -> list[tuple[str, str]]:
             f"{fn}: first argument must be a quoted structure literal"
             f" like 'a Int32, b String', got {arg!r}"
         )
-    from .chsql_ddl import _split_top_commas, ch_type_to_spark
+    from .chsql_ddl import ch_type_to_spark
 
     cols = []
-    for item in _split_top_commas(m.group(1)):
+    for item in _split_args(m.group(1)):
         cm = re.match(r"^\s*(\w+)\s+(.+?)\s*$", item, re.DOTALL)
         if not cm:
             raise ValueError(f"{fn}: bad structure item {item!r}")
@@ -8059,17 +8044,9 @@ def _rewrite_truthy_select_items(q: str) -> str:
             if any(len(_split_bool_parts(e, em_, op)) > 1
                    for op in ("AND", "OR")):
                 return True
-            if e.startswith("("):  # fully parenthesized item — look inside
-                depth = 0
-                for i, ch in enumerate(em_):
-                    if ch == "(":
-                        depth += 1
-                    elif ch == ")":
-                        depth -= 1
-                        if depth == 0:
-                            return (i == len(em_) - 1
-                                    and _has_bare_logic(e[1:i]))
-            return False
+            # fully parenthesized item — look inside
+            return (e.startswith("(") and _scan_group(em_, 0) == len(e) - 1
+                    and _has_bare_logic(e[1:-1]))
 
         if _has_bare_logic(expr):
             w = _cond(expr)
@@ -8108,17 +8085,7 @@ def _rewrite_truthy_predicates(q: str) -> str:
                     end = e.start()
                     break
             # subquery clauses clip at the paren closing their scope
-            depth, i = d0, start
-            while i < end:
-                c = masked[i]
-                if c == "(":
-                    depth += 1
-                elif c == ")":
-                    depth -= 1
-                    if depth < d0:
-                        end = i
-                        break
-                i += 1
+            end = _clip_unbalanced(masked, start, end)
             pred = q[start:end].strip()
             wrapped = _cond(pred)
             if wrapped != pred:
@@ -8179,16 +8146,8 @@ def _rewrite_in_collections(q: str) -> str:
             return q
         opener_at = m.end() - 1
         if masked[opener_at] == "[":
-            depth, j = 0, opener_at
-            while j < len(masked):
-                if masked[j] == "[":
-                    depth += 1
-                elif masked[j] == "]":
-                    depth -= 1
-                    if depth == 0:
-                        break
-                j += 1
-            if depth != 0:
+            j = _scan_group(masked, opener_at)
+            if j == len(q):
                 return q  # unbalanced — leave for the engine's own error
             q = (
                 q[: m.start()] + m.group(1) + " ("
@@ -8962,17 +8921,7 @@ def _rewrite_dollar_strings(q: str) -> str:
     while i < n:
         c = q[i]
         if c in "'\"":
-            j = i + 1
-            while j < n:
-                if q[j] == "\\" and j + 1 < n:
-                    j += 2
-                    continue
-                if q[j] == c:
-                    if j + 1 < n and q[j + 1] == c:
-                        j += 2
-                        continue
-                    break
-                j += 1
+            j = _literal_end(q, i)
             out.append(q[i: j + 1])
             i = j + 1
             continue
@@ -9160,15 +9109,7 @@ def _rewrite_float_keywords(q: str) -> str:
            "firstvalue", "lastvalue"}
     edits = []
     for m in re.finditer(r"(?i)\)\s*(RESPECT|IGNORE)\s+NULLS\b", masked):
-        depth, i = 0, m.start()
-        while i >= 0:
-            if masked[i] == ")":
-                depth += 1
-            elif masked[i] == "(":
-                depth -= 1
-                if depth == 0:
-                    break
-            i -= 1
+        i = _open_of(masked, m.start())
         if i <= 0:
             continue
         idm = re.search(r"(\w+)\s*$", masked[:i])
@@ -9231,30 +9172,6 @@ def _rewrite_datetime_int_arith(q: str) -> str:
     return q
 
 
-def _scan_group(s: str, start: int) -> int:
-    """Index of the ')' matching the '(' at ``s[start]`` (quote/escape
-    aware); returns len(s) if unbalanced."""
-    depth, m, q = 1, start + 1, None
-    n = len(s)
-    while m < n and depth:
-        ch = s[m]
-        if q:
-            if ch == "\\":  # backslash-escaped char
-                m += 1
-            elif ch == q:
-                q = None
-        elif ch in "'\"":
-            q = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                break
-        m += 1
-    return m
-
-
 # SQL keywords that can legitimately precede a parenthesized group without
 # being a function call — exempt from the unknown-double-call guard so a
 # `VALUES (...) (...)`-shaped text can never false-positive.
@@ -9290,15 +9207,7 @@ def _rewrite_tuple_in(q: str) -> str:
         for m in re.finditer(r"\)\s*(?:NOT\s+)?IN\s*\(", masked,
                              re.IGNORECASE):
             close = m.start()
-            depth, i = 0, close
-            while i >= 0:
-                if masked[i] == ")":
-                    depth += 1
-                elif masked[i] == "(":
-                    depth -= 1
-                    if depth == 0:
-                        break
-                i -= 1
+            i = _open_of(masked, close)
             if i < 0:
                 continue
             lead = masked[:i].rstrip()
@@ -9525,34 +9434,6 @@ def _rewrite_select_alias_macros(q: str) -> str:
     return q
 
 
-def _scan_bracket(s: str, start: int) -> int | None:
-    """Index of the ``]`` matching the ``[`` at ``start`` (quote-aware)."""
-    depth, i, n = 0, start, len(s)
-    while i < n:
-        c = s[i]
-        if c in "'\"":
-            quote = c
-            i += 1
-            while i < n:
-                if s[i] == "\\" and i + 1 < n:
-                    i += 2
-                    continue
-                if s[i] == quote:
-                    if i + 1 < n and s[i + 1] == quote:
-                        i += 2
-                        continue
-                    break
-                i += 1
-        elif c == "[":
-            depth += 1
-        elif c == "]":
-            depth -= 1
-            if depth == 0:
-                return i
-        i += 1
-    return None
-
-
 def _subscript_base_start(acc: str) -> int | None:
     """Start index (in ``acc``) of the expression a trailing subscript
     binds to: a possibly-qualified identifier/backtick chain, or a
@@ -9566,19 +9447,8 @@ def _subscript_base_start(acc: str) -> int | None:
         return None
     c = masked[i - 1]
     if c in ")]":
-        close, open_ = (")", "(") if c == ")" else ("]", "[")
-        depth = 0
-        while i > 0:
-            ch = masked[i - 1]
-            if ch == close:
-                depth += 1
-            elif ch == open_:
-                depth -= 1
-                if depth == 0:
-                    i -= 1
-                    break
-            i -= 1
-        if depth != 0:
+        i = _open_of(masked, i - 1)
+        if i < 0:
             return None
         while i > 0 and (masked[i - 1].isalnum() or masked[i - 1] in "_."):
             i -= 1
@@ -9631,8 +9501,8 @@ def _translate_fns(ch_query: str) -> str:
                 # colN convention (r10 continuation probe:
                 # `array((1,2),(3,2))` used to pass through and die in
                 # Spark's parser).
-                j = _scan_bracket(ch_query, i)
-                if j is not None:
+                j = _scan_group(ch_query, i)
+                if j < n:
                     elems = _split_args(ch_query[i + 1 : j])
                     tups = [_tuple_literal_elems(e) for e in elems]
                     if elems and all(t is not None for t in tups):
@@ -9657,8 +9527,8 @@ def _translate_fns(ch_query: str) -> str:
             # missing key (CH returns the type default — documented
             # divergence, same class as arrayShift's NULL fill).
             base_start = _subscript_base_start(acc)
-            j = _scan_bracket(ch_query, i)
-            if base_start is None or j is None:
+            j = _scan_group(ch_query, i)
+            if base_start is None or j == n:
                 bstack.append(False)  # unparseable: copy through verbatim
                 out.append("[")
                 i += 1
@@ -9674,18 +9544,8 @@ def _translate_fns(ch_query: str) -> str:
             out.append(")" if bstack and bstack.pop() else "]")
             i += 1
             continue
-        if c in "'\"":  # copy string literal wholesale (handles \' and '')
-            j = i + 1
-            while j < n:
-                if ch_query[j] == "\\" and j + 1 < n:
-                    j += 2
-                    continue
-                if ch_query[j] == c:
-                    if j + 1 < n and ch_query[j + 1] == c:
-                        j += 2
-                        continue
-                    break
-                j += 1
+        if c in "'\"":  # copy string literal wholesale
+            j = _literal_end(ch_query, i)
             out.append(ch_query[i : j + 1])
             i = j + 1
             continue

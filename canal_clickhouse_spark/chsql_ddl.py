@@ -49,7 +49,25 @@ from pyspark.sql import functions as F  # noqa: F401  (re-exported for users)
 
 from . import parts
 from .catalog import forget_view, register_views
-from .chsql import translate
+from .chsql import (
+    _CH_DICTS,
+    _CH_NAMES,
+    _CH_UDFS,
+    _RENAME,
+    _SESSION_TABLE_COLS,
+    _guard_result_settings,
+    _lit_sub,
+    _literal_end,
+    _mask_literals,
+    _paren_depth_at,
+    _rewrite_double_quoted_idents,
+    _scan_group,
+    _split_args,
+    drop_ch_function,
+    register_ch_dict,
+    register_ch_function,
+    translate,
+)
 from .registry import query
 from .session import tune
 
@@ -294,6 +312,14 @@ def spark_type_to_ch(spark_type: str) -> str:
 # from `SHOW CREATE TABLE` dumps carry CODEC/column-TTL/COMMENT after the
 # type). Keywords recognized at paren/quote depth 0 only, so a DEFAULT
 # expression like `concat('TTL ', x)` can never be split on its literal.
+# r8 advice: '_' is part of an identifier — without the lookbehind,
+# `DEFAULT base_default + 1` split at the embedded "default" and silently
+# mangled the expression.
+_COL_DECOR_RE = re.compile(
+    r"(?i)(?<!\w)(default|materialized|alias|codec|ttl|comment|ephemeral)\b"
+)
+
+
 def parse_col_def(item: str) -> tuple[str, str, str | None, str, bool]:
     """One CREATE TABLE column item →
     ``(name, spark_type, default_expr, ch_type, is_ephemeral)``.
@@ -320,39 +346,14 @@ def parse_col_def(item: str) -> tuple[str, str, str | None, str, bool]:
         raise ValueError(f"unparseable column def: {item!r}")
     name = cm.group("bq") or cm.group("plain")
     rest = cm.group("rest")
-    # split `rest` on depth-0 decoration keywords
-    segs: list[tuple[str, int]] = []  # (keyword, char offset of keyword)
-    depth, i, in_str = 0, 0, False
-    while i < len(rest):
-        ch = rest[i]
-        if in_str:
-            if ch == "'":
-                if i + 1 < len(rest) and rest[i + 1] == "'":
-                    i += 1
-                else:
-                    in_str = False
-        elif ch == "'":
-            in_str = True
-        elif ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        elif depth == 0 and (
-            i == 0 or not (rest[i - 1].isalnum() or rest[i - 1] == "_")
-        ):
-            # r8 advice: '_' is part of an identifier — without it,
-            # `DEFAULT base_default + 1` split at the embedded "default"
-            # and silently mangled the expression.
-            m = re.match(
-                r"(?i)(default|materialized|alias|codec|ttl|comment"
-                r"|ephemeral)\b",
-                rest[i:],
-            )
-            if m:
-                segs.append((m.group(1).lower(), i))
-                i += len(m.group(1))
-                continue
-        i += 1
+    # split `rest` on depth-0 decoration keywords, (keyword, char offset)
+    masked = _mask_literals(rest)
+    depths = _depths(masked)
+    segs = [
+        (m.group(1).lower(), m.start())
+        for m in _COL_DECOR_RE.finditer(masked)
+        if depths[m.start()] == 0
+    ]
     bounds = [off for _, off in segs] + [len(rest)]
     ch_type = rest[: bounds[0]].strip()
     if not ch_type:
@@ -382,8 +383,6 @@ def _readonly_decor_kw(item: str) -> str | None:
     advice: a whole-item word scan made a column literally named `alias`,
     or a ``DEFAULT alias`` expression referencing one, silently readonly
     — excluded from SELECT * and positional INSERT)."""
-    from .chsql import _mask_literals
-
     masked = _mask_literals(item)
     nm = re.match(r"(?s)^\s*(?:`[^`]+`|\w+)", masked)
     if not nm:
@@ -425,8 +424,6 @@ def parse_create_body(cols_text: str) -> tuple[
     (the trailer spelling's metadata twin). EPHEMERAL columns land in
     ``extras['ephemeral']`` with their Spark type + translated fill
     expression — never in the stored schema."""
-    from .chsql import translate
-
     cols: list[str] = []
     defaults: dict[str, str] = {}
     nullable: set[str] = set()
@@ -526,21 +523,28 @@ def split_statements(script: str) -> list[str]:
     (r5 advice: the old regex pre-pass ran BEFORE literal tracking and
     silently truncated ``SELECT 'a--b'`` and inline INSERT FORMAT payloads
     containing ``--``). Inside a string literal, or inside the raw data
-    block of an ``INSERT ... FORMAT`` statement, ``--`` is data."""
-    parts, buf, lit = [], [], None
+    block of an ``INSERT ... FORMAT`` statement, ``--`` is data.
+
+    Literals end per `chsql._literal_end`, except inside that raw data
+    block: CSV/TSV rows are not CH SQL and have no backslash escape, so
+    there a quote closes at the next quote of its kind."""
+    parts, buf = [], []
+    # raw: this statement's buf matched _RAW_DATA_PREFIX_RE; quoted: buf
+    # holds a quote, so that prefix (which has none) can no longer match
+    raw = quoted = False
     i, n = 0, len(script)
     while i < n:
         ch = script[i]
-        if lit:
-            buf.append(ch)
-            if ch == lit:
-                lit = None
-            i += 1
-            continue
+        if not (raw or quoted) and (
+            ch in "'\"" or script.startswith("--", i)
+        ):
+            raw = _RAW_DATA_PREFIX_RE.match("".join(buf)) is not None
         if ch in "'\"":
-            lit = ch
-            buf.append(ch)
-            i += 1
+            quoted = True
+            end = script.find(ch, i + 1) if raw else _literal_end(script, i)
+            end = n if end < 0 else end
+            buf.append(script[i : end + 1])
+            i = end + 1
             continue
         if ch == "$":
             # dollar-quoted literal ($$…$$ / $tag$…$tag$, r10 verdict
@@ -553,18 +557,13 @@ def split_statements(script: str) -> list[str]:
                     buf.append(script[i: end + len(tag)])
                     i = end + len(tag)
                     continue
-        if (
-            ch == "-"
-            and i + 1 < n
-            and script[i + 1] == "-"
-            and not _RAW_DATA_PREFIX_RE.match("".join(buf))
-        ):
+        if not raw and script.startswith("--", i):
             while i < n and script[i] != "\n":
                 i += 1
             continue  # the newline itself is kept as statement whitespace
         if ch == ";":
             parts.append("".join(buf))
-            buf = []
+            buf, raw, quoted = [], False, False
             i += 1
             continue
         buf.append(ch)
@@ -630,8 +629,6 @@ def _parse_storage_trailer(text: str, what: str = "CREATE TABLE") -> dict:
     partition / order / ttl / primary_key / sample_by / settings /
     comment (None where absent). Raises on unknown leading text or a
     duplicated clause — never silently mis-scopes."""
-    from .chsql import _mask_literals
-
     out = {
         "engine": None, "eargs": None, "partition": None, "order": None,
         "ttl": None, "primary_key": None, "sample_by": None,
@@ -791,8 +788,6 @@ def _parse_create_table_stmt(s: str):
     optional top-level ``AS SELECT``. Returns None when the statement is
     not this form (e.g. the ``CREATE TABLE t AS other_table`` clone,
     handled by its own rule)."""
-    from .chsql import _mask_literals
-
     m = _CT_HEAD_RE.match(s)
     if not m:
         return None
@@ -800,17 +795,8 @@ def _parse_create_table_stmt(s: str):
     rest = m.group("rest").strip()
     cols = None
     if rest.startswith("("):
-        masked = _mask_literals(rest)
-        depth, endp = 0, -1
-        for i, ch in enumerate(masked):
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0:
-                    endp = i
-                    break
-        if endp < 0:
+        endp = _scan_group(rest, 0)
+        if endp == len(rest):
             raise ValueError(
                 f"CREATE TABLE {d['name']}: unbalanced parentheses in"
                 " column list"
@@ -1061,8 +1047,6 @@ def _tupleize_values(payload: str) -> str:
     tuple ONLY when it holds a top-level comma (r10 ADVICE): CH reads
     1-element parens as plain arithmetic grouping — ``((1+2)*3)`` and
     ``-(2+3)`` — exactly like ClickHouse itself, so those stay parens."""
-    from .chsql import _mask_literals
-
     masked = _mask_literals(payload)
     out: list[str] = []
     depth = 0
@@ -1073,18 +1057,10 @@ def _tupleize_values(payload: str) -> str:
                 last.isalnum() or last in "_.)'\""
             ):
                 # tuple iff the group has a comma at ITS top level
-                d, has_comma = 1, False
-                for ch2 in masked[i + 1:]:
-                    if ch2 == "(":
-                        d += 1
-                    elif ch2 == ")":
-                        d -= 1
-                        if d == 0:
-                            break
-                    elif ch2 == "," and d == 1:
-                        has_comma = True
-                        break
-                out.append("tuple(" if has_comma else payload[i])
+                # (a trailing one included: `(x,)` is a 1-tuple)
+                group = masked[i + 1 : _scan_group(masked, i)]
+                tup = len(_split_args(group)) > 1 or group.rstrip()[-1:] == ","
+                out.append("tuple(" if tup else payload[i])
             else:
                 out.append(payload[i])
             depth += 1
@@ -1428,10 +1404,10 @@ def _ch_declared_nullable(ch_type: str) -> bool:
 def _split_spark_type_commas(text: str) -> list[str]:
     """Split a Spark dtype body on top-level commas — ANGLE-bracket-aware
     (r8 advice: `struct<a: int, b: struct<c: int, d: int>>` nests via
-    `<>`, which the paren-only `_split_top_commas` split mid-type, so one
-    nested-container column broke every system.columns query and SHOW
-    CREATE TABLE for its table). Spark dtype strings contain no string
-    literals; parens appear only in decimal(p, s)."""
+    `<>`, which `_split_top_commas` does not count, so one nested-container
+    column broke every system.columns query and SHOW CREATE TABLE for its
+    table). Spark dtype strings contain no string literals; parens appear
+    only in decimal(p, s)."""
     out, buf, depth = [], [], 0
     for ch in text:
         if ch in "<(":
@@ -1448,29 +1424,8 @@ def _split_spark_type_commas(text: str) -> list[str]:
 
 
 def _split_top_commas(text: str) -> list[str]:
-    """Split on top-level commas (paren- and quote-aware)."""
-    out, buf, depth, lit = [], [], 0, None
-    for ch in text:
-        if lit:
-            buf.append(ch)
-            if ch == lit:
-                lit = None
-            continue
-        if ch in "'\"":
-            lit = ch
-            buf.append(ch)
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            out.append("".join(buf))
-            buf = []
-            continue
-        buf.append(ch)
-    out.append("".join(buf))
-    return [p.strip() for p in out if p.strip()]
+    """`_split_args` without the empty pieces."""
+    return [p for p in _split_args(text) if p]
 
 
 class ChSession:
@@ -1698,8 +1653,6 @@ class ChSession:
         Only dictionaries this session registered are touched — the
         translator's registry is global like CH's, and other tenants'
         entries are not ours to mutate."""
-        from .chsql import _CH_DICTS
-
         for dname in list(self.dicts):
             d = _CH_DICTS.get(dname)
             if d is None:
@@ -1718,8 +1671,6 @@ class ChSession:
         """Unregister every dictionary this session created from the
         translator's process-global registry so later sessions don't
         inherit bindings onto tables that no longer exist."""
-        from .chsql import _CH_DICTS
-
         for dname in list(self.dicts):
             _CH_DICTS.pop(dname, None)
         self.dicts.clear()
@@ -1740,8 +1691,6 @@ class ChSession:
         # modifiers (* APPLY/REPLACE, COLUMNS('re')) expand against
         # session DDL like they do against fixtures (r12 probe);
         # readonly (MATERIALIZED/ALIAS) columns never join a star
-        from .chsql import _SESSION_TABLE_COLS
-
         _SESSION_TABLE_COLS.clear()
         for t, df in self.tables.items():
             ro = (self.meta.get(t) or {}).get("readonly_cols") or ()
@@ -1759,8 +1708,6 @@ class ChSession:
         if mode in ("ALL", "DISTINCT") and not re.search(
             r"(?i)\bunion_default_mode\b", s
         ):
-            from .chsql import _lit_sub
-
             s = _lit_sub(
                 re.compile(r"(?i)\bUNION\b(?!\s+(?:ALL|DISTINCT)\b)"),
                 f"UNION {mode}", s,
@@ -1779,7 +1726,6 @@ class ChSession:
         timestamp in one referenced table but a different type in another
         are dropped — the textual rewrite must never retype an integer."""
         from .catalog import TABLES
-        from .chsql import _mask_literals
 
         masked = _mask_literals(s)
         words = {w.lower() for w in re.findall(r"\w+", masked)}
@@ -1822,8 +1768,6 @@ class ChSession:
         cols = self._dt_cols_in_scope(s)
         if not cols:
             return s
-        from .chsql import _mask_literals
-
         names = "|".join(sorted(map(re.escape, cols)))
         # col ± int  (qualified or bare column, whole literal
         # multiplicative chain — same grouping rule as the translator's
@@ -1896,8 +1840,6 @@ class ChSession:
         columns never expand from a star)."""
         if not re.search(r"(?i)\bmerge\s*\(", s):
             return s
-        from .chsql import _mask_literals, _scan_group, _split_args
-
         for _ in range(8):
             masked = _mask_literals(s)
             hit = None
@@ -2049,8 +1991,6 @@ class ChSession:
         whose body carries ``{p:Type}`` placeholders, r8): substitute the
         call's bindings into the stored definition and inline it as a
         named subquery."""
-        from .chsql import _mask_literals, _scan_group, _split_args
-
         for _ in range(8):
             masked = _mask_literals(s)
             hit = None
@@ -2105,8 +2045,6 @@ class ChSession:
 
         if not re.search(r"(?i)\bfile\s*\(", s):
             return s
-        from .chsql import _mask_literals, _scan_group, _split_args
-
         for _ in range(8):
             masked = _mask_literals(s)
             hit = None
@@ -2184,8 +2122,6 @@ class ChSession:
         bare spellings; unknown tables keep the guided translator error."""
         if not re.search(r"(?i)\bjoinGet(?:OrNull)?\s*\(", s):
             return s
-        from .chsql import _mask_literals, _scan_group, _split_args
-
         for _ in range(16):
             masked = _mask_literals(s)
             m = re.search(r"(?i)\bjoinGet(OrNull)?\s*\(", masked)
@@ -2271,8 +2207,6 @@ class ChSession:
         }
         if not ro:
             return s
-        from .chsql import _mask_literals
-
         def _star_sub(pattern: str, tbl_group: int) -> str:
             nonlocal s
             masked = _mask_literals(s)
@@ -2346,8 +2280,6 @@ class ChSession:
         JSON text (numbers as their digits, strings unquoted — matching
         CH's Dynamic display form); only columns DECLARED with a JSON-family
         type in THIS session rewrite, so structs/maps keep native access."""
-        from .chsql import _mask_literals
-
         cols = {
             c
             for t, meta in self.meta.items()
@@ -2388,8 +2320,6 @@ class ChSession:
         temp view, and rewrite the dotted name to the view name (Spark
         temp views have no database qualifier). String literals are never
         rewritten."""
-        from .chsql import _mask_literals
-
         masked = _mask_literals(s)
         hits = {
             m.group(1).lower()
@@ -2417,8 +2347,6 @@ class ChSession:
         """The catalog listing ``system.<which>``: SHOW and EXISTS read it."""
         from .catalog import TABLES as FIXTURES
         from .catalog import table as fixture_table
-        from .chsql import _CH_DICTS
-
         def all_tables():
             for n in sorted(set(self.tables) | set(FIXTURES)):
                 if n in self.tables:
@@ -2436,8 +2364,6 @@ class ChSession:
             # the translator's recognized-name surface: every gate name,
             # with alias_to filled for the straight renames (r9 — CH
             # clients list system.functions to feature-probe a server)
-            from .chsql import _CH_NAMES, _CH_UDFS, _RENAME
-
             names = dict.fromkeys(_CH_UDFS, "")
             names.update((n, _RENAME.get(n, "")) for n in _CH_NAMES)
             rows = sorted(names.items())
@@ -2617,8 +2543,6 @@ class ChSession:
         call argument, python values quoted as needed) and splice as
         ``CAST(value AS type)`` — except ``{n:Identifier}``, which splices
         the bare name (CH's table/column-name parameter)."""
-        from .chsql import _mask_literals
-
         vals = dict(self.params)
         vals.update(extra or {})  # values are SQL text (caller quotes)
         masked = _mask_literals(s)
@@ -2728,8 +2652,6 @@ class ChSession:
         if '"' in s and "$" not in s and not re.match(
             r"(?is)^\s*INSERT\b.*\bFORMAT\s+\w+", s
         ):
-            from .chsql import _rewrite_double_quoted_idents
-
             s = _rewrite_double_quoted_idents(s)
         # REPLACE TABLE t … is CH's spelling of CREATE OR REPLACE TABLE
         s = re.sub(
@@ -2765,8 +2687,6 @@ class ChSession:
             r"(?is)^\s*(CREATE|ALTER|DROP|RENAME|EXCHANGE|TRUNCATE|"
             r"OPTIMIZE|DETACH|ATTACH|KILL|SYSTEM|DELETE)\b", s
         ):
-            from .chsql import _mask_literals
-
             # ON CLUSTER <id> — production dumps carry it on nearly every
             # DDL statement; this engine IS the whole "cluster" (one
             # namespace, Spark distributes the data), so the clause strips
@@ -2828,8 +2748,6 @@ class ChSession:
             r"(?P<lam>.+)$", s,
         )
         if m:
-            from .chsql import _CH_UDFS, register_ch_function
-
             name = m.group("name")
             if m.group("ifne") and name.lower() in _CH_UDFS:
                 return None
@@ -2857,8 +2775,6 @@ class ChSession:
             r"(?P<name>\w+)\s*$", s,
         )
         if m:
-            from .chsql import drop_ch_function
-
             drop_ch_function(m.group("name"), if_exists=bool(m.group("ife")))
             return None
 
@@ -2866,8 +2782,6 @@ class ChSession:
             r"(?is)^\s*SHOW\s+CREATE\s+FUNCTION\s+(?P<name>\w+)\s*$", s
         )
         if m:
-            from .chsql import _CH_UDFS
-
             meta = _CH_UDFS.get(m.group("name").lower())
             if meta is None:
                 raise ValueError(
@@ -3213,11 +3127,9 @@ class ChSession:
         # bindings scope to the SELECT either way (r11 probe).
         wm_ = re.match(r"(?is)^\s*(WITH\s+.+?)\s+(INSERT\s+INTO\s+.+)$", s)
         if wm_ and "SELECT" in wm_.group(2).upper():
-            from .chsql import _mask_literals as _ml
-            from .chsql import _paren_depth_at as _pda
             if not re.search(
-                r"(?i)\bINSERT\b", _ml(wm_.group(1)) + " "
-            ) and _pda(_ml(s), wm_.end(1)) == 0:
+                r"(?i)\bINSERT\b", _mask_literals(wm_.group(1)) + " "
+            ) and _paren_depth_at(_mask_literals(s), wm_.end(1)) == 0:
                 im_ = re.match(
                     r"(?is)^(INSERT\s+INTO\s+\w+\s*(?:\([\w.,`\s]+\)\s*)?)"
                     r"(SELECT\b.*)$", wm_.group(2))
@@ -3272,8 +3184,6 @@ class ChSession:
 
         m = _CREATE_DICT_RE.match(s)
         if m:
-            from .chsql import _CH_DICTS, register_ch_dict
-
             name = m.group("name")
             if name.lower() in _CH_DICTS:
                 if m.group("ine"):
@@ -3347,8 +3257,6 @@ class ChSession:
 
         m = _DROP_DICT_RE.match(s)
         if m:
-            from .chsql import _CH_DICTS
-
             _CH_DICTS.pop(m.group("name").lower(), None)
             self.dicts.discard(m.group("name").lower())
             return None
@@ -3825,8 +3733,6 @@ class ChSession:
         if m:
             # registry rename (r12 probe: was the generic unsupported
             # error); dictGet resolves by name, so the binding moves
-            from .chsql import _CH_DICTS
-
             a, b = m.group("a"), m.group("b")
             if a not in _CH_DICTS:
                 raise ValueError(f"RENAME DICTIONARY: unknown {a!r}")
@@ -4048,8 +3954,6 @@ class ChSession:
             # silently returned uncapped rows); union_default_mode is
             # honored session-wide via _session_rewrites, performance
             # knobs record for system.settings introspection and drop.
-            from .chsql import _guard_result_settings
-
             body = m.group("body")
             _guard_result_settings(body, "SET")
             for item in _split_top_commas(body):
@@ -4985,8 +4889,6 @@ class ChSession:
         system views have dedicated routing). For INSERT … FORMAT the raw
         data block is excluded: inline payloads may legitimately contain
         ``db.``-looking text outside single-quoted literals."""
-        from .chsql import _mask_literals
-
         head, tail = s, ""
         if re.match(r"(?is)^\s*INSERT\b", s):
             fm = re.match(

@@ -48,6 +48,15 @@ def test_split_statements_literal_aware():
     assert len(stmts) == 2
     assert stmts[0] == "SELECT 'a;b' AS x"
     assert stmts[1].startswith("INSERT INTO t VALUES")
+    # a backslash-escaped quote does not end the literal
+    assert split_statements("SELECT 'a\\';b' AS x; SELECT 1 AS y") == [
+        "SELECT 'a\\';b' AS x", "SELECT 1 AS y",
+    ]
+    # ...but CSV rows in an INSERT FORMAT data block have no backslash
+    # escape: the quote after C:\ closes the field
+    assert split_statements('INSERT INTO t FORMAT CSV\n1,"C:\\"\n; SELECT 1') == [
+        'INSERT INTO t FORMAT CSV\n1,"C:\\"', "SELECT 1",
+    ]
 
 
 def test_create_insert_values_and_mv_block_firing(spark, sf_dir):
@@ -184,6 +193,17 @@ def test_alter_update_delete_and_optimize_replacing(spark, sf_dir):
     ch.execute("OPTIMIZE TABLE acct FINAL")
     rows = sorted(tuple(r) for r in ch.tables["acct"].collect())
     assert rows == [(1, 2, "upd"), (2, 1, "flagged")]
+    # an assignment splits at top-level commas only: not inside an array
+    # literal, and not at a backslash-escaped quote inside a string
+    ch.execute(
+        "CREATE TABLE ta (k UInt8, a Array(UInt8), s String) "
+        "ENGINE = MergeTree ORDER BY k"
+    )
+    ch.execute("INSERT INTO ta VALUES (1, [1], 'p'), (2, [2], 'q')")
+    ch.execute("ALTER TABLE ta UPDATE a = [9, 9] WHERE k = 1")
+    ch.execute("ALTER TABLE ta UPDATE s = 'x\\', y' WHERE k = 1")
+    rows = sorted(tuple(r) for r in ch.tables["ta"].collect())
+    assert rows == [(1, [9, 9], "x', y"), (2, [2], "q")]
 
 
 def test_optimize_summing_merges_partials(spark, sf_dir):
@@ -386,6 +406,10 @@ def test_r8_advice_fixes(spark, sf_dir):
     # ...while real decorations after an identifier still split
     name, t, dflt, _, _eph = parse_col_def("x Int64 DEFAULT y + 1 COMMENT 'c'")
     assert dflt == "y + 1"
+    # ...and a backslash-escaped quote does not hide the next decoration
+    name, t, dflt, _, _eph = parse_col_def(
+        "s String DEFAULT 'a\\'b' COMMENT 'c'")
+    assert dflt == "'a\\'b'"
 
     # 2 — nested containers with commas inverse-map
     assert spark_type_to_ch("struct<a: int, b: struct<c: int, d: int>>") == \
@@ -408,6 +432,20 @@ def test_r8_advice_fixes(spark, sf_dir):
         "Tuple(a Int32, b Tuple(c Int32, d Int32))"
     ddl = ch.execute("SHOW CREATE TABLE nested_t").collect()[0][0]
     assert "Tuple(c Int32, d Int32)" in ddl
+
+    ch.execute(
+        "CREATE TABLE tc (k UInt8, s String DEFAULT 'a\\'b' COMMENT 'c')"
+        " ENGINE = MergeTree ORDER BY k"
+    )
+    ch.execute("INSERT INTO tc (k) VALUES (1)")
+    assert [tuple(r) for r in ch.tables["tc"].collect()] == [(1, "a'b")]
+    # a column list splits at top-level commas, not inside a DEFAULT array
+    ch.execute(
+        "CREATE TABLE td (k UInt8, a Array(UInt8) DEFAULT [1, 2])"
+        " ENGINE = MergeTree ORDER BY k"
+    )
+    ch.execute("INSERT INTO td (k) VALUES (1)")
+    assert [tuple(r) for r in ch.tables["td"].collect()] == [(1, [1, 2])]
 
     # 3 — WithNames maps by header NAME, not position
     ch.execute(
@@ -3832,6 +3870,10 @@ def test_r12_session_star_modifiers(spark, sf_dir):
     assert sess.execute("SELECT * EXCEPT b FROM smt").columns == ["a"]
     assert sess.execute(
         "SELECT * REPLACE(a + 1 AS a) FROM smt").columns == ["a", "b"]
+    # a backslash-escaped quote inside a REPLACE item stays in the literal
+    assert rows("SELECT * REPLACE ('p\\')q' AS b) FROM smt ORDER BY a") == [
+        (1, "p')q"), (2, "p')q"),
+    ]
     # CH tolerates the trailing comma in the select list
     assert rows("SELECT a, b, FROM smt ORDER BY a LIMIT 1") == [(1, "x")]
     assert rows("CHECK ALL TABLES") == [("smt", 1)]

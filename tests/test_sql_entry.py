@@ -591,6 +591,10 @@ def test_chsql_scalar_with_and_trailers(spark, sf_dir):
     # with a dangling `k`.
     t = translate("WITH 3 AS k, k + 1 AS j SELECT j FROM t")
     assert "((3) + 1)" in t and re.search(r"\bk\b", t) is None
+    # the WITH list ends at the first top-level SELECT outside a literal,
+    # backslash-escaped quotes included
+    t = translate("WITH 'it\\'s SELECT time' AS msg SELECT msg")
+    assert t == "SELECT ('it\\'s SELECT time')"
     rows = spark.sql(
         translate("WITH 3 AS k, k + 1 AS j SELECT j AS v")
     ).collect()
