@@ -830,6 +830,14 @@ def _parse_create_table_stmt(s: str):
 _ORDER = ("_ch_ins_seq", "_ch_ins_row")
 
 
+def _union_rows(a: DataFrame, b: DataFrame) -> DataFrame:
+    """``a`` and ``b`` stored together: the `_ORDER` tags stay only when
+    both carry them, else the union drops them, as a mutation does."""
+    if _ORDER[0] not in a.columns or _ORDER[0] not in b.columns:
+        a, b = a.drop(*_ORDER), b.drop(*_ORDER)
+    return a.unionByName(b)
+
+
 def _merge_sql(name: str, meta: dict, src: str, what: str) -> str:
     """A MergeTree engine's merge rule as one filtered subquery
     ``(SELECT *, … FROM src) WHERE …`` over the relation NAMED ``src`` —
@@ -953,9 +961,14 @@ def _parse_ttl_clause(ttl_text: str) -> dict:
         raise ValueError("empty TTL expression")
     return {"expr": t}
 
-_DROP_PARTITION_RE = re.compile(
-    r"(?is)^\s*ALTER\s+TABLE\s+(?P<name>\w+)\s+DROP\s+PARTITION\s+"
-    r"(?P<value>'[^']*'|\S+)\s*$"
+# One PARTITION value, as every PARTITION clause spells it: ID '<id>',
+# tuple() (the one partition of a table without a key), a parenthesized
+# tuple of literals (one per column of a tuple key), a quoted string or a
+# bare literal. `ChSession._partition_cond` turns it into a row predicate.
+_PART_LIT = r"(?:'(?:[^'\\]|\\.|'')*'|-?[\w.]+)"
+_PART = (
+    rf"(?:ID\s+'[^']*'|tuple\s*\(\s*\)"
+    rf"|\(\s*{_PART_LIT}(?:\s*,\s*{_PART_LIT})*\s*\)|{_PART_LIT})"
 )
 
 _CREATE_VIEW_RE = re.compile(
@@ -966,18 +979,17 @@ _CREATE_VIEW_RE = re.compile(
 
 # IN PARTITION restricts the mutation to one partition (r9 probe: the
 # clause previously reached Spark SQL verbatim and parse-failed / fell to
-# the generic unsupported error). The ID form compares the STRING spelling
-# of the partition value (this engine's partition id IS the value).
+# the generic unsupported error).
 _ALTER_UPDATE_RE = re.compile(
     r"(?is)^\s*ALTER\s+TABLE\s+(?P<name>\w+)\s+UPDATE\s+"
     r"(?P<assigns>.+?)"
-    r"(?:\s+IN\s+PARTITION\s+(?P<pid>ID\s+)?(?P<part>'[^']*'|\w+))?"
+    rf"(?:\s+IN\s+PARTITION\s+(?P<part>{_PART}))?"
     r"\s+WHERE\s+(?P<pred>.+)$"
 )
 
 _ALTER_DELETE_RE = re.compile(
     r"(?is)^\s*ALTER\s+TABLE\s+(?P<name>\w+)\s+DELETE\s+"
-    r"(?:IN\s+PARTITION\s+(?P<pid>ID\s+)?(?P<part>'[^']*'|\w+)\s+)?"
+    rf"(?:IN\s+PARTITION\s+(?P<part>{_PART})\s+)?"
     r"WHERE\s+(?P<pred>.+)$"
 )
 
@@ -995,9 +1007,8 @@ def _bool_pred(pred: str) -> str:
 _OPTIMIZE_RE = re.compile(
     # PARTITION p scopes the merge to one partition (r9 verdict missing
     # #3) — the retention/compaction idiom paired with PARTITION BY.
-    # PARTITION ID 'p' compares the string spelling of the value.
     r"(?is)^\s*OPTIMIZE\s+TABLE\s+(?P<name>\w+)"
-    r"(?:\s+PARTITION\s+(?P<pid>ID\s+)?(?P<part>'[^']*'|\w+))?"
+    rf"(?:\s+PARTITION\s+(?P<part>{_PART}))?"
     r"\s*(?P<final>FINAL)?"
     r"\s*(?:(?P<dedup>DEDUPLICATE)(?:\s+BY\s+(?:"
     r"COLUMNS\s*\(\s*'(?P<deduprx>[^']*)'\s*\)"
@@ -1013,7 +1024,7 @@ _OPTIMIZE_RE = re.compile(
 # the ALTER TABLE … DELETE machinery (identical post-state).
 _DELETE_FROM_RE = re.compile(
     r"(?is)^\s*DELETE\s+FROM\s+(?P<name>\w+)\s+"
-    r"(?:IN\s+PARTITION\s+(?P<part>'[^']*'|\w+)\s+)?"
+    rf"(?:IN\s+PARTITION\s+(?P<part>{_PART})\s+)?"
     r"WHERE\s+(?P<pred>.+)$"
 )
 
@@ -1089,7 +1100,7 @@ _CREATE_CLONE_RE = re.compile(
 )
 
 # grab-bag ALTER forms: metadata-only decorations (COMMENT, skip indexes,
-# projections, settings) plus CLEAR COLUMN and partition DETACH/ATTACH
+# projections, settings) plus CLEAR COLUMN and the partition statements
 _ALTER_MISC_RE = re.compile(
     r"(?is)^\s*ALTER\s+TABLE\s+(?P<name>\w+)\s+(?P<rest>"
     r"(?:CLEAR|COMMENT|MODIFY\s+COMMENT|ADD\s+INDEX|DROP\s+INDEX|"
@@ -1097,7 +1108,7 @@ _ALTER_MISC_RE = re.compile(
     r"MATERIALIZE\s+TTL|"
     r"ADD\s+PROJECTION|DROP\s+PROJECTION|"
     r"MATERIALIZE\s+PROJECTION|CLEAR\s+PROJECTION|MODIFY\s+SETTING|"
-    r"RESET\s+SETTING|DETACH\s+PARTITION|ATTACH\s+PARTITION|FREEZE|"
+    r"RESET\s+SETTING|(?:DROP|DETACH|ATTACH)\s+PARTITION|FREEZE|"
     r"REPLACE\s+PARTITION|MOVE\s+PARTITION|FETCH\s+PARTITION|"
     r"MODIFY\s+ORDER\s+BY|MODIFY\s+SAMPLE\s+BY|REMOVE\s+SAMPLE\s+BY|"
     r"APPLY\s+DELETED\s+MASK)\b.*)$"
@@ -1471,7 +1482,7 @@ class ChSession:
         # DETACH TABLE / DETACH PARTITION staging (session-scoped, like
         # CH's detached/ directory)
         self.detached: dict[str, DataFrame] = {}
-        self.detached_parts: dict[tuple[str, str], DataFrame] = {}
+        self.detached_parts: dict[str, DataFrame] = {}
         # query parameters (r8): SET param_name = value → substituted into
         # {name:Type} placeholders (CH's parameterized-query protocol)
         self.params: dict[str, str] = {}
@@ -3333,6 +3344,7 @@ class ChSession:
             self.meta.pop(name, None)
             self.mvs.pop(name, None)
             self.views.pop(name, None)
+            self.detached_parts.pop(name, None)
             self.spark.catalog.dropTempView(name)
             forget_view(self.spark, name)
             self._drop_storage(name)
@@ -3380,29 +3392,6 @@ class ChSession:
                 else:
                     self.views.pop(name, None)
                 raise
-            return None
-
-        m = _DROP_PARTITION_RE.match(s)
-        if m:
-            # CH's retention workhorse: drop a whole partition by its key
-            # value — O(1) metadata at real scale (a directory unlink with
-            # partitionBy layout, sinks/writers.py); modeled logically as
-            # the equivalent null-safe anti-filter on the partition expr.
-            name = m.group("name")
-            tbl = self._require_table(name, "DROP PARTITION")
-            pexpr = (self.meta.get(name) or {}).get("partition_by")
-            if not pexpr:
-                raise ValueError(
-                    f"DROP PARTITION on {name!r}: table has no PARTITION BY"
-                )
-            tbl.createOrReplaceTempView(name)
-            self._register(
-                name,
-                self.spark.sql(
-                    f"SELECT * FROM {name} "
-                    f"WHERE NOT (({pexpr}) <=> {m.group('value')})"
-                ),
-            )
             return None
 
         m = _ALTER_COLUMN_RE.match(s)
@@ -3472,9 +3461,9 @@ class ChSession:
             name = m.group("name")
             tbl = self._require_table(name, "ALTER TABLE UPDATE")
             pred = _bool_pred(translate(m.group("pred")))
-            pred = self._part_restrict(
-                name, pred, m.group("part"), bool(m.group("pid"))
-            )
+            if m.group("part"):
+                cond = self._partition_cond(name, m.group("part"))
+                pred = f"{cond} AND ({pred})"
             assigns = {}
             for item in _split_top_commas(m.group("assigns")):
                 am = re.match(r"(?s)^\s*(\w+)\s*=\s*(.+)$", item)
@@ -3563,9 +3552,9 @@ class ChSession:
             name = m.group("name")
             tbl = self._require_table(name, "ALTER TABLE DELETE")
             pred = _bool_pred(translate(m.group("pred")))
-            pred = self._part_restrict(
-                name, pred, m.group("part"), bool(m.group("pid"))
-            )
+            if m.group("part"):
+                cond = self._partition_cond(name, m.group("part"))
+                pred = f"{cond} AND ({pred})"
             tbl.createOrReplaceTempView(name)
             self._register(
                 name,
@@ -3606,9 +3595,8 @@ class ChSession:
         m = _OPTIMIZE_RE.match(s)
         if m:
             name, part = m.group("name"), m.group("part")
-            by_id = bool(m.group("pid"))
             if m.group("final"):
-                self._optimize_final(name, part, by_id)
+                self._optimize_final(name, part)
             if m.group("dedup"):
                 # OPTIMIZE ... DEDUPLICATE [BY cols]: CH removes fully (or
                 # by-column) identical rows during the merge — scoped to
@@ -3635,23 +3623,16 @@ class ChSession:
                             f"('{m.group('deduprx')}'): no column matches"
                         )
                     cols = ", ".join(picked)
+                keep = None
+                if part is not None:
+                    cond = F.expr(self._partition_cond(name, part))
+                    tbl, keep = tbl.filter(cond), tbl.filter(~cond)
                 deduped = (
                     tbl.dropDuplicates([c.strip() for c in cols.split(",")])
                     if cols else tbl.dropDuplicates()
                 )
-                if part is not None:
-                    pexpr = (self.meta.get(name) or {}).get("partition_by")
-                    if not pexpr:
-                        raise ValueError(
-                            f"OPTIMIZE PARTITION on {name!r}: the table"
-                            " has no PARTITION BY key"
-                        )
-                    lhs = (f"CAST(({pexpr}) AS STRING)" if by_id
-                           else f"({pexpr})")
-                    cond = f"coalesce({lhs} = {part}, false)"
-                    deduped = tbl.filter(F.expr(f"NOT {cond}")).unionByName(
-                        deduped.filter(F.expr(cond))
-                    )
+                if keep is not None:
+                    deduped = keep.unionByName(deduped)
                 self._register(name, deduped)
             return None  # bare OPTIMIZE = merge hint, no visible effect
 
@@ -3854,33 +3835,18 @@ class ChSession:
             tr = _parse_storage_trailer(
                 m.group("trailer"), "CREATE TABLE AS <table>"
             )
+            # the clauses the trailer gives override the source's meta, read
+            # the way the column-list CREATE form reads them
+            given = self._table_meta(_MatchLike(tr))
             meta = dict(self.meta.get(src) or {})
-            if tr["engine"]:
-                # clone-with-engine goes through the same whitelist (and
-                # Replicated* mapping) as the column-list CREATE form
-                meta["engine"], meta["engine_args"] = _validate_engine(
-                    tr["engine"],
-                    [a.strip() for a in (tr["eargs"] or "").split(",")
-                     if a.strip()],
-                )
-            order = (tr["order"] or "").strip()
-            if order:
-                if re.fullmatch(r"(?is)tuple\s*\(\s*\)", order):
-                    order = ""  # CH's spelling for "no sort key"
-                if order.startswith("(") and order.endswith(")"):
-                    order = order[1:-1].strip()
-                meta["order_by"] = [
-                    c.strip() for c in _split_top_commas(order)
-                    if c.strip()
-                ]
-            part = (tr["partition"] or "").strip()
-            if part:
-                if part.startswith("(") and part.endswith(")"):
-                    part = part[1:-1].strip()
-                meta["partition_by"] = translate(part)
-                meta["partition_by_ch"] = part
-            if tr["ttl"]:
-                meta["ttl"] = _parse_ttl_clause(tr["ttl"])
+            for clause, keys in (
+                ("engine", ("engine", "engine_args")),
+                ("order", ("order_by",)),
+                ("partition", ("partition_by", "partition_by_ch")),
+                ("ttl", ("ttl",)),
+            ):
+                if (tr[clause] or "").strip():
+                    meta.update((k, given[k]) for k in keys)
             self.meta[name] = meta
             self._register(name, self._with_order(name, tbl.limit(0)))
             return None
@@ -4315,17 +4281,18 @@ class ChSession:
         return None
 
     def _alter_misc(self, name: str, rest: str) -> None:
-        """Metadata-only ALTER decorations + CLEAR COLUMN + partition
-        DETACH/ATTACH. Skip indexes, projections, and settings are
-        storage-pruning hints with no Spark meaning — recorded in meta so
-        scripts run, never changing results (same policy as the CREATE
-        trailer clauses)."""
+        """Metadata-only ALTER decorations + CLEAR COLUMN + the partition
+        statements (DROP/DETACH/ATTACH, REPLACE/ATTACH … FROM, MOVE), which
+        select their rows with `_partition_cond`. Skip indexes, projections,
+        and settings are storage-pruning hints with no Spark meaning —
+        recorded in meta so scripts run, never changing results (same
+        policy as the CREATE trailer clauses)."""
         tbl = self._require_table(name, "ALTER TABLE")
         meta = self.meta.setdefault(name, {})
         r = rest.strip()
         m = re.match(
             r"(?is)^CLEAR\s+COLUMN\s+(?:IF\s+EXISTS\s+)?(?P<col>\w+)"
-            r"(?:\s+IN\s+PARTITION\s+(?P<part>.+))?$", r
+            rf"(?:\s+IN\s+PARTITION\s+(?P<part>{_PART}))?$", r
         )
         if m:
             col = m.group("col")
@@ -4341,16 +4308,8 @@ class ChSession:
                 dflt = _ch_attr_type_default(dtypes[col]) or "NULL"
             fill = f"CAST({dflt} AS {dtypes[col]})"
             if m.group("part"):
-                pexpr = meta.get("partition_by")
-                if not pexpr:
-                    raise ValueError(
-                        f"CLEAR COLUMN IN PARTITION on {name!r}: table"
-                        " has no PARTITION BY"
-                    )
-                fill = (
-                    f"CASE WHEN ({pexpr}) <=> {m.group('part').strip()}"
-                    f" THEN {fill} ELSE {col} END"
-                )
+                cond = self._partition_cond(name, m.group("part"))
+                fill = f"CASE WHEN {cond} THEN {fill} ELSE {col} END"
             tbl.createOrReplaceTempView(name)
             proj = [
                 f"{fill} AS {col}" if c == col else c for c in tbl.columns
@@ -4398,7 +4357,7 @@ class ChSession:
             return None  # storage knobs — same policy as CREATE SETTINGS
         m = re.match(
             r"(?is)^MATERIALIZE\s+COLUMN\s+(?P<col>\w+)"
-            r"(?:\s+IN\s+PARTITION\s+.+)?$", r
+            rf"(?:\s+IN\s+PARTITION\s+{_PART})?$", r
         )
         if m:
             # CH rewrites old parts to materialize a DEFAULT/MATERIALIZED
@@ -4410,8 +4369,8 @@ class ChSession:
                     f"MATERIALIZE COLUMN: unknown column {m.group('col')!r}"
                 )
             return None
-        if re.match(r"(?is)^MATERIALIZE\s+TTL\s*(?:IN\s+PARTITION\s+.+)?$",
-                    r):
+        if re.match(r"(?is)^MATERIALIZE\s+TTL"
+                    rf"(?:\s+IN\s+PARTITION\s+{_PART})?$", r):
             # CH re-applies the table TTL to existing parts — here the
             # same max-anchored expiry merge OPTIMIZE FINAL runs (r11
             # probe batch 23: previously the generic unsupported error)
@@ -4461,16 +4420,15 @@ class ChSession:
             meta.pop("sample_by", None)
             return None
         if re.match(r"(?is)^APPLY\s+DELETED\s+MASK"
-                    r"(?:\s+IN\s+PARTITION\s+.+)?\s*$", r):
+                    rf"(?:\s+IN\s+PARTITION\s+{_PART})?\s*$", r):
             # CH compacts lightweight-deleted rows out of parts; deletes
             # here apply immediately at statement time — correct no-op
             return None
         if re.match(r"(?is)^FREEZE\b", r):
             return None  # backup hardlink — no logical effect
         m = re.match(
-            r"(?is)^(?:(?P<op>REPLACE|ATTACH)\s+PARTITION\s+"
-            r"(?P<val>'[^']*'|tuple\s*\(\s*\)|\w+)\s+FROM\s+(?P<src>\w+)"
-            r"|MOVE\s+PARTITION\s+(?P<mval>'[^']*'|tuple\s*\(\s*\)|\w+)"
+            rf"(?is)^(?:(?P<op>REPLACE|ATTACH)\s+PARTITION\s+(?P<val>{_PART})"
+            rf"\s+FROM\s+(?P<src>\w+)|MOVE\s+PARTITION\s+(?P<mval>{_PART})"
             r"\s+TO\s+TABLE\s+(?P<dst>\w+))$", r
         )
         if m:
@@ -4487,22 +4445,11 @@ class ChSession:
             # corrupt rather than error.
             moving = m.group("dst") is not None
             other = m.group("dst") if moving else m.group("src")
-            val = (m.group("mval") if moving else m.group("val")).strip()
             otbl = self._require_table(other, "cross-table PARTITION op")
-            pexpr = meta.get("partition_by")
+            cond = F.expr(self._partition_cond(
+                name, m.group("mval") if moving else m.group("val")
+            ))
             ometa = self.meta.get(other) or {}
-            # unpartitioned MergeTree = ONE all-rows partition that CH
-            # names tuple(); the cross-table ops address it by that
-            # spelling (r12 probe: previously refused)
-            whole = (
-                re.fullmatch(r"(?i)tuple\s*\(\s*\)", val) is not None
-                and not pexpr and not ometa.get("partition_by")
-            )
-            if not whole and (not pexpr or not ometa.get("partition_by")):
-                raise ValueError(
-                    f"PARTITION op between {name!r} and {other!r}: both"
-                    " tables need a PARTITION BY key"
-                )
             if tbl.dtypes != otbl.dtypes:
                 raise ValueError(
                     f"PARTITION op between {name!r} and {other!r}:"
@@ -4513,22 +4460,18 @@ class ChSession:
                     f"PARTITION op between {name!r} and {other!r}:"
                     " partition keys differ"
                 )
-            cond = "TRUE" if whole else f"({pexpr}) <=> {val}"
             if moving:
-                part = tbl.filter(F.expr(cond)).localCheckpoint(eager=True)
+                part = tbl.filter(cond).localCheckpoint(eager=True)
                 self._register(other, otbl.unionByName(part))
-                self._register(name, tbl.filter(F.expr(f"NOT ({cond})")))
+                self._register(name, tbl.filter(~cond))
             elif m.group("op").upper() == "REPLACE":
-                part = otbl.filter(F.expr(cond)).localCheckpoint(eager=True)
-                self._register(
-                    name,
-                    tbl.filter(F.expr(f"NOT ({cond})")).unionByName(part),
-                )
+                part = otbl.filter(cond).localCheckpoint(eager=True)
+                self._register(name, tbl.filter(~cond).unionByName(part))
             else:  # ATTACH ... FROM: copy, src keeps its rows
-                part = otbl.filter(F.expr(cond)).localCheckpoint(eager=True)
+                part = otbl.filter(cond).localCheckpoint(eager=True)
                 self._register(name, tbl.unionByName(part))
             return None
-        if re.match(r"(?is)^MOVE\s+PARTITION\s+(?:'[^']*'|\w+)\s+TO\s+"
+        if re.match(rf"(?is)^MOVE\s+PARTITION\s+{_PART}\s+TO\s+"
                     r"(?:DISK|VOLUME)\b", r):
             # storage-tier placement — no logical effect here (same
             # accepted-and-dropped class as SETTINGS/CODEC)
@@ -4541,41 +4484,34 @@ class ChSession:
                 " <table> (move) between session tables"
             )
         m = re.match(
-            r"(?is)^(?P<op>DETACH|ATTACH)\s+PARTITION\s+(?P<val>.+)$", r
+            r"(?is)^(?P<op>DROP|DETACH|ATTACH)\s+PARTITION\s+"
+            rf"(?P<val>{_PART})$", r
         )
         if m:
-            pexpr = meta.get("partition_by")
-            if not pexpr:
-                raise ValueError(
-                    f"{m.group('op').upper()} PARTITION on {name!r}:"
-                    " table has no PARTITION BY"
-                )
-            val = m.group("val").strip()
-            key = (name, val)
-            tbl.createOrReplaceTempView(name)
-            if m.group("op").upper() == "DETACH":
+            # Part-level operations in CH, not mutations: they filter the
+            # stored rows, so the `_ORDER` tags (insert order) survive.
+            # DROP is CH's retention workhorse — O(1) metadata at real
+            # scale (a directory unlink with partitionBy layout).
+            op = m.group("op").upper()
+            cond = F.expr(self._partition_cond(name, m.group("val")))
+            rows = self._rows[name]
+            held = self.detached_parts.get(name)
+            if op == "ATTACH":
+                # the detached rows of that partition move back; nothing
+                # detached attaches nothing, as in CH
+                if held is not None:
+                    self.detached_parts[name] = held.filter(~cond)
+                    self._register(name, _union_rows(rows, held.filter(cond)))
+                return None
+            if op == "DETACH":
                 # checkpoint BEFORE re-registering: the parts-persistence
                 # model retires the old generation directory on rewrite,
                 # which would delete the files this plan reads
-                part = self.spark.sql(
-                    f"SELECT * FROM {name} WHERE ({pexpr}) <=> {val}"
-                ).localCheckpoint(eager=True)
-                rest_df = self.spark.sql(
-                    f"SELECT * FROM {name} WHERE NOT (({pexpr}) <=> {val})"
+                part = rows.filter(cond).localCheckpoint(eager=True)
+                self.detached_parts[name] = (
+                    part if held is None else _union_rows(held, part)
                 )
-                prev = self.detached_parts.get(key)
-                self.detached_parts[key] = (
-                    prev.unionByName(part) if prev is not None else part
-                )
-                self._register(name, rest_df)
-            else:
-                part = self.detached_parts.pop(key, None)
-                if part is None:
-                    raise ValueError(
-                        f"ATTACH PARTITION {val} on {name!r}: no such"
-                        " detached partition in this session"
-                    )
-                self._register(name, tbl.unionByName(part))
+            self._register(name, rows.filter(~cond))
             return None
         raise ValueError(f"unsupported ALTER TABLE form: {rest[:80]!r}")
 
@@ -4631,23 +4567,49 @@ class ChSession:
             meta["temporary"] = True
         return meta
 
-    def _part_restrict(
-        self, name: str, pred: str, part, by_id: bool = False
-    ) -> str:
-        """Conjoin the table's PARTITION BY expression = <part> onto a
-        mutation predicate (the ``IN PARTITION [ID]`` clause, r9/r10).
-        The ID form compares the STRING spelling — this engine's
-        partition id IS the partition value."""
-        if part is None:
-            return pred
-        pexpr = (self.meta.get(name) or {}).get("partition_by")
+    def _partition_cond(self, name: str, part: str) -> str:
+        """The Spark predicate that selects partition ``part`` (a `_PART`
+        spelling) of table ``name`` — the one reader of the PARTITION BY
+        key for row selection.
+
+        - ``tuple()`` is the one partition of a table without a key: every
+          row. A table with a key has no such partition.
+        - ``ID '<id>'`` compares the partition id, which on this engine is
+          the string spelling of the key's value; a tuple key joins its
+          columns' spellings with ``-``.
+        - A value, or a parenthesized tuple of one value per column of a
+          tuple key, compares null-safely (``<=>``) after ``translate``.
+        """
+        meta = self.meta.get(name) or {}
+        pexpr = meta.get("partition_by")
+        if re.fullmatch(r"(?i)tuple\s*\(\s*\)", part):
+            if pexpr:
+                raise ValueError(
+                    f"PARTITION tuple() on {name!r}: the table has the key"
+                    f" PARTITION BY {meta['partition_by_ch']}; name one of"
+                    " its values"
+                )
+            return "TRUE"
         if not pexpr:
             raise ValueError(
-                f"IN PARTITION on {name!r}: the table has no PARTITION BY"
+                f"PARTITION {part} on {name!r}: the table has no PARTITION BY"
                 " key"
             )
-        lhs = f"CAST(({pexpr}) AS STRING)" if by_id else f"({pexpr})"
-        return f"({lhs} = {part}) AND ({pred})"
+        keys = _split_args(pexpr)
+        m = re.fullmatch(r"(?is)ID\s+('.*')", part)
+        if m:
+            spelled = ", ".join(f"CAST(({k}) AS STRING)" for k in keys)
+            return f"(concat_ws('-', {spelled}) <=> {m.group(1)})"
+        vals = _split_args(part[1:-1]) if part.startswith("(") else [part]
+        if len(vals) != len(keys):
+            raise ValueError(
+                f"PARTITION {part} on {name!r}: {len(vals)} value(s) for the"
+                f" {len(keys)}-column key PARTITION BY"
+                f" {meta['partition_by_ch']}"
+            )
+        return "(" + " AND ".join(
+            f"({k}) <=> {translate(v)}" for k, v in zip(keys, vals)
+        ) + ")"
 
     def _require_table(self, name: str, what: str) -> DataFrame:
         if name not in self.tables:
@@ -4725,8 +4687,7 @@ class ChSession:
             out.append(f"TTL {meta['ttl']['expr']}")
         return "\n".join(out)
 
-    def _optimize_final(self, name: str, part=None,
-                        by_id: bool = False) -> None:
+    def _optimize_final(self, name: str, part=None) -> None:
         """``OPTIMIZE TABLE t [PARTITION p] FINAL``: force the engine's
         merge semantics — CH's explicit compaction of the lazy MergeTree
         merge the rest of the engine models (cdc/apply.py's replacing /
@@ -4747,8 +4708,8 @@ class ChSession:
           expired rows drop (max-anchored "now", the ttl_expire contract
           — deterministic, wall-clock-free).
         - PARTITION p (r10): the merge (and any TTL expiry it forces) is
-          scoped to rows whose PARTITION BY expression equals p — rows in
-          every other partition pass through untouched, exactly CH's
+          scoped to the rows `_partition_cond` selects — rows in every
+          other partition pass through untouched, exactly CH's
           per-partition merge. Partition boundaries never split an ORDER
           BY group in CH (parts are per-partition), so merging the subset
           alone is semantics-preserving; the TTL anchor is the subset's
@@ -4761,17 +4722,8 @@ class ChSession:
         work = self._rows[name]
         keep = None
         if part is not None:
-            pexpr = meta.get("partition_by")
-            if not pexpr:
-                raise ValueError(
-                    f"OPTIMIZE PARTITION on {name!r}: the table has no"
-                    " PARTITION BY key"
-                )
-            lhs = (f"CAST(({pexpr}) AS STRING)" if by_id
-                   else f"({pexpr})")
-            cond = f"coalesce({lhs} = {part}, false)"
-            keep = work.filter(F.expr(f"NOT {cond}"))
-            work = work.filter(F.expr(cond))
+            cond = F.expr(self._partition_cond(name, part))
+            work, keep = work.filter(cond), work.filter(~cond)
         if meta.get("ttl"):
             work = self._apply_ttl(name, work, meta["ttl"]["expr"])
         elif engine == "mergetree":

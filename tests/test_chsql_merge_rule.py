@@ -4,7 +4,8 @@
 `ChSession._optimize_final` (``OPTIMIZE FINAL``) both call it, and one
 insert generation is tagged only by `ChSession._generation`. Insert order
 is stored with the rows and every append goes through `ChSession._append`,
-so no statement keeps a second copy of the order in sync. These checks
+so no statement keeps a second copy of the order in sync. Every PARTITION
+clause selects its rows with `ChSession._partition_cond`. These checks
 read the module source; they need no Spark session.
 """
 
@@ -62,3 +63,29 @@ def test_one_append_path():
         if inspect.isfunction(fn) and "_append_part" in _calls(fn)
     ]
     assert callers == ["_append"]
+
+
+def _reads_key(node, key: str) -> bool:
+    """True when ``node`` reads ``key`` as ``x[key]`` or ``x.get(key)``."""
+    for n in ast.walk(node):
+        if (isinstance(n, ast.Subscript) and isinstance(n.ctx, ast.Load)
+                and isinstance(n.slice, ast.Constant)
+                and n.slice.value == key):
+            return True
+        if (isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
+                and n.func.attr == "get" and n.args
+                and isinstance(n.args[0], ast.Constant)
+                and n.args[0].value == key):
+            return True
+    return False
+
+
+def test_one_partition_selector():
+    assert not hasattr(chsql_ddl, "_DROP_PARTITION_RE")
+    assert not hasattr(chsql_ddl.ChSession, "_part_restrict")
+    cls = ast.parse(inspect.getsource(chsql_ddl.ChSession)).body[0]
+    readers = [
+        f.name for f in cls.body
+        if isinstance(f, ast.FunctionDef) and _reads_key(f, "partition_by")
+    ]
+    assert readers == ["_partition_cond"]
