@@ -108,6 +108,7 @@ import string
 
 from pyspark.sql import DataFrame, SparkSession
 
+from . import chformats
 from .catalog import sql as run_sql
 
 
@@ -6598,26 +6599,6 @@ def _rewrite_ternary(q: str) -> str:
     raise ValueError("more than 16 ternary operators — refusing to rewrite")
 
 
-def _parse_tf_schema(arg: str, fn: str) -> list[tuple[str, str]]:
-    """``'a Int32, b String'`` structure literal of a CH table function →
-    [(name, spark_ddl_type), …]."""
-    m = re.match(r"^\s*'(.+)'\s*$", arg, re.DOTALL)
-    if not m:
-        raise ValueError(
-            f"{fn}: first argument must be a quoted structure literal"
-            f" like 'a Int32, b String', got {arg!r}"
-        )
-    from .chsql_ddl import ch_type_to_spark
-
-    cols = []
-    for item in _split_args(m.group(1)):
-        cm = re.match(r"^\s*(\w+)\s+(.+?)\s*$", item, re.DOTALL)
-        if not cm:
-            raise ValueError(f"{fn}: bad structure item {item!r}")
-        cols.append((cm.group(1), ch_type_to_spark(cm.group(2))))
-    return cols
-
-
 def _random_gen(spark_type: str, seed: str | None, idx: int) -> str:
     """One generateRandom column: a per-type random expression. Seeded form
     offsets the seed per column (two columns with the same rand(seed) would
@@ -6667,133 +6648,29 @@ _TF_CALL_RE = re.compile(
 )
 
 
-def _unquote_sql_str(s: str, what: str) -> str:
-    s = s.strip()
-    if len(s) >= 2 and s[0] == s[-1] and s[0] in "'\"":
-        return s[1:-1].replace(s[0] * 2, s[0]).replace("\\" + s[0], s[0])
-    raise ValueError(f"{what}: expected a string literal, got {s[:60]!r}")
-
-
-def _py_to_sql_lit(v) -> str:
-    import json as _json
-
-    if v is None:
-        return "NULL"
-    if isinstance(v, bool):
-        return "TRUE" if v else "FALSE"
-    if isinstance(v, (int, float)):
-        return repr(v)
-    if isinstance(v, (list, dict)):
-        # nested JSON stays as its JSON text (fn_json extracts), the
-        # same posture as the Object('json') column map
-        v = _json.dumps(v)
-    return "'" + str(v).replace("'", "''") + "'"
-
-
 def _format_tf(args: list) -> str:
     """``format(FormatName[, 'structure'], 'data')`` — CH's inline-data
-    table function (r11 probe: previously mis-routed to the {}-template
-    format() STRING function and errored). The data argument is a query-
-    text literal, so parsing it at translate time is the statement's own
-    semantics (client-side constant data, the INSERT FORMAT posture);
-    schema inference mirrors CH's: explicit structure wins, else column
-    order of first appearance with int/float/string sniffing."""
-    import csv as _csv
-    import io as _io
-    import json as _json
-
+    table function. The data literal's records become a VALUES relation of
+    strings decoded by `chformats` (names, types, header and per-format
+    rules as every other CH data reader), so the statement stays
+    translate-only."""
     if len(args) < 2 or len(args) > 3:
         raise ValueError(
             "format(): expected format(Format, 'data') or"
             " format(Format, 'structure', 'data')"
         )
-    name = args[0].strip().strip("'\"").upper()
-    cols = (
-        _parse_tf_schema(args[1], "format") if len(args) == 3 else None
+    f = chformats.spec(args[0].strip().strip("'"), "format()", "text")
+    lines = chformats.records(f, chformats.unquote(args[-1], "format() data"))
+    columns, fields = chformats.plan(
+        f, lines,
+        chformats.parse_structure(args[1], "format()")
+        if len(args) == 3 else None,
+        "format()",
     )
-    data = _unquote_sql_str(args[-1], "format() data")
-    lines = [ln for ln in data.splitlines() if ln.strip()]
-    names: list = [n for n, _ in cols] if cols else []
-    rows: list = []
-
-    def sniff(tok: str) -> str:
-        t = tok.strip()
-        try:
-            int(t)
-            return str(int(t))
-        except ValueError:
-            pass
-        try:
-            float(t)
-            return repr(float(t))
-        except ValueError:
-            pass
-        return "'" + t.replace("'", "''") + "'"
-
-    if name == "JSONEACHROW":
-        recs = [_json.loads(ln) for ln in lines]
-        if not cols:
-            for r in recs:
-                for k in r:
-                    if k not in names:
-                        names.append(k)
-        rows = [
-            "(" + ", ".join(_py_to_sql_lit(r.get(n)) for n in names) + ")"
-            for r in recs
-        ]
-    elif name == "JSONCOMPACTEACHROW":
-        recs = [_json.loads(ln) for ln in lines]
-        width = max((len(r) for r in recs), default=0)
-        if not cols:
-            names = [f"c{i + 1}" for i in range(width)]
-        rows = [
-            "(" + ", ".join(
-                _py_to_sql_lit(r[i] if i < len(r) else None)
-                for i in range(len(names))
-            ) + ")"
-            for r in recs
-        ]
-    elif name in ("CSV", "TSV", "TABSEPARATED", "CSVWITHNAMES",
-                  "TSVWITHNAMES", "TABSEPARATEDWITHNAMES"):
-        delim = "," if name.startswith("CSV") else "\t"
-        parsed = list(_csv.reader(_io.StringIO("\n".join(lines)),
-                                  delimiter=delim))
-        if name.endswith("WITHNAMES") and parsed:
-            hdr = parsed.pop(0)
-            if not cols:
-                names = [h.strip() for h in hdr]
-        width = max((len(r) for r in parsed), default=0)
-        if not names:
-            names = [f"c{i + 1}" for i in range(width)]
-        rows = [
-            "(" + ", ".join(
-                sniff(r[i]) if i < len(r) else "NULL"
-                for i in range(len(names))
-            ) + ")"
-            for r in parsed
-        ]
-    elif name == "LINEASSTRING":
-        names = names or ["line"]
-        rows = ["('" + ln.replace("'", "''") + "')" for ln in lines]
-    else:
-        raise ValueError(
-            f"format({args[0].strip()}): supported inline formats are"
-            " JSONEachRow / JSONCompactEachRow / CSV[WithNames] /"
-            " TSV|TabSeparated[WithNames] / LineAsString"
-        )
-    if not rows:
-        if cols:
-            sel = ", ".join(f"CAST(NULL AS {t}) AS {n}" for n, t in cols)
-            return f"FROM (SELECT {sel} WHERE FALSE)"
-        raise ValueError("format(): empty data needs an explicit structure")
-    if cols:
-        sel = ", ".join(f"CAST({n} AS {t}) AS {n}" for n, t in cols)
-    else:
-        sel = "*"
-    return (
-        f"FROM (SELECT {sel} FROM __spark_values__"
-        f" {', '.join(rows)} AS _ftf({', '.join(names)}))"
-    )
+    # __spark_values__: a literal `FROM VALUES (` would re-match
+    # _TF_CALL_RE; translate() restores the keyword at the end
+    rel = "__spark_values__ " + chformats.values_rel(lines[f.header:])
+    return f"FROM ({chformats.decode_sql(f, columns, fields, rel)})"
 
 
 def _rewrite_table_fns(q: str) -> str:
@@ -6829,11 +6706,11 @@ def _rewrite_table_fns(q: str) -> str:
             q = q[: m.start()] + _format_tf(args) + " " + q[rp + 1 :]
             continue
         if fn == "null":
-            cols = _parse_tf_schema(args[0], "null")
+            cols = chformats.parse_structure(args[0], "null")
             sel = ", ".join(f"CAST(NULL AS {t}) AS {n}" for n, t in cols)
             rep = f"FROM (SELECT {sel} WHERE FALSE)"
         elif fn == "generaterandom":
-            cols = _parse_tf_schema(args[0], "generateRandom")
+            cols = chformats.parse_structure(args[0], "generateRandom")
             seed = args[1].strip() if len(args) > 1 else None
             sel = ", ".join(
                 f"{_random_gen(t, seed, i)} AS {n}"
@@ -6844,7 +6721,7 @@ def _rewrite_table_fns(q: str) -> str:
             )
         else:  # values
             if re.match(r"^\s*'", args[0]):
-                cols = _parse_tf_schema(args[0], "values")
+                cols = chformats.parse_structure(args[0], "values")
                 rows = args[1:]
             else:
                 cols = None
@@ -8909,8 +8786,9 @@ _DOLLAR_TAG_RE = re.compile(r"\$(\w*)\$")
 def _rewrite_dollar_strings(q: str) -> str:
     """CH dollar-quoted string literals — ``$$…$$`` and tagged
     ``$tag$…$tag$`` (r10 verdict missing #3) — rewrite to standard
-    single-quoted literals (internal quotes doubled) before any other
-    pass, since every downstream rewrite is keyed to ''/"" masking.
+    single-quoted literals (the body is raw: backslashes escaped,
+    internal quotes doubled) before any other pass, since every
+    downstream rewrite is keyed to ''/"" masking.
     Ordinary quoted literals are skipped first so a ``$`` inside one is
     never misread as an opener; an unterminated tag passes through for
     the engine's own loud error."""
@@ -8932,7 +8810,8 @@ def _rewrite_dollar_strings(q: str) -> str:
                 end = q.find(tag, m.end())
                 if end != -1:
                     body = q[m.end(): end]
-                    out.append("'" + body.replace("'", "''") + "'")
+                    out.append("'" + body.replace("\\", "\\\\")
+                               .replace("'", "''") + "'")
                     i = end + len(tag)
                     continue
         out.append(c)

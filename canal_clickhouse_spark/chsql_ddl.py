@@ -47,7 +47,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F  # noqa: F401  (re-exported for users)
 
-from . import parts
+from . import chformats, parts
 from .catalog import forget_view, register_views
 from .chsql import (
     _CH_DICTS,
@@ -838,6 +838,21 @@ def _union_rows(a: DataFrame, b: DataFrame) -> DataFrame:
     return a.unionByName(b)
 
 
+def _checkpoint(df: DataFrame) -> DataFrame:
+    """``df`` materialized on the executors, so it outlives the parquet
+    generations and plans it reads. Spark's ``localCheckpoint`` keeps the
+    source plan's constraints keyed by the OPTIMIZED plan's attributes;
+    when the optimizer replaced the output (a table's empty first union
+    branch pruned, so the insert block's attributes surface), the
+    checkpoint carries constraints on attributes it does not output, and
+    any later union over it fails in ``UnionBase.rewriteConstraints``.
+    Rebuilding the frame from the checkpointed rows drops them."""
+    ck = df.localCheckpoint(eager=True)
+    spark = ck.sparkSession
+    return DataFrame(spark._jsparkSession.createDataFrame(
+        ck._jdf.javaRDD(), ck._jdf.schema()), spark)
+
+
 def _merge_sql(name: str, meta: dict, src: str, what: str) -> str:
     """A MergeTree engine's merge rule as one filtered subquery
     ``(SELECT *, … FROM src) WHERE …`` over the relation NAMED ``src`` —
@@ -1039,12 +1054,14 @@ _INSERT_FORMAT_RE = re.compile(
     # Data starts at the first non-space character.
     r"(?is)^\s*INSERT\s+INTO\s+(?P<name>\w+)\s*"
     r"(?:\((?P<cols>[\w,\s]+)\)\s*)?"
-    r"FORMAT\s+(?P<fmt>\w+)\s*(?P<data>\S.*)?$"
+    r"FORMAT\s+(?!Values\b)(?P<fmt>\w+)\s*(?P<data>\S.*)?$"
 )
 
 _INSERT_VALUES_RE = re.compile(
     r"(?is)^\s*INSERT\s+INTO\s+(?P<name>\w+)\s*"
-    r"(?:\((?P<cols>[\w.,`\s]+)\)\s*)?VALUES\s+(?P<values>\(.*\))\s*$"
+    # FORMAT Values is the VALUES clause spelled as a format
+    r"(?:\((?P<cols>[\w.,`\s]+)\)\s*)?(?:FORMAT\s+)?VALUES\s+"
+    r"(?P<values>\(.*\))\s*$"
 )
 
 
@@ -1348,12 +1365,6 @@ _CREATE_DICT_RE = re.compile(
 _DROP_DICT_RE = re.compile(
     r"(?is)^\s*DROP\s+DICTIONARY\s+(?:IF\s+EXISTS\s+)?(?P<name>\w+)\s*$"
 )
-# CH's format inference from a file extension, for FROM file() and INSERT
-# … FROM INFILE
-_FORMAT_BY_EXT = {
-    ".csv": "CSV", ".tsv": "TSV", ".jsonl": "JSONEachRow",
-    ".ndjson": "JSONEachRow", ".json": "JSONEachRow", ".parquet": "Parquet",
-}
 # SHOW <what> [FROM db] [NOT] [I]LIKE 'pat' is a filter over the `system.*`
 # table that lists the same objects (CH runs SHOW as that SELECT), so the
 # two cannot disagree: what → (system table, listed columns). GRANTS and
@@ -2047,13 +2058,10 @@ class ChSession:
 
     def _rewrite_file_tf(self, s: str) -> str:
         """``FROM file('path'[, 'Format'[, 'a T, b U']])`` reads the local
-        file through spark.read and splices a temp view (r11 probe batch
-        23; the INFILE/OUTFILE counterpart of the read side). Formats:
-        CSV/TSV (+WithNames), JSONEachRow, Parquet; format defaults from
-        the extension, the structure string maps through the CH type map.
+        file through Spark and splices a temp view. The format defaults
+        from the extension; Parquet reads natively, every text format
+        reads its lines and decodes them by `chformats`, as INSERT does.
         Scalar-position ``file()`` keeps the translator's guided error."""
-        import os as _os
-
         if not re.search(r"(?i)\bfile\s*\(", s):
             return s
         for _ in range(8):
@@ -2069,57 +2077,62 @@ class ChSession:
             close = _scan_group(s, hit.end() - 1)
             if close >= len(s):
                 return s
-            args = [
-                a.strip().strip("'\"")
-                for a in _split_args(s[hit.end() : close])
-            ]
-            path = args[0]
-            fmt = (
-                (args[1] if len(args) > 1 else "")
-                or _FORMAT_BY_EXT.get(_os.path.splitext(path)[1].lower(), "")
-            ).lower()
-            schema = None
-            if len(args) > 2 and args[2]:
-                parts = []
-                for item in _split_top_commas(args[2]):
-                    cm = re.match(r"(?s)^\s*`?([\w ]+?)`?\s+(.+)$", item)
-                    if not cm:
-                        raise ValueError(
-                            f"file(): unparseable structure item {item!r}"
-                        )
-                    parts.append(
-                        f"`{cm.group(1)}` {ch_type_to_spark(cm.group(2))}"
-                    )
-                schema = ", ".join(parts)
-            r = self.spark.read
-            if fmt == "parquet":
-                df = r.parquet(path)
-            elif fmt in ("csv", "csvwithnames", "tsv", "tabseparated",
-                         "tsvwithnames", "tabseparatedwithnames"):
-                header = fmt.endswith("withnames")
-                sep = "\t" if fmt.startswith(("tsv", "tab")) else ","
-                # CSV quotes double as CH's "" escape (same dialect as
-                # INSERT FORMAT CSV); TSV keeps the backslash escape
-                opts = r.option("header", header).option("sep", sep).option(
-                    "escape", '"' if sep == "," else "\\")
-                df = (
-                    opts.schema(schema).csv(path)
-                    if schema
-                    else opts.option("inferSchema", True).csv(path)
-                )
-            elif fmt == "jsoneachrow":
-                df = r.schema(schema).json(path) if schema else r.json(path)
+            args = _split_args(s[hit.end() : close])
+            path = chformats.unquote(args[0], "file()")
+            f = chformats.spec(args[1].strip("'") if len(args) > 1 else "",
+                               "file()", "file", path)
+            columns = (
+                chformats.parse_structure(args[2], "file()")
+                if len(args) > 2 else None
+            )
+            if f.kind == "parquet":
+                df = self.spark.read.parquet(path)
             else:
-                raise ValueError(
-                    f"file(): unsupported/uninferable format {fmt!r} for"
-                    f" {path!r} — pass CSV/TSV[WithNames]/JSONEachRow/"
-                    "Parquet explicitly"
-                )
+                lines = self.spark.read.text(
+                    path, wholetext=f.kind == "jsondoc"
+                ).withColumnRenamed("value", "line")
+                n = chformats.INFER_ROWS if columns is None else f.header
+                head = [r.line for r in lines.limit(n).collect()] if n else []
+                columns, fields = chformats.plan(f, head, columns, "file()")
+                if f.header:  # the file's first line: partition 0, row 0
+                    lines = lines.where(F.monotonically_increasing_id() > 0)
+                df = self._decode(f, lines, columns, fields)
             self._ftf_n = getattr(self, "_ftf_n", 0) + 1
             vname = f"__file_tf_{self._ftf_n}"
             df.createOrReplaceTempView(vname)
             s = s[: hit.start()] + vname + " " + s[close + 1 :]
         return s
+
+    def _decode(self, f, lines: DataFrame, columns, fields) -> DataFrame:
+        """The raw records in column ``line`` of ``lines`` as typed
+        ``columns`` (`chformats.decode_sql`)."""
+        lines.createOrReplaceTempView("__ch_lines")
+        return self.spark.sql(
+            chformats.decode_sql(f, columns, fields, "__ch_lines"))
+
+    def _insert_text(self, name: str, cols: str | None, f, text: str,
+                     what: str) -> None:
+        """Client-side CH text data (``INSERT … FORMAT``, ``INSERT … FROM
+        INFILE``) into ``name``. The structure is the column list, else
+        the insertable columns (MATERIALIZED/ALIAS fill from their
+        defaults), typed as the target stores them."""
+        tbl = self._require_table(name, what)
+        ro_ = self.meta.get(name, {}).get("readonly_cols") or set()
+        names = (
+            [c.strip() for c in cols.split(",")] if cols
+            else [c for c in tbl.columns if c not in ro_]
+        )
+        dt = dict(tbl.dtypes)
+        unknown = sorted(set(names) - set(dt))
+        if unknown:
+            raise ValueError(f"{what}: unknown column(s) {unknown}")
+        lines = chformats.records(f, text)
+        columns, fields = chformats.plan(
+            f, lines, [(c, dt[c]) for c in names], what)
+        raw = self.spark.createDataFrame(
+            [(ln,) for ln in lines[f.header:]], "line string")
+        block = self._decode(f, raw, columns, fields)
+        return self._insert(name, block, ", ".join(names))
 
     def _rewrite_joinget(self, s: str) -> str:
         """``joinGet('jtbl', 'val', key…)`` over a session Join-engine
@@ -2954,24 +2967,14 @@ class ChSession:
             s,
         )
         if m:
-            # INSERT … FROM INFILE (r11 probe batch 22): clickhouse-client
-            # reads the file client-side — here the driver does. Format
-            # defaults from the extension (CH's inference); Parquet loads
-            # natively, text formats splice into the inline-FORMAT path.
+            # INSERT … FROM INFILE: clickhouse-client reads the file
+            # client-side — here the driver does; the format defaults from
+            # the extension (CH's inference)
             import gzip as _gzip
             import os as _os
 
-            path = m.group("path")
-            fmt = (m.group("fmt") or "").strip()
-            base = path[:-3] if path.endswith(".gz") else path
-            if not fmt:
-                ext = _os.path.splitext(base)[1].lower()
-                fmt = _FORMAT_BY_EXT.get(ext, "")
-                if not fmt:
-                    raise ValueError(
-                        f"INSERT FROM INFILE: cannot infer a format from"
-                        f" {path!r} — add FORMAT <name>"
-                    )
+            path, what = m.group("path"), "INSERT FROM INFILE"
+            f = chformats.spec(m.group("fmt"), what, "file", path)
             comp = (m.group("comp") or "").lower()
             if comp and comp not in ("gzip", "gz", "none", "auto"):
                 raise ValueError(
@@ -2980,8 +2983,7 @@ class ChSession:
                 )
             if not _os.path.exists(path):
                 raise ValueError(f"INSERT FROM INFILE: no such file {path!r}")
-            clause = f"({m.group('cols')}) " if m.group("cols") else ""
-            if fmt.lower() == "parquet":
+            if f.kind == "parquet":
                 block = self.spark.read.parquet(path)
                 return self._insert(
                     m.group("name"), block,
@@ -2993,145 +2995,20 @@ class ChSession:
                 else open
             )
             with opener(path, "rt") as fh:
-                data = fh.read()
-            return self.execute(
-                f"INSERT INTO {m.group('name')} {clause}FORMAT {fmt}\n"
-                + data
-            )
+                text = fh.read()
+            return self._insert_text(
+                m.group("name"), m.group("cols"), f, text, what)
 
         m = _INSERT_FORMAT_RE.match(s)
         if m:
-            # The canal→ClickHouse adapter's actual wire protocol: INSERT
-            # with inline FORMAT JSONEachRow (one JSON object per line) or
-            # CSV. Parsed with from_json/from_csv against the TARGET
+            # The canal→ClickHouse adapter's wire protocol: INSERT with
+            # inline data, decoded by `chformats` against the TARGET
             # column types, so coercion matches a CH server's behavior.
-            name = m.group("name")
-            fmt = m.group("fmt").upper()
-            if fmt == "VALUES":
-                # FORMAT Values ≡ the VALUES clause spelling
-                return self.execute(
-                    f"INSERT INTO {name} "
-                    + (f"({m.group('cols')}) " if m.group("cols") else "")
-                    + f"VALUES {m.group('data') or ''}"
-                )
-            known = {
-                "JSONEACHROW": ("json", False),
-                "CSV": ("csv", False),
-                "CSVWITHNAMES": ("csv", True),
-                "TSV": ("tsv", False),
-                "TABSEPARATED": ("tsv", False),
-                "TSVWITHNAMES": ("tsv", True),
-                "TABSEPARATEDWITHNAMES": ("tsv", True),
-                # r9 probe batch: positional JSON arrays, the full JSON
-                # envelope, key=value lines, and raw single-column lines
-                "JSONCOMPACTEACHROW": ("jsonc", False),
-                "JSON": ("jsonfull", False),
-                "TSKV": ("tskv", False),
-                "LINEASSTRING": ("line", False),
-            }
-            if fmt not in known:
-                # refuse loudly: the old \w+-prefix match silently parsed
-                # CSVWithNames as CSV with the header as a data row
-                raise ValueError(
-                    f"INSERT FORMAT {m.group('fmt')}: supported inline"
-                    " formats are JSONEachRow / JSONCompactEachRow / JSON"
-                    " / CSV[WithNames] / TSV|TabSeparated[WithNames] /"
-                    " TSKV / LineAsString / Values"
-                )
-            kind, has_header = known[fmt]
-            tbl = self._require_table(name, f"INSERT FORMAT {m.group('fmt')}")
-            ro_ = self.meta.get(name, {}).get("readonly_cols") or set()
-            cols = (
-                [c.strip() for c in m.group("cols").split(",")]
-                if m.group("cols")
-                # positional formats cover only the insertable columns —
-                # MATERIALIZED/ALIAS fill from their defaults (r11)
-                else [c for c in tbl.columns if c not in ro_]
+            return self._insert_text(
+                m.group("name"), m.group("cols"),
+                chformats.spec(m.group("fmt"), "INSERT", "text"),
+                m.group("data") or "", f"INSERT FORMAT {m.group('fmt')}",
             )
-            dt = dict(tbl.dtypes)
-            unknown = sorted(set(cols) - set(dt))
-            if unknown:
-                raise ValueError(f"INSERT FORMAT: unknown column(s) {unknown}")
-            lines = [
-                (ln,)
-                for ln in (m.group("data") or "").splitlines()
-                if ln.strip()
-            ]
-            # r8 advice: CH's default (input_format_with_names_use_header=1)
-            # maps WithNames fields by the header NAMES, not positionally —
-            # a dump whose header order differs from the column list
-            # previously landed values in the wrong columns here. Parse in
-            # HEADER order, then reorder; refuse loudly when the name sets
-            # differ (the one case that cannot be mapped).
-            parse_order = cols
-            if has_header:
-                if not lines:
-                    raise ValueError(
-                        f"INSERT FORMAT {m.group('fmt')}: missing header row"
-                    )
-                sep = "\t" if kind == "tsv" else ","
-                hdr = [
-                    h.strip().strip('"') for h in lines[0][0].split(sep)
-                ]
-                if sorted(hdr) != sorted(cols):
-                    raise ValueError(
-                        f"INSERT FORMAT {m.group('fmt')}: header columns"
-                        f" {hdr} do not name the target column list {cols}"
-                        " — ClickHouse maps WithNames fields by header name"
-                    )
-                lines = lines[1:]
-                parse_order = hdr
-            schema = ", ".join(f"{c} {dt[c]}" for c in parse_order)
-            if kind == "jsonfull":
-                # the whole payload is ONE JSON document {"data": [rows]}
-                payload = (m.group("data") or "").replace("'", "\\'")
-                block = self.spark.sql(
-                    "SELECT r.* FROM (SELECT explode(from_json("
-                    f"'{payload}', 'STRUCT<data: ARRAY<STRUCT<{schema}>>>'"
-                    ").data) AS r)"
-                ).select(*cols)
-                return self._insert(name, block, ", ".join(cols))
-            raw = self.spark.createDataFrame(lines, "raw string")
-            if kind == "line":
-                if len(cols) != 1 or not dt[cols[0]].startswith("string"):
-                    raise ValueError(
-                        "INSERT FORMAT LineAsString needs exactly one"
-                        " STRING target column (use the column-list form"
-                        " on wider tables)"
-                    )
-                block = raw.select(F.col("raw").alias(cols[0]))
-                return self._insert(name, block, cols[0])
-            if kind == "tskv":
-                mp = F.expr("str_to_map(raw, '\\t', '=')")
-                block = raw.select(*[
-                    F.element_at(mp, c).cast(dt[c]).alias(c) for c in cols
-                ])
-                return self._insert(name, block, ", ".join(cols))
-            if kind == "jsonc":
-                arr = F.from_json("raw", "array<string>")
-                block = raw.select(*[
-                    F.element_at(arr, i + 1).cast(dt[c]).alias(c)
-                    for i, c in enumerate(cols)
-                ])
-                return self._insert(name, block, ", ".join(cols))
-            if kind == "json":
-                parsed = raw.select(F.from_json("raw", schema).alias("r"))
-            elif kind == "tsv":
-                parsed = raw.select(
-                    F.from_csv(
-                        "raw", schema, {"sep": "\t"}
-                    ).alias("r")
-                )
-            else:  # CSV — positional against the parse-order column list;
-                # escape='"' selects RFC-4180 doubled-quote handling (CH's
-                # CSV dialect — r10 probe: `"with ""quotes"""` previously
-                # kept its outer quotes verbatim under the default
-                # backslash escape)
-                parsed = raw.select(
-                    F.from_csv("raw", schema, {"escape": '"'}).alias("r")
-                )
-            block = parsed.select("r.*").select(*cols)
-            return self._insert(name, block, ", ".join(cols))
 
         # leading-WITH INSERT (CH grammar: `WITH … INSERT INTO t SELECT …`)
         # rearranges to the WITH-after-table form the regex handles — the
@@ -3291,6 +3168,10 @@ class ChSession:
             rows_a, rows_b = self._rows[a], self._rows[b]
             self._point_at(a, rows_b)
             self._point_at(b, rows_a)
+            # detached partitions live with their table (CH's detached/
+            # sits inside the table directory)
+            held = self.detached_parts
+            held[a], held[b] = held.get(b), held.get(a)
             self._retarget_dicts({a: b, b: a})
             return None
 
@@ -3325,6 +3206,8 @@ class ChSession:
                 forget_view(self.spark, old)
                 if old in self._store:  # parts mode: pointer move, no I/O
                     self._store[new] = self._store.pop(old)
+                if old in self.detached_parts:
+                    self.detached_parts[new] = self.detached_parts.pop(old)
                 self._point_at(new, self._rows.pop(old))
             # MVs bind by NAME (as in CH): an MV whose source/target was
             # renamed keeps pointing at the old name — the blue-green idiom
@@ -3890,9 +3773,7 @@ class ChSession:
                 # ATTACH keeps the insert order; a later DROP/rewrite of
                 # this name must not retire parquet generations the
                 # detached plan still reads
-                self.detached[name] = self._rows.pop(name).localCheckpoint(
-                    eager=True
-                )
+                self.detached[name] = _checkpoint(self._rows.pop(name))
                 self.tables.pop(name, None)
                 self.spark.catalog.dropTempView(name)
                 forget_view(self.spark, name)
@@ -4201,7 +4082,7 @@ class ChSession:
             if m:
                 return self._into_outfile(
                     s[: m.start()], m.group("path"),
-                    (m.group("fmt") or "TabSeparated"),
+                    (m.group("fmt") or chformats.OUTFILE_DEFAULT),
                     (m.group("trunc") or "").upper(),
                 )
             if re.search(r"(?i)\bINTO\s+OUTFILE\b", s):
@@ -4223,61 +4104,40 @@ class ChSession:
         expressible: collect through Arrow, serialize driver-side). This
         is deliberately NOT a distributed write — CH's contract is a
         single local file, and the sink writers (sinks/writers.py) remain
-        the scale path. Formats: TabSeparated[WithNames[AndTypes]]
-        (default, \\t + CH text escapes), CSV[WithNames], JSONEachRow,
-        Parquet. CH errors when the file exists unless TRUNCATE/APPEND
-        says otherwise — same here."""
+        the scale path. The formats are `chformats`' writable ones; TSV
+        escapes with `chformats.tsv_escape`. CH errors when the file
+        exists unless TRUNCATE/APPEND says otherwise — same here."""
         import os
 
-        low = fmt.lower()
-        if low not in ("parquet", "csv", "csvwithnames", "jsoneachrow",
-                       "tabseparated", "tsv", "tabseparatedwithnames",
-                       "tsvwithnames", "tabseparatedwithnamesandtypes"):
-            raise ValueError(
-                f"INTO OUTFILE FORMAT {fmt}: unsupported format — use"
-                " TabSeparated[WithNames], CSV[WithNames], JSONEachRow or"
-                " Parquet (or the sink writers for distributed output)"
-            )
+        f = chformats.spec(fmt, "INTO OUTFILE", "write")
         if os.path.exists(path) and mode not in ("TRUNCATE", "APPEND"):
             raise ValueError(
                 f"INTO OUTFILE: file {path!r} exists — add TRUNCATE (or"
                 " APPEND) as in ClickHouse"
             )
         df = self._run_select(select)
-        if low == "parquet":
+        if f.kind == "parquet":
             import pyarrow.parquet as pq
 
             pq.write_table(df.toArrow(), path)
             return None
         pdf = df.toPandas()
-        append = mode == "APPEND"
-        openmode = "a" if append else "w"
-        if low in ("csv", "csvwithnames"):
-            pdf.to_csv(path, index=False, header=low.endswith("withnames"),
-                       mode=openmode)
-            return None
-        if low == "jsoneachrow":
-            pdf.to_json(path, orient="records", lines=True,
-                        mode=openmode if append else "w",
+        openmode = "a" if mode == "APPEND" else "w"
+        if f.kind == "csv":
+            pdf.to_csv(path, index=False, header=f.header > 0, mode=openmode)
+        elif f.kind == "json":
+            pdf.to_json(path, orient="records", lines=True, mode=openmode,
                         date_format="iso")
-            return None
-        if low in ("tabseparated", "tsv", "tabseparatedwithnames",
-                   "tsvwithnames", "tabseparatedwithnamesandtypes"):
-            def esc(v):
-                if v is None:
-                    return "\\N"
-                return (str(v).replace("\\", "\\\\").replace("\t", "\\t")
-                        .replace("\n", "\\n"))
-
+        else:
             with open(path, openmode) as fh:
-                if "withnames" in low:
+                if f.header:
                     fh.write("\t".join(pdf.columns) + "\n")
-                    if low.endswith("andtypes"):
-                        fh.write("\t".join(
-                            spark_type_to_ch(t) for _, t in df.dtypes
-                        ) + "\n")
+                if f.header > 1:
+                    fh.write("\t".join(
+                        spark_type_to_ch(t) for _, t in df.dtypes
+                    ) + "\n")
                 for row in pdf.itertuples(index=False):
-                    fh.write("\t".join(esc(v) for v in row) + "\n")
+                    fh.write("\t".join(map(chformats.tsv_escape, row)) + "\n")
         return None
 
     def _alter_misc(self, name: str, rest: str) -> None:
@@ -4461,14 +4321,14 @@ class ChSession:
                     " partition keys differ"
                 )
             if moving:
-                part = tbl.filter(cond).localCheckpoint(eager=True)
+                part = _checkpoint(tbl.filter(cond))
                 self._register(other, otbl.unionByName(part))
                 self._register(name, tbl.filter(~cond))
             elif m.group("op").upper() == "REPLACE":
-                part = otbl.filter(cond).localCheckpoint(eager=True)
+                part = _checkpoint(otbl.filter(cond))
                 self._register(name, tbl.filter(~cond).unionByName(part))
             else:  # ATTACH ... FROM: copy, src keeps its rows
-                part = otbl.filter(cond).localCheckpoint(eager=True)
+                part = _checkpoint(otbl.filter(cond))
                 self._register(name, tbl.unionByName(part))
             return None
         if re.match(rf"(?is)^MOVE\s+PARTITION\s+{_PART}\s+TO\s+"
@@ -4507,7 +4367,7 @@ class ChSession:
                 # checkpoint BEFORE re-registering: the parts-persistence
                 # model retires the old generation directory on rewrite,
                 # which would delete the files this plan reads
-                part = rows.filter(cond).localCheckpoint(eager=True)
+                part = _checkpoint(rows.filter(cond))
                 self.detached_parts[name] = (
                     part if held is None else _union_rows(held, part)
                 )

@@ -1008,7 +1008,7 @@ def _run_ddl_model(spark, sf_dir, ops, parts_dir):
         assert got2 == sorted(model2)
 
 
-def test_drop_partition(spark, sf_dir):
+def test_drop_partition(spark, sf_dir, tmp_path):
     ch = ChSession(spark, sf_dir)
     ch.execute(
         "CREATE TABLE pt (k Int64, d String) ENGINE = MergeTree() "
@@ -1047,6 +1047,47 @@ def test_drop_partition(spark, sf_dir):
                " PARTITION BY modulo(k, 2) ORDER BY k")
     ch.execute("ALTER TABLE pt2 ATTACH PARTITION 1")
     assert ch.tables["pt2"].count() == 0
+    # detached partitions move with their table on RENAME and swap with it
+    # on EXCHANGE (CH keeps detached/ inside the table directory)
+    for mode in ("memory", "parts"):
+        cs = ChSession(spark, sf_dir, parts_dir=(
+            str(tmp_path / "parts") if mode == "parts" else None))
+        for t in ("dt", "dx"):
+            cs.execute(f"CREATE TABLE {t} (k Int64) ENGINE = MergeTree()"
+                       " PARTITION BY k ORDER BY k")
+        cs.execute("INSERT INTO dt VALUES (1), (2)")
+        cs.execute("ALTER TABLE dt DETACH PARTITION 1")
+        cs.execute("RENAME TABLE dt TO dt2")
+        cs.execute("ALTER TABLE dt2 ATTACH PARTITION 1")
+        assert sorted(r.k for r in cs.tables["dt2"].collect()) == [1, 2], mode
+        cs.execute("ALTER TABLE dt2 DETACH PARTITION 2")
+        cs.execute("EXCHANGE TABLES dt2 AND dx")
+        cs.execute("ALTER TABLE dt2 ATTACH PARTITION 2")
+        assert cs.tables["dt2"].count() == 0, mode
+        cs.execute("ALTER TABLE dx ATTACH PARTITION 2")
+        assert sorted(r.k for r in cs.tables["dx"].collect()) == [1, 2], mode
+
+
+@pytest.mark.parametrize("mode", ["memory", "parts"])
+def test_cross_table_partition_ops_then_read(spark, sf_dir, tmp_path, mode):
+    """REPLACE … FROM and MOVE … TO TABLE put checkpointed rows into
+    another table's union; later mutations and reads of that table work.
+    Spark's localCheckpoint kept constraints on attributes the checkpoint
+    does not output, and the read of p2 failed in Catalyst."""
+    ch = ChSession(
+        spark, sf_dir, parts_dir=str(tmp_path) if mode == "parts" else None
+    )
+    for t, vals in (("p1", "(1, 0), (2, 1)"), ("p2", "(3, 0), (4, 1)")):
+        ch.execute(f"CREATE TABLE {t} (k Int64, p Int64) ENGINE ="
+                   " MergeTree PARTITION BY p ORDER BY k")
+        ch.execute(f"INSERT INTO {t} VALUES {vals}")
+    ch.execute("ALTER TABLE p1 REPLACE PARTITION 1 FROM p2")
+    ch.execute("ALTER TABLE p1 MOVE PARTITION 0 TO TABLE p2")
+    ch.execute("ALTER TABLE p2 DELETE IN PARTITION 0 WHERE 1")
+    ch.execute("ALTER TABLE p2 DELETE IN PARTITION 2 WHERE 1")
+    for t in ("p1", "p2"):
+        assert [tuple(r) for r in ch.execute(
+            f"SELECT k, p FROM {t}").collect()] == [(4, 1)], t
 
 
 @pytest.mark.parametrize("mode", ["memory", "parts"])
@@ -1862,12 +1903,14 @@ def test_ddl_insert_format_variants(spark, sf_dir):
     s.execute("INSERT INTO tfv FORMAT Values (4, 'd'), (5, 'e')")
     s.execute("INSERT INTO tfv FORMAT CSVWithNames\nid,v\n6,f")
     s.execute("INSERT INTO tfv FORMAT TSVWithNames\nid\tv\n7\tg")
+    # TSV unescapes \t and \\ and reads no quotes
+    s.execute('INSERT INTO tfv FORMAT TSV\n8\t"h\\ti\\\\"')
     rows = [
         tuple(r)
         for r in s.execute("SELECT * FROM tfv ORDER BY id").collect()
     ]
     assert rows == [(1, "a"), (2, "b"), (3, "c"), (4, "d"), (5, "e"),
-                    (6, "f"), (7, "g")]
+                    (6, "f"), (7, "g"), (8, '"h\ti\\"')]
     with _pytest.raises(ValueError, match="JSONEachRow"):
         s.execute("INSERT INTO tfv FORMAT Parquet xx")
     # INTO OUTFILE writes for real since r10 — see test_r10_into_outfile;
@@ -3575,6 +3618,10 @@ def test_r11_file_tf_and_materialize_ttl(spark, sf_dir, tmp_path):
     sess.execute(f"INSERT INTO ftfq FROM INFILE '{q}' FORMAT CSV")
     assert via_file == [tuple(r) for r in sess.execute(
         "SELECT * FROM ftfq").collect()] == [(1, 'with "quotes"')]
+    # ... and as format() does
+    assert [tuple(r) for r in sess.execute(
+        "SELECT * FROM format(CSV, 'a UInt32, b String',"
+        " '1,\"with \"\"quotes\"\"\"')").collect()] == via_file
     sess.execute("CREATE TABLE mtt (k UInt32, d Date)"
                  " ENGINE = MergeTree ORDER BY k TTL d + INTERVAL 30 DAY")
     sess.execute("INSERT INTO mtt VALUES (1, '2020-01-01'),"

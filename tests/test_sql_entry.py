@@ -4086,6 +4086,13 @@ def test_r11_probe_batch1(spark):
     assert [tuple(r) for r in spark.sql(translate(
         "SELECT * FROM format(CSVWithNames, 'x,y\n1,2')")).collect()] == [
         (1, 2)]
+    # the header maps fields by name; JSON decodes nested types
+    assert [tuple(r) for r in spark.sql(translate(
+        "SELECT * FROM format(CSVWithNames, 'x Int64, y String',"
+        " 'y,x\nb,1')")).collect()] == [(1, "b")]
+    assert [tuple(r) for r in spark.sql(translate(
+        "SELECT * FROM format(JSONEachRow, 'k Int64, xs Array(Int64)',"
+        " '{\"k\": 1, \"xs\": [1, 2]}')")).collect()] == [(1, [1, 2])]
     assert spark.sql(translate(
         "SELECT format('{}-{}', 'a', 'b') AS f")).collect()[0].f == "a-b"
 
