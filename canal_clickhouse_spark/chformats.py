@@ -1,16 +1,17 @@
-"""ClickHouse data formats: the one format table and the one decoder
-behind ``INSERT … FORMAT``, ``INSERT … FROM INFILE``, ``file()`` and
-``format()``, which only say where the raw lines come from; ``INTO
-OUTFILE`` takes its format list from here. Text-only (Spark SQL text, no
-SparkSession), so ``translate()`` uses it as ``ChSession`` does.
+"""ClickHouse data formats: one format table, one decoder (`decode_sql`:
+``INSERT … FORMAT``, ``FROM INFILE``, ``file()``, ``format()``) and one
+encoder (`encode_sql`: ``INTO OUTFILE``, the HTTP sink) over the same
+option and escape tables. Text-only (Spark SQL text, no SparkSession), so
+``translate()`` uses it as ``ChSession`` does.
 
-Known divergence: every reader is line-based, so a CSV value holding a
-newline (legal inside CH's quoted CSV fields) does not read back.
+Known divergences: readers are line-based, so a CSV value holding a
+newline does not read back; TSV and CSV spell a nested value as JSON.
 """
 
 from __future__ import annotations
 
 import csv
+import gzip
 import json
 import re
 from dataclasses import dataclass
@@ -49,30 +50,28 @@ _FORMAT_BY_EXT = {
     ".csv": "CSV", ".tsv": "TSV", ".jsonl": "JSONEachRow",
     ".ndjson": "JSONEachRow", ".json": "JSONEachRow", ".parquet": "Parquet",
 }
-# RFC-4180, CH's CSV dialect: "" is a quote inside a quoted field; an
-# empty unquoted field reads as NULL (Spark's nullValue "")
-CSV_OPTIONS = {"sep": ",", "quote": '"', "escape": '"'}
 # CH's TSV has no quoting: the writer escapes these (backslash first) and
 # spells NULL \N; the reader undoes exactly that
-_TSV_ESCAPES = (("\\", "\\\\"), ("\t", "\\t"), ("\n", "\\n"))
+_TSV_ESCAPES = (("\\", "\\\\"), ("\t", "\\t"), ("\n", "\\n"), ("\r", "\\r"))
 TSV_NULL = "\\N"
+# RFC-4180, CH's CSV dialect: "" is a quote inside a quoted field. NULL
+# is a bare \N or an empty bare field, and a quoted "" or "\N" is a
+# string: the reader empties each bare \N field (_CSV_NULL_RE) and makes
+# nullValue a line end, which no record holds, so bare empties alone are
+# NULL. The writer quotes a value matching _CSV_QUOTED
+CSV_OPTIONS = {"sep": ",", "quote": '"', "escape": '"', "nullValue": "\n"}
+_CSV_NULL_RE = r'(^|,)(\\N(?=,|$)|("(?:[^"]|"")*"))'
+_CSV_QUOTED = r'^(\\N)?$|[",\r\n]'
+# to_json's options: CH's JSONEachRow writer keeps NULL fields (an
+# omitted field would take the column's DEFAULT)
+_JSON_OPTIONS = "map('ignoreNullFields', 'false')"
 INFER_ROWS = 1000  # rows the no-structure inference reads
 _CH_ESCAPES = dict(zip("bfrnt0av", "\b\f\r\n\t\0\a\v"))
 
 
-def tsv_escape(v) -> str:
-    """One value as CH's TSV writer spells it."""
-    if v is None:
-        return TSV_NULL
-    s = str(v)
-    for raw, esc in _TSV_ESCAPES:
-        s = s.replace(raw, esc)
-    return s
-
-
 def _tsv_unescape_sql(f: str) -> str:
-    """SQL undoing `tsv_escape` on the field expression ``f``: split at
-    the escaped backslashes, unescape each piece, join with ``\\``."""
+    """SQL undoing `encode_sql`'s TSV escapes on the field ``f``: split
+    at the escaped backslashes, unescape each piece, join with ``\\``."""
     (bs, bs_esc), *rest = _TSV_ESCAPES
     piece = "_p"
     for raw, esc in rest:
@@ -89,6 +88,18 @@ def sql_str(s: str) -> str:
     byte."""
     return "'" + (s.replace("\\", "\\\\").replace("'", "\\'")
                   .replace("\n", "\\n").replace("\r", "\\r")) + "'"
+
+
+def opener(path: str, codec: str | None, what: str):
+    """``gzip.open`` under ``COMPRESSION 'gzip'|'gz'``, or a ``.gz``
+    ``path`` with no codec or ``'auto'``; else ``open`` (``'none'``).
+    Any other codec is refused. INFILE and OUTFILE share this rule."""
+    gz = {"gzip": True, "gz": True, "none": False,
+          "auto": path.endswith(".gz")}.get((codec or "auto").lower())
+    if gz is None:
+        raise ValueError(f"{what} COMPRESSION {codec!r}: only gzip (or the"
+                         " .gz extension) is supported here")
+    return gzip.open if gz else open
 
 
 def unquote(lit: str, what: str) -> str:
@@ -158,9 +169,8 @@ def _fields(f: Format, line: str):
     def tok(v):
         return None if v is None else json.dumps(v)
 
-    if f.kind == "csv":
-        return next(csv.reader([line], delimiter=CSV_OPTIONS["sep"],
-                               quotechar=CSV_OPTIONS["quote"]), [])
+    if f.kind == "csv":  # Python's default dialect is CSV_OPTIONS'
+        return next(csv.reader([re.sub(_CSV_NULL_RE, r"\1\3", line)]), [])
     if f.kind == "tsv":
         return [None if v == TSV_NULL else v for v in line.split("\t")]
     if f.kind == "tskv":
@@ -246,7 +256,8 @@ def decode_sql(f: Format, columns, fields, rel: str) -> str:
         "json": (f"from_json(line, {sql_str(schema)})", by_name),
         "jsondoc": ("explode(from_json(line, " + sql_str(
             f"STRUCT<data: ARRAY<STRUCT<{schema}>>>") + ").data)", by_name),
-        "csv": (f"from_csv(line, {sql_str(schema)}, map({opts}))", by_name),
+        "csv": (f"from_csv(regexp_replace(line, {sql_str(_CSV_NULL_RE)},"
+                f" '$1$3'), {sql_str(schema)}, map({opts}))", by_name),
         "tsv": ("split(line, '\\t', -1)", lambda n: _tsv_unescape_sql(
             f"try_element_at(_r, {pos[n]})")),
         "jsoncompact": ("from_json(line, 'ARRAY<STRING>')",
@@ -258,6 +269,31 @@ def decode_sql(f: Format, columns, fields, rel: str) -> str:
     sel = ", ".join(f"CAST({field(n)} AS {t}) AS `{n}`" for n, t in columns)
     return (f"SELECT {sel} FROM (SELECT {parse} AS _r FROM {rel}"
             " WHERE trim(line) <> '')")
+
+
+def encode_sql(f: Format, columns) -> str:
+    """SQL spelling a row of ``columns`` (``[(name, spark_type)]``) as one
+    line of ``f``, as `decode_sql` reads it, a time by its text as CH
+    spells it: JSON by ``to_json``; CSV and TSV from each field's text (a
+    nested one's JSON), quoted or escaped, NULL as `TSV_NULL`."""
+    refs = ["`" + n.replace("`", "``") + "`" for n, _ in columns]
+    js = _JSON_OPTIONS
+    if f.kind == "json":
+        return "to_json(struct(" + ", ".join(
+            f"CAST({r} AS STRING) AS {r}" if re.match(r"(?i)date|timestamp", t)
+            else r for r, (_, t) in zip(refs, columns)) + f"), {js})"
+    text = [f"to_json({r}, {js})" if re.match(r"(?i)(array|map|struct)<", t)
+            else f"CAST({r} AS STRING)" for r, (_, t) in zip(refs, columns)]
+    if f.kind == "csv":  # only text, binary or a nested value needs quotes
+        text = [f"CASE WHEN {v} RLIKE {sql_str(_CSV_QUOTED)} THEN concat("
+                f"'\"', replace({v}, '\"', '\"\"'), '\"') ELSE {v} END"
+                if re.match(r"(?i)(string|(var)?char|binary|array|map|struct)",
+                            t) else v for v, (_, t) in zip(text, columns)]
+    for raw, esc in _TSV_ESCAPES if f.kind == "tsv" else ():
+        text = [f"replace({v}, {sql_str(raw)}, {sql_str(esc)})" for v in text]
+    sep = CSV_OPTIONS["sep"] if f.kind == "csv" else "\t"
+    return f"concat_ws({sql_str(sep)}, " + ", ".join(
+        f"coalesce({v}, {sql_str(TSV_NULL)})" for v in text) + ")"
 
 
 def values_rel(lines: list[str]) -> str:

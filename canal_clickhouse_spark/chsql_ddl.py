@@ -42,6 +42,7 @@ Spark-first shapes:
 
 from __future__ import annotations
 
+import os
 import re
 
 from pyspark.sql import DataFrame, SparkSession
@@ -1614,8 +1615,6 @@ class ChSession:
         compaction/mutation write path (OPTIMIZE FINAL rewriting merged
         parts). Generation dirs are named by a session-global sequence so
         RENAME/EXCHANGE never collide with a prior tenant of the name."""
-        import os
-
         self._gseq += 1
         path = os.path.join(self.parts_dir, f"{name}_g{self._gseq:06d}")
         df.write.mode("overwrite").parquet(path)
@@ -2476,8 +2475,6 @@ class ChSession:
             # parts mode: the actual parquet part files of the current
             # generation; in-memory mode: one synthetic active part per
             # session table (the lineage model has no part granularity)
-            import os
-
             rows = []
             for n in sorted(self.tables):
                 cnt = self.tables[n].count()
@@ -2970,18 +2967,10 @@ class ChSession:
             # INSERT … FROM INFILE: clickhouse-client reads the file
             # client-side — here the driver does; the format defaults from
             # the extension (CH's inference)
-            import gzip as _gzip
-            import os as _os
-
             path, what = m.group("path"), "INSERT FROM INFILE"
             f = chformats.spec(m.group("fmt"), what, "file", path)
-            comp = (m.group("comp") or "").lower()
-            if comp and comp not in ("gzip", "gz", "none", "auto"):
-                raise ValueError(
-                    f"INSERT FROM INFILE COMPRESSION {comp!r}: only gzip"
-                    " (or the .gz extension) is supported here"
-                )
-            if not _os.path.exists(path):
+            opener = chformats.opener(path, m.group("comp"), what)
+            if not os.path.exists(path):
                 raise ValueError(f"INSERT FROM INFILE: no such file {path!r}")
             if f.kind == "parquet":
                 block = self.spark.read.parquet(path)
@@ -2989,11 +2978,6 @@ class ChSession:
                     m.group("name"), block,
                     m.group("cols") or ", ".join(block.columns),
                 )
-            opener = (
-                _gzip.open
-                if path.endswith(".gz") or comp in ("gzip", "gz")
-                else open
-            )
             with opener(path, "rt") as fh:
                 text = fh.read()
             return self._insert_text(
@@ -4076,14 +4060,14 @@ class ChSession:
             m = re.search(
                 r"(?is)\s+INTO\s+OUTFILE\s+'(?P<path>[^']+)'"
                 r"(?:\s+(?P<trunc>TRUNCATE|APPEND)\b)?"
-                r"(?:\s+COMPRESSION\s+'\w+'(?:\s+LEVEL\s+\d+)?)?"
+                r"(?:\s+COMPRESSION\s+'(?P<comp>\w+)'(?:\s+LEVEL\s+\d+)?)?"
                 r"(?:\s+FORMAT\s+(?P<fmt>\w+))?\s*$", s,
             )
             if m:
                 return self._into_outfile(
                     s[: m.start()], m.group("path"),
                     (m.group("fmt") or chformats.OUTFILE_DEFAULT),
-                    (m.group("trunc") or "").upper(),
+                    (m.group("trunc") or "").upper(), m.group("comp"),
                 )
             if re.search(r"(?i)\bINTO\s+OUTFILE\b", s):
                 raise ValueError(
@@ -4097,19 +4081,15 @@ class ChSession:
         raise ValueError(f"unsupported statement: {s[:120]!r}")
 
     def _into_outfile(
-        self, select: str, path: str, fmt: str, mode: str
+        self, select: str, path: str, fmt: str, mode: str, comp: str | None
     ) -> None:
-        """``SELECT … INTO OUTFILE`` — CH writes ONE file where the CLIENT
-        runs (r10: previously a guided refusal; the semantics are entirely
-        expressible: collect through Arrow, serialize driver-side). This
-        is deliberately NOT a distributed write — CH's contract is a
-        single local file, and the sink writers (sinks/writers.py) remain
-        the scale path. The formats are `chformats`' writable ones; TSV
-        escapes with `chformats.tsv_escape`. CH errors when the file
-        exists unless TRUNCATE/APPEND says otherwise — same here."""
-        import os
-
+        """``SELECT … INTO OUTFILE``: ONE file where the client runs, as in
+        CH. The driver streams in the lines `chformats.encode_sql` spells
+        on the executors (`toLocalIterator`), after the header rows;
+        Parquet goes through Arrow. The sink writers are the scale path.
+        An existing file needs TRUNCATE or APPEND, as in ClickHouse."""
         f = chformats.spec(fmt, "INTO OUTFILE", "write")
+        opener = chformats.opener(path, comp, "INTO OUTFILE")
         if os.path.exists(path) and mode not in ("TRUNCATE", "APPEND"):
             raise ValueError(
                 f"INTO OUTFILE: file {path!r} exists — add TRUNCATE (or"
@@ -4119,26 +4099,23 @@ class ChSession:
         if f.kind == "parquet":
             import pyarrow.parquet as pq
 
-            pq.write_table(df.toArrow(), path)
-            return None
-        pdf = df.toPandas()
-        openmode = "a" if mode == "APPEND" else "w"
-        if f.kind == "csv":
-            pdf.to_csv(path, index=False, header=f.header > 0, mode=openmode)
-        elif f.kind == "json":
-            pdf.to_json(path, orient="records", lines=True, mode=openmode,
-                        date_format="iso")
-        else:
-            with open(path, openmode) as fh:
-                if f.header:
-                    fh.write("\t".join(pdf.columns) + "\n")
-                if f.header > 1:
-                    fh.write("\t".join(
-                        spark_type_to_ch(t) for _, t in df.dtypes
-                    ) + "\n")
-                for row in pdf.itertuples(index=False):
-                    fh.write("\t".join(map(chformats.tsv_escape, row)) + "\n")
-        return None
+            with opener(path, "wb") as fh:
+                return pq.write_table(df.toArrow(), fh)
+        with opener(path, "at" if mode == "APPEND" else "wt") as fh:
+            # header rows encoded from a VALUES relation, which collects
+            # on the driver (a createDataFrame frame runs a ~0.6 s job):
+            # names, then CH types (a generator, spelled only for
+            # …WithNamesAndTypes)
+            if f.header:
+                hdf = self.spark.sql("SELECT * FROM VALUES " + ", ".join(
+                    f"({', '.join(map(chformats.sql_str, r))})" for r in [
+                        df.columns, (spark_type_to_ch(t) for _, t in df.dtypes)
+                    ][: f.header]))
+                fh.writelines(ln + "\n" for (ln,) in hdf.selectExpr(
+                    chformats.encode_sql(f, hdf.dtypes)).collect())
+            enc = chformats.encode_sql(f, df.dtypes)
+            fh.writelines(ln + "\n" for (ln,) in df.selectExpr(enc)
+                          .toLocalIterator(prefetchPartitions=True))
 
     def _alter_misc(self, name: str, rest: str) -> None:
         """Metadata-only ALTER decorations + CLEAR COLUMN + the partition

@@ -33,11 +33,10 @@ never collecting to the driver).
 from __future__ import annotations
 
 import os
-import time
-import urllib.parse
-import urllib.request
 
 from pyspark.sql import DataFrame
+
+from .. import chformats
 
 
 class ClickHouseSink:
@@ -96,7 +95,8 @@ class ClickHouseSink:
         """Per-partition chunked POSTs to the CH HTTP endpoint.
 
         Each Spark task streams its partition in ``batch_rows``-row
-        JSONEachRow bodies. Idempotency is CH's explicit token dedup:
+        JSONEachRow bodies, each row encoded by `chformats.encode_sql` as
+        INTO OUTFILE writes it. Idempotency is CH's explicit token dedup:
         ``insert_deduplication_token`` is a pure function of (table,
         batch_id, partition, chunk) and ``insert_deduplicate=1`` is set, so
         a Spark task retry, a foreachBatch replay, or our own
@@ -106,25 +106,23 @@ class ClickHouseSink:
         dedup downstream.
         """
         url, table = self.target, self.table
-        rows_per, retries = self.batch_rows, self.max_retries
+        rows_per, retries = max(self.batch_rows, 1), self.max_retries
         backoff, timeout = self.backoff_s, self.timeout_s
 
         def send(pidx: int, it):
             # Imported inside the task: cloudpickle rebinds module globals on
             # the worker as bare `import urllib`, which does not load the
             # `request`/`parse` submodules.
+            import itertools
             import time
             import urllib.parse
             import urllib.request
 
-            buf: list[str] = []
-            chunk = 0
             sent = 0
-
-            def flush() -> None:
-                nonlocal buf, chunk, sent
+            for chunk in itertools.count():
+                buf = [line for (line,) in itertools.islice(it, rows_per)]
                 if not buf:
-                    return
+                    break
                 ident = f"ccs-{table}-b{batch_id}-p{pidx}-c{chunk}"
                 params = urllib.parse.urlencode(
                     {
@@ -150,18 +148,12 @@ class ClickHouseSink:
                             raise
                         time.sleep(backoff * (2**attempt))
                 sent += len(buf)
-                buf, chunk = [], chunk + 1
-
-            for line in it:
-                buf.append(line)
-                if len(buf) >= rows_per:
-                    flush()
-            flush()
             yield sent
 
         # mapPartitionsWithIndex (not collect): every executor is its own
         # insert stream, the driver only sums row counts.
-        df.toJSON().mapPartitionsWithIndex(send).sum()
+        enc = chformats.encode_sql(chformats.FORMATS["jsoneachrow"], df.dtypes)
+        df.selectExpr(enc).rdd.mapPartitionsWithIndex(send).sum()
 
     def read_back(self, spark) -> DataFrame:
         """All durably-written parts (parquet transport only)."""

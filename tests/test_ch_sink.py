@@ -207,38 +207,44 @@ def test_collapsing_stream_restart_to_http_sink(spark, sf_dir, mock_ch, tmp_path
     assert pipe2._latest_version(rule) == v_before
 
 
-def test_jsoneachrow_wire_format_roundtrips_through_ddl_parser(spark, sf_dir):
-    """Wire-protocol self-consistency: the body the HTTP sink POSTs
-    (df.toJSON lines under `INSERT INTO t FORMAT JSONEachRow`) must parse
-    back to the identical rows through the DDL interpreter's FORMAT
-    JSONEachRow path — our emitter and our parser agree on the format, so
-    either side can interoperate with a real ClickHouse server that speaks
-    it."""
-    from pyspark.sql import functions as F
-
-    from canal_clickhouse_spark.catalog import table
+def test_jsoneachrow_wire_format_roundtrips_through_ddl_parser(
+    spark, sf_dir, mock_ch, tmp_path
+):
+    """Wire-protocol self-consistency: the body the HTTP sink POSTs (as
+    the mock server received it) is byte for byte what INTO OUTFILE …
+    FORMAT JSONEachRow writes for the same SELECT — CH's date-time
+    spelling, NULL fields kept — and parses back to the identical rows
+    through the DDL interpreter's FORMAT JSONEachRow path, so either side
+    can interoperate with a real ClickHouse server that speaks it."""
     from canal_clickhouse_spark.chsql_ddl import ChSession
 
-    src = (
-        table(spark, sf_dir, "orders")
-        .select(
-            "o_orderkey",
-            "o_orderstatus",
-            F.col("o_totalprice").cast("double").alias("o_totalprice"),
-        )
-        .orderBy("o_orderkey")
-        .limit(50)
-    )
-    body_lines = src.toJSON().collect()  # exactly what _write_http buffers
-
     ch = ChSession(spark, sf_dir)
+    select = (
+        "SELECT o_orderkey, o_orderstatus,"
+        " toFloat64(o_totalprice) AS o_totalprice,"
+        " toDate(o_orderdate) AS o_orderdate,"
+        " addSeconds(toDateTime(o_orderdate), 3723) AS o_ts,"
+        " if(o_orderkey % 3 = 0, NULL, o_custkey) AS o_cust"
+        " FROM orders ORDER BY o_orderkey LIMIT 50"
+    )
+    src = ch.execute(select).coalesce(1)
+    sink = ClickHouseSink(_url(mock_ch), "sink_rt", mode="http",
+                          batch_rows=100)
+    sink.write_batch(src, batch_id=0)
+    [(_, _, body)] = mock_ch.requests  # one partition, one chunk
+    out = tmp_path / "o.jsonl"
+    ch.execute(f"{select} INTO OUTFILE '{out}' FORMAT JSONEachRow")
+    assert body == out.read_text()
+    first = json.loads(body.splitlines()[0])
+    assert first["o_orderdate"] == first["o_ts"][:10]
+    assert first["o_ts"].endswith(" 01:02:03") and first["o_cust"] is None
+
     ch.execute(
         "CREATE TABLE sink_rt (o_orderkey Int64, o_orderstatus String, "
-        "o_totalprice Float64) ENGINE = MergeTree() ORDER BY o_orderkey"
+        "o_totalprice Float64, o_orderdate Date, o_ts DateTime, "
+        "o_cust Nullable(Int64)) ENGINE = MergeTree() ORDER BY o_orderkey"
     )
-    ch.execute(
-        "INSERT INTO sink_rt FORMAT JSONEachRow\n" + "\n".join(body_lines)
-    )
+    ch.execute("INSERT INTO sink_rt FORMAT JSONEachRow\n" + body)
     got = sorted(tuple(r) for r in ch.tables["sink_rt"].collect())
     want = sorted(tuple(r) for r in src.collect())
     assert got == want and len(want) == 50

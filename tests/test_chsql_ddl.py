@@ -2676,8 +2676,9 @@ def test_r10_replace_table_system_scope_modify_query(spark, sf_dir):
 def test_r10_into_outfile(spark, sf_dir, tmp_path):
     """SELECT … INTO OUTFILE writes ONE client-side file (CH contract):
     TabSeparated default with \\N nulls and tab/newline escapes,
-    CSV[WithNames], JSONEachRow, Parquet; existing files refuse without
-    TRUNCATE/APPEND, exactly as ClickHouse does."""
+    CSV[WithNames], JSONEachRow, Parquet, each byte for byte as CH spells
+    it; existing files refuse without TRUNCATE/APPEND, exactly as
+    ClickHouse does."""
     import pyarrow.parquet as pq
     import pytest as _pytest
 
@@ -2697,10 +2698,29 @@ def test_r10_into_outfile(spark, sf_dir, tmp_path):
     ch.execute(f"SELECT 1 AS a, 2 AS b INTO OUTFILE '{csv}'"
                f" FORMAT CSVWithNames")
     assert open(csv).read().splitlines() == ["a,b", "1,2"]
+    # a nullable integer stays an integer, NULL is \N; arrays as CH
+    # spells them
+    nullable = ("SELECT number AS k, if(number = 1, NULL, number) AS v,"
+                " [1, 2] AS xs FROM numbers(3) ORDER BY k")
+    ch.execute(f"{nullable} INTO OUTFILE '{tsv}' TRUNCATE")
+    assert open(tsv).read() == \
+        "0\t0\t[1,2]\n1\t\\N\t[1,2]\n2\t2\t[1,2]\n"
+    ch.execute(f"{nullable} INTO OUTFILE '{csv}' TRUNCATE FORMAT CSV")
+    assert open(csv).read() == \
+        '0,0,"[1,2]"\n1,\\N,"[1,2]"\n2,2,"[1,2]"\n'
+    # a CSV string that is \N or empty is quoted, so it is no NULL
+    ch.execute(f"SELECT '\\\\N' AS s, '' AS e INTO OUTFILE '{csv}'"
+               f" TRUNCATE FORMAT CSV")
+    assert open(csv).read() == '"\\N",""\n'
     jl = str(tmp_path / "o.jsonl")
-    ch.execute(f"SELECT 1 AS a, NULL AS n INTO OUTFILE '{jl}'"
-               f" FORMAT JSONEachRow")
-    assert open(jl).read().strip() == '{"a":1,"n":null}'
+    ch.execute(f"SELECT 1 AS a, NULL AS n,"
+               f" toDateTime('2024-01-02 03:04:05') AS t,"
+               f" toDate('2024-01-02') AS d,"
+               f" toDateTime64('2024-01-02 03:04:05.250', 3) AS f"
+               f" INTO OUTFILE '{jl}' FORMAT JSONEachRow")
+    assert open(jl).read() == ('{"a":1,"n":null,"t":"2024-01-02 03:04:05",'
+                               '"d":"2024-01-02",'
+                               '"f":"2024-01-02 03:04:05.25"}\n')
     pqf = str(tmp_path / "o.parquet")
     ch.execute(f"SELECT 42 AS a INTO OUTFILE '{pqf}' FORMAT Parquet")
     assert pq.read_table(pqf).to_pydict() == {"a": [42]}

@@ -5,8 +5,10 @@ and what INTO OUTFILE writes reads back unchanged."""
 from __future__ import annotations
 
 import ast
+import gzip
 import inspect
 import itertools
+from datetime import datetime
 
 import pytest
 from hypothesis import HealthCheck, given, settings
@@ -31,11 +33,11 @@ def ch(spark, sf_dir):
 # (format, structure or None, data, expected names/types, expected rows).
 # Each data set reproduces one way the readers used to disagree.
 CASES = {
-    # TSV: \N is NULL and \t, \\ unescape
+    # TSV: \N is NULL and \t, \r, \\ unescape
     "tsv_escapes": ("TSV", "v String, n Nullable(String)",
-                    "a\\tb\\\\t\t\\N\n",
+                    "a\\tb\\\\t\\rc\t\\N\n",
                     [("v", "string"), ("n", "string")],
-                    [("a\tb\\t", None)]),
+                    [("a\tb\\t\rc", None)]),
     # TSV has no quoting
     "tsv_quotes": ("TabSeparated", "s String, k Int64", '"x"\t1\n',
                    [("s", "string"), ("k", "bigint")], [('"x"', 1)]),
@@ -73,10 +75,13 @@ CASES = {
                     '{"k": 1, "xs": [1, 2]}\n',
                     [("k", "bigint"), ("xs", "array<bigint>")],
                     [(1, [1, 2])]),
-    # an empty unquoted CSV field is NULL
-    "csv_empty_field": ("CSV", "k Int64, s Nullable(String)", "1,\n2,y\n",
+    # CSV: an empty unquoted field and \N are NULL, "" is '' and a
+    # quoted "\N" is the string \N
+    "csv_empty_field": ("CSV", "k Int64, s Nullable(String)",
+                        '1,\n2,y\n3,""\n4,\\N\n5,"\\N"\n',
                         [("k", "bigint"), ("s", "string")],
-                        [(1, None), (2, "y")]),
+                        [(1, None), (2, "y"), (3, ""), (4, None),
+                         (5, "\\N")]),
 }
 ENTRIES = ("insert", "infile", "file", "format")
 
@@ -155,12 +160,13 @@ def test_outfile_formats_are_the_tables_writable_formats(ch, tmp_path):
 
 def test_one_format_table():
     """`chformats` is the only module that names CH formats: the other
-    readers' tables and helpers are gone, and no string constant in the
-    translator or the interpreter spells a format name other than a
-    decode rule's."""
+    readers' and writers' tables and helpers are gone, and no string
+    constant in the translator or the interpreter spells a format name
+    other than a decode rule's."""
     from canal_clickhouse_spark import chformats, chsql, chsql_ddl
 
     assert not hasattr(chsql_ddl, "_FORMAT_BY_EXT")
+    assert not hasattr(chformats, "tsv_escape")  # encode_sql writes TSV
     for gone in ("_parse_tf_schema", "_unquote_sql_str", "_py_to_sql_lit"):
         assert not hasattr(chsql, gone)
     names = set(chformats.FORMATS) - {f.kind for f in
@@ -174,13 +180,19 @@ def test_one_format_table():
 
 
 _STR = st.lists(
-    st.sampled_from(["\t", "\n", "\\", '"', ",", "'", "N", "a", "x y"]),
-    min_size=1, max_size=6,
+    st.sampled_from(["\t", "\n", "\r", "\\", '"', ",", "'", "N", "\\N",
+                     "a", "x y"]),
+    max_size=6,
 ).map("".join)
+_TIME = st.datetimes(datetime(1970, 1, 2), datetime(2105, 12, 31)).map(
+    lambda d: d.strftime("%Y-%m-%d %H:%M:%S"))
 _ROWS = st.lists(
-    st.tuples(st.integers(-2 ** 63, 2 ** 63 - 1), st.none() | _STR),
+    st.tuples(st.integers(-2 ** 63, 2 ** 63 - 1),
+              st.none() | st.integers(-2 ** 63, 2 ** 63 - 1),
+              st.none() | _STR, _TIME),
     min_size=1, max_size=4, unique_by=lambda r: r[0],
 )
+_COLS = "k Int64, v Nullable(Int64), s Nullable(String), t DateTime"
 
 
 @pytest.mark.parametrize("fmt", ["TabSeparated", "TabSeparatedWithNames",
@@ -190,27 +202,56 @@ _ROWS = st.lists(
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(rows=_ROWS)
 def test_outfile_round_trip(ch, tmp_path, fmt, rows):
-    """Rows of (Int64, Nullable(String)) written by INTO OUTFILE read back
-    equal through file() and through INSERT … FROM INFILE."""
+    """Rows of (Int64, Nullable(Int64), Nullable(String), DateTime)
+    written by INTO OUTFILE read back equal through file() and through
+    INSERT … FROM INFILE."""
     if fmt.startswith("CSV"):
-        # no newline values for CSV: every reader is line-based, so a
-        # newline inside a quoted CSV field splits the record (a
+        # no line ends in CSV values: every reader is line-based, so a
+        # line end inside a quoted CSV field splits the record (a
         # documented divergence from CH)
-        rows = [(k, s.replace("\n", " ") if s else s) for k, s in rows]
+        rows = [(k, v, s.replace("\n", " ").replace("\r", " ") if s else s,
+                 t) for k, v, s, t in rows]
     i = next(_n)
     src, back, path = f"rt_src_{i}", f"rt_back_{i}", tmp_path / f"rt_{i}"
     for t in (src, back):
-        ch.execute(f"CREATE TABLE {t} (k Int64, s Nullable(String))"
-                   " ENGINE = Memory")
+        ch.execute(f"CREATE TABLE {t} ({_COLS}) ENGINE = Memory")
     ch.execute(f"INSERT INTO {src} VALUES " + ", ".join(
-        f"({k}, {'NULL' if s is None else ch_lit(s)})" for k, s in rows))
-    ch.execute(f"SELECT k, s FROM {src} INTO OUTFILE '{path}' FORMAT {fmt}")
-    via_file = ch.execute(
-        f"SELECT * FROM file('{path}', '{fmt}',"
-        " 'k Int64, s Nullable(String)')").collect()
+        f"({k}, {'NULL' if v is None else v},"
+        f" {'NULL' if s is None else ch_lit(s)}, {ch_lit(t)})"
+        for k, v, s, t in rows))
+    ch.execute(f"SELECT * FROM {src} INTO OUTFILE '{path}' FORMAT {fmt}")
     ch.execute(f"INSERT INTO {back} FROM INFILE '{path}' FORMAT {fmt}")
-    via_infile = ch.execute(f"SELECT * FROM {back}").collect()
+    got = {rel: ch.execute(f"SELECT k, v, s, toString(t) FROM {rel}")
+           .collect() for rel in (src, back,
+                                  f"file('{path}', '{fmt}', {ch_lit(_COLS)})")}
     ch.execute(f"DROP TABLE {src}")
     ch.execute(f"DROP TABLE {back}")
-    assert sorted(map(tuple, via_file)) == sorted(rows)
-    assert sorted(map(tuple, via_infile)) == sorted(rows)
+    assert sorted(map(tuple, got.pop(src))) == sorted(rows)
+    for rel, back_rows in got.items():
+        assert sorted(map(tuple, back_rows)) == sorted(rows), rel
+
+
+def test_outfile_gzip_reads_back(ch, tmp_path):
+    """OUTFILE compresses by COMPRESSION or a .gz path, by the rule
+    INFILE decompresses with; file() reads it back too."""
+    ch.execute("CREATE TABLE gz_back (k Int64, s String) ENGINE = Memory")
+    src = "SELECT number AS k, toString(number) AS s FROM numbers(3)"
+    want = [(0, "0"), (1, "1"), (2, "2")]
+    for name, out, into in (
+        ("a.tsv.gz", "", ""),
+        ("b.tsv.gz", "COMPRESSION 'gzip'", "COMPRESSION 'gzip'"),
+        ("c.tsv.gz", "COMPRESSION 'gz' LEVEL 3", "COMPRESSION 'auto'"),
+    ):
+        p = tmp_path / name
+        ch.execute(f"{src} INTO OUTFILE '{p}' {out}")
+        assert gzip.decompress(p.read_bytes()) == b"0\t0\n1\t1\n2\t2\n"
+        ch.execute("TRUNCATE TABLE gz_back")
+        ch.execute(f"INSERT INTO gz_back FROM INFILE '{p}' {into}")
+        got = ch.execute("SELECT * FROM gz_back ORDER BY k").collect()
+        assert [tuple(r) for r in got] == want, name
+        got = ch.execute(f"SELECT * FROM file('{p}', 'TabSeparated',"
+                         " 'k Int64, s String') ORDER BY k").collect()
+        assert [tuple(r) for r in got] == want, name
+    with pytest.raises(ValueError, match="COMPRESSION 'zstd'"):
+        ch.execute(f"{src} INTO OUTFILE '{tmp_path / 'd.tsv'}'"
+                   " COMPRESSION 'zstd'")
