@@ -187,7 +187,7 @@ def _infer(f: Format, lines: list[str], names: list[str] | None):
     """CH's no-structure rule: names are the header, the JSON keys in
     first-appearance order, or ``c1…cN``; a column is Int64 if every
     non-empty value is an integer, else Float64 if every one is a
-    number, else String."""
+    number, else String — as is a column with no non-empty value."""
     if f.kind == "line":
         return [("line", "STRING")]
     rows = []
@@ -208,7 +208,7 @@ def _infer(f: Format, lines: list[str], names: list[str] | None):
         t = "STRING"
         for typ, pat in (("BIGINT", r"[+-]?\d+"),
                          ("DOUBLE", r"[+-]?(\d+\.?\d*|\.\d+)([eE][+-]?\d+)?")):
-            if all(re.fullmatch(pat, v) for v in vals):
+            if vals and all(re.fullmatch(pat, v) for v in vals):
                 t = typ
                 break
         cols.append((n, t))

@@ -33,34 +33,31 @@ def _module_strings() -> list[str]:
     return _strings(ast.parse(inspect.getsource(chsql_ddl)))
 
 
-def _branches(fn):
-    """``(match expression, its string constants, called names)`` for each
-    ``m = …`` / ``if m:`` pair in ``fn``'s body."""
-    body = ast.parse(textwrap.dedent(inspect.getsource(fn))).body[0].body
-    for a, b in zip(body, body[1:]):
-        if (
-            isinstance(a, ast.Assign)
-            and isinstance(b, ast.If)
-            and ast.unparse(b.test) == "m"
-        ):
-            calls = {
-                n.func.attr if isinstance(n.func, ast.Attribute)
-                else getattr(n.func, "id", "")
-                for n in ast.walk(b)
-                if isinstance(n, ast.Call)
-            }
-            yield ast.unparse(a.value), _strings(a.value), calls
+def _row(name: str):
+    (row,) = [r for r in chsql_ddl._STATEMENTS if r.name == name]
+    return row
+
+
+def _calls(fn) -> set[str]:
+    """Names of the methods and functions ``fn`` calls."""
+    tree = ast.parse(textwrap.dedent(inspect.getsource(fn)))
+    return {
+        n.func.attr if isinstance(n.func, ast.Attribute)
+        else getattr(n.func, "id", "")
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Call)
+    }
 
 
 def test_show_and_exists_read_the_system_tables():
-    branches = list(_branches(chsql_ddl.ChSession._execute_stmt))
-    show = [calls for src, _, calls in branches if "_SHOW_RE" in src]
+    assert _row("show").pattern is chsql_ddl._SHOW_RE
     exists = [
-        calls for _, strs, calls in branches
-        if any(s.startswith(r"(?is)^\s*EXISTS\s") for s in strs)
+        r for r in chsql_ddl._STATEMENTS
+        if getattr(r.pattern, "pattern", "").startswith(r"(?is)^\s*EXISTS\s")
     ]
-    assert len(show) == 1 and "_system_df" in show[0]
-    assert len(exists) == 1 and "_system_df" in exists[0]
+    assert exists == [_row("exists")]
+    for row in (_row("show"), _row("exists")):
+        assert "_system_df" in _calls(row.handler), row.name
 
 
 def test_one_show_listing_pattern():
@@ -70,9 +67,11 @@ def test_one_show_listing_pattern():
 
 def test_one_exists_pattern():
     hits = [
-        s for s in _module_strings() if s.startswith(r"(?is)^\s*EXISTS\s")
+        s for s in _module_strings()
+        if re.match(r"(\(\?is\)\^\\s\*)?EXISTS\\s", s)
     ]
     assert len(hits) == 1
+    assert _row("exists").pattern.pattern.endswith(hits[0])
 
 
 def test_no_hand_written_like_translation():

@@ -4156,8 +4156,8 @@ def test_r12_system_query_log(spark, sf_dir):
     """r12: system.query_log — execute() journals every statement with
     kind, finish/exception type and duration; event_seq is the monotone
     order key (CH orders by event_time, too coarse for a fast burst).
-    Internal statement re-entries journal their own rows, same posture
-    as CH's query_log."""
+    The kind is CH's spelling, taken from the row that claims the
+    statement, and one statement journals one row."""
     import pytest as _pytest
 
     from canal_clickhouse_spark.chsql_ddl import ChSession
@@ -4171,15 +4171,52 @@ def test_r12_system_query_log(spark, sf_dir):
     rows = [tuple(r) for r in s.execute(
         "SELECT query_kind, type FROM system.query_log ORDER BY event_seq"
     ).collect()]
-    assert ("CREATE", "QueryFinish") in rows
-    assert ("INSERT", "QueryFinish") in rows
-    assert ("SELECT", "ExceptionWhileProcessing") in rows
+    assert ("Create", "QueryFinish") in rows
+    assert ("Insert", "QueryFinish") in rows
+    assert ("Select", "ExceptionWhileProcessing") in rows
     # the audit idiom: last failed query text
     bad = [tuple(r) for r in s.execute(
         "SELECT query FROM system.query_log WHERE type ="
         " 'ExceptionWhileProcessing' ORDER BY event_seq DESC LIMIT 1"
     ).collect()]
     assert "definitely_not_a_function_xyz" in bad[0][0]
+
+    def logged(statement):
+        """The (query_kind, type) rows ``statement`` journals."""
+        seen = len(s.query_log)
+        s.execute(statement)
+        return [(k, t) for _, k, t, _, _ in s.query_log[seen:]]
+
+    assert logged("WITH 2 AS x INSERT INTO ql SELECT x") == [
+        ("Insert", "QueryFinish")]
+    assert logged("REPLACE TABLE ql (a Int64) ENGINE = Memory") == [
+        ("Create", "QueryFinish")]
+    assert logged("EXISTS ql") == [("Exists", "QueryFinish")]
+    s.execute("CREATE DATABASE qd")
+    s.execute("CREATE TABLE qd.t1 (a Int64) ENGINE = Memory")
+    s.execute("CREATE TABLE qd.t2 (a Int64) ENGINE = Memory")
+    assert logged("DROP DATABASE qd") == [("Drop", "QueryFinish")]
+    assert "t1" not in s.tables and "t2" not in s.tables
+
+
+def test_database_label_of_rewritten_creates(spark, sf_dir):
+    """A CREATE that runs another statement's handler keeps the database
+    its own text names: CREATE OR REPLACE over an existing table, CREATE
+    TABLE … AS <table function> and ATTACH TABLE with a schema. DROP
+    DATABASE then drops exactly the tables labelled with it."""
+    from canal_clickhouse_spark.chsql_ddl import ChSession
+
+    s = ChSession(spark, sf_dir)
+    s.execute("CREATE DATABASE dl")
+    s.execute("CREATE TABLE dl.r (a Int64) ENGINE = Memory")
+    s.execute("CREATE OR REPLACE TABLE dl.r (a Int64) ENGINE = Memory")
+    s.execute("CREATE TABLE dl.n AS numbers(3)")
+    s.execute("USE dl")
+    s.execute("ATTACH TABLE default.x (a Int64) ENGINE = Memory")
+    assert (s.table_db.get("r"), s.table_db.get("n"), s.table_db.get("x")) \
+        == ("dl", "dl", None)
+    s.execute("DROP DATABASE dl")
+    assert sorted(s.tables) == ["x"]
 
 
 def test_r12_probe_batch14_lightweight_update_and_tails(spark, sf_dir):

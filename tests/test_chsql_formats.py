@@ -56,6 +56,12 @@ CASES = {
                       '{"z": 1, "a": "x"}\n{"z": 2, "a": "2", "n": [1]}\n',
                       [("z", "bigint"), ("a", "string"), ("n", "string")],
                       [(1, "x", None), (2, "2", "[1]")]),
+    # a column with no non-empty value is String, so a quoted "" stays ''
+    "csv_inferred_all_empty": ("CSV", None, '"\\N","",\\N, a ,"x,""y"\n',
+                               [("c1", "string"), ("c2", "string"),
+                                ("c3", "string"), ("c4", "string"),
+                                ("c5", "string")],
+                               [("\\N", "", None, " a ", 'x,"y')]),
     "csvwithnames_inferred": ("CSVWithNames", None, "b,a\nx,1\n",
                               [("b", "string"), ("a", "bigint")],
                               [("x", 1)]),
