@@ -43,6 +43,7 @@ Spark-first shapes:
 from __future__ import annotations
 
 import collections
+import itertools
 import os
 import re
 import time
@@ -979,23 +980,6 @@ _PART = (
 )
 
 
-# IN PARTITION restricts the mutation to one partition (r9 probe: the
-# clause previously reached Spark SQL verbatim and parse-failed / fell to
-# the generic unsupported error).
-_ALTER_UPDATE_RE = re.compile(
-    r"(?is)^\s*ALTER\s+TABLE\s+(?P<name>\w+)\s+UPDATE\s+"
-    r"(?P<assigns>.+?)"
-    rf"(?:\s+IN\s+PARTITION\s+(?P<part>{_PART}))?"
-    r"\s+WHERE\s+(?P<pred>.+)$"
-)
-
-_ALTER_DELETE_RE = re.compile(
-    r"(?is)^\s*ALTER\s+TABLE\s+(?P<name>\w+)\s+DELETE\s+"
-    rf"(?:IN\s+PARTITION\s+(?P<part>{_PART})\s+)?"
-    r"WHERE\s+(?P<pred>.+)$"
-)
-
-
 def _bool_pred(pred: str) -> str:
     """CH truthiness for mutation predicates: a bare integer literal
     (``ALTER TABLE t DELETE WHERE 1``) means nonzero = true — the same
@@ -1043,111 +1027,45 @@ def _tupleize_values(payload: str) -> str:
     return "".join(out)
 
 
-# COMMENT/CODEC/TTL column decorations parse-and-drop, the same posture
-# as parse_col_def (r11 probe: `ADD COLUMN c UInt8 DEFAULT 0 COMMENT 'c'`
-# swallowed the COMMENT into the DEFAULT expression and died at analysis)
-_COL_DECOR = (
-    r"(?:\s+(?:COMMENT\s+'(?:[^']|'')*'"
-    r"|CODEC\s*\((?:[^()]|\([^()]*\))*\)"
-    r"|TTL\s+[^,]+?))*"
-)
-_ADD_COL_ACTION_RE = re.compile(
-    # MATERIALIZED/ALIAS take the same insert-time-default posture as
-    # parse_col_def (r11 probe: `ADD COLUMN e UInt8 MATERIALIZED a*2`
-    # refused as an unknown type)
-    r"(?is)^ADD\s+COLUMN\s+(?:(?P<ine>IF\s+NOT\s+EXISTS)\s+)?(?P<col>\w+)\s+"
-    r"(?P<type>.+?)"
-    r"(?:\s+(?P<dkw>DEFAULT|MATERIALIZED|ALIAS)\s+(?P<dflt>.+?))?"
-    + _COL_DECOR +
-    r"(?:\s+AFTER\s+(?P<after>\w+)|\s+(?P<first>FIRST))?\s*$"
-)
-_DROP_COL_ACTION_RE = re.compile(
-    r"(?is)^DROP\s+COLUMN\s+(?:(?P<ie>IF\s+EXISTS)\s+)?(?P<col>\w+)\s*$"
-)
-_REMOVE_PROP_ACTION_RE = re.compile(
-    r"(?is)^MODIFY\s+COLUMN\s+(?:IF\s+EXISTS\s+)?(?P<col>\w+)\s+"
-    r"REMOVE\s+(?P<what>DEFAULT|MATERIALIZED|EPHEMERAL|ALIAS|COMMENT"
-    r"|CODEC|TTL|SETTINGS)\s*$"
-)
-_MODIFY_COL_PROPONLY_RE = re.compile(
-    # type-less property change: `MODIFY COLUMN c DEFAULT expr` keeps the
-    # type and swaps the default (r11 probe: previously parsed `DEFAULT
-    # 'ee'` as a CH type); CODEC/TTL/COMMENT-only modifications are
-    # storage/metadata hints — accepted as no-ops, parse_col_def's posture
-    r"(?is)^MODIFY\s+COLUMN\s+(?:IF\s+EXISTS\s+)?(?P<col>\w+)\s+"
-    r"(?P<dkw>DEFAULT|MATERIALIZED|ALIAS|CODEC|TTL|COMMENT)"
-    r"(?:\s+|(?=\())(?P<dflt>.+?)\s*$"
-)
-_MODIFY_COL_ACTION_RE = re.compile(
-    # AFTER/FIRST reposition the column (r10 probe: previously swallowed
-    # into the type text and refused as an unknown CH type)
-    r"(?is)^MODIFY\s+COLUMN\s+(?:IF\s+EXISTS\s+)?(?P<col>\w+)\s+"
-    r"(?P<type>.+?)(?:\s+(?:DEFAULT|MATERIALIZED|ALIAS)\s+(?P<dflt>.+?))?"
-    + _COL_DECOR +
-    r"(?:\s+AFTER\s+(?P<after>\w+)|\s+(?P<first>FIRST))?\s*$"
-)
-_RENAME_COL_ACTION_RE = re.compile(
-    r"(?is)^RENAME\s+COLUMN\s+(?:IF\s+EXISTS\s+)?(?P<col>\w+)\s+TO\s+"
-    r"(?P<new>\w+)\s*$"
-)
-
-
 def parse_alter_column_actions(ops_text: str) -> list[dict]:
-    """Parse the action list of an ``ALTER TABLE … COLUMN`` statement into
-    normalized dicts — shared contract with the CDC envelope path: a canal
-    DDL event's (op, column, type) triple (cdc/envelope.py `cdc_parse_ddl`)
-    and a script statement parse to the same action shape, so both produce
-    the same catalog change."""
+    """The `apply_alter_column_actions` actions of a list of column
+    commands (``ADD COLUMN c7 BIGINT, DROP COLUMN c4``), as the
+    `_ALTER_COMMANDS` rows claim them. Any other command raises. The canal
+    DDL path (`cdc_parse_ddl`) does not use it: it extracts (op, column,
+    type) with its own `regexp_extract`."""
     actions = []
-    for item in _split_top_commas(ops_text):
-        item = item.strip()
-        if (m := _ADD_COL_ACTION_RE.match(item)) is not None:
-            actions.append({
-                "op": "add", "col": m.group("col"),
-                "type": m.group("type").strip(),
-                "default": (m.group("dflt") or "").strip() or None,
-                "decor": (m.group("dkw") or "DEFAULT").upper(),
-                "after": m.group("after"),
-                "first": bool(m.group("first")),
-                "if_not_exists": bool(m.group("ine")),
-            })
-        elif (m := _DROP_COL_ACTION_RE.match(item)) is not None:
-            actions.append({
-                "op": "drop", "col": m.group("col"),
-                "if_exists": bool(m.group("ie")),
-            })
-        elif (m := _REMOVE_PROP_ACTION_RE.match(item)) is not None:
-            # MODIFY COLUMN c REMOVE DEFAULT/... (r9 probe: previously
-            # parsed as type 'REMOVE DEFAULT' and raised a confusing
-            # unknown-type error). Schema is unchanged; only catalog
-            # metadata (the recorded default) is affected.
-            actions.append({
-                "op": "remove_prop", "col": m.group("col"),
-                "what": m.group("what").upper(),
-            })
-        elif (m := _MODIFY_COL_PROPONLY_RE.match(item)) is not None:
-            kw = m.group("dkw").upper()
-            if kw in ("DEFAULT", "MATERIALIZED", "ALIAS"):
-                actions.append({
-                    "op": "modify_default", "col": m.group("col"),
-                    "default": m.group("dflt").strip(),
-                })
-            # CODEC/TTL/COMMENT-only: storage/metadata hints — no action
-        elif (m := _MODIFY_COL_ACTION_RE.match(item)) is not None:
-            actions.append({
-                "op": "modify", "col": m.group("col"),
-                "type": m.group("type").strip(),
-                "default": (m.group("dflt") or "").strip() or None,
-                "after": m.group("after"),
-                "first": bool(m.group("first")),
-            })
-        elif (m := _RENAME_COL_ACTION_RE.match(item)) is not None:
-            actions.append({
-                "op": "rename", "col": m.group("col"), "new": m.group("new"),
-            })
-        else:
-            raise ValueError(f"unsupported ALTER COLUMN action: {item!r}")
+    for row, m in _alter_commands(ops_text):
+        if row.handler is not ChSession._alter_columns:
+            raise ValueError(f"not a column action: {m.string!r}")
+        actions.append(_column_action(row.name, m))
     return actions
+
+
+def _column_action(row: str, m) -> dict:
+    """One column command as an action: ``op`` is its `_ALTER_COMMANDS`
+    row name after ``column_``, the other fields are its named groups
+    (IF [NOT] EXISTS and FIRST as booleans, keywords upper-case)."""
+    a = {"op": row.removeprefix("column_")}
+    for k, v in m.groupdict().items():
+        if k in ("first", "if_exists", "if_not_exists"):
+            v = bool(v)
+        elif k in ("decor", "what"):
+            v = (v or "DEFAULT").upper()
+        elif v is not None:
+            v = v.strip() or None
+        a[k] = v
+    return a
+
+
+def _known_column(columns, col: str, if_exists: bool) -> bool:
+    """CH's rule for a command on a column: an unknown column is an error,
+    unless the command says IF EXISTS — then it does nothing (False)."""
+    if col in columns:
+        return True
+    if if_exists:
+        return False
+    raise ValueError(
+        f"unknown column {col!r} (IF EXISTS skips a missing column)")
 
 
 def apply_alter_column_actions(
@@ -1159,9 +1077,11 @@ def apply_alter_column_actions(
     (DEFAULT expr when given, else NULL — Spark's missing-value convention;
     CH materializes the type default on old parts, a documented rendering
     divergence of the same class as the WITH TOTALS key rendering). DROP
-    projects the column out; MODIFY casts in place; RENAME aliases.
-    Returns (new_df, column_defaults) where column_defaults maps column →
-    translated DEFAULT SQL for INSERT-time fill of omitted columns."""
+    projects the column out; MODIFY casts in place; RENAME aliases. An
+    action on an unknown column raises unless it says IF EXISTS
+    (`_known_column`). Returns (new_df, column_defaults) where
+    column_defaults maps column → translated DEFAULT SQL for INSERT-time
+    fill of omitted columns."""
     cols: list[tuple[str, str]] = [(c, c) for c in df.columns]
     defaults: dict[str, str] = {}
 
@@ -1172,21 +1092,16 @@ def apply_alter_column_actions(
         return -1
 
     for a in actions:
-        if a["op"] == "remove_prop":
-            if idx(a["col"]) < 0:
-                raise ValueError(
-                    f"MODIFY COLUMN REMOVE on unknown column {a['col']!r}"
-                )
-            continue  # metadata-only; the session handler drops the default
-        if a["op"] == "modify_default":
-            if idx(a["col"]) < 0:
-                raise ValueError(
-                    f"MODIFY COLUMN DEFAULT on unknown column {a['col']!r}"
-                )
-            defaults[a["col"]] = translate(a["default"])
-            continue  # type and data unchanged
-        if a["op"] == "add":
-            if idx(a["col"]) >= 0:
+        at = idx(a["col"])
+        if a["op"] != "add" and not _known_column(
+            [out for out, _ in cols], a["col"], a.get("if_exists")
+        ):
+            continue
+        # "remove" is metadata-only: the session handler drops the default
+        if a["op"] == "default":
+            defaults[a["col"]] = translate(a["default"])  # type, data kept
+        elif a["op"] == "add":
+            if at >= 0:
                 if a.get("if_not_exists"):
                     continue
                 raise ValueError(f"ADD COLUMN: {a['col']!r} already exists")
@@ -1210,18 +1125,10 @@ def apply_alter_column_actions(
             else:
                 cols.append(entry)
         elif a["op"] == "drop":
-            at = idx(a["col"])
-            if at < 0:
-                if a.get("if_exists"):
-                    continue
-                raise ValueError(f"DROP COLUMN: unknown column {a['col']!r}")
             if len(cols) == 1:
                 raise ValueError("DROP COLUMN would leave an empty table")
             cols.pop(at)
         elif a["op"] == "modify":
-            at = idx(a["col"])
-            if at < 0:
-                raise ValueError(f"MODIFY COLUMN: unknown column {a['col']!r}")
             spark_t = ch_type_to_spark(a["type"])
             out, expr = cols[at]
             src = expr if expr != out else out
@@ -1241,9 +1148,6 @@ def apply_alter_column_actions(
                 entry = cols.pop(at)
                 cols.insert(idx(a["after"]) + 1, entry)
         elif a["op"] == "rename":
-            at = idx(a["col"])
-            if at < 0:
-                raise ValueError(f"RENAME COLUMN: unknown column {a['col']!r}")
             out, expr = cols[at]
             src = re.sub(rf"(?is)\s+AS\s+{re.escape(out)}\s*$", "", expr)
             cols[at] = (a["new"], f"{src} AS {a['new']}")
@@ -2715,13 +2619,6 @@ class ChSession:
             # through the usual insert coercion
             self._insert(name, self._run_select(ct["select"]), None)
 
-    def _modify_ttl(self, m) -> None:
-        name = m.group("name")
-        self._require_table(name, "MODIFY TTL")
-        self.meta.setdefault(name, {})["ttl"] = _parse_ttl_clause(
-            m.group("ttl")
-        )
-
     def _insert_infile(self, m) -> None:
         # INSERT … FROM INFILE: clickhouse-client reads the file
         # client-side — here the driver does; the format defaults from
@@ -2988,15 +2885,31 @@ class ChSession:
                 self.views.pop(name, None)
             raise
 
-    def _alter_column(self, m) -> None:
+    def _alter(self, m) -> None:
+        """``ALTER TABLE t <command>, …``: `_alter_commands` claims every
+        command first, then they run in list order. A run of consecutive
+        column actions is one `apply_alter_column_actions` call, so it
+        writes one parts-mode generation."""
+        name, commands = m.group("name"), _alter_commands(m.group("cmds"))
+        if any(row.name != "modify_query" for row, _ in commands):
+            self._require_table(name, "ALTER TABLE")
+            self.meta.setdefault(name, {})
+        for handler, run in itertools.groupby(
+            commands, lambda c: c[0].handler
+        ):
+            if handler is ChSession._alter_columns:
+                self._alter_columns(
+                    name, [_column_action(row.name, cm) for row, cm in run])
+            elif handler is not None:
+                for _, cm in run:
+                    handler(self, name, cm)
+
+    def _alter_columns(self, name: str, actions: list[dict]) -> None:
         # Mid-script schema evolution (CH's additive contract; see
         # apply_alter_column_actions). MVs defined AFTER the ALTER see
         # the evolved schema automatically — MV SELECTs translate at
         # fire time against the updated table view.
-        name = m.group("name")
-        tbl = self._require_table(name, "ALTER TABLE COLUMN")
-        actions = parse_alter_column_actions(m.group("ops"))
-        evolved, dflts = apply_alter_column_actions(tbl, actions)
+        evolved, dflts = apply_alter_column_actions(self.tables[name], actions)
         self._register(name, evolved)
         meta = self.meta.setdefault(name, {})
         col_defaults = dict(meta.get("column_defaults") or {})
@@ -3017,7 +2930,7 @@ class ChSession:
                 col_defaults.pop(a["col"], None)
                 nullable.discard(a["col"])
                 readonly.pop(a["col"], None)
-            elif a["op"] == "remove_prop":
+            elif a["op"] == "remove":
                 if a["what"] == "DEFAULT":
                     col_defaults.pop(a["col"], None)
                 if a["what"] in ("MATERIALIZED", "ALIAS"):
@@ -3045,12 +2958,39 @@ class ChSession:
         else:
             meta.pop("nullable_cols", None)
 
-    def _alter_update(self, m) -> None:
+    def _check_column(self, name: str, m) -> None:
+        # COMMENT COLUMN, MATERIALIZE COLUMN and MODIFY COLUMN … CODEC/TTL/
+        # COMMENT change nothing a read sees: CH's MATERIALIZE rewrites
+        # old parts to hold a column every row here already holds
+        _known_column(
+            self.tables[name].columns, m.group("col"), m.group("if_exists"))
+
+    def _clear_column(self, name: str, m) -> None:
+        tbl, col = self.tables[name], m.group("col")
+        if not _known_column(tbl.columns, col, m.group("if_exists")):
+            return None
+        dtypes = dict(tbl.dtypes)
+        dflt = (self.meta[name].get("column_defaults") or {}).get(col)
+        if not dflt:
+            # CH fills the TYPE default ('' / 0), not NULL, when no
+            # DEFAULT is declared (r12 probe batch 14); unmappable
+            # types (date/time) keep the NULL divergence documented
+            # on _ch_attr_type_default
+            dflt = _ch_attr_type_default(dtypes[col]) or "NULL"
+        fill = f"CAST({dflt} AS {dtypes[col]})"
+        if m.group("part"):
+            cond = self._partition_cond(name, m.group("part"))
+            fill = f"CASE WHEN {cond} THEN {fill} ELSE {col} END"
+        tbl.createOrReplaceTempView(name)
+        proj = [f"{fill} AS {col}" if c == col else c for c in tbl.columns]
+        self._register(
+            name, self.spark.sql(f"SELECT {', '.join(proj)} FROM {name}"))
+
+    def _update_rows(self, name: str, m) -> None:
         # CH mutation: rewrite matching rows (async rewrite-parts in CH;
         # here one projection over the current content — same post-state).
         # Mutations do NOT fire MVs, matching CH.
-        name = m.group("name")
-        tbl = self._require_table(name, "ALTER TABLE UPDATE")
+        tbl = self.tables[name]
         pred = _bool_pred(translate(m.group("pred")))
         if m.group("part"):
             cond = self._partition_cond(name, m.group("part"))
@@ -3108,17 +3048,45 @@ class ChSession:
                 + f" FROM {name}"
             )
         self._register(name, updated)
+        self._log_mutation(name, m)
+
+    def _delete_rows(self, name: str, m) -> None:
+        tbl = self.tables[name]
+        pred = _bool_pred(translate(m.group("pred")))
+        if m.group("part"):
+            cond = self._partition_cond(name, m.group("part"))
+            pred = f"{cond} AND ({pred})"
+        tbl.createOrReplaceTempView(name)
+        self._register(
+            name,
+            self.spark.sql(f"SELECT * FROM {name} WHERE NOT ({pred})"),
+        )
+        self._log_mutation(name, m)
+
+    def _log_mutation(self, name: str, m) -> None:
+        """The `system.mutations` row of one UPDATE/DELETE command."""
         self.mutations_log.append(
             (name, f"mutation_{len(self.mutations_log) + 1}.txt",
-             re.sub(r"(?is)^\s*ALTER\s+TABLE\s+\w+\s+", "", m.string)[:200])
-        )
+             m.string[:200]))
 
-    def _modify_query(self, m) -> None:
+    def _delete_from(self, m) -> None:
+        # lightweight DELETE (CH 22.8+) is the ALTER TABLE … DELETE
+        # mutation: byte-identical post-state on this engine, where CH's
+        # async vs lightweight distinction has no analog
+        self._require_table(m.group("name"), "DELETE FROM")
+        self._delete_rows(m.group("name"), m)
+
+    def _update(self, m) -> None:
+        # lightweight UPDATE (CH 25.x) is the ALTER TABLE … UPDATE
+        # mutation, as lightweight DELETE is (r12 probe batch 14)
+        self._require_table(m.group("name"), "UPDATE")
+        self._update_rows(m.group("name"), m)
+
+    def _modify_query(self, name: str, m) -> None:
         # MODIFY QUERY re-points a materialized view's transformation
         # for FUTURE inserts (CH contract — existing target rows stay);
         # this engine re-runs the stored select per source insert, so
         # swapping the stored text is the exact semantic (r10 probe).
-        name = m.group("name")
         if name not in self.mvs:
             raise ValueError(
                 f"ALTER TABLE {name} MODIFY QUERY: {name!r} is not a"
@@ -3132,41 +3100,130 @@ class ChSession:
             self._session_rewrites(m.group("sel").strip())
         )
 
-    def _alter_delete(self, m) -> None:
-        name = m.group("name")
-        tbl = self._require_table(name, "ALTER TABLE DELETE")
-        pred = _bool_pred(translate(m.group("pred")))
-        if m.group("part"):
-            cond = self._partition_cond(name, m.group("part"))
-            pred = f"{cond} AND ({pred})"
-        tbl.createOrReplaceTempView(name)
-        self._register(
-            name,
-            self.spark.sql(f"SELECT * FROM {name} WHERE NOT ({pred})"),
-        )
-        self.mutations_log.append(
-            (name, f"mutation_{len(self.mutations_log) + 1}.txt",
-             re.sub(r"(?is)^\s*ALTER\s+TABLE\s+\w+\s+", "", m.string)[:200])
-        )
+    def _modify_ttl(self, name: str, m) -> None:
+        self.meta[name]["ttl"] = _parse_ttl_clause(m.group("ttl"))
 
-    def _delete_from(self, m) -> None:
-        # lightweight DELETE (CH 22.8+) is the ALTER TABLE … DELETE
-        # mutation: byte-identical post-state on this engine, where CH's
-        # async vs lightweight distinction has no analog
-        part = m.group("part")
-        self._alter_delete(_ALTER_DELETE_RE.match(
-            f"ALTER TABLE {m.group('name')} DELETE "
-            + (f"IN PARTITION {part} " if part else "")
-            + f"WHERE {m.group('pred')}"
-        ))
+    def _materialize_ttl(self, name: str, m) -> None:
+        # CH re-applies the table TTL to existing parts — here the
+        # same max-anchored expiry merge OPTIMIZE FINAL runs (r11
+        # probe batch 23: previously the generic unsupported error)
+        ttl = self.meta[name].get("ttl")
+        if ttl:
+            self._register(
+                name, self._apply_ttl(name, self.tables[name], ttl["expr"]))
 
-    def _update(self, m) -> None:
-        # lightweight UPDATE (CH 25.x) is the ALTER TABLE … UPDATE
-        # mutation, as lightweight DELETE is (r12 probe batch 14)
-        self._alter_update(_ALTER_UPDATE_RE.match(
-            f"ALTER TABLE {m.group('name')} UPDATE"
-            f" {m.group('assigns')} WHERE {m.group('pred')}"
+    def _modify_comment(self, name: str, m) -> None:
+        self.meta[name]["comment"] = m.group("txt")
+
+    def _modify_order_by(self, name: str, m) -> None:
+        # sorting-key metadata (drives SHOW CREATE + the FINAL merge
+        # key); CH requires the new key to extend the old prefix —
+        # enforced so a narrowed key can't silently change FINAL
+        # dedup semantics
+        meta = self.meta[name]
+        cols = [c.strip() for c in m.group("key").strip().strip("()")
+                .split(",")]
+        unknown = [c for c in cols if c not in self.tables[name].columns]
+        if unknown:
+            raise ValueError(f"MODIFY ORDER BY: unknown column(s) {unknown}")
+        old = meta.get("order_by") or []
+        if list(old) != cols[: len(old)]:
+            raise ValueError(
+                "MODIFY ORDER BY must extend the existing sorting key"
+                f" prefix {list(old)} (got {cols})"
+            )
+        meta["order_by"] = cols
+
+    def _sample_by(self, name: str, m) -> None:
+        # sampling-key metadata (CH requires it inside the primary
+        # key; SAMPLE reads here hash deterministically, so the key
+        # is SHOW CREATE fidelity) — r12 probe: was the generic
+        # unsupported error, like the trailer's SAMPLE BY twin
+        key = (m.group("key") or "").strip()
+        if not key:  # REMOVE SAMPLE BY
+            self.meta[name].pop("sample_by", None)
+            return None
+        col = key.strip("()").split(",")[0].strip()
+        if re.fullmatch(r"\w+", col) and col not in self.tables[name].columns:
+            raise ValueError(f"MODIFY SAMPLE BY: unknown column {col!r}")
+        self.meta[name]["sample_by"] = key
+
+    def _index(self, name: str, m) -> None:
+        # skip indexes are storage-pruning hints with no Spark meaning:
+        # recorded for SHOW INDEX, never changing results — the policy of
+        # the CREATE trailer clauses
+        kept = self.meta[name].setdefault("indexes", {})
+        if m.group("op").upper() == "ADD":
+            kept[m.group("idx")] = m.group("spec").strip()
+        else:
+            kept.pop(m.group("idx"), None)
+
+    def _partition_between(self, name: str, m) -> None:
+        # Cross-table partition ops (r10 probe batch — the partition
+        # blue-green / retention idioms):
+        #   REPLACE PARTITION v FROM src — dest's partition v becomes
+        #     a copy of src's (src unchanged);
+        #   ATTACH PARTITION v FROM src — src's partition v rows are
+        #     COPIED into dest (CH copies, it does not move);
+        #   MOVE PARTITION v TO TABLE dst — rows move (dst gains,
+        #     this table loses them).
+        # CH requires identical structure and partition key — enforced
+        # here, because silently zipping mismatched schemas would
+        # corrupt rather than error.
+        tbl = self.tables[name]
+        moving = m.group("dst") is not None
+        other = m.group("dst") if moving else m.group("src")
+        otbl = self._require_table(other, "cross-table PARTITION op")
+        cond = F.expr(self._partition_cond(
+            name, m.group("mval") if moving else m.group("val")
         ))
+        if tbl.dtypes != otbl.dtypes:
+            raise ValueError(
+                f"PARTITION op between {name!r} and {other!r}:"
+                " table structures differ"
+            )
+        if (self.meta[name].get("partition_by_ch")
+                != (self.meta.get(other) or {}).get("partition_by_ch")):
+            raise ValueError(
+                f"PARTITION op between {name!r} and {other!r}:"
+                " partition keys differ"
+            )
+        if moving:
+            part = _checkpoint(tbl.filter(cond))
+            self._register(other, otbl.unionByName(part))
+            self._register(name, tbl.filter(~cond))
+        elif m.group("op").upper() == "REPLACE":
+            part = _checkpoint(otbl.filter(cond))
+            self._register(name, tbl.filter(~cond).unionByName(part))
+        else:  # ATTACH ... FROM: copy, src keeps its rows
+            part = _checkpoint(otbl.filter(cond))
+            self._register(name, tbl.unionByName(part))
+
+    def _partition(self, name: str, m) -> None:
+        # Part-level operations in CH, not mutations: they filter the
+        # stored rows, so the `_ORDER` tags (insert order) survive.
+        # DROP is CH's retention workhorse — O(1) metadata at real
+        # scale (a directory unlink with partitionBy layout).
+        op = m.group("op").upper()
+        cond = F.expr(self._partition_cond(name, m.group("val")))
+        rows = self._rows[name]
+        held = self.detached_parts.get(name)
+        if op == "ATTACH":
+            # the detached rows of that partition move back; nothing
+            # detached attaches nothing, as in CH
+            if held is not None:
+                self.detached_parts[name] = held.filter(~cond)
+                self._register(name, _union_rows(rows, held.filter(cond)))
+            return None
+        if op == "DETACH":
+            # checkpoint BEFORE re-registering: the parts-persistence
+            # model retires the old generation directory on rewrite,
+            # which would delete the files this plan reads
+            part = _checkpoint(rows.filter(cond))
+            self.detached_parts[name] = (
+                part if held is None else _union_rows(held, part)
+            )
+        self._register(name, rows.filter(~cond))
 
     def _optimize(self, m) -> None:
         name, part = m.group("name"), m.group("part")
@@ -3618,242 +3675,6 @@ class ChSession:
             enc = chformats.encode_sql(f, df.dtypes)
             fh.writelines(ln + "\n" for (ln,) in df.selectExpr(enc)
                           .toLocalIterator(prefetchPartitions=True))
-
-    def _alter_misc(self, m) -> None:
-        """Metadata-only ALTER decorations + CLEAR COLUMN + the partition
-        statements (DROP/DETACH/ATTACH, REPLACE/ATTACH … FROM, MOVE), which
-        select their rows with `_partition_cond`. Skip indexes, projections,
-        and settings are storage-pruning hints with no Spark meaning —
-        recorded in meta so scripts run, never changing results (same
-        policy as the CREATE trailer clauses)."""
-        name, rest = m.group("name"), m.group("rest")
-        tbl = self._require_table(name, "ALTER TABLE")
-        meta = self.meta.setdefault(name, {})
-        r = rest.strip()
-        m = re.match(
-            r"(?is)^CLEAR\s+COLUMN\s+(?:IF\s+EXISTS\s+)?(?P<col>\w+)"
-            rf"(?:\s+IN\s+PARTITION\s+(?P<part>{_PART}))?$", r
-        )
-        if m:
-            col = m.group("col")
-            if col not in tbl.columns:
-                return None  # IF EXISTS semantics; CH errors, we tolerate
-            dtypes = dict(tbl.dtypes)
-            dflt = (meta.get("column_defaults") or {}).get(col)
-            if not dflt:
-                # CH fills the TYPE default ('' / 0), not NULL, when no
-                # DEFAULT is declared (r12 probe batch 14); unmappable
-                # types (date/time) keep the NULL divergence documented
-                # on _ch_attr_type_default
-                dflt = _ch_attr_type_default(dtypes[col]) or "NULL"
-            fill = f"CAST({dflt} AS {dtypes[col]})"
-            if m.group("part"):
-                cond = self._partition_cond(name, m.group("part"))
-                fill = f"CASE WHEN {cond} THEN {fill} ELSE {col} END"
-            tbl.createOrReplaceTempView(name)
-            proj = [
-                f"{fill} AS {col}" if c == col else c for c in tbl.columns
-            ]
-            self._register(
-                name,
-                self.spark.sql(f"SELECT {', '.join(proj)} FROM {name}"),
-            )
-            return None
-        m = re.match(
-            r"(?is)^COMMENT\s+COLUMN\s+(?:IF\s+EXISTS\s+)?(?P<col>\w+)\s+"
-            r"'(?P<txt>[^']*)'$", r
-        )
-        if m:
-            meta.setdefault("column_comments", {})[m.group("col")] = \
-                m.group("txt")
-            return None
-        m = re.match(r"(?is)^MODIFY\s+COMMENT\s+'(?P<txt>[^']*)'$", r)
-        if m:
-            meta["comment"] = m.group("txt")
-            return None
-        m = re.match(
-            r"(?is)^(?P<op>ADD|DROP|MATERIALIZE|CLEAR)\s+INDEX\s+"
-            r"(?:IF\s+(?:NOT\s+)?EXISTS\s+)?(?P<idx>\w+)\b(?P<spec>.*)$", r
-        )
-        if m:
-            idxs = meta.setdefault("indexes", {})
-            if m.group("op").upper() == "ADD":
-                idxs[m.group("idx")] = m.group("spec").strip()
-            elif m.group("op").upper() == "DROP":
-                idxs.pop(m.group("idx"), None)
-            return None  # MATERIALIZE/CLEAR: storage-only, no-op
-        m = re.match(
-            r"(?is)^(?P<op>ADD|DROP|MATERIALIZE|CLEAR)\s+PROJECTION\s+"
-            r"(?:IF\s+(?:NOT\s+)?EXISTS\s+)?(?P<prj>\w+)\b(?P<spec>.*)$", r
-        )
-        if m:
-            prjs = meta.setdefault("projections", {})
-            if m.group("op").upper() == "ADD":
-                prjs[m.group("prj")] = m.group("spec").strip()
-            elif m.group("op").upper() == "DROP":
-                prjs.pop(m.group("prj"), None)
-            return None
-        if re.match(r"(?is)^(MODIFY|RESET)\s+SETTING\b", r):
-            return None  # storage knobs — same policy as CREATE SETTINGS
-        m = re.match(
-            r"(?is)^MATERIALIZE\s+COLUMN\s+(?P<col>\w+)"
-            rf"(?:\s+IN\s+PARTITION\s+{_PART})?$", r
-        )
-        if m:
-            # CH rewrites old parts to materialize a DEFAULT/MATERIALIZED
-            # column; every column here is already materialized in the
-            # DataFrame lineage — a correct no-op (r9 probe: previously
-            # the generic unsupported-statement error).
-            if m.group("col") not in tbl.columns:
-                raise ValueError(
-                    f"MATERIALIZE COLUMN: unknown column {m.group('col')!r}"
-                )
-            return None
-        if re.match(r"(?is)^MATERIALIZE\s+TTL"
-                    rf"(?:\s+IN\s+PARTITION\s+{_PART})?$", r):
-            # CH re-applies the table TTL to existing parts — here the
-            # same max-anchored expiry merge OPTIMIZE FINAL runs (r11
-            # probe batch 23: previously the generic unsupported error)
-            meta_ = self.meta.get(name) or {}
-            if meta_.get("ttl"):
-                self._register(
-                    name,
-                    self._apply_ttl(name, tbl, meta_["ttl"]["expr"]),
-                )
-            return None
-        m = re.match(r"(?is)^MODIFY\s+ORDER\s+BY\s+(?P<key>.+)$", r)
-        if m:
-            # sorting-key metadata (drives SHOW CREATE + the FINAL merge
-            # key); CH requires the new key to extend the old prefix —
-            # enforced so a narrowed key can't silently change FINAL
-            # dedup semantics
-            key = m.group("key").strip()
-            cols = [c.strip() for c in key.strip("()").split(",")]
-            unknown = [c for c in cols if c not in tbl.columns]
-            if unknown:
-                raise ValueError(
-                    f"MODIFY ORDER BY: unknown column(s) {unknown}"
-                )
-            old = meta.get("order_by") or []
-            if list(old) != cols[: len(old)]:
-                raise ValueError(
-                    "MODIFY ORDER BY must extend the existing sorting key"
-                    f" prefix {list(old)} (got {cols})"
-                )
-            meta["order_by"] = cols
-            return None
-        m = re.match(r"(?is)^MODIFY\s+SAMPLE\s+BY\s+(?P<key>.+)$", r)
-        if m:
-            # sampling-key metadata (CH requires it inside the primary
-            # key; SAMPLE reads here hash deterministically, so the key
-            # is SHOW CREATE fidelity) — r12 probe: was the generic
-            # unsupported error, like the trailer's SAMPLE BY twin
-            key = m.group("key").strip()
-            col = key.strip("()").split(",")[0].strip()
-            if re.fullmatch(r"\w+", col) and col not in tbl.columns:
-                raise ValueError(
-                    f"MODIFY SAMPLE BY: unknown column {col!r}"
-                )
-            meta["sample_by"] = key
-            return None
-        if re.match(r"(?is)^REMOVE\s+SAMPLE\s+BY\s*$", r):
-            meta.pop("sample_by", None)
-            return None
-        if re.match(r"(?is)^APPLY\s+DELETED\s+MASK"
-                    rf"(?:\s+IN\s+PARTITION\s+{_PART})?\s*$", r):
-            # CH compacts lightweight-deleted rows out of parts; deletes
-            # here apply immediately at statement time — correct no-op
-            return None
-        if re.match(r"(?is)^FREEZE\b", r):
-            return None  # backup hardlink — no logical effect
-        m = re.match(
-            rf"(?is)^(?:(?P<op>REPLACE|ATTACH)\s+PARTITION\s+(?P<val>{_PART})"
-            rf"\s+FROM\s+(?P<src>\w+)|MOVE\s+PARTITION\s+(?P<mval>{_PART})"
-            r"\s+TO\s+TABLE\s+(?P<dst>\w+))$", r
-        )
-        if m:
-            # Cross-table partition ops (r10 probe batch — the partition
-            # blue-green / retention idioms):
-            #   REPLACE PARTITION v FROM src — dest's partition v becomes
-            #     a copy of src's (src unchanged);
-            #   ATTACH PARTITION v FROM src — src's partition v rows are
-            #     COPIED into dest (CH copies, it does not move);
-            #   MOVE PARTITION v TO TABLE dst — rows move (dst gains,
-            #     this table loses them).
-            # CH requires identical structure and partition key — enforced
-            # here, because silently zipping mismatched schemas would
-            # corrupt rather than error.
-            moving = m.group("dst") is not None
-            other = m.group("dst") if moving else m.group("src")
-            otbl = self._require_table(other, "cross-table PARTITION op")
-            cond = F.expr(self._partition_cond(
-                name, m.group("mval") if moving else m.group("val")
-            ))
-            ometa = self.meta.get(other) or {}
-            if tbl.dtypes != otbl.dtypes:
-                raise ValueError(
-                    f"PARTITION op between {name!r} and {other!r}:"
-                    " table structures differ"
-                )
-            if meta.get("partition_by_ch") != ometa.get("partition_by_ch"):
-                raise ValueError(
-                    f"PARTITION op between {name!r} and {other!r}:"
-                    " partition keys differ"
-                )
-            if moving:
-                part = _checkpoint(tbl.filter(cond))
-                self._register(other, otbl.unionByName(part))
-                self._register(name, tbl.filter(~cond))
-            elif m.group("op").upper() == "REPLACE":
-                part = _checkpoint(otbl.filter(cond))
-                self._register(name, tbl.filter(~cond).unionByName(part))
-            else:  # ATTACH ... FROM: copy, src keeps its rows
-                part = _checkpoint(otbl.filter(cond))
-                self._register(name, tbl.unionByName(part))
-            return None
-        if re.match(rf"(?is)^MOVE\s+PARTITION\s+{_PART}\s+TO\s+"
-                    r"(?:DISK|VOLUME)\b", r):
-            # storage-tier placement — no logical effect here (same
-            # accepted-and-dropped class as SETTINGS/CODEC)
-            return None
-        if re.match(r"(?is)^FETCH\s+PARTITION\b", r):
-            raise ValueError(
-                "FETCH PARTITION downloads a part from another replica —"
-                " no replica set exists here; use ATTACH PARTITION <v>"
-                " FROM <table> (copy) or MOVE PARTITION <v> TO TABLE"
-                " <table> (move) between session tables"
-            )
-        m = re.match(
-            r"(?is)^(?P<op>DROP|DETACH|ATTACH)\s+PARTITION\s+"
-            rf"(?P<val>{_PART})$", r
-        )
-        if m:
-            # Part-level operations in CH, not mutations: they filter the
-            # stored rows, so the `_ORDER` tags (insert order) survive.
-            # DROP is CH's retention workhorse — O(1) metadata at real
-            # scale (a directory unlink with partitionBy layout).
-            op = m.group("op").upper()
-            cond = F.expr(self._partition_cond(name, m.group("val")))
-            rows = self._rows[name]
-            held = self.detached_parts.get(name)
-            if op == "ATTACH":
-                # the detached rows of that partition move back; nothing
-                # detached attaches nothing, as in CH
-                if held is not None:
-                    self.detached_parts[name] = held.filter(~cond)
-                    self._register(name, _union_rows(rows, held.filter(cond)))
-                return None
-            if op == "DETACH":
-                # checkpoint BEFORE re-registering: the parts-persistence
-                # model retires the old generation directory on rewrite,
-                # which would delete the files this plan reads
-                part = _checkpoint(rows.filter(cond))
-                self.detached_parts[name] = (
-                    part if held is None else _union_rows(held, part)
-                )
-            self._register(name, rows.filter(~cond))
-            return None
-        raise ValueError(f"unsupported ALTER TABLE form: {rest[:80]!r}")
 
     def run_script(self, script: str) -> DataFrame | None:
         """Execute a ;-separated script; returns the LAST statement's
@@ -4510,6 +4331,175 @@ def _strip_db_quals(s: str, databases: set[str]) -> str:
     return "".join(out) + tail
 
 
+# COMMENT/CODEC/TTL column decorations parse-and-drop, the same posture
+# as parse_col_def (r11 probe: `ADD COLUMN c UInt8 DEFAULT 0 COMMENT 'c'`
+# swallowed the COMMENT into the DEFAULT expression and died at analysis)
+_COL_DECOR = (
+    r"(?:\s+(?:COMMENT\s+'(?:[^']|'')*'"
+    r"|CODEC\s*\((?:[^()]|\([^()]*\))*\)"
+    r"|TTL\s+[^,]+?))*"
+)
+# AFTER/FIRST reposition the column (r10 probe: previously swallowed into
+# the type text and refused as an unknown CH type)
+_COL_PLACE = r"(?:\s+AFTER\s+(?P<after>\w+)|\s+(?P<first>FIRST))?"
+_IF_EXISTS = r"(?:(?P<if_exists>IF\s+EXISTS)\s+)?"
+_AlterCommand = collections.namedtuple("_AlterCommand", "name pattern handler")
+
+# Every command of an ALTER TABLE list, in claim order: the first row whose
+# pattern matches the whole command claims it. A pattern reads between
+# `(?is)^` and `\s*$`. The handler is the `ChSession` method that takes
+# the table name and the match, a guided refusal (a message, raised while
+# the list is claimed), or None for a command that does nothing here. The
+# column-action rows share `_alter_columns`, which takes a run of them as
+# `_column_action`s instead.
+_ALTER_COMMANDS = tuple(
+    _AlterCommand(name, re.compile(rf"(?is)^{p}\s*$"), handler)
+    for name, p, handler in (
+        # mutations: rewrite the rows WHERE selects (IN PARTITION: within
+        # one partition) and log a `system.mutations` row
+        ("update",
+         r"UPDATE\s+(?P<assigns>\w+\s*=.+?)"
+         rf"(?:\s+IN\s+PARTITION\s+(?P<part>{_PART}))?\s+WHERE\s+(?P<pred>.+)",
+         ChSession._update_rows),
+        ("delete",
+         rf"DELETE\s+(?:IN\s+PARTITION\s+(?P<part>{_PART})\s+)?"
+         r"WHERE\s+(?P<pred>.+)",
+         ChSession._delete_rows),
+        # column actions — CH's schema evolution, the DDL events canal's
+        # binlog stream carries. MATERIALIZED/ALIAS take parse_col_def's
+        # insert-time-default posture (r11 probe)
+        ("column_add",
+         r"ADD\s+COLUMN\s+(?:(?P<if_not_exists>IF\s+NOT\s+EXISTS)\s+)?"
+         r"(?P<col>\w+)\s+(?P<type>.+?)"
+         r"(?:\s+(?P<decor>DEFAULT|MATERIALIZED|ALIAS)\s+(?P<default>.+?))?"
+         + _COL_DECOR + _COL_PLACE,
+         ChSession._alter_columns),
+        ("column_drop", rf"DROP\s+COLUMN\s+{_IF_EXISTS}(?P<col>\w+)",
+         ChSession._alter_columns),
+        ("column_rename",
+         rf"RENAME\s+COLUMN\s+{_IF_EXISTS}(?P<col>\w+)\s+TO\s+(?P<new>\w+)",
+         ChSession._alter_columns),
+        # MODIFY COLUMN c REMOVE <property>: catalog metadata only (r9
+        # probe: previously parsed as the type 'REMOVE DEFAULT')
+        ("column_remove",
+         rf"MODIFY\s+COLUMN\s+{_IF_EXISTS}(?P<col>\w+)\s+REMOVE\s+"
+         r"(?P<what>DEFAULT|MATERIALIZED|EPHEMERAL|ALIAS|COMMENT|CODEC|TTL"
+         r"|SETTINGS)",
+         ChSession._alter_columns),
+        # a type-less MODIFY COLUMN c DEFAULT e keeps the type and swaps
+        # the default (r11 probe: previously parsed `DEFAULT 'ee'` as a
+        # type); CODEC/TTL/COMMENT alone are storage/metadata hints
+        ("column_default",
+         rf"MODIFY\s+COLUMN\s+{_IF_EXISTS}(?P<col>\w+)\s+"
+         r"(?:DEFAULT|MATERIALIZED|ALIAS)\s+(?P<default>.+?)",
+         ChSession._alter_columns),
+        ("column_hint",
+         rf"MODIFY\s+COLUMN\s+{_IF_EXISTS}(?P<col>\w+)\s+(?:CODEC|TTL"
+         r"|COMMENT)\b.+",
+         ChSession._check_column),
+        ("column_modify",
+         rf"MODIFY\s+COLUMN\s+{_IF_EXISTS}(?P<col>\w+)\s+(?P<type>.+?)"
+         r"(?:\s+(?:DEFAULT|MATERIALIZED|ALIAS)\s+(?P<default>.+?))?"
+         + _COL_DECOR + _COL_PLACE,
+         ChSession._alter_columns),
+        ("column_comment",
+         rf"COMMENT\s+COLUMN\s+{_IF_EXISTS}(?P<col>\w+)\s+"
+         r"'(?:[^'\\]|\\.|'')*'",
+         ChSession._check_column),
+        ("column_materialize",
+         rf"MATERIALIZE\s+COLUMN\s+{_IF_EXISTS}(?P<col>\w+)"
+         rf"(?:\s+IN\s+PARTITION\s+{_PART})?",
+         ChSession._check_column),
+        ("column_clear",
+         rf"CLEAR\s+COLUMN\s+{_IF_EXISTS}(?P<col>\w+)"
+         rf"(?:\s+IN\s+PARTITION\s+(?P<part>{_PART}))?",
+         ChSession._clear_column),
+        # table metadata
+        ("modify_ttl", r"MODIFY\s+TTL\s+(?P<ttl>.+?)", ChSession._modify_ttl),
+        ("materialize_ttl",
+         rf"MATERIALIZE\s+TTL(?:\s+IN\s+PARTITION\s+{_PART})?",
+         ChSession._materialize_ttl),
+        ("modify_query", r"MODIFY\s+QUERY\s+(?P<sel>.+)",
+         ChSession._modify_query),
+        ("modify_comment", r"MODIFY\s+COMMENT\s+'(?P<txt>(?:[^'\\]|\\.|'')*)'",
+         ChSession._modify_comment),
+        ("modify_order_by", r"MODIFY\s+ORDER\s+BY\s+(?P<key>.+)",
+         ChSession._modify_order_by),
+        ("sample_by",
+         r"(?:MODIFY\s+SAMPLE\s+BY\s+(?P<key>.+)|REMOVE\s+SAMPLE\s+BY)",
+         ChSession._sample_by),
+        ("index",
+         r"(?P<op>ADD|DROP)\s+INDEX\s+(?:IF\s+(?:NOT\s+)?EXISTS\s+)?"
+         r"(?P<idx>\w+)\b(?P<spec>.*)",
+         ChSession._index),
+        # storage-only commands, no logical effect here: projections,
+        # building or dropping an index's data, settings (CREATE SETTINGS'
+        # policy), a backup hardlink, compacting lightweight-deleted rows
+        # (deletes here apply at statement time), tier placement
+        ("projection",
+         r"(?:ADD\s+PROJECTION\s+(?:IF\s+NOT\s+EXISTS\s+)?\w+\s*\(.*\)"
+         r"|(?:DROP|MATERIALIZE|CLEAR)\s+PROJECTION\s+(?:IF\s+EXISTS\s+)?\w+"
+         rf"(?:\s+IN\s+PARTITION\s+{_PART})?)",
+         None),
+        ("materialize_index",
+         r"(?:MATERIALIZE|CLEAR)\s+INDEX\s+(?:IF\s+EXISTS\s+)?\w+"
+         rf"(?:\s+IN\s+PARTITION\s+{_PART})?",
+         None),
+        ("setting", r"(?:MODIFY|RESET)\s+SETTING\s+.+", None),
+        ("freeze",
+         rf"FREEZE(?:\s+PARTITION\s+{_PART})?(?:\s+WITH\s+NAME\s+'[^']*')?",
+         None),
+        ("apply_deleted_mask",
+         rf"APPLY\s+DELETED\s+MASK(?:\s+IN\s+PARTITION\s+{_PART})?", None),
+        ("move_to_disk",
+         rf"MOVE\s+PARTITION\s+{_PART}\s+TO\s+(?:DISK|VOLUME)\s+'[^']*'",
+         None),
+        ("fetch_partition", r"FETCH\s+PARTITION\b.*",
+         "FETCH PARTITION downloads a part from another replica — no"
+         " replica set exists here; use ATTACH PARTITION <v> FROM <table>"
+         " (copy) or MOVE PARTITION <v> TO TABLE <table> (move) between"
+         " session tables"),
+        # partitions, each selected by `_partition_cond`
+        ("partition_between",
+         rf"(?:(?P<op>REPLACE|ATTACH)\s+PARTITION\s+(?P<val>{_PART})"
+         rf"\s+FROM\s+(?P<src>\w+)|MOVE\s+PARTITION\s+(?P<mval>{_PART})"
+         r"\s+TO\s+TABLE\s+(?P<dst>\w+))",
+         ChSession._partition_between),
+        ("partition",
+         rf"(?P<op>DROP|DETACH|ATTACH)\s+PARTITION\s+(?P<val>{_PART})",
+         ChSession._partition),
+    )
+)
+
+
+def _alter_commands(cmds: str) -> list[tuple[_AlterCommand, re.Match]]:
+    """Claim every command of an ALTER TABLE list, in list order, before
+    any runs. The list splits at top-level commas (`_split_args`). A piece
+    heads a command when an `_ALTER_COMMANDS` row claims it alone, or it
+    and the rest of the list (UPDATE's assignments hold commas); any other
+    piece continues the command before it, as in ``MODIFY SETTING a = 1,
+    b = 2``. A guided refusal raises here."""
+    pieces = _split_args(cmds)
+    runs: list[list[str]] = []
+    for i, piece in enumerate(pieces):
+        if not runs or _claim(piece, _ALTER_COMMANDS) or _claim(
+            ", ".join(pieces[i:]), _ALTER_COMMANDS
+        ):
+            runs.append([piece])
+        else:
+            runs[-1].append(piece)
+    claimed = []
+    for run in runs:
+        cmd = ", ".join(run)
+        c = _claim(cmd, _ALTER_COMMANDS)
+        if c is None:
+            raise ValueError(f"unsupported ALTER TABLE command: {cmd[:80]!r}")
+        if isinstance(c[0].handler, str):
+            raise ValueError(c[0].handler)
+        claimed.append(c)
+    return claimed
+
+
 _SET_PARAM_RE = re.compile(r"(?is)^\s*SET\s+param_(\w+)\s*=\s*(.+)$")
 _ACCESS = (
     "access control statements have no model in this engine; enforce ACLs"
@@ -4551,9 +4541,9 @@ _STATEMENTS = tuple(
          r"(?P<populate>POPULATE\s+)?AS\s+(?P<select>SELECT\b.*)$",
          ChSession._create_mv),
         ("create_table", "Create", _CreateTableForm, ChSession._create_table),
-        ("modify_ttl", "Alter",
-         r"ALTER\s+TABLE\s+(?P<name>\w+)\s+MODIFY\s+TTL\s+(?P<ttl>.+?)\s*$",
-         ChSession._modify_ttl),
+        # every ALTER TABLE command list; `_ALTER_COMMANDS` claims each
+        ("alter", "Alter", r"ALTER\s+TABLE\s+(?P<name>\w+)\s+(?P<cmds>.+)$",
+         ChSession._alter),
         ("insert_infile", "Insert",
          r"INSERT\s+INTO\s+(?P<name>\w+)\s*(?:\((?P<cols>[\w,\s]+)\)\s*)?"
          r"FROM\s+INFILE\s+'(?P<path>[^']+)'\s*"
@@ -4608,25 +4598,14 @@ _STATEMENTS = tuple(
          r"(?P<ifne>IF\s+NOT\s+EXISTS\s+)?(?P<name>\w+)\s*"
          r"AS\s+(?P<select>SELECT\b.*)$",
          ChSession._create_view),
-        # ADD|DROP|MODIFY|RENAME COLUMN … — CH's schema evolution, the DDL
-        # events canal's binlog stream carries (r5 verdict missing #1);
-        # the comma-separated multi-action form is CH's own grammar
-        ("alter_column", "Alter",
-         r"ALTER\s+TABLE\s+(?P<name>\w+)\s+"
-         r"(?P<ops>(?:ADD|DROP|MODIFY|RENAME)\s+COLUMN\b.*)$",
-         ChSession._alter_column),
-        ("alter_update", "Alter", _ALTER_UPDATE_RE, ChSession._alter_update),
-        ("modify_query", "Alter",
-         r"ALTER\s+TABLE\s+(?P<name>\w+)\s+MODIFY\s+QUERY\s+(?P<sel>.+)$",
-         ChSession._modify_query),
-        ("alter_delete", "Alter", _ALTER_DELETE_RE, ChSession._alter_delete),
         ("delete_from", "Delete",
          r"DELETE\s+FROM\s+(?P<name>\w+)\s+"
          rf"(?:IN\s+PARTITION\s+(?P<part>{_PART})\s+)?WHERE\s+(?P<pred>.+)$",
          ChSession._delete_from),
         ("update", "Update",
-         r"UPDATE\s+(?P<name>\w+)\s+SET\s+(?P<assigns>.+?)\s+WHERE\s+"
-         r"(?P<pred>.+)$",
+         r"UPDATE\s+(?P<name>\w+)\s+SET\s+(?P<assigns>.+?)"
+         rf"(?:\s+IN\s+PARTITION\s+(?P<part>{_PART}))?"
+         r"\s+WHERE\s+(?P<pred>.+)$",
          ChSession._update),
         # PARTITION p scopes the merge to one partition (r9 verdict
         # missing #3) — the retention/compaction idiom
@@ -4674,20 +4653,6 @@ _STATEMENTS = tuple(
          r"(?P<ifne>IF\s+NOT\s+EXISTS\s+)?(?P<name>\w+)\s+AS\s+(?P<src>\w+)"
          r"\s*(?P<trailer>.*)$",
          ChSession._create_clone),
-        # grab-bag ALTER forms: metadata-only decorations (COMMENT, skip
-        # indexes, projections, settings) plus CLEAR COLUMN and the
-        # partition statements
-        ("alter_misc", "Alter",
-         r"ALTER\s+TABLE\s+(?P<name>\w+)\s+(?P<rest>"
-         r"(?:CLEAR|COMMENT|MODIFY\s+COMMENT|ADD\s+INDEX|DROP\s+INDEX|"
-         r"MATERIALIZE\s+INDEX|CLEAR\s+INDEX|MATERIALIZE\s+COLUMN|"
-         r"MATERIALIZE\s+TTL|ADD\s+PROJECTION|DROP\s+PROJECTION|"
-         r"MATERIALIZE\s+PROJECTION|CLEAR\s+PROJECTION|MODIFY\s+SETTING|"
-         r"RESET\s+SETTING|(?:DROP|DETACH|ATTACH)\s+PARTITION|FREEZE|"
-         r"REPLACE\s+PARTITION|MOVE\s+PARTITION|FETCH\s+PARTITION|"
-         r"MODIFY\s+ORDER\s+BY|MODIFY\s+SAMPLE\s+BY|REMOVE\s+SAMPLE\s+BY|"
-         r"APPLY\s+DELETED\s+MASK)\b.*)$",
-         ChSession._alter_misc),
         ("attach_schema", "Create",
          r"ATTACH\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?(?P<name>\w+)\s*\(",
          ChSession._attach_schema),
@@ -4793,10 +4758,11 @@ _STATEMENTS = tuple(
 )
 
 
-def _claim(s: str) -> tuple[_Statement, re.Match] | None:
-    """The first `_STATEMENTS` row whose pattern matches the prepared
-    statement ``s``, with its match; None when no row claims it."""
-    for row in _STATEMENTS:
+def _claim(s: str, rows=_STATEMENTS) -> tuple | None:
+    """The first of ``rows`` (`_STATEMENTS`: ``s`` is a prepared statement;
+    or `_ALTER_COMMANDS`) whose pattern matches ``s``, with its match;
+    None when no row claims it."""
+    for row in rows:
         m = row.pattern.match(s)
         if m:
             return row, m
@@ -5018,9 +4984,10 @@ def chsql_alter_column(spark: SparkSession, sf_dir: str) -> DataFrame:
     omit it; DROP projects out; MODIFY re-types in place; an MV defined
     AFTER the ALTER aggregates the evolved column and fires on subsequent
     blocks. The oracle recomputes the band aggregate from the full base
-    table — green means backfill ≡ insert-time default ≡ recompute. Same
-    catalog change as a canal `cdc_parse_ddl` envelope event (the parser
-    is shared: `parse_alter_column_actions`)."""
+    table — green means backfill ≡ insert-time default ≡ recompute. The
+    canal twin, `cdc_parse_ddl`, does not share this parser: it extracts
+    (table, op, column, type) from the DDL text with its own
+    `regexp_extract`."""
     return ch_execute_script(spark, sf_dir, _CH_ALTER_COLUMN_SCRIPT)
 
 

@@ -9,6 +9,8 @@ CH→Spark type mapper.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -530,11 +532,27 @@ def test_select_final_on_session_replacing_table(spark, sf_dir):
 # hand-written case covers.
 # ---------------------------------------------------------------------------
 
-from hypothesis import HealthCheck, given, settings  # noqa: E402
+from hypothesis import HealthCheck, example, given, settings  # noqa: E402
 from hypothesis import strategies as st  # noqa: E402
 
 # the spellings of one partition value r of the fuzz tables' key
 _PART_SPELLINGS = st.sampled_from(["{}", "ID '{}'", "({})"])
+
+# the steps that are one ALTER TABLE fz command (`_alter_command`)
+_UPDATE = st.tuples(
+    st.just("update"), st.integers(0, 3), st.sampled_from("xyz"))
+_DELETE = st.tuples(st.just("delete"), st.integers(0, 3))
+# r6: schema evolution interleaved with DML (verdict task 3) — the model
+# invariant is `extra == k * 2` whenever the column exists, for backfilled
+# AND later-inserted rows alike.
+_ADDCOL = st.tuples(st.just("addcol"))
+_DROPCOL = st.tuples(st.just("dropcol"))
+# r6: retention age-out interleaved with everything else — both fuzz tables
+# are PARTITION BY modulo(k, 2), so DROP PARTITION r removes the k%2==r
+# rows; missing partition = no-op; partition metadata must survive
+# EXCHANGE/RENAME swaps. Each partition op draws the spelling of r: the
+# value, its ID or a 1-tuple.
+_DROPPART = st.tuples(st.just("droppart"), st.integers(0, 2), _PART_SPELLINGS)
 
 _OPS = st.lists(
     st.one_of(
@@ -549,27 +567,24 @@ _OPS = st.lists(
                 min_size=1, max_size=4,
             ),
         ),
-        st.tuples(st.just("update"), st.integers(0, 3), st.sampled_from("xyz")),
-        st.tuples(st.just("delete"), st.integers(0, 3)),
+        _UPDATE,
+        _DELETE,
         st.tuples(st.just("optimize")),
         st.tuples(st.just("truncate")),
-        # r6: schema evolution interleaved with DML (verdict task 3) — the
-        # model invariant is `extra == k * 2` whenever the column exists,
-        # for backfilled AND later-inserted rows alike.
-        st.tuples(st.just("addcol")),
-        st.tuples(st.just("dropcol")),
+        _ADDCOL,
+        _DROPCOL,
         st.tuples(st.just("modifycol")),
         # r6: blue-green swap primitives (verdict task 5) — both swap the
         # model's two table states; `bluegreen` does it via chained RENAMEs,
         # `exchange` via the atomic statement.
         st.tuples(st.just("exchange")),
         st.tuples(st.just("bluegreen")),
-        # r6: retention age-out interleaved with everything else — both
-        # fuzz tables are PARTITION BY modulo(k, 2), so DROP PARTITION r
-        # removes the k%2==r rows; missing partition = no-op; partition
-        # metadata must survive EXCHANGE/RENAME swaps. Each partition op
-        # draws the spelling of r: the value, its ID or a 1-tuple.
-        st.tuples(st.just("droppart"), st.integers(0, 2), _PART_SPELLINGS),
+        _DROPPART,
+        # 2–3 of the one-command steps as one ALTER TABLE list, which
+        # runs its commands in list order
+        st.tuples(st.just("alterlist"), st.lists(
+            st.one_of(_UPDATE, _DELETE, _DROPPART, _ADDCOL, _DROPCOL),
+            min_size=2, max_size=3)),
         # r7: OPTIMIZE DEDUPLICATE removes fully identical rows — model
         # dedupes the tuple multiset; DETACH/ATTACH PARTITION must round
         # trip losslessly (model unchanged) whichever spelling each side
@@ -650,6 +665,11 @@ _OPS = st.lists(
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(ops=_OPS)
+@example(ops=[
+    ("insert", [(1, 1, "a"), (2, 1, "b"), (4, 2, "c"), (7, 1, "d")]),
+    ("alterlist", [("update", 0, "x"), ("addcol",), ("droppart", 1, "{}")]),
+    ("alterlist", [("dropcol",), ("delete", 2)]),
+])
 def test_ddl_statements_match_reference_model(spark, sf_dir, mode, ops):
     # r5 verdict task 8: identical statement semantics in the in-memory
     # lineage model AND the durable parquet-parts model, on the same
@@ -665,6 +685,28 @@ def test_ddl_statements_match_reference_model(spark, sf_dir, mode, ops):
     finally:
         if parts:
             shutil.rmtree(parts, ignore_errors=True)
+
+
+def _alter_command(op, model, has_extra):
+    """The ALTER TABLE fz command of a one-command step, with the model and
+    the `extra` flag after it."""
+    if op[0] == "update":
+        _, r, tag = op
+        return (f"UPDATE s = '{tag}' WHERE k % 4 = {r}",
+                [(k, v, tag if k % 4 == r else s) for k, v, s in model],
+                has_extra)
+    if op[0] == "delete":
+        _, r = op
+        return (f"DELETE WHERE k % 4 = {r}",
+                [(k, v, s) for k, v, s in model if k % 4 != r], has_extra)
+    if op[0] == "droppart":
+        _, r, sp = op
+        return (f"DROP PARTITION {sp.format(r)}",
+                [(k, v, s) for k, v, s in model if k % 2 != r], has_extra)
+    if op[0] == "addcol":
+        return ("ADD COLUMN IF NOT EXISTS extra Int64 DEFAULT k * 2", model,
+                True)
+    return "DROP COLUMN IF EXISTS extra", model, False
 
 
 def _run_ddl_model(spark, sf_dir, ops, parts_dir):
@@ -692,16 +734,15 @@ def _run_ddl_model(spark, sf_dir, ops, parts_dir):
             # predates the migration
             ch.execute(f"INSERT INTO fz (k, ver, s) VALUES {vals}")
             model.extend(rows)
-        elif op[0] == "update":
-            _, r, tag = op
-            ch.execute(f"ALTER TABLE fz UPDATE s = '{tag}' WHERE k % 4 = {r}")
-            model = [
-                (k, v, tag if k % 4 == r else s) for k, v, s in model
-            ]
-        elif op[0] == "delete":
-            _, r = op
-            ch.execute(f"ALTER TABLE fz DELETE WHERE k % 4 = {r}")
-            model = [(k, v, s) for k, v, s in model if k % 4 != r]
+        elif op[0] in ("update", "delete", "droppart", "addcol", "dropcol"):
+            cmd, model, has_extra = _alter_command(op, model, has_extra)
+            ch.execute(f"ALTER TABLE fz {cmd}")
+        elif op[0] == "alterlist":
+            cmds = []
+            for step in op[1]:
+                cmd, model, has_extra = _alter_command(step, model, has_extra)
+                cmds.append(cmd)
+            ch.execute(f"ALTER TABLE fz {', '.join(cmds)}")
         elif op[0] == "optimize":
             ch.execute("OPTIMIZE TABLE fz FINAL")
             # keep max-version per key; interpreter's ROW_NUMBER tiebreak on
@@ -715,25 +756,12 @@ def _run_ddl_model(spark, sf_dir, ops, parts_dir):
         elif op[0] == "truncate":
             ch.execute("TRUNCATE TABLE fz")
             model = []
-        elif op[0] == "addcol":
-            ch.execute(
-                "ALTER TABLE fz ADD COLUMN IF NOT EXISTS extra Int64"
-                " DEFAULT k * 2"
-            )
-            has_extra = True
-        elif op[0] == "dropcol":
-            ch.execute("ALTER TABLE fz DROP COLUMN IF EXISTS extra")
-            has_extra = False
         elif op[0] == "modifycol" and has_extra:
             ch.execute("ALTER TABLE fz MODIFY COLUMN extra Int32")
         elif op[0] == "exchange":
             ch.execute("EXCHANGE TABLES fz AND fz2")
             model, model2 = model2, model
             has_extra, has_extra2 = has_extra2, has_extra
-        elif op[0] == "droppart":
-            _, r, sp = op
-            ch.execute(f"ALTER TABLE fz DROP PARTITION {sp.format(r)}")
-            model = [(k, v, s_) for k, v, s_ in model if k % 2 != r]
         elif op[0] == "dedup":
             ch.execute("OPTIMIZE TABLE fz DEDUPLICATE")
             model = sorted(set(model))
@@ -1308,6 +1336,122 @@ def test_alter_column_parser_matches_cdc_envelope_shape(spark, sf_dir):
     assert parse_alter_column_actions("DROP COLUMN c4")[0]["op"] == "drop"
     m = parse_alter_column_actions("MODIFY COLUMN c2 VARCHAR(64)")
     assert m[0]["op"] == "modify" and m[0]["col"] == "c2"
+
+
+# ALTER TABLE lists. Each case: setup commands run on both tables, then the
+# commands run as one list on `l<i>` and one statement each on `r<i>`.
+_ALTER_LISTS = [
+    ([], ["FREEZE", "DROP PARTITION 1"]),
+    ([], ["ADD INDEX ix s TYPE bloom_filter GRANULARITY 1",
+          "DROP PARTITION 0"]),
+    (["ADD INDEX ix s TYPE bloom_filter GRANULARITY 1"],
+     ["MATERIALIZE INDEX ix", "DROP PARTITION 2"]),
+    ([], ["DROP PARTITION 0", "DROP PARTITION 2"]),
+    ([], ["MODIFY COMMENT 'c1'", "DROP PARTITION 1"]),
+    (["ADD COLUMN c Int64 DEFAULT k"], ["MATERIALIZE TTL", "DROP COLUMN c"]),
+    ([], ["ADD COLUMN c Int64", "COMMENT COLUMN c 'x'"]),
+    ([], ["UPDATE s = 'z' WHERE k = 1", "DELETE WHERE k = 2"]),
+]
+
+
+def _partitioned(ch, name):
+    """`name (k, p, s) PARTITION BY p` holding k = 1, 2, 3 in partitions
+    0, 1, 2."""
+    ch.execute(f"CREATE TABLE {name} (k Int64, p Int64, s String)"
+               " ENGINE = MergeTree PARTITION BY p ORDER BY k")
+    ch.execute(f"INSERT INTO {name} VALUES (1, 0, 'a'), (2, 1, 'b'),"
+               " (3, 2, 'c')")
+
+
+def _state(ch, name):
+    df = ch.execute(f"SELECT * FROM {name}")
+    return df.columns, sorted(map(tuple, df.collect()))
+
+
+@pytest.mark.parametrize("mode", ["memory", "parts"])
+@pytest.mark.parametrize("case", range(len(_ALTER_LISTS)))
+def test_alter_list_equals_its_commands_in_order(spark, sf_dir, tmp_path,
+                                                 mode, case):
+    setup, cmds = _ALTER_LISTS[case]
+    ch = ChSession(spark, sf_dir,
+                   parts_dir=str(tmp_path) if mode == "parts" else None)
+    for t in ("l", "r"):
+        _partitioned(ch, t)
+        for c in setup:
+            ch.execute(f"ALTER TABLE {t} {c}")
+    ch.execute(f"ALTER TABLE l {', '.join(cmds)}")
+    for c in cmds:
+        ch.execute(f"ALTER TABLE r {c}")
+    assert _state(ch, "l") == _state(ch, "r")
+    assert ch.meta["l"].get("comment") == ch.meta["r"].get("comment")
+
+
+@pytest.mark.parametrize("mode", ["memory", "parts"])
+def test_alter_list_claims_before_it_runs(spark, sf_dir, tmp_path, mode):
+    """Every command of a list is claimed before any runs; a run of column
+    actions is one generation; one list is one `query_log` row, and each
+    mutation command keeps its `system.mutations` row."""
+    ch = ChSession(spark, sf_dir,
+                   parts_dir=str(tmp_path) if mode == "parts" else None)
+    _partitioned(ch, "t")
+    before = _state(ch, "t")
+    with pytest.raises(ValueError, match="replica"):
+        ch.execute("ALTER TABLE t DROP PARTITION 1, FETCH PARTITION 2"
+                   " FROM '/x'")
+    with pytest.raises(ValueError, match="unsupported ALTER TABLE command"):
+        ch.execute("ALTER TABLE t DROP PARTITION 1, VACUUM")
+    assert _state(ch, "t") == before
+    if mode == "parts":
+        g = ch._gseq
+        ch.execute("ALTER TABLE t ADD COLUMN a Int64 DEFAULT k,"
+                   " MODIFY COLUMN a Int32, RENAME COLUMN a TO b")
+        assert ch._gseq == g + 1
+        assert _state(ch, "t")[0] == ["k", "p", "s", "b"]
+    n_log = len(ch.query_log)
+    ch.execute("ALTER TABLE t UPDATE s = 'z' WHERE k = 1,"
+               " DELETE WHERE k = 2")
+    assert [r[1] for r in ch.query_log[n_log:]] == ["Alter"]
+    cmds = [r.command for r in ch.execute(
+        "SELECT command FROM system.mutations ORDER BY mutation_id"
+    ).collect()]
+    assert cmds == ["UPDATE s = 'z' WHERE k = 1", "DELETE WHERE k = 2"]
+
+
+def test_alter_list_runs_in_list_order(spark, sf_dir):
+    """ClickHouse sorts a list's commands by kind before it runs them; this
+    engine runs them in list order. So an UPDATE of a column that a later
+    command of the same list renames updates it first, then renames it."""
+    ch = ChSession(spark, sf_dir)
+    _partitioned(ch, "t")
+    ch.execute("ALTER TABLE t UPDATE s = 'z' WHERE k = 1,"
+               " RENAME COLUMN s TO s2")
+    assert _state(ch, "t") == (
+        ["k", "p", "s2"], [(1, 0, "z"), (2, 1, "b"), (3, 2, "c")])
+    ch.execute("ALTER TABLE t RENAME COLUMN s2 TO s,"
+               " UPDATE s = 'y' WHERE k = 2")
+    assert _state(ch, "t")[1] == [(1, 0, "z"), (2, 1, "y"), (3, 2, "c")]
+
+
+@pytest.mark.parametrize("cmd", [
+    "CLEAR COLUMN nosuch",
+    "COMMENT COLUMN nosuch 'x'",
+    "MODIFY COLUMN nosuch CODEC(ZSTD)",
+    "MODIFY COLUMN nosuch COMMENT 'x'",
+    "MATERIALIZE COLUMN nosuch",
+    "DROP COLUMN nosuch",
+    "MODIFY COLUMN nosuch Int32",
+    "RENAME COLUMN nosuch TO other",
+])
+def test_column_command_on_unknown_column(spark, sf_dir, cmd):
+    """A column command on an unknown column raises, as in ClickHouse,
+    unless it says IF EXISTS: then it does nothing."""
+    ch = ChSession(spark, sf_dir)
+    _partitioned(ch, "t")
+    with pytest.raises(ValueError, match="unknown column 'nosuch'"):
+        ch.execute(f"ALTER TABLE t {cmd}")
+    ch.execute("ALTER TABLE t " + re.sub(
+        r"COLUMN ", "COLUMN IF EXISTS ", cmd, count=1))
+    assert _state(ch, "t")[0] == ["k", "p", "s"]
 
 
 def test_create_dictionary_ddl(spark, sf_dir):

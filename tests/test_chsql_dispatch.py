@@ -10,7 +10,7 @@ import re
 import pytest
 
 from canal_clickhouse_spark import chsql_ddl
-from canal_clickhouse_spark.chsql_ddl import _claim, _respell
+from canal_clickhouse_spark.chsql_ddl import _alter_commands, _claim, _respell
 
 SCRIPTS = sorted(
     k for k in vars(chsql_ddl) if k.startswith("_CH_") and k.endswith("_SCRIPT")
@@ -23,15 +23,19 @@ def _claimed(statement: str, databases=("default",)) -> str | None:
     return claimed and claimed[0].name
 
 
-@pytest.mark.parametrize("script", SCRIPTS)
-def test_every_registry_statement_is_claimed(script):
-    text = getattr(chsql_ddl, script)
-    databases = {"default"} | {
+def _databases(text: str) -> set[str]:
+    """The databases a script knows: default and those it creates."""
+    return {"default"} | {
         d.lower() for d in re.findall(
             r"(?i)CREATE\s+DATABASE\s+(?:IF\s+NOT\s+EXISTS\s+)?(\w+)", text)
     }
+
+
+@pytest.mark.parametrize("script", SCRIPTS)
+def test_every_registry_statement_is_claimed(script):
+    text = getattr(chsql_ddl, script)
     for statement in chsql_ddl.split_statements(text):
-        assert _claimed(statement, databases), statement[:80]
+        assert _claimed(statement, _databases(text)), statement[:80]
 
 
 # statements whose claim depends on the order of the rows
@@ -66,14 +70,15 @@ ORDER = [
     ("CREATE TABLE t AS src", "create_clone"),
     ("CREATE TABLE t AS SELECT 1", "create_table"),
     ("CREATE TABLE t (a Int64) ENGINE = Memory", "create_table"),
-    ("ALTER TABLE t MODIFY TTL d + INTERVAL 1 DAY", "modify_ttl"),
-    ("ALTER TABLE t MODIFY QUERY SELECT 1", "modify_query"),
-    ("ALTER TABLE t MODIFY COLUMN a String", "alter_column"),
-    ("ALTER TABLE t UPDATE a = 1 WHERE b = 2", "alter_update"),
-    ("ALTER TABLE t DELETE WHERE b = 2", "alter_delete"),
-    ("ALTER TABLE t DROP PARTITION 1", "alter_misc"),
+    ("ALTER TABLE t MODIFY TTL d + INTERVAL 1 DAY", "alter"),
+    ("ALTER TABLE t MODIFY QUERY SELECT 1", "alter"),
+    ("ALTER TABLE t MODIFY COLUMN a String", "alter"),
+    ("ALTER TABLE t UPDATE a = 1 WHERE b = 2", "alter"),
+    ("ALTER TABLE t DELETE WHERE b = 2", "alter"),
+    ("ALTER TABLE t DROP PARTITION 1", "alter"),
     ("DELETE FROM t WHERE b = 2", "delete_from"),
     ("UPDATE t SET a = 1 WHERE b = 2", "update"),
+    ("UPDATE t SET a = 1 IN PARTITION 1 WHERE b = 2", "update"),
     ("DROP DICTIONARY d", "drop_dictionary"),
     ("DROP FUNCTION f", "drop_function"),
     ("DROP DATABASE d", "drop_database"),
@@ -120,3 +125,55 @@ def test_rows_are_named_once_and_spell_ch_kinds():
     assert len(names) == len(set(names))
     for r in chsql_ddl._STATEMENTS:
         assert re.fullmatch(r"[A-Z][A-Za-z]+", r.query_kind), r.name
+
+
+# how `_alter_commands` splits an ALTER TABLE command list, and the
+# `_ALTER_COMMANDS` row that claims each command
+ALTER_LISTS = [
+    ("UPDATE a = 1, b = 2 WHERE k IN (1, 2)",
+     [("update", "UPDATE a = 1, b = 2 WHERE k IN (1, 2)")]),
+    ("MODIFY SETTING a = 1, b = 2",
+     [("setting", "MODIFY SETTING a = 1, b = 2")]),
+    ("ADD COLUMN d Decimal(10, 2) DEFAULT 'x,y'",
+     [("column_add", "ADD COLUMN d Decimal(10, 2) DEFAULT 'x,y'")]),
+    ("MODIFY QUERY SELECT a, b FROM s",
+     [("modify_query", "MODIFY QUERY SELECT a, b FROM s")]),
+    ("DROP PARTITION 0, DROP PARTITION (2)",
+     [("partition", "DROP PARTITION 0"), ("partition", "DROP PARTITION (2)")]),
+    ("FREEZE, DROP PARTITION 1",
+     [("freeze", "FREEZE"), ("partition", "DROP PARTITION 1")]),
+    ("ADD INDEX ix s TYPE bloom_filter GRANULARITY 1, DROP PARTITION 0",
+     [("index", "ADD INDEX ix s TYPE bloom_filter GRANULARITY 1"),
+      ("partition", "DROP PARTITION 0")]),
+    ("UPDATE s = 'z' WHERE k = 1, DELETE WHERE k = 2",
+     [("update", "UPDATE s = 'z' WHERE k = 1"),
+      ("delete", "DELETE WHERE k = 2")]),
+]
+
+
+@pytest.mark.parametrize("cmds,claims", ALTER_LISTS)
+def test_alter_list_split_and_claims(cmds, claims):
+    assert [(row.name, m.string) for row, m in _alter_commands(cmds)] == claims
+
+
+@pytest.mark.parametrize("cmds", [
+    "VACUUM, DROP PARTITION 1",
+    "UPDATE a = 1, DELETE WHERE k = 2",
+])
+def test_alter_list_with_an_unclaimed_command_claims_nothing(cmds):
+    with pytest.raises(ValueError, match="unsupported ALTER TABLE command"):
+        _alter_commands(cmds)
+
+
+@pytest.mark.parametrize("script", SCRIPTS)
+def test_every_registry_alter_command_is_claimed(script):
+    text = getattr(chsql_ddl, script)
+    for statement in chsql_ddl.split_statements(text):
+        row, m = _claim(_respell(statement, _databases(text)))
+        if row.name == "alter":
+            assert _alter_commands(m.group("cmds")), statement[:80]
+
+
+def test_alter_command_rows_are_named_once():
+    names = [r.name for r in chsql_ddl._ALTER_COMMANDS]
+    assert len(names) == len(set(names))
